@@ -26,6 +26,19 @@ from pyspark.sql import functions as F
 LAST_CC_ROUNDS = 0
 
 
+def undirected(
+    edges: DataFrame, src: str = "src", dst: str = "dst"
+) -> DataFrame:
+    """(a, b): every ``src``–``dst`` edge in both directions, each once."""
+    return (
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+        .unionByName(
+            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
+        )
+        .distinct()
+    )
+
+
 def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
@@ -38,7 +51,6 @@ def connected_components(
     ``nodes`` must have column ``id``; ``edges`` columns ``src``/``dst``
     (undirected — both directions are added here).
     """
-    fwd = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # checkpoint the undirected edge frame ONCE: it joins into every
     # iteration, and without the cut the edge lineage (often an
     # expensive pair-finding pipeline — n-gram Jaccard, LSH buckets)
@@ -48,13 +60,7 @@ def connected_components(
     # purpose: a lazy checkpoint here is raced by broadcast-build
     # threads inside the first iteration's join (see the pagerank
     # note), duplicating the expensive pair-finding upstream.
-    und = (
-        fwd.unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    und = undirected(edges, src, dst).localCheckpoint(eager=True)
 
     labels = nodes.select("id", F.col("id").alias("label"))
     # r12 optimization (guide §2.4 remove shuffles / §1.2 algorithm
@@ -116,7 +122,7 @@ def connected_components(
         # (neighbor-min stable ⟹ labels constant per component = the
         # component min), so final labels are bit-identical; only the
         # ROUND count drops — O(log d) instead of O(d). Measured
-        # (tools/ab_cc_r13.py, interleaved min-of-3): rounds 17→10
+        # (interleaved min-of-3 A/B, r13): rounds 17→10
         # (n-gram dup graph) / 12→7 (dbscan core graph); q_split_assign
         # ×10 9.15→7.03 s, q_dedup_clusters ×10 7.05→5.90 s.
         ptr = new_labels.select(
@@ -174,13 +180,7 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .distinct()
-    )
+    und = undirected(edges, src, dst)
     if checkpoint:
         und = und.localCheckpoint(eager=True)
     labels = nodes.select("id", F.col("id").alias("label"))
@@ -219,7 +219,6 @@ def pagerank(
     iters: int = 3,
     damping: float = 0.85,
     partitions: int | None = None,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """(id, rank) after ``iters`` synchronous PageRank iterations.
 
@@ -229,9 +228,9 @@ def pagerank(
     onto edges (shuffle on src), one groupBy(dst) decimal-sum (shuffle on
     dst), plus a tiny dangling-mass aggregate that is broadcast back —
     no driver-side collect of node state. Lineage is cut with
-    localCheckpoint every ``checkpoint_every`` rounds: short runs fuse
-    several iterations into one multi-shuffle job (measured 1.8× at
-    sf0.1 for iters=3), long runs still bound plan depth. Dangling
+    localCheckpoint every 5 rounds: short runs fuse several iterations
+    into one multi-shuffle job (measured 1.8× at sf0.1 for iters=3),
+    long runs still bound plan depth. Dangling
     nodes (no out-edges) donate their mass uniformly, the standard
     correction.
 
@@ -328,7 +327,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if it % checkpoint_every == 0 and it < iters:
+        if it % 5 == 0 and it < iters:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("id", "rank")
 
@@ -392,7 +391,6 @@ def k_core_peel(
     rounds: int,
     src: str = "src",
     dst: str = "dst",
-    checkpoint: bool = True,
 ) -> DataFrame:
     """(id, core_deg) of nodes surviving ``rounds`` synchronous k-core
     peeling rounds (Seidman 1983, public literature): each round drops
@@ -411,19 +409,11 @@ def k_core_peel(
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    und = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .distinct()
-    )
-    if checkpoint:
-        # eager on purpose: each round's und feeds BOTH the degree
-        # groupBy and the survivor join — concurrent stages would race
-        # to materialize a lazy checkpoint and duplicate the round's
-        # work (see the pagerank note above).
-        und = und.localCheckpoint(eager=True)
+    # eager on purpose: each round's und feeds BOTH the degree groupBy
+    # and the survivor join — concurrent stages would race to
+    # materialize a lazy checkpoint and duplicate the round's work (see
+    # the pagerank note above).
+    und = undirected(edges, src, dst).localCheckpoint(eager=True)
     keep = None
     for it in range(rounds):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
@@ -437,18 +427,19 @@ def k_core_peel(
                 "b",
             )
             .select("a", "b")
+            .localCheckpoint(eager=True)
         )
-        if checkpoint:
-            und = und.localCheckpoint(eager=True)
     return keep.select(
         F.col("a").alias("id"), F.col("d").alias("core_deg")
     )
 
 
-def triangle_count(
+def oriented_triangles(
     edges: DataFrame, u: str = "u", v: str = "v"
-) -> DataFrame:
-    """Exact triangle count of an undirected graph via degree orientation.
+) -> tuple[DataFrame, DataFrame]:
+    """(deg, tri) of an undirected graph via degree orientation: ``deg``
+    holds (node, d) for every endpoint, ``tri`` one (s, wu, wv) row per
+    triangle, its three corners.
 
     ``edges`` must hold each undirected edge once with ``u < v``. The
     classic distributed algorithm (Cohen's MapReduce triangle counting /
@@ -484,19 +475,26 @@ def triangle_count(
             F.when(lower_first, F.col("v")).otherwise(F.col("u")).alias("t"),
         )
     )
-    e1 = oriented.select(F.col("s"), F.col("t").alias("t1"))
-    e2 = oriented.select(F.col("s"), F.col("t").alias("t2"))
-    # t1 < t2 matches e0's u < v storage order, so the closing join is a
-    # direct equi-join — each triangle is counted exactly once.
-    wedges = e1.join(e2, "s").filter(F.col("t1") < F.col("t2")).select(
-        F.col("t1").alias("wu"), F.col("t2").alias("wv")
-    )
-    closed = wedges.join(
-        e0, (wedges.wu == e0.u) & (wedges.wv == e0.v), "inner"
-    )
-    edge_ct = e0.agg(F.count(F.lit(1)).alias("n_edges"))
+    e1 = oriented.select("s", F.col("t").alias("wu"))
+    e2 = oriented.select("s", F.col("t").alias("wv"))
+    # wu < wv matches e0's u < v storage order, so the closing join is a
+    # direct equi-join — each triangle appears exactly once.
+    wedges = e1.join(e2, "s").filter(F.col("wu") < F.col("wv"))
+    tri = wedges.join(
+        e0, (e0.u == wedges.wu) & (e0.v == wedges.wv)
+    ).select("s", "wu", "wv")
+    return deg, tri
+
+
+def triangle_count(
+    edges: DataFrame, u: str = "u", v: str = "v"
+) -> DataFrame:
+    """(n_edges, n_nodes, n_triangles) of an undirected graph stored as
+    in :func:`oriented_triangles`."""
+    deg, tri = oriented_triangles(edges, u, v)
+    edge_ct = edges.agg(F.count(F.lit(1)).alias("n_edges"))
     node_ct = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     return (
         edge_ct.crossJoin(node_ct)
-        .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_triangles")))
+        .crossJoin(tri.agg(F.count(F.lit(1)).alias("n_triangles")))
     )

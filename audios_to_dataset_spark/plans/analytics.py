@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ._edges import copurchase_edges
 from ._util import DEC, davg, davg_sql, dsum, dsum_sql, sround, sround_sql
 
 
@@ -673,17 +674,7 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(m^1.5) bound argument."""
     from ..operators.graph import triangle_count
 
-    li = load(spark, sf_dir, "lineitem")
-    items = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a = items.select("o", F.col("p").alias("u"))
-    b = items.select("o", F.col("p").alias("v"))
-    edges = (
-        a.join(b, "o").filter(F.col("u") < F.col("v"))
-        .select("u", "v").distinct()
-    )
-    return triangle_count(edges)
+    return triangle_count(copurchase_edges(load(spark, sf_dir, "lineitem")))
 
 
 ORACLE_TRIANGLE_COUNT = """
@@ -1183,45 +1174,15 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-node triangle counts (each closed wedge credits all three
     corners), then cc(v) = 2·T(v) / (d(v)·(d(v)−1)) bucketed into
     deciles. Same degree-oriented O(m^1.5) enumeration as
-    q_triangle_count (operators/graph.py) — never a three-way
+    q_triangle_count (operators/graph.oriented_triangles) — never a three-way
     self-join — plus one explode(3 corners) and two wordcount-shaped
     groupBys. The per-node division is one correctly-rounded double
     op quantized by sround before the decimal sum."""
-    li = load(spark, sf_dir, "lineitem")
-    items = li.select(
-        F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p")
-    ).distinct()
-    a = items.select("o", F.col("p").alias("u"))
-    b = items.select("o", F.col("p").alias("v"))
-    edges = (
-        a.join(b, "o").filter(F.col("u") < F.col("v"))
-        .select("u", "v").distinct()
+    from ..operators.graph import oriented_triangles
+
+    deg, tri = oriented_triangles(
+        copurchase_edges(load(spark, sf_dir, "lineitem"))
     )
-    deg = (
-        edges.select(F.col("u").alias("node"))
-        .unionAll(edges.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
-    du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))
-    fwd = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        edges.join(du, "u").join(dv, "v")
-        .select(
-            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("s"),
-            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-    )
-    e1 = oriented.select("s", F.col("t").alias("wu"))
-    e2 = oriented.select("s", F.col("t").alias("wv"))
-    wedges = e1.join(e2, "s").filter(F.col("wu") < F.col("wv"))
-    tri = wedges.join(
-        edges,
-        (edges.u == wedges.wu) & (edges.v == wedges.wv),
-    ).select("s", "wu", "wv")
     tpn = (
         tri.select(
             F.explode(F.array("s", "wu", "wv")).alias("node")

@@ -40,13 +40,13 @@ from ..operators.sketch import (
     hll_estimate,
     hll_sql,
 )
+from ._edges import PR_SUPP_OFFSET, copurchase_edges, trade_edges
 from ._util import DEC, DEC_SQL, davg, davg_sql, sround, sround_sql
 
 HLL_M = 64
 
 PR_ITERS = 3
 PR_DAMPING = 0.85
-PR_SUPP_OFFSET = 2_000_000  # supplier node ids, disjoint from custkeys
 
 BLOOM_M_BITS = 4096  # small on purpose: forces real false positives
 BLOOM_K = 3
@@ -399,14 +399,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # endpoint isn't a graph node (--nulls sweep; both sides filter)
     o = load(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
     li = load(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").cast("bigint").alias("src"),
-            (F.col("l_suppkey").cast("bigint") + PR_SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-    )
+    edges = trade_edges(o, li)
     # edge partitioning tracks the cluster's parallelism (measured ~20%
     # at sf0.1 local[32] over the old fixed 8; values are unaffected —
     # the decimal sums are order-independent by construction)
@@ -474,16 +467,7 @@ def _order_graph_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").filter(
         F.col("l_suppkey").isNotNull()
     )
-    e = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").cast("bigint").alias("src"),
-            (F.col("l_suppkey").cast("bigint") + PR_SUPP_OFFSET).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
+    e = trade_edges(o, li)
     return e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -573,16 +557,7 @@ def q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").cast("bigint").alias("src"),
-            (F.col("l_suppkey").cast("bigint") + PR_SUPP_OFFSET).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
+    edges = trade_edges(o, li)
     nodes = (
         edges.select(F.col("src").alias("id"))
         .unionByName(edges.select(F.col("dst").alias("id")))
@@ -664,17 +639,8 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast cross join (the PageRank dangling-mass pattern)."""
     from ..operators.graph import label_propagation
 
-    li = load(spark, sf_dir, "lineitem")
-    items = li.select(
-        F.col("l_orderkey").alias("o"),
-        F.col("l_partkey").cast("bigint").alias("p"),
-    ).distinct()
-    edges = (
-        items.select("o", F.col("p").alias("src"))
-        .join(items.select("o", F.col("p").alias("dst")), "o")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
+    edges = copurchase_edges(load(spark, sf_dir, "lineitem")).select(
+        F.col("u").alias("src"), F.col("v").alias("dst")
     )
     nodes = (
         edges.select(F.col("src").alias("id"))
@@ -772,16 +738,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").cast("bigint").alias("src"),
-            (F.col("l_suppkey").cast("bigint") + PR_SUPP_OFFSET).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
+    edges = trade_edges(o, li)
     hubs, auths = hits(edges, iters=HITS_ITERS)
     return hubs.select(
         F.col("id").cast("bigint").alias("node_id"),

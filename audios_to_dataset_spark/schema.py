@@ -92,6 +92,25 @@ def metadata_value_columns(df: DataFrame) -> list[str]:
     return sorted(c for c in df.columns if c not in KEY_COLUMNS)
 
 
+# Columns a shard sink writes as audio/duration or drops: the scan
+# (path, file_name, length, modificationTime), the shard assignment
+# (shard, row_in_shard) and the decoded audio fields.
+_SINK_FIXED_COLUMNS = frozenset({
+    "shard", "row_in_shard", "relative_path", "content", "duration",
+    "sampling_rate", "path", "file_name", "length", "modificationTime",
+})
+
+
+def sink_metadata_fields(df: DataFrame) -> list[tuple[str, T.DataType]]:
+    """(name, type) of every metadata column a shard sink writes after
+    audio and duration, in lexicographic order (src/main.rs:478)."""
+    return sorted(
+        (f.name, f.dataType)
+        for f in df.schema.fields
+        if f.name not in _SINK_FIXED_COLUMNS
+    )
+
+
 def hf_feature(dt: T.DataType) -> dict:
     """Hugging Face `datasets` feature descriptor for one metadata column
     (metadata_feature_value, src/main.rs:249-259)."""

@@ -23,7 +23,8 @@ _RUNTIME_CONF = {
     # wasteful 200-task stages for this rig's data volumes, and streaming
     # state partitioning is pinned at first checkpoint. Match the local
     # core count; AQE coalescing makes this safe either way. On a real
-    # cluster this would be ~2-3x total cores via spark-defaults.
+    # cluster this would be ~2-3x total cores via spark-defaults, which
+    # tune() leaves in place (it sets this key only when unset).
     "spark.sql.shuffle.partitions": os.environ.get(
         "SPARK_GRAFT_CPUS", "32"
     ),
@@ -55,6 +56,13 @@ def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable tuning/parity conf to an existing session."""
     for k, v in _RUNTIME_CONF.items():
         try:
+            # the partition count is sizing, not parity: a value the
+            # user or cluster already set wins
+            if (
+                k == "spark.sql.shuffle.partitions"
+                and spark.conf.get(k, None) is not None
+            ):
+                continue
             spark.conf.set(k, v)
         except Exception:
             # Some conf keys can be locked down; every entry here is

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..schema import sink_metadata_fields
+
 
 def sanitize_column_name(name: str) -> str:
     """Identifier escaping parity (src/main.rs:241-243)."""
@@ -64,14 +66,7 @@ def write_duckdb_shards(df: DataFrame, output_dir: str) -> DataFrame:
     :func:`..sinks.parquet_shards.write_parquet_shards`.
     """
     os.makedirs(output_dir, exist_ok=True)
-    fixed = {"shard", "row_in_shard", "relative_path", "content",
-             "duration", "sampling_rate", "path", "file_name", "length",
-             "modificationTime"}
-    meta_fields = sorted(
-        (f.name, f.dataType)
-        for f in df.schema.fields
-        if f.name not in fixed
-    )
+    meta_fields = sink_metadata_fields(df)
     ddl = build_create_table_sql(meta_fields)
 
     # Lists are stored as JSON text (src/main.rs:835-837); stringify

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import hf_feature
+from ..schema import hf_feature, sink_metadata_fields
 
 ROW_GROUP_SIZE = 256  # src/main.rs:607
 
@@ -119,14 +119,7 @@ def write_parquet_shards(
         )
     os.makedirs(output_dir, exist_ok=True)
 
-    fixed = {"shard", "row_in_shard", "relative_path", "content",
-             "duration", "sampling_rate", "path", "file_name", "length",
-             "modificationTime"}
-    meta_fields = sorted(
-        (f.name, f.dataType)
-        for f in df.schema.fields
-        if f.name not in fixed
-    )
+    meta_fields = sink_metadata_fields(df)
     features_json = hf_features_json(meta_fields)
     arrow_fields = [
         pa.field("audio", AUDIO_ARROW_TYPE),
@@ -141,8 +134,6 @@ def write_parquet_shards(
         "duration", "sampling_rate",
     ] + [n for n, _ in meta_fields]
     slim = df.select(*select_cols)
-
-    meta_names = [n for n, _ in meta_fields]
 
     def write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("row_in_shard")
@@ -301,12 +292,7 @@ def write_native_sharded(
     codec = COMPRESSION_MAP.get(compression.lower())
     if codec is None:
         raise ValueError(f"unknown compression {compression!r}")
-    fixed = {"shard", "row_in_shard", "relative_path", "content",
-             "duration", "sampling_rate", "path", "file_name", "length",
-             "modificationTime"}
-    meta_names = sorted(
-        f.name for f in df.schema.fields if f.name not in fixed
-    )
+    meta_names = [n for n, _ in sink_metadata_fields(df)]
     out = df.select(
         "shard",
         F.struct(

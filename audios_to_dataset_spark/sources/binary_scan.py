@@ -95,28 +95,24 @@ def scan_audio_files(
     max_depth: int = DEFAULT_MAX_DEPTH,
     metadata_file: str | None = None,
     check_mime_type: bool = False,
-    path_glob: str | None = None,
-    no_symlink: bool = True,
 ) -> DataFrame:
     """S1-S5: recursive binaryFile scan with the reference's filters.
 
     Returns columns: ``path`` (absolute), ``relative_path``, ``file_name``,
     ``content`` (binary), ``length``.
     """
-    reader = (
+    df = (
         spark.read.format("binaryFile")
         .option("recursiveFileLookup", "true")
+        .load(input_dir)
     )
-    if path_glob:
-        reader = reader.option("pathGlobFilter", path_glob)
-    df = reader.load(input_dir)
 
     # Symlink exclusion (S1, src/main.rs:661-667): Hadoop's local FS
     # follows symlinks, so binaryFile would double-count link targets;
     # drop rows whose path is a symlinked file or sits under a symlinked
     # directory. binaryFile paths are not percent-encoded (verified for
     # space/unicode/% names), so plain string compare works.
-    if no_symlink and not input_dir.startswith(("s3", "hdfs", "gs")):
+    if not input_dir.startswith(("s3", "hdfs", "gs")):
         link_files, link_dirs = _symlink_entries(input_dir)
         no_scheme = F.regexp_replace(F.col("path"), r"^file:/*", "/")
         if len(link_files) + len(link_dirs) > _SYMLINK_LITERAL_CAP:

@@ -57,11 +57,35 @@ def test_pointer_jumping_matches_naive_and_cuts_rounds(spark):
 
 
 def _tri(spark, edges):
-    from audios_to_dataset_spark.operators.graph import triangle_count
+    """Totals from triangle_count; also pins oriented_triangles' degree
+    table and per-node triangle credits (every corner of every closed
+    row) against a brute-force count over each node's neighbor pairs."""
+    from collections import Counter
+    from itertools import combinations
+
+    from audios_to_dataset_spark.operators.graph import (
+        oriented_triangles,
+        triangle_count,
+    )
 
     df = spark.createDataFrame(
         [(min(a, b), max(a, b)) for a, b in edges], "u long, v long"
     ).distinct()
+    adj: dict[int, set[int]] = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+        adj.setdefault(b, set()).add(a)
+    brute = {
+        n: sum(1 for x, y in combinations(nb, 2) if y in adj[x])
+        for n, nb in adj.items()
+    }
+    deg, tri = oriented_triangles(df)
+    assert {r.node: r.d for r in deg.collect()} == {
+        n: len(nb) for n, nb in adj.items()
+    }
+    credits = Counter(c for r in tri.collect() for c in (r.s, r.wu, r.wv))
+    assert {n: credits[n] for n in adj} == brute
+    assert set(credits) <= set(adj)
     row = triangle_count(df).collect()[0]
     return row.n_edges, row.n_nodes, row.n_triangles
 

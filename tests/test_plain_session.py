@@ -50,3 +50,18 @@ def test_dedup_and_text_families_conf_free(plain_spark, sf_dir):
 
     assert q_dedup_exact(plain_spark, sf_dir).count() > 0
     assert q_text_stats(plain_spark, sf_dir).count() > 0
+
+
+def test_load_keeps_user_shuffle_partitions(spark, sf_dir):
+    """catalog.load re-applies the parity confs on every table load, but
+    a shuffle-partition count the user already set must survive it."""
+    from audios_to_dataset_spark.catalog import load
+
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    spark.conf.set(key, "2000")
+    try:
+        load(spark, sf_dir, "orders")
+        assert spark.conf.get(key) == "2000"
+    finally:
+        spark.conf.set(key, prior)

@@ -505,19 +505,10 @@ def test_label_prop_no_cartesian_windows_partitioned(spark, sf_dir):
 
     from audios_to_dataset_spark.catalog import load
     from audios_to_dataset_spark.operators.graph import label_propagation
-    from audios_to_dataset_spark.plans.sketches import PR_SUPP_OFFSET
+    from audios_to_dataset_spark.plans._edges import trade_edges
 
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    edges = (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").cast("bigint").alias("src"),
-            (F.col("l_suppkey").cast("bigint") + PR_SUPP_OFFSET).alias(
-                "dst"
-            ),
-        )
-        .distinct()
+    edges = trade_edges(
+        load(spark, sf_dir, "orders"), load(spark, sf_dir, "lineitem")
     )
     nodes = (
         edges.select(F.col("src").alias("id"))

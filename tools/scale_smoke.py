@@ -258,19 +258,11 @@ def cc_edges(spark, sf_dir: str) -> int:
 
 def pagerank_edges(spark, sf_dir: str) -> int:
     from audios_to_dataset_spark.catalog import load
-    from audios_to_dataset_spark.plans.sketches import PR_SUPP_OFFSET
+    from audios_to_dataset_spark.plans._edges import trade_edges
 
     o = load(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
     li = load(spark, sf_dir, "lineitem")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey)
-        .select(
-            F.col("o_custkey").alias("src"),
-            (F.col("l_suppkey") + PR_SUPP_OFFSET).alias("dst"),
-        )
-        .distinct()
-        .count()
-    )
+    return trade_edges(o, li).count()
 
 
 def run_query(fn, spark, sf_dir: str) -> tuple[float, int]:
