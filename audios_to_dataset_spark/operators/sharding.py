@@ -14,8 +14,13 @@ Scale note: a naive ``row_number().over(Window.orderBy(path))`` on the
 full frame funnels every row — audio bytes included — through ONE
 partition. Instead the global sort runs on a pruned (path-only)
 projection, and the resulting (path → shard, row) mapping joins back to
-the fat rows by path: the heavy columns move once, in a hash-partitioned
-join, never through a single-task sort.
+the fat rows by path. How the heavy columns cross that join is the
+planner's call: when its size estimate for the mapping is under
+``spark.sql.autoBroadcastJoinThreshold`` the mapping is broadcast and
+the fat rows do not move; otherwise it is a shuffle join that moves
+them once by path. The estimate is small only when ``df`` is close to
+the scan (left joins multiply it), so the pipeline shards the bare file
+listing.
 """
 
 from __future__ import annotations

@@ -4,10 +4,11 @@
 Stages (all lazy until the sink action):
 
   scan_audio_files (S1-S5)                — binaryFile + path filters
+    → assign_shards (W1-W2)               — deterministic buckets, keyed
+                                            on the bare file listing
     → wav enrichment (P4)                 — pandas UDF header decode
     → load_metadata + widening (S6-S8)    — side table, lattice schema
     → lookup_join (J1-J3)                 — 3-level broadcast fallback
-    → assign_shards (W1-W2)               — deterministic buckets
     → parquet / duckdb shard sink (S9-S13)
 
 Catalyst supplies what the reference hand-codes: the path filters push
@@ -167,27 +168,28 @@ def build_dataset(
         )
     if segment_seconds is not None:
         files = segment_files(files, segment_seconds)
+    # Shards are assigned on the listing, before decode and metadata: the
+    # path -> shard mapping then plans over a frame the planner can size
+    # (and broadcast), so the audio bytes cross one exchange, the sink's.
+    # Decode is a projection and each metadata level joins a first-wins
+    # index, so every file yields exactly one row.
+    files = assign_shards(
+        files,
+        files_per_shard,
+        order_col="path" if segment_seconds is not None else "relative_path",
+        shard_offset=shard_offset,
+    )
     files = enrich_files(
         files, audio_stats=audio_stats, sniff_formats=sniff_formats
     )
 
     if metadata_file is not None:
         meta = load_metadata(spark, metadata_file)
-        files = lookup_join(files, meta)
-    else:
-        # No metadata: every record still gets the transcription default
-        # (MetadataStore::new → ensure_transcription_key,
-        # src/main.rs:152-164).
-        files = files.withColumn(
-            TRANSCRIPTION, F.lit(TRANSCRIPTION_DEFAULT)
-        )
-
-    return assign_shards(
-        files,
-        files_per_shard,
-        order_col="path" if segment_seconds is not None else "relative_path",
-        shard_offset=shard_offset,
-    )
+        return lookup_join(files, meta)
+    # No metadata: every record still gets the transcription default
+    # (MetadataStore::new → ensure_transcription_key,
+    # src/main.rs:152-164).
+    return files.withColumn(TRANSCRIPTION, F.lit(TRANSCRIPTION_DEFAULT))
 
 
 def _transcode_wav_to_flac(df):

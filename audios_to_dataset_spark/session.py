@@ -24,10 +24,16 @@ _RUNTIME_CONF = {
     # state partitioning is pinned at first checkpoint. Match the local
     # core count; AQE coalescing makes this safe either way. On a real
     # cluster this would be ~2-3x total cores via spark-defaults, which
-    # tune() leaves in place (it sets this key only when unset).
+    # tune() leaves in place (see _SIZING_KEYS).
     "spark.sql.shuffle.partitions": os.environ.get(
         "SPARK_GRAFT_CPUS", "32"
     ),
+    # Broadcast joins up to 64 MB (Spark's default is 10 MB), so a
+    # session built elsewhere picks the same join strategies as
+    # get_session. The pipeline's path -> shard mapping is estimated at
+    # about a quarter of the listed bytes, so it stays a broadcast up to
+    # ~250 MB of audio (~40 MB at the default).
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Timestamps in the testdata parquet are naive; pin the session zone to
     # UTC so Spark's TIMESTAMP_LTZ values collect to the same wall-clock as
     # DuckDB's naive TIMESTAMP (oracle parity).
@@ -51,17 +57,19 @@ _RUNTIME_CONF = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
 }
 
+# Keys tune() sets only when unset; every other key is always applied.
+_SIZING_KEYS = frozenset(
+    {"spark.sql.shuffle.partitions", "spark.sql.autoBroadcastJoinThreshold"}
+)
+
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable tuning/parity conf to an existing session."""
     for k, v in _RUNTIME_CONF.items():
         try:
-            # the partition count is sizing, not parity: a value the
-            # user or cluster already set wins
-            if (
-                k == "spark.sql.shuffle.partitions"
-                and spark.conf.get(k, None) is not None
-            ):
+            # sizing keys are not parity: a value the user or cluster
+            # already set wins
+            if k in _SIZING_KEYS and spark.conf.get(k, None) is not None:
                 continue
             spark.conf.set(k, v)
         except Exception:
@@ -86,7 +94,6 @@ def get_session(app_name: str = "audios-to-dataset-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.driver.maxResultSize", "4g")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Keep partition sizes bounded when scanning big files (100 TB
         # design point: ~128MB splits feed ~1 task each).
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

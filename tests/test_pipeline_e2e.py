@@ -323,19 +323,94 @@ def test_duckdb_sink(spark, tmp_path, audio_dir):
 
 
 def test_first_wins_duplicate_metadata(spark, tmp_path, audio_dir):
-    # J2: first record per key wins (src/main.rs:178-193)
+    # J2: first record per key wins (src/main.rs:178-193). Whichever
+    # levels match, each file keeps exactly one row, so the shards
+    # (assigned before the join) stay contiguous in relative_path order.
+    for rel in ("nested/sample.wav", "a/with_path.wav", "z.wav"):
+        f = os.path.join(audio_dir, rel)
+        os.makedirs(os.path.dirname(f), exist_ok=True)
+        with open(f, "wb") as fh:
+            fh.write(synth_wav(sample_rate=8_000))
     meta = tmp_path / "m.csv"
     meta.write_text(
-        "relative_path,transcription\n"
-        "sample.wav,first\n"
-        "sample.wav,second\n"
+        "relative_path,file_name,transcription\n"
+        "sample.wav,,first\n"
+        "sample.wav,,second\n"
+        ",with_path.wav,by name first\n"
+        ",with_path.wav,by name second\n"
+        ",nested/sample.wav,level three\n"
     )
     out = str(tmp_path / "out")
-    run_pipeline(spark, audio_dir, out, metadata_file=str(meta))
-    by_path = {
-        r["audio"]["path"]: r for r in _read_shard(out).to_pylist()
+    run_pipeline(
+        spark, audio_dir, out, metadata_file=str(meta), files_per_shard=2
+    )
+    placed = [
+        (shard, row, r["audio"]["path"], r["transcription"])
+        for shard in range(3)
+        for row, r in enumerate(_read_shard(out, shard).to_pylist())
+    ]
+    assert not os.path.exists(os.path.join(out, "3.parquet"))
+    expected = {
+        "a/with_path.wav": "by name first",
+        "nested/sample.wav": "level three",
+        "nested/with_path.wav": "by name first",
+        "sample.wav": "first",
+        "z.wav": "-",
     }
-    assert by_path["sample.wav"]["transcription"] == "first"
+    assert [(s, r) for s, r, _, _ in placed] == [
+        (i // 2, i % 2) for i in range(len(expected))
+    ]
+    assert [(p, t) for _, _, p, t in placed] == sorted(expected.items())
+
+
+def _plan_nodes(node):
+    """Every node of a physical plan (py4j SparkPlan), pre-order."""
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def _output_names(node) -> set[str]:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def test_audio_bytes_cross_one_exchange(spark, tmp_path, audio_dir):
+    """The path -> shard mapping is broadcast to the scan, so the only
+    shuffle that carries ``content`` is the sink's groupBy(shard).
+    The unmatched metadata rows keep the joined frame's size estimate (a
+    product over the three left joins) above the broadcast threshold, so
+    a mapping computed after the join would be shuffle-joined."""
+    from audios_to_dataset_spark.pipeline import build_dataset
+    from audios_to_dataset_spark.sinks.parquet_shards import (
+        write_parquet_shards,
+    )
+
+    meta = tmp_path / "m.csv"
+    meta.write_text(
+        "file_name,transcription\nsample.wav,hello\n"
+        + "".join(f"unmatched_{i}.wav,t{i}\n" for i in range(50))
+    )
+    receipts = write_parquet_shards(
+        build_dataset(spark, audio_dir, metadata_file=str(meta)),
+        str(tmp_path / "out"),
+    )
+    plan = receipts._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    nodes = list(_plan_nodes(plan))
+    fat_exchanges = [
+        n for n in nodes
+        if n.nodeName() == "Exchange" and "content" in _output_names(n)
+    ]
+    assert len(fat_exchanges) == 1
+    assert any(
+        n.nodeName() == "BroadcastHashJoin"
+        and "row_in_shard" in _output_names(n.buildPlan())
+        and "content" in _output_names(n.streamedPlan())
+        for n in nodes
+    )
 
 
 def test_segmented_pipeline_e2e(spark, tmp_path):

@@ -65,3 +65,21 @@ def test_load_keeps_user_shuffle_partitions(spark, sf_dir):
         assert spark.conf.get(key) == "2000"
     finally:
         spark.conf.set(key, prior)
+
+
+def test_load_sets_broadcast_threshold_only_when_unset(spark, sf_dir):
+    """catalog.load gives a session without a broadcast threshold the
+    64 MB one get_session plans with, and keeps one the user set."""
+    from audios_to_dataset_spark.catalog import load
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prior = spark.conf.get(key)
+    try:
+        spark.conf.unset(key)
+        load(spark, sf_dir, "orders")
+        assert spark.conf.get(key) == str(64 * 1024 * 1024)
+        spark.conf.set(key, str(1024 * 1024))
+        load(spark, sf_dir, "orders")
+        assert spark.conf.get(key) == str(1024 * 1024)
+    finally:
+        spark.conf.set(key, prior)
