@@ -1,14 +1,18 @@
-"""WAV header decoding (P4) as an Arrow-batched pandas UDF.
+"""WAV header decoding (P4).
 
 Reference semantics (/root/reference/src/main.rs:760-769, via the hound
 crate): parse the in-memory WAV; ``duration = samples_per_channel /
 sample_rate`` (f64 seconds), ``sampling_rate`` i32; ANY parse failure →
 ``(0.0, 0)`` so non-WAV files are kept with zero duration (README.md:94).
 
-This is one of the two genuinely non-relational computations in the
-engine (the other is MIME sniffing, which magic-bytes expressions cover),
-so it is the one place a pandas UDF is justified: pure-Python RIFF chunk
-walk over Arrow-delivered bytes, no JVM audio codec needed.
+``parse_wav_header`` is the one RIFF header parser: a pure-Python chunk
+walk, no JVM audio codec needed. The parquet and DuckDB shard sinks call
+it through ``wav_header_columns`` inside their per-shard pandas
+functions, which already hold every file's bytes (the reference decodes
+in the shard worker too), so the ingest map stage runs without Python.
+``wav_info`` is the same decode as an Arrow-batched pandas UDF, for plans
+that need the columns before a sink (``build_dataset``, the ORC sink,
+FLAC transcoding, the multimodal queries).
 """
 
 from __future__ import annotations
@@ -26,6 +30,9 @@ WAV_RESULT_TYPE = T.StructType(
         T.StructField("sampling_rate", T.IntegerType(), False),
     ]
 )
+
+
+_MAX_SAMPLE_RATE = 2**31 - 1
 
 
 def parse_wav_header(data: bytes | None) -> tuple[float, int]:
@@ -53,7 +60,10 @@ def parse_wav_header(data: bytes | None) -> tuple[float, int]:
                 data_size = min(chunk_size, n - body)
             # chunks are word-aligned: odd sizes are padded by one byte
             pos = body + chunk_size + (chunk_size & 1)
-        if sample_rate <= 0 or block_align <= 0 or data_size < 0:
+        # the rate is a u32 on disk but an i32 in every sink schema
+        if not 0 < sample_rate <= _MAX_SAMPLE_RATE:
+            return 0.0, 0
+        if block_align <= 0 or data_size < 0:
             return 0.0, 0
         samples_per_channel = data_size // block_align
         return samples_per_channel / sample_rate, int(sample_rate)
@@ -61,15 +71,22 @@ def parse_wav_header(data: bytes | None) -> tuple[float, int]:
         return 0.0, 0
 
 
-@pandas_udf(WAV_RESULT_TYPE)
-def wav_info(content: pd.Series) -> pd.DataFrame:
+def wav_header_columns(content: pd.Series) -> pd.DataFrame:
+    """``duration``/``sampling_rate`` of each payload in ``content``,
+    on ``content``'s index."""
     out = [parse_wav_header(b) for b in content]
     return pd.DataFrame(
         {
             "duration": [d for d, _ in out],
             "sampling_rate": [s for _, s in out],
-        }
+        },
+        index=content.index,
     )
+
+
+@pandas_udf(WAV_RESULT_TYPE)
+def wav_info(content: pd.Series) -> pd.DataFrame:
+    return wav_header_columns(content)
 
 
 def with_wav_info(col: Column) -> Column:

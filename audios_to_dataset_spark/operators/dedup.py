@@ -165,7 +165,8 @@ def ngram_jaccard_pairs(
     )
     if max_shingle_freq is not None:
         buckets = buckets.filter(F.col("f") <= max_shingle_freq)
-    buckets = buckets.cache()
+    # no .cache(): both consumers below share the grouped exchange
+    # through exchange reuse, and a cache would outlive the call
     counts = (
         buckets.select(F.explode("ids").alias("id"))
         .groupBy("id")

@@ -6,10 +6,20 @@ Stages (all lazy until the sink action):
   scan_audio_files (S1-S5)                — binaryFile + path filters
     → assign_shards (W1-W2)               — deterministic buckets, keyed
                                             on the bare file listing
-    → wav enrichment (P4)                 — pandas UDF header decode
     → load_metadata + widening (S6-S8)    — side table, lattice schema
     → lookup_join (J1-J3)                 — 3-level broadcast fallback
-    → parquet / duckdb shard sink (S9-S13)
+    → parquet / duckdb shard sink (S9-S13) — one pandas task per shard,
+                                            which decodes each file's WAV
+                                            header (P4) as it writes it
+
+Unless segmentation, signal stats or format sniffing are asked for, the
+map stage (scan → broadcast shard mapping → broadcast metadata lookups →
+shuffle) has no Python node: the shard tasks already hold every file's
+bytes, as the reference's per-shard workers do (src/main.rs:718-769).
+``build_dataset`` is the same plan with the header decode as a map-side
+pandas UDF (``enrich_files``) before the join, for callers that need the
+columns in the frame: the ORC sink, FLAC transcoding (which replaces the
+WAV bytes) and direct users.
 
 Catalyst supplies what the reference hand-codes: the path filters push
 into the scan, the metadata side broadcasts (its Arc sharing), column
@@ -52,6 +62,14 @@ def enrich_files(
         F.col("_wav.duration").alias("duration"),
         F.col("_wav.sampling_rate").alias("sampling_rate"),
     ).drop("_wav")
+    return _optional_columns(out, audio_stats, sniff_formats)
+
+
+def _optional_columns(
+    files: DataFrame, audio_stats: bool, sniff_formats: bool
+) -> DataFrame:
+    """The optional ``enrich_files`` columns beyond the WAV header."""
+    out = files
     if audio_stats:
         from .functions.wav import wav_stats
 
@@ -153,6 +171,38 @@ def build_dataset(
     an incremental run pays nothing for files already ingested;
     ``shard_offset`` continues shard numbering after existing output.
     """
+    return _dataset(
+        spark,
+        input_dir,
+        metadata_file,
+        max_depth,
+        check_mime_type,
+        files_per_shard,
+        segment_seconds,
+        audio_stats,
+        sniff_formats,
+        exclude_relative_paths,
+        shard_offset,
+        decode_wav=True,
+    )
+
+
+def _dataset(
+    spark: SparkSession,
+    input_dir: str,
+    metadata_file: str | None,
+    max_depth: int,
+    check_mime_type: bool,
+    files_per_shard: int,
+    segment_seconds: float | None,
+    audio_stats: bool,
+    sniff_formats: bool,
+    exclude_relative_paths: DataFrame | None,
+    shard_offset: int,
+    decode_wav: bool,
+) -> DataFrame:
+    """``build_dataset``'s plan; ``decode_wav=False`` leaves out the
+    duration/sampling_rate columns for a sink that decodes them."""
     files = scan_audio_files(
         spark,
         input_dir,
@@ -179,9 +229,10 @@ def build_dataset(
         order_col="path" if segment_seconds is not None else "relative_path",
         shard_offset=shard_offset,
     )
-    files = enrich_files(
-        files, audio_stats=audio_stats, sniff_formats=sniff_formats
-    )
+    if decode_wav:
+        files = enrich_files(files, audio_stats, sniff_formats)
+    else:
+        files = _optional_columns(files, audio_stats, sniff_formats)
 
     if metadata_file is not None:
         meta = load_metadata(spark, metadata_file)
@@ -311,7 +362,10 @@ def run_pipeline(
                 .select(F.col("audio.path").alias("relative_path"))
                 .distinct()
             )
-    sharded = build_dataset(
+    # The parquet and DuckDB sinks decode the WAV headers in their shard
+    # tasks; the ORC sink needs the columns, and transcoding replaces the
+    # WAV bytes, so those take the decoded plan.
+    sharded = _dataset(
         spark,
         input_dir,
         metadata_file=metadata_file,
@@ -323,6 +377,7 @@ def run_pipeline(
         sniff_formats=sniff_formats,
         exclude_relative_paths=exclude,
         shard_offset=shard_offset,
+        decode_wav=transcode_flac or output_format not in ("parquet", "duckdb"),
     )
     if transcode_flac:
         sharded = _transcode_wav_to_flac(sharded)

@@ -101,6 +101,14 @@ _SINK_FIXED_COLUMNS = frozenset({
 })
 
 
+def sink_wav_columns(df: DataFrame) -> list[str]:
+    """The decoded WAV header columns a shard sink reads from ``df``:
+    both when the frame carries them, none when the sink must decode
+    them from ``content`` itself."""
+    cols = ["duration", "sampling_rate"]
+    return cols if set(cols) <= set(df.columns) else []
+
+
 def sink_metadata_fields(df: DataFrame) -> list[tuple[str, T.DataType]]:
     """(name, type) of every metadata column a shard sink writes after
     audio and duration, in lexicographic order (src/main.rs:478)."""

@@ -29,7 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import sink_metadata_fields
+from ..functions.wav import wav_header_columns
+from ..schema import sink_metadata_fields, sink_wav_columns
 
 
 def sanitize_column_name(name: str) -> str:
@@ -63,17 +64,19 @@ def write_duckdb_shards(df: DataFrame, output_dir: str) -> DataFrame:
     """Write one ``<shard>.duckdb`` per shard; returns write receipts.
 
     Input contract matches
-    :func:`..sinks.parquet_shards.write_parquet_shards`.
+    :func:`..sinks.parquet_shards.write_parquet_shards`, including the
+    per-shard WAV header decode when duration/sampling_rate are absent.
     """
     os.makedirs(output_dir, exist_ok=True)
     meta_fields = sink_metadata_fields(df)
     ddl = build_create_table_sql(meta_fields)
 
+    wav_cols = sink_wav_columns(df)
     # Lists are stored as JSON text (src/main.rs:835-837); stringify
     # JVM-side so the pandas payload is already VARCHAR-shaped.
     slim_cols = [
         F.col("shard"), F.col("row_in_shard"), F.col("relative_path"),
-        F.col("content"), F.col("duration"), F.col("sampling_rate"),
+        F.col("content"), *map(F.col, wav_cols),
     ]
     for name, dt in meta_fields:
         c = F.col(name)
@@ -89,6 +92,8 @@ def write_duckdb_shards(df: DataFrame, output_dir: str) -> DataFrame:
         import duckdb
 
         pdf = pdf.sort_values("row_in_shard").reset_index(drop=True)
+        if not wav_cols:
+            pdf = pdf.join(wav_header_columns(pdf["content"]))
         shard = int(pdf["shard"].iloc[0])
         out_path = os.path.join(output_dir, f"{shard}.duckdb")
         # S12 idempotent replace, made ATOMIC: build the database at

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import hf_feature, sink_metadata_fields
+from ..functions.wav import wav_header_columns
+from ..schema import hf_feature, sink_metadata_fields, sink_wav_columns
 
 ROW_GROUP_SIZE = 256  # src/main.rs:607
 
@@ -107,9 +108,10 @@ def write_parquet_shards(
     """Write one ``<shard>.parquet`` per shard; returns a small DataFrame
     of (shard, n_rows, out_path) write receipts.
 
-    ``df`` must carry: shard, row_in_shard, relative_path, content,
-    duration, sampling_rate, and the widened metadata columns (everything
-    else is ignored).
+    ``df`` must carry: shard, row_in_shard, relative_path, content, and
+    the widened metadata columns (everything else is ignored). A frame
+    that carries both duration and sampling_rate keeps them; otherwise
+    each shard task decodes them from the WAV header of ``content``.
     """
     codec = COMPRESSION_MAP.get(compression.lower())
     if codec is None:
@@ -129,14 +131,16 @@ def write_parquet_shards(
         arrow_fields, metadata={"huggingface": features_json}
     )
 
+    wav_cols = sink_wav_columns(df)
     select_cols = [
-        "shard", "row_in_shard", "relative_path", "content",
-        "duration", "sampling_rate",
+        "shard", "row_in_shard", "relative_path", "content", *wav_cols,
     ] + [n for n, _ in meta_fields]
     slim = df.select(*select_cols)
 
     def write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("row_in_shard")
+        if not wav_cols:
+            pdf = pdf.join(wav_header_columns(pdf["content"]))
         shard = int(pdf["shard"].iloc[0])
         out_path = os.path.join(output_dir, f"{shard}.parquet")
         audio = pa.StructArray.from_arrays(

@@ -4,8 +4,10 @@ sharded output → read back → golden-value assertions."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import struct
 
 import duckdb
 import pyarrow.parquet as pq
@@ -413,6 +415,186 @@ def test_audio_bytes_cross_one_exchange(spark, tmp_path, audio_dir):
     )
 
 
+@pytest.mark.parametrize("output_format", ["parquet", "duckdb"])
+def test_ingest_map_stage_runs_without_python(
+    spark, tmp_path, audio_dir, monkeypatch, output_format
+):
+    """The frame ``run_pipeline`` hands the parquet and DuckDB sinks has
+    no WAV projection: the written plan's only Python node is the sink's
+    grouped pandas function, which decodes the headers, and the audio
+    bytes still cross one exchange."""
+    from audios_to_dataset_spark.sinks import duckdb_sink, parquet_shards
+
+    module, name = {
+        "parquet": (parquet_shards, "write_parquet_shards"),
+        "duckdb": (duckdb_sink, "write_duckdb_shards"),
+    }[output_format]
+    sink = getattr(module, name)
+    written = []
+
+    def spy(df, *args, **kwargs):
+        receipts = sink(df, *args, **kwargs)
+        plan = receipts._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        written.append(
+            [(n.nodeName(), _output_names(n)) for n in _plan_nodes(plan)]
+        )
+        return receipts
+
+    monkeypatch.setattr(module, name, spy)
+    meta = tmp_path / "m.csv"
+    meta.write_text(
+        "file_name,transcription\nsample.wav,hello\n"
+        + "".join(f"unmatched_{i}.wav,t{i}\n" for i in range(50))
+    )
+    run_pipeline(
+        spark, audio_dir, str(tmp_path / "out"), metadata_file=str(meta),
+        output_format=output_format,
+    )
+    [nodes] = written
+    python_nodes = [n for n, _ in nodes if "Python" in n or "Pandas" in n]
+    assert python_nodes == ["FlatMapGroupsInPandas"]
+    fat = [n for n, out in nodes if n == "Exchange" and "content" in out]
+    assert len(fat) == 1
+
+
+def _chunk(cid: bytes, body: bytes) -> bytes:
+    # RIFF chunks are word-aligned: an odd body gets one pad byte
+    return cid + struct.pack("<I", len(body)) + body + b"\0" * (len(body) & 1)
+
+
+def _riff(*chunks: bytes) -> bytes:
+    body = b"WAVE" + b"".join(chunks)
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
+def _fmt(rate: int, channels: int = 1) -> bytes:
+    return _chunk(b"fmt ", struct.pack(
+        "<HHIIHH", 1, channels, rate, rate * 2 * channels, 2 * channels, 16
+    ))
+
+
+@pytest.fixture()
+def header_tree(tmp_path):
+    """WAV header shapes the decode must agree on wherever it runs."""
+    d = tmp_path / "headers"
+    (d / "sub").mkdir(parents=True)
+    pcm = bytes(range(256)) * 25  # 6400 bytes
+    files = {
+        "mono.wav": synth_wav(sample_rate=16_000, n_samples=4_000),
+        "sub/stereo.wav": synth_wav(
+            sample_rate=22_050, n_samples=3_000, channels=2
+        ),
+        # odd-sized LIST chunk (padded) between fmt and data
+        "list_first.wav": _riff(
+            _fmt(8_000),
+            _chunk(b"LIST", b"INFOISFT" + struct.pack("<I", 5) + b"test\0"),
+            _chunk(b"data", pcm),
+        ),
+        "trailing.wav": _riff(
+            _fmt(11_025, 2), _chunk(b"data", pcm), _chunk(b"id3 ", b"xyz")
+        ),
+        # data chunk declares more bytes than the file holds
+        "sub/truncated.wav": synth_wav(sample_rate=8_000)[:-1001],
+        # fmt chunk too short to hold a rate
+        "corrupt.wav": _riff(_chunk(b"fmt ", b"garbage!"), _chunk(b"data", pcm)),
+        "notes.txt": b"not a RIFF file at all",
+    }
+    for rel, data in files.items():
+        (d / rel).write_bytes(data)
+    return str(d)
+
+
+def test_sinks_decode_like_build_dataset(spark, tmp_path, header_tree):
+    """Both sinks, decoding in their shard tasks, write the
+    (duration, sampling_rate) that ``build_dataset``'s columns carry,
+    and the parquet shards and manifest stats equal those of a write of
+    ``build_dataset``'s frame."""
+    from audios_to_dataset_spark.pipeline import build_dataset
+    from audios_to_dataset_spark.sinks.parquet_shards import (
+        write_parquet_shards,
+    )
+
+    ds = build_dataset(spark, header_tree, files_per_shard=3)
+    want = {
+        r.relative_path: (r.duration, r.sampling_rate) for r in ds.collect()
+    }
+    assert want["mono.wav"] == (0.25, 16_000)
+    assert want["list_first.wav"] == (0.4, 8_000)
+    assert want["trailing.wav"] == (1600 / 11_025, 11_025)
+    assert 0.0 < want["sub/truncated.wav"][0] < 1.0
+    assert want["corrupt.wav"] == want["notes.txt"] == (0.0, 0)
+    assert len(want) == 7
+
+    pq_out = tmp_path / "pq"
+    run_pipeline(
+        spark, header_tree, str(pq_out), files_per_shard=3, manifest=True
+    )
+    got = {
+        r["audio"]["path"]: (r["duration"], r["audio"]["sampling_rate"])
+        for r in spark.read.parquet(str(pq_out)).collect()
+    }
+    assert got == want
+
+    duck_out = tmp_path / "duck"
+    run_pipeline(
+        spark, header_tree, str(duck_out), files_per_shard=3,
+        output_format="duckdb",
+    )
+    got = {}
+    for shard in glob.glob(str(duck_out / "*.duckdb")):
+        con = duckdb.connect(shard, read_only=True)
+        got.update(
+            (p, (d, sr)) for p, d, sr in con.execute(
+                "SELECT audio.path, duration, audio.sampling_rate FROM files"
+            ).fetchall()
+        )
+        con.close()
+    assert got == want
+
+    ref_out = tmp_path / "ref"
+    ref = write_parquet_shards(ds, str(ref_out)).collect()
+    stats = sorted(
+        (r.shard, r.n_rows, r.sum_duration, r.min_duration, r.max_duration)
+        for r in ref
+    )
+    with open(pq_out / "_manifest.jsonl") as f:
+        manifest = [json.loads(line) for line in f]
+    assert sorted(
+        (m["shard"], m["n_rows"], m["sum_duration"], m["min_duration"],
+         m["max_duration"])
+        for m in manifest
+    ) == stats
+    for r in ref:
+        name = os.path.basename(r.out_path)
+        assert (pq_out / name).read_bytes() == (ref_out / name).read_bytes()
+
+
+@pytest.mark.parametrize("output_format", ["parquet", "orc"])
+def test_sample_rate_above_int32_keeps_row(
+    spark, tmp_path, audio_dir, output_format
+):
+    """A fmt rate above 2**31 - 1 decodes as (0.0, 0) and the job
+    succeeds, whether the sink (parquet) or the map-side UDF (ORC)
+    decodes it."""
+    data = bytearray(synth_wav(sample_rate=8_000))
+    struct.pack_into("<I", data, 24, 3_087_055_744)
+    with open(os.path.join(audio_dir, "huge_rate.wav"), "wb") as f:
+        f.write(data)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, audio_dir, out, output_format=output_format)
+    rows = {
+        r["audio"]["path"]: (r["duration"], r["audio"]["sampling_rate"])
+        for r in spark.read.format(output_format).load(out).collect()
+    }
+    assert rows == {
+        "huge_rate.wav": (0.0, 0),
+        "sample.wav": (1.0, 16_000),
+        "nested/with_path.wav": (1.0, 44_100),
+    }
+
+
 def test_segmented_pipeline_e2e(spark, tmp_path):
     """--segment-seconds: each WAV becomes N standalone segments that
     flow through metadata join, sharding, and the parquet sink."""
@@ -700,7 +882,10 @@ def test_transcode_flac_pipeline(spark, tmp_path, audio_dir):
         decode_flac,
         flac_stream_info,
     )
-    from audios_to_dataset_spark.functions.wav import wav_pcm16_frames
+    from audios_to_dataset_spark.functions.wav import (
+        parse_wav_header,
+        wav_pcm16_frames,
+    )
 
     def _pcm16_wav(sr, ch, frames, seed):
         rng = np.random.RandomState(seed)
@@ -750,7 +935,8 @@ def test_transcode_flac_pipeline(spark, tmp_path, audio_dir):
         assert got is not None
         assert got[0] == sr == r["audio"]["sampling_rate"]
         assert np.array_equal(got[1], want)
-        assert r["duration"] > 0
+        # decoded from the WAV before transcoding, not from the FLAC
+        assert r["duration"] == parse_wav_header(originals[path])[0]
     with _pytest.raises(ValueError, match="incremental"):
         run_pipeline(
             spark, str(d), out, transcode_flac=True, incremental=True
@@ -858,6 +1044,15 @@ def test_convert_duckdb_to_parquet(spark, tmp_path, audio_dir):
         spark, audio_dir, duck_out, output_format="duckdb",
         files_per_shard=1,
     )
+    # a stored duration no header decode would give: the conversion
+    # must carry it, not decode the bytes again
+    for shard in glob.glob(os.path.join(duck_out, "*.duckdb")):
+        con = duckdb.connect(shard)
+        con.execute(
+            "UPDATE files SET duration = 123.5"
+            " WHERE audio.path = 'sample.wav'"
+        )
+        con.close()
     pq_out = str(tmp_path / "pq")
     rows = convert_duckdb_to_parquet(
         spark, duck_out, pq_out, files_per_shard=10, manifest=True
@@ -874,6 +1069,11 @@ def test_convert_duckdb_to_parquet(spark, tmp_path, audio_dir):
             originals[os.path.relpath(p, audio_dir)] = open(p, "rb").read()
     for p, r in back.items():
         assert bytes(r["audio"]["bytes"]) == originals[p]
+    assert back["sample.wav"]["duration"] == 123.5
+    assert back["nested/with_path.wav"]["duration"] == 1.0
+    assert json.loads(
+        open(os.path.join(pq_out, "_manifest.jsonl")).readline()
+    )["max_duration"] == 123.5
     # HF footer + manifest made it through
     meta = _read_shard(pq_out, 0).schema.metadata
     assert b"huggingface" in meta

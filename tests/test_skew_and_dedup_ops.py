@@ -146,6 +146,17 @@ def test_shingle_freq_cap_bounds_candidates(spark):
     assert capped < uncapped
 
 
+def test_dedup_clusters_leaves_no_cache(spark, sf_dir):
+    """Building q_dedup_clusters registers nothing in the session's
+    CacheManager, so a later build of the same plan cannot read an
+    earlier one's cached buckets."""
+    from audios_to_dataset_spark.plans.analytics import q_dedup_clusters
+
+    spark.catalog.clearCache()
+    q_dedup_clusters(spark, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_minhash_mapside_equals_explode_formulation(spark, sf_dir):
     """The map-side signature (array_min over per-doc hash transforms)
     must equal the explode + groupBy(id) + min() formulation bit-for-bit

@@ -35,6 +35,21 @@ def test_non_wav_fallback(data):
     assert parse_wav_header(data) == (0.0, 0)
 
 
+def test_sample_rate_above_int32_is_decode_failure():
+    # fmt rates are u32 on disk; every sink stores an i32, so a rate
+    # above 2**31 - 1 is a parse failure, not a wrapped or raising value
+    import struct
+
+    def with_rate(rate):
+        data = bytearray(synth_wav(sample_rate=8_000))
+        struct.pack_into("<I", data, 24, rate)
+        return bytes(data)
+
+    assert parse_wav_header(with_rate(3_087_055_744)) == (0.0, 0)
+    assert parse_wav_header(with_rate(2**31)) == (0.0, 0)
+    assert parse_wav_header(with_rate(2**31 - 1))[1] == 2**31 - 1
+
+
 def test_truncated_data_chunk():
     # data chunk claims more bytes than present → clamp, still parses
     full = synth_wav(sample_rate=8_000)
