@@ -6,13 +6,14 @@ sample_rate`` (f64 seconds), ``sampling_rate`` i32; ANY parse failure →
 ``(0.0, 0)`` so non-WAV files are kept with zero duration (README.md:94).
 
 ``parse_wav_header`` is the one RIFF header parser: a pure-Python chunk
-walk, no JVM audio codec needed. The parquet and DuckDB shard sinks call
-it through ``wav_header_columns`` inside their per-shard pandas
-functions, which already hold every file's bytes (the reference decodes
-in the shard worker too), so the ingest map stage runs without Python.
-``wav_info`` is the same decode as an Arrow-batched pandas UDF, for plans
-that need the columns before a sink (``build_dataset``, the ORC sink,
-FLAC transcoding, the multimodal queries).
+walk, no JVM audio codec needed. The parquet and DuckDB sinks' shared
+shard writer (``sinks.write_shards``) calls it on each file of the
+shard's Arrow table, which already holds every file's bytes (the
+reference decodes in the shard worker too), so the ingest map stage
+runs without Python. ``wav_info`` is the same decode as an
+Arrow-batched pandas UDF, for plans that need the columns before a sink
+(``build_dataset``, the ORC sink, FLAC transcoding, the multimodal
+queries).
 """
 
 from __future__ import annotations
@@ -71,22 +72,15 @@ def parse_wav_header(data: bytes | None) -> tuple[float, int]:
         return 0.0, 0
 
 
-def wav_header_columns(content: pd.Series) -> pd.DataFrame:
-    """``duration``/``sampling_rate`` of each payload in ``content``,
-    on ``content``'s index."""
+@pandas_udf(WAV_RESULT_TYPE)
+def wav_info(content: pd.Series) -> pd.DataFrame:
     out = [parse_wav_header(b) for b in content]
     return pd.DataFrame(
         {
             "duration": [d for d, _ in out],
             "sampling_rate": [s for _, s in out],
-        },
-        index=content.index,
+        }
     )
-
-
-@pandas_udf(WAV_RESULT_TYPE)
-def wav_info(content: pd.Series) -> pd.DataFrame:
-    return wav_header_columns(content)
 
 
 def with_wav_info(col: Column) -> Column:

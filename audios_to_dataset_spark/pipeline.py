@@ -8,7 +8,7 @@ Stages (all lazy until the sink action):
                                             on the bare file listing
     → load_metadata + widening (S6-S8)    — side table, lattice schema
     → lookup_join (J1-J3)                 — 3-level broadcast fallback
-    → parquet / duckdb shard sink (S9-S13) — one pandas task per shard,
+    → parquet / duckdb shard sink (S9-S13) — one Arrow task per shard,
                                             which decodes each file's WAV
                                             header (P4) as it writes it
 

@@ -14,23 +14,21 @@ Reference behavior (/root/reference/src/main.rs:388-436, 797-847):
 - identifier quoting doubles embedded double-quotes (:241-243)
 - all inserts in one transaction; one writer per file (never shared)
 
-Spark shape: ``applyInPandas`` per shard — each task owns its .duckdb
-file exclusively (same single-writer model as the reference's
-connection-per-shard). Rows are inserted via DuckDB's Arrow scan, not
-row-at-a-time statements.
+Spark shape: one ``applyInArrow`` task per shard through the shared shard
+writer (``sinks.write_shards``) — each task owns its .duckdb file
+exclusively (same single-writer model as the reference's
+connection-per-shard). Rows are inserted via DuckDB's scan of the
+shard's Arrow table, not row-at-a-time statements.
 """
 
 from __future__ import annotations
 
-import os
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.wav import wav_header_columns
-from ..schema import sink_metadata_fields, sink_wav_columns
+from ..schema import sink_metadata_fields
+from . import write_shards
 
 
 def sanitize_column_name(name: str) -> str:
@@ -61,80 +59,38 @@ def build_create_table_sql(
 
 
 def write_duckdb_shards(df: DataFrame, output_dir: str) -> DataFrame:
-    """Write one ``<shard>.duckdb`` per shard; returns write receipts.
-
-    Input contract matches
-    :func:`..sinks.parquet_shards.write_parquet_shards`, including the
-    per-shard WAV header decode when duration/sampling_rate are absent.
-    """
-    os.makedirs(output_dir, exist_ok=True)
+    """Write one ``<shard>.duckdb`` per shard through
+    :func:`..sinks.write_shards`; returns its write receipts."""
     meta_fields = sink_metadata_fields(df)
     ddl = build_create_table_sql(meta_fields)
+    meta_cols = "".join(
+        f', "{sanitize_column_name(n)}"' for n, _ in meta_fields
+    )
+    insert = (
+        f"INSERT INTO files (id, duration, audio{meta_cols}) "
+        f"SELECT row_in_shard, duration, "
+        f"struct_pack(path := relative_path, "
+        f"sampling_rate := CAST(sampling_rate AS INTEGER), "
+        f"bytes := CAST(content AS BLOB)){meta_cols} "
+        f"FROM payload ORDER BY row_in_shard"
+    )
 
-    wav_cols = sink_wav_columns(df)
-    # Lists are stored as JSON text (src/main.rs:835-837); stringify
-    # JVM-side so the pandas payload is already VARCHAR-shaped.
-    slim_cols = [
-        F.col("shard"), F.col("row_in_shard"), F.col("relative_path"),
-        F.col("content"), *map(F.col, wav_cols),
-    ]
-    for name, dt in meta_fields:
-        c = F.col(name)
-        if isinstance(dt, T.ArrayType):
-            c = F.to_json(c)
-        slim_cols.append(c.alias(name))
-    slim = df.select(*slim_cols)
-
-    meta_names = [n for n, _ in meta_fields]
-    quoted = [f'"{sanitize_column_name(n)}"' for n in meta_names]
-
-    def write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
+    def write_file(table, path: str) -> None:
         import duckdb
 
-        pdf = pdf.sort_values("row_in_shard").reset_index(drop=True)
-        if not wav_cols:
-            pdf = pdf.join(wav_header_columns(pdf["content"]))
-        shard = int(pdf["shard"].iloc[0])
-        out_path = os.path.join(output_dir, f"{shard}.duckdb")
-        # S12 idempotent replace, made ATOMIC: build the database at
-        # <name>.tmp and os.replace into place — no reader of a live
-        # output dir ever sees a half-written shard file.
-        tmp_path = out_path + ".tmp"
-        if os.path.exists(tmp_path):
-            os.remove(tmp_path)
-        con = duckdb.connect(tmp_path)
+        con = duckdb.connect(path)
         try:
             con.execute(ddl)
-            payload = pdf.rename(columns={"row_in_shard": "id"})
-            con.register("payload", payload)
-            meta_sel = (", " + ", ".join(quoted)) if quoted else ""
-            meta_cols = (", " + ", ".join(quoted)) if quoted else ""
+            con.register("payload", table)
             con.execute("BEGIN TRANSACTION")
-            con.execute(
-                f"INSERT INTO files (id, duration, audio{meta_cols}) "
-                f"SELECT id, duration, "
-                f"struct_pack(path := relative_path, "
-                f"sampling_rate := CAST(sampling_rate AS INTEGER), "
-                f"bytes := CAST(content AS BLOB)){meta_sel} "
-                f"FROM payload ORDER BY id"
-            )
+            con.execute(insert)
             con.execute("COMMIT")
         finally:
             con.close()
-        try:
-            os.replace(tmp_path, out_path)
-        finally:
-            if os.path.exists(tmp_path):
-                os.remove(tmp_path)
-        return pd.DataFrame(
-            {"shard": [shard], "n_rows": [len(pdf)], "out_path": [out_path]}
-        )
 
-    receipt_schema = T.StructType(
-        [
-            T.StructField("shard", T.LongType()),
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("out_path", T.StringType()),
-        ]
-    )
-    return slim.groupBy("shard").applyInPandas(write_shard, receipt_schema)
+    # Lists are stored as JSON text (src/main.rs:835-837); stringify
+    # JVM-side so the Arrow payload is already VARCHAR-shaped.
+    lists = {
+        n: F.to_json(n) for n, dt in meta_fields if isinstance(dt, T.ArrayType)
+    }
+    return write_shards(df.withColumns(lists), output_dir, "duckdb", write_file)

@@ -14,11 +14,13 @@ Reference behavior (/root/reference/src/main.rs:438-613):
 - pre-existing shard file deleted before write (S12, :732-735)
 
 Spark's native Parquet writer cannot emit custom footer keys or exact
-file names, so shards are written through pyarrow inside
-``applyInPandas`` — one task per shard, each producing its own file
-(SURVEY.md §7.4 item 1). This is the grouped-map sink pattern: fully
-distributed, no driver materialization, and safe because shard ids
-partition the rows.
+file names, so shards are written through pyarrow by the shared shard
+writer (``sinks.write_shards``): one ``applyInArrow`` task per shard,
+each producing its own file (SURVEY.md §7.4 item 1). This is the
+grouped-map sink pattern: fully distributed, no driver materialization,
+and safe because shard ids partition the rows. The shard's audio stays
+in the Arrow batches Spark sent; the ``audio`` struct is built over
+them without a copy.
 """
 
 from __future__ import annotations
@@ -26,15 +28,15 @@ from __future__ import annotations
 import json
 import os
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.wav import wav_header_columns
-from ..schema import hf_feature, sink_metadata_fields, sink_wav_columns
+from ..schema import hf_feature, sink_metadata_fields
+from . import write_shards
 
 ROW_GROUP_SIZE = 256  # src/main.rs:607
 
@@ -80,38 +82,18 @@ def hf_features_json(meta_fields: list[tuple[str, T.DataType]]) -> str:
     return json.dumps({"info": {"features": features}})
 
 
-def atomic_write_table(table: pa.Table, out_path: str, codec: str) -> None:
-    """S12 idempotent shard replace, made ATOMIC: write to
-    ``<name>.tmp`` and ``os.replace`` into place (the same courtesy the
-    manifest gets) — a reader of a live output dir can never observe a
-    torn shard, a failed write leaves the previous shard intact, and a
-    task retry just re-replaces."""
-    tmp_path = out_path + ".tmp"
-    try:
-        pq.write_table(
-            table,
-            tmp_path,
-            compression=codec,
-            row_group_size=ROW_GROUP_SIZE,
-        )
-        os.replace(tmp_path, out_path)
-    finally:
-        if os.path.exists(tmp_path):
-            os.remove(tmp_path)
-
-
 def write_parquet_shards(
     df: DataFrame,
     output_dir: str,
     compression: str = "snappy",
 ) -> DataFrame:
-    """Write one ``<shard>.parquet`` per shard; returns a small DataFrame
-    of (shard, n_rows, out_path) write receipts.
+    """Write one ``<shard>.parquet`` per shard through
+    :func:`..sinks.write_shards`; returns its write receipts.
 
-    ``df`` must carry: shard, row_in_shard, relative_path, content, and
-    the widened metadata columns (everything else is ignored). A frame
-    that carries both duration and sampling_rate keeps them; otherwise
-    each shard task decodes them from the WAV header of ``content``.
+    Row groups hold 256 rows whatever batches the shard arrived in, so
+    the rows and footer do not depend on the Arrow batch size. Where a
+    row group spans two batches its pages may be cut differently, so
+    ``n_bytes`` can differ between batch sizes.
     """
     codec = COMPRESSION_MAP.get(compression.lower())
     if codec is None:
@@ -119,74 +101,32 @@ def write_parquet_shards(
             f"unknown compression {compression!r}; "
             f"one of {sorted(COMPRESSION_MAP)}"
         )
-    os.makedirs(output_dir, exist_ok=True)
-
     meta_fields = sink_metadata_fields(df)
-    features_json = hf_features_json(meta_fields)
-    arrow_fields = [
-        pa.field("audio", AUDIO_ARROW_TYPE),
-        pa.field("duration", pa.float64()),
-    ] + [pa.field(n, _arrow_type(dt)) for n, dt in meta_fields]
     arrow_schema = pa.schema(
-        arrow_fields, metadata={"huggingface": features_json}
-    )
-
-    wav_cols = sink_wav_columns(df)
-    select_cols = [
-        "shard", "row_in_shard", "relative_path", "content", *wav_cols,
-    ] + [n for n, _ in meta_fields]
-    slim = df.select(*select_cols)
-
-    def write_shard(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("row_in_shard")
-        if not wav_cols:
-            pdf = pdf.join(wav_header_columns(pdf["content"]))
-        shard = int(pdf["shard"].iloc[0])
-        out_path = os.path.join(output_dir, f"{shard}.parquet")
-        audio = pa.StructArray.from_arrays(
-            [
-                pa.array(list(pdf["content"]), pa.binary()),
-                pa.array(pdf["sampling_rate"].astype("int32"), pa.int32()),
-                pa.array(pdf["relative_path"], pa.string()),
-            ],
-            fields=list(AUDIO_ARROW_TYPE),
-        )
-        cols = [audio, pa.array(pdf["duration"].astype("float64"),
-                                pa.float64())]
-        for n, dt in meta_fields:
-            # from_pandas=True maps pandas NaN back to Parquet NULL —
-            # missing metadata must stay NULL (src/main.rs:486-509), not
-            # become a float NaN.
-            cols.append(
-                pa.array(pdf[n], _arrow_type(dt), from_pandas=True)
-            )
-        table = pa.Table.from_arrays(cols, schema=arrow_schema)
-        atomic_write_table(table, out_path, codec)
-        dur = pdf["duration"].astype("float64")
-        return pd.DataFrame(
-            {
-                "shard": [shard],
-                "n_rows": [len(pdf)],
-                "out_path": [out_path],
-                "n_bytes": [os.path.getsize(out_path)],
-                "sum_duration": [float(dur.sum())],
-                "min_duration": [float(dur.min())],
-                "max_duration": [float(dur.max())],
-            }
-        )
-
-    receipt_schema = T.StructType(
         [
-            T.StructField("shard", T.LongType()),
-            T.StructField("n_rows", T.LongType()),
-            T.StructField("out_path", T.StringType()),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("sum_duration", T.DoubleType()),
-            T.StructField("min_duration", T.DoubleType()),
-            T.StructField("max_duration", T.DoubleType()),
-        ]
+            pa.field("audio", AUDIO_ARROW_TYPE),
+            pa.field("duration", pa.float64()),
+        ] + [pa.field(n, _arrow_type(dt)) for n, dt in meta_fields],
+        metadata={"huggingface": hf_features_json(meta_fields)},
     )
-    return slim.groupBy("shard").applyInPandas(write_shard, receipt_schema)
+
+    def write_file(table: pa.Table, path: str) -> None:
+        audio = pc.make_struct(  # over the shard's chunks, no copy
+            table["content"], table["sampling_rate"], table["relative_path"],
+            field_names=["bytes", "sampling_rate", "path"],
+        )
+        out = pa.Table.from_arrays(
+            [audio, table["duration"], *(table[n] for n, _ in meta_fields)],
+            names=arrow_schema.names,
+        )
+        pq.write_table(
+            out.cast(arrow_schema),
+            path,
+            compression=codec,
+            row_group_size=ROW_GROUP_SIZE,
+        )
+
+    return write_shards(df, output_dir, "parquet", write_file)
 
 
 MANIFEST_NAME = "_manifest.jsonl"
@@ -205,8 +145,6 @@ def write_manifest(receipts: list, output_dir: str) -> str:
     Driver-side by design: one row per SHARD (not per record), the same
     cardinality as the receipts the caller already collected.
     """
-    import json
-
     path = os.path.join(output_dir, MANIFEST_NAME)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -248,8 +186,6 @@ def read_pruned(
     can assert the prune actually fired; raises ``FileNotFoundError``
     when no manifest exists (fall back to a full read + filter — the
     zones are an optimization, never a correctness gate)."""
-    import json
-
     path = os.path.join(output_dir, MANIFEST_NAME)
     with open(path) as f:
         entries = [json.loads(line) for line in f if line.strip()]

@@ -380,7 +380,8 @@ def _output_names(node) -> set[str]:
 
 def test_audio_bytes_cross_one_exchange(spark, tmp_path, audio_dir):
     """The path -> shard mapping is broadcast to the scan, so the only
-    shuffle that carries ``content`` is the sink's groupBy(shard).
+    shuffle that carries ``content`` is the sink's repartition(shard),
+    and the only sort is the one over it.
     The unmatched metadata rows keep the joined frame's size estimate (a
     product over the three left joins) above the broadcast threshold, so
     a mapping computed after the join would be shuffle-joined."""
@@ -413,6 +414,17 @@ def test_audio_bytes_cross_one_exchange(spark, tmp_path, audio_dir):
         and "content" in _output_names(n.streamedPlan())
         for n in nodes
     )
+    # The shard tasks get their rows in row_in_shard order from one
+    # sort over that exchange; the grouped operator adds none.
+    [sort] = [
+        n for n in nodes
+        if n.nodeName() == "Sort" and "content" in _output_names(n)
+    ]
+    order = sort.sortOrder()
+    assert [order.apply(i).child().name() for i in range(order.size())] == [
+        "shard", "row_in_shard"
+    ]
+    assert sort.child().equals(fat_exchanges[0])
 
 
 @pytest.mark.parametrize("output_format", ["parquet", "duckdb"])
@@ -421,7 +433,7 @@ def test_ingest_map_stage_runs_without_python(
 ):
     """The frame ``run_pipeline`` hands the parquet and DuckDB sinks has
     no WAV projection: the written plan's only Python node is the sink's
-    grouped pandas function, which decodes the headers, and the audio
+    grouped Arrow function, which decodes the headers, and the audio
     bytes still cross one exchange."""
     from audios_to_dataset_spark.sinks import duckdb_sink, parquet_shards
 
@@ -453,8 +465,11 @@ def test_ingest_map_stage_runs_without_python(
         output_format=output_format,
     )
     [nodes] = written
-    python_nodes = [n for n, _ in nodes if "Python" in n or "Pandas" in n]
-    assert python_nodes == ["FlatMapGroupsInPandas"]
+    python_nodes = [
+        n for n, _ in nodes
+        if any(k in n for k in ("Python", "Pandas", "Arrow"))
+    ]
+    assert python_nodes == ["FlatMapGroupsInArrow"]
     fat = [n for n, out in nodes if n == "Exchange" and "content" in out]
     assert len(fat) == 1
 
@@ -569,6 +584,95 @@ def test_sinks_decode_like_build_dataset(spark, tmp_path, header_tree):
     for r in ref:
         name = os.path.basename(r.out_path)
         assert (pq_out / name).read_bytes() == (ref_out / name).read_bytes()
+
+
+def test_nan_metadata_stays_null(spark, tmp_path, audio_dir):
+    """A JSONL ``NaN`` literal is missing metadata: both sinks write it
+    as NULL, as a scalar and (parquet) as a list element. The DuckDB
+    sink stores lists as their JSON text, where it stays ``"NaN"``."""
+    meta = tmp_path / "m.jsonl"
+    meta.write_text(
+        '{"relative_path": "sample.wav", "snr": NaN, "gains": [NaN, 1.5]}\n'
+        '{"relative_path": "nested/with_path.wav", "snr": 2.5,'
+        ' "gains": [0.5]}\n'
+    )
+    pq_out = str(tmp_path / "pq")
+    run_pipeline(spark, audio_dir, pq_out, metadata_file=str(meta))
+    got = {
+        r["audio"]["path"]: (r["snr"], r["gains"])
+        for r in _read_shard(pq_out).to_pylist()
+    }
+    assert got == {
+        "sample.wav": (None, [None, 1.5]),
+        "nested/with_path.wav": (2.5, [0.5]),
+    }
+
+    duck_out = str(tmp_path / "duck")
+    run_pipeline(
+        spark, audio_dir, duck_out, metadata_file=str(meta),
+        output_format="duckdb",
+    )
+    con = duckdb.connect(os.path.join(duck_out, "0.duckdb"), read_only=True)
+    got = {
+        p: (snr, gains) for p, snr, gains in con.execute(
+            "SELECT audio.path, snr, gains FROM files"
+        ).fetchall()
+    }
+    con.close()
+    assert got == {
+        "sample.wav": (None, '["NaN",1.5]'),
+        "nested/with_path.wav": (2.5, "[0.5]"),
+    }
+
+
+def test_shard_arriving_in_many_batches(spark, tmp_path):
+    """A shard that reaches its task as many Arrow batches writes the
+    rows of a one-batch write: the same parquet rows, 256-row groups,
+    footer and manifest stats, and DuckDB ids in relative_path order."""
+    d = tmp_path / "clips"
+    d.mkdir()
+    for i in range(300):
+        (d / f"clip_{i:03d}.wav").write_bytes(
+            synth_wav(sample_rate=8_000, n_samples=8 + (i * 37) % 101)
+        )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+    def write(out, **kw):
+        run_pipeline(
+            spark, str(d), str(tmp_path / out), files_per_shard=300, **kw
+        )
+        return tmp_path / out
+
+    ref = write("ref", manifest=True)
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        many = write("many", manifest=True)
+        duck = write("duck", output_format="duckdb")
+    finally:
+        spark.conf.set(key, prev)
+
+    want = pq.ParquetFile(ref / "0.parquet")
+    got = pq.ParquetFile(many / "0.parquet")
+    assert [
+        got.metadata.row_group(i).num_rows
+        for i in range(got.metadata.num_row_groups)
+    ] == [256, 44]
+    assert got.schema_arrow.metadata == want.schema_arrow.metadata
+    assert got.schema_arrow == want.schema_arrow
+    assert got.read().equals(want.read())
+
+    def stats(out):
+        [m] = [json.loads(line) for line in open(out / "_manifest.jsonl")]
+        m.pop("n_bytes")
+        return m
+
+    assert stats(many) == stats(ref)
+
+    con = duckdb.connect(str(duck / "0.duckdb"), read_only=True)
+    rows = con.execute("SELECT id, audio.path FROM files ORDER BY id").fetchall()
+    con.close()
+    assert rows == [(i, f"clip_{i:03d}.wav") for i in range(300)]
 
 
 @pytest.mark.parametrize("output_format", ["parquet", "orc"])
@@ -943,43 +1047,57 @@ def test_transcode_flac_pipeline(spark, tmp_path, audio_dir):
         )
 
 
-def test_atomic_shard_write_never_torn(tmp_path, monkeypatch):
-    """Kill the parquet write mid-shard: the output dir must never show
-    a torn <idx>.parquet — the previous shard survives untouched, the
-    .tmp is cleaned up, and a retry lands the new bytes atomically."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    import pytest as _pytest
+def test_atomic_shard_write_never_torn(spark, tmp_path, audio_dir, monkeypatch):
+    """Kill a shard write midway, in either sink: the output dir must
+    never show a torn <idx>.<ext> — the previous shard survives
+    untouched, the .tmp is cleaned up, and a retry replaces the file."""
+    from audios_to_dataset_spark import sinks
+    from audios_to_dataset_spark.pipeline import build_dataset
+    from audios_to_dataset_spark.sinks import duckdb_sink, parquet_shards
 
-    from audios_to_dataset_spark.sinks import parquet_shards as ps
+    ds = build_dataset(spark, audio_dir)
 
-    out = tmp_path / "0.parquet"
-    t_old = pa.table({"x": [1, 2, 3]})
-    ps.atomic_write_table(t_old, str(out), "snappy")
-    old_bytes = out.read_bytes()
+    def dying_write_shards(df, output_dir, ext, write_file):
+        def dying(table, path):
+            # write a real (torn) prefix, then die — the half-written
+            # bytes must only ever exist at the .tmp path
+            write_file(table, path)
+            with open(path, "r+b") as f:
+                f.truncate(10)
+            raise OSError("simulated mid-write crash")
 
-    t_new = pa.table({"x": [9, 9, 9, 9]})
-    real_write = pq.write_table
+        return sinks.write_shards(df, output_dir, ext, dying)
 
-    def _dying_write(table, where, **kw):
-        # write a real (torn) prefix, then die — the half-written bytes
-        # must only ever exist at the .tmp path
-        real_write(table, where, **kw)
-        with open(where, "r+b") as f:
-            f.truncate(10)
-        raise OSError("simulated mid-write crash")
+    def n_rows(path, ext):
+        if ext == "parquet":
+            return pq.read_table(path).num_rows
+        con = duckdb.connect(path, read_only=True)
+        try:
+            return con.execute("SELECT count(*) FROM files").fetchone()[0]
+        finally:
+            con.close()
 
-    monkeypatch.setattr(ps.pq, "write_table", _dying_write)
-    with _pytest.raises(OSError, match="simulated"):
-        ps.atomic_write_table(t_new, str(out), "snappy")
-    assert out.read_bytes() == old_bytes  # previous shard intact
-    assert not (tmp_path / "0.parquet.tmp").exists()  # tmp cleaned
-    assert pq.read_table(str(out)).num_rows == 3
+    for module, ext, sink in [
+        (parquet_shards, "parquet", parquet_shards.write_parquet_shards),
+        (duckdb_sink, "duckdb", duckdb_sink.write_duckdb_shards),
+    ]:
+        out = tmp_path / ext
+        shard = out / f"0.{ext}"
+        sink(ds.filter("relative_path = 'sample.wav'"), str(out)).collect()
+        old_bytes = shard.read_bytes()
 
-    monkeypatch.setattr(ps.pq, "write_table", real_write)
-    ps.atomic_write_table(t_new, str(out), "snappy")
-    assert pq.read_table(str(out)).column("x").to_pylist() == [9, 9, 9, 9]
-    assert not (tmp_path / "0.parquet.tmp").exists()
+        monkeypatch.setattr(module, "write_shards", dying_write_shards)
+        with pytest.raises(Exception, match="simulated mid-write crash"):
+            sink(ds, str(out)).collect()
+        assert shard.read_bytes() == old_bytes  # previous shard intact
+        assert not (out / f"0.{ext}.tmp").exists()  # tmp cleaned
+        assert n_rows(str(shard), ext) == 1
+
+        monkeypatch.undo()
+        [receipt] = sink(ds, str(out)).collect()
+        assert receipt.n_rows == n_rows(str(shard), ext) == 2
+        assert receipt.n_bytes == shard.stat().st_size
+        assert sorted(os.listdir(out)) == [f"0.{ext}"]
 
 
 def test_duckdb_source_roundtrip(spark, tmp_path, audio_dir):
