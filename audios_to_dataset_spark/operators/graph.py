@@ -9,9 +9,9 @@ Scale notes: each iteration is one equi-join (labels ⋈ edges) + one
 groupBy min — both shuffle on uniformly-distributed ids. Iteration count
 is bounded by the graph diameter (near-dup clusters are tiny and dense,
 so convergence is fast); `max_iter` caps pathological chains, and
-convergence is detected with a cheap count instead of comparing full
-frames. Labels are checkpointed via localCheckpoint each round to cut
-the growing lineage.
+convergence is detected from the label sum, which each round's eager
+localCheckpoint job observes on the side instead of comparing full
+frames. The checkpoint also cuts the growing lineage.
 """
 
 from __future__ import annotations
@@ -29,14 +29,16 @@ LAST_CC_ROUNDS = 0
 def undirected(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
-    """(a, b): every ``src``–``dst`` edge in both directions, each once."""
-    return (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(
-            edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
-        )
-        .distinct()
+    """(a, b): every ``src``–``dst`` edge in both directions, each once.
+
+    Both orientations come from one scan of ``edges`` (an exploded
+    two-element array), so the input plan appears once in the result's
+    plan, not twice as under a union."""
+    both = F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
     )
+    return edges.select(F.inline(both)).distinct()
 
 
 def connected_components(
@@ -68,19 +70,16 @@ def connected_components(
     # old labels and counting differences — a full N⋈N join plus a
     # second action EVERY iteration. Min-label propagation is monotone
     # (labels only ever decrease), so Σlabel strictly decreases on any
-    # change and is equal iff the fixpoint is reached; one decimal-sum
-    # aggregate over the just-checkpointed labels replaces the N⋈N
-    # join-and-count. Termination is equivalent (both stop after the
-    # first unchanged round), so the labels — and every declared CC
-    # query — are bit-identical. The EDGE checkpoint above stays EAGER
-    # (it feeds concurrent broadcast-build threads inside the first
-    # iteration; lazy ones get raced — measured on pagerank); the
-    # per-round LABEL checkpoint is lazy since r13 (see the loop).
+    # change and is equal iff the fixpoint is reached; a decimal-sum
+    # over the labels replaces the N⋈N join-and-count. Termination is
+    # equivalent (both stop after the first unchanged round), so the
+    # labels — and every declared CC query — are bit-identical.
     # The Σlabel convergence check is only sound for numeric ids: a
     # non-numeric label would cast to NULL per row, the sum would be
     # NULL every round, and the loop would silently exit after one
     # iteration with under-merged clusters (ADVICE r12). All in-repo
     # callers pass bigint ids; fail loudly on anything else.
+    from pyspark.sql import Observation
     from pyspark.sql.types import NumericType
 
     if not isinstance(labels.schema["label"].dataType, NumericType):
@@ -91,9 +90,19 @@ def connected_components(
         )
     global LAST_CC_ROUNDS
     LAST_CC_ROUNDS = 0
-    _lsum = F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
-    prev_sum = labels.agg(_lsum).collect()[0][0]
-    for _ in range(max_iter):
+    # Σlabel is never a separate driver action: it is observed
+    # (Dataset.observe) inside each round's eager checkpoint job, which
+    # runs anyway. The input labels are the ids, and each node keeps
+    # exactly one row through a round (ids are unique), so round 1's
+    # Σid is the input Σlabel. An observation on round 1's input branch
+    # would not do: Spark prunes that branch from the plan when it is
+    # empty, and the observation then has no row. A NULL sum (empty
+    # node set) equals NULL, so that case stops after round 1.
+    sums = [
+        F.sum(F.col(c).cast("decimal(38,0)")).alias(c)
+        for c in ("label", "id")
+    ]
+    for rnd in range(max_iter):
         LAST_CC_ROUNDS += 1
         neighbor_min = (
             und.join(labels, und.b == labels.id)
@@ -134,15 +143,17 @@ def connected_components(
                 "id", F.coalesce("_plab", F.col("label")).alias("label")
             )
         )
-        # r13: the per-round checkpoint is LAZY — the Σlabel aggregate
-        # right below is a single SEQUENTIAL consumer that materializes
-        # every partition before any other reader exists, so the
-        # broadcast-thread race that forces eager checkpoints elsewhere
-        # (see the pagerank note) cannot happen here, and each round is
-        # ONE job instead of two (checkpoint job + agg job).
-        new_labels = new_labels.localCheckpoint(eager=False)
-        new_sum = new_labels.agg(_lsum).collect()[0][0]
-        labels = new_labels
+        # EAGER: the observed sums exist only once the checkpoint job
+        # has run (a lazy checkpoint reports an empty observation), and
+        # under AQE a lazy one would run every shuffle stage at RDD
+        # creation anyway. A fresh Observation per round: each reports
+        # only its first action.
+        obs = Observation()
+        labels = new_labels.observe(obs, *sums).localCheckpoint(eager=True)
+        got = obs.get
+        if rnd == 0:
+            prev_sum = got["id"]
+        new_sum = got["label"]
         if new_sum == prev_sum:
             break
         prev_sum = new_sum
@@ -254,9 +265,11 @@ def pagerank(
     # broadcast-build threads and the main stages (each computes the
     # un-persisted partitions itself before any are cached), which
     # re-executes the upstream plan several times — q_pagerank measured
-    # 6.3 s -> 18 s warm with eager=False. Lazy is only safe when a
-    # single sequential consumer materializes the RDD before any other
-    # reader (the connected_components per-round pattern).
+    # 6.3 s -> 18 s warm with eager=False. Lazy saves no job under AQE
+    # either: creating the checkpoint RDD already runs every shuffle
+    # stage of its plan (~0.28 s per connected_components round when
+    # those rounds were lazy), so every checkpoint in this module is
+    # eager.
     e = e.localCheckpoint(eager=True)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     # r12 optimization (guide §2.4 remove shuffles / §1.2 algorithm
@@ -454,13 +467,23 @@ def oriented_triangles(
     (no CartesianProduct); the degree table is a single groupBy. This is
     the plan that survives a 100 TB edge list; the naive u<v orientation
     dies on the first celebrity node.
+
+    The edge list and the degree table are checkpointed (eagerly, like
+    every loop-invariant frame in this module): the triangle plan reads
+    ``e0`` three times and ``deg`` twice, and a caller's plan over
+    ``(deg, tri)`` reads them again. Without the checkpoints one plan
+    carries a dozen copies of the edge-building subtree, and AQE
+    re-optimizes all of them after every stage, so planning, not data,
+    dominated the run time at small scale (q_clustering_coeff, sf0.001).
     """
-    e0 = edges.select(F.col(u).alias("u"), F.col(v).alias("v"))
+    e0 = edges.select(
+        F.col(u).alias("u"), F.col(v).alias("v")
+    ).localCheckpoint(eager=True)
     deg = (
-        e0.select(F.col("u").alias("node"))
-        .unionByName(e0.select(F.col("v").alias("node")))
+        e0.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("d"))
+        .localCheckpoint(eager=True)
     )
     du = deg.select(F.col("node").alias("u"), F.col("d").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("d").alias("dv"))

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 
 from audios_to_dataset_spark.operators.graph import connected_components
 
@@ -49,11 +50,105 @@ def test_pointer_jumping_matches_naive_and_cuts_rounds(spark):
     expect = {i: 0 for i in range(n)}
     expect.update({n: n, n + 1: n, n + 2: n, n + 3: n + 3})
     assert got == expect
-    # O(log d) round count: a 32-hop diameter needs <= 8 jumped rounds
-    # (plain neighbor-min needs 32); the +1 is the fixpoint-detection
-    # round. This is the measured-speedup guard — if the jumping step
-    # is ever dropped, rounds jump back to O(d) and this fails.
-    assert 1 < G.LAST_CC_ROUNDS <= 9
+    # O(log d) round count: a 32-hop diameter needs 5 jumped rounds
+    # (plain neighbor-min needs 32) plus the fixpoint-detection round.
+    # This is the measured-speedup guard — if the jumping step is ever
+    # dropped, rounds jump back to O(d) and this fails.
+    assert G.LAST_CC_ROUNDS == 6
+
+
+@pytest.mark.parametrize(
+    "n_nodes, edge_list, expect, rounds",
+    [
+        # empty node set: both label sums are NULL, stop after round 1
+        (0, [], {}, 1),
+        (0, [(0, 1)], {}, 1),
+        # no edges: round 1 changes nothing
+        (4, [], {0: 0, 1: 1, 2: 2, 3: 3}, 1),
+        # duplicate, reversed and self-loop edges
+        (
+            6,
+            [(0, 1), (0, 1), (1, 0), (2, 2), (3, 4), (4, 3), (4, 4)],
+            {0: 0, 1: 0, 2: 2, 3: 3, 4: 3, 5: 5},
+            2,
+        ),
+        # endpoint 10 is not a node: it carries no label, so 1 and 2
+        # are not joined through it
+        (4, [(1, 10), (10, 2), (0, 3)], {0: 0, 1: 1, 2: 2, 3: 0}, 2),
+        # NULL endpoints never match a node
+        (
+            4,
+            [(0, None), (None, 1), (1, 2), (None, None)],
+            {0: 0, 1: 1, 2: 1, 3: 3},
+            2,
+        ),
+    ],
+    ids=["empty", "empty-with-edges", "no-edges", "dup-self-loop",
+         "foreign-endpoint", "null-endpoint"],
+)
+def test_cc_labels_and_rounds(spark, n_nodes, edge_list, expect, rounds):
+    """Exact labels and round counts on degenerate inputs, so the round
+    at which the Σlabel fixpoint test stops cannot drift."""
+    from audios_to_dataset_spark.operators import graph as G
+
+    assert _run(spark, n_nodes, edge_list) == expect
+    assert G.LAST_CC_ROUNDS == rounds
+
+
+def test_cc_runs_no_driver_collect(spark):
+    """The label sums ride on each round's checkpoint job: building the
+    components launches no job from a collect in graph.py."""
+    sc = spark.sparkContext
+    group = "test_cc_runs_no_driver_collect"
+    sc.setJobGroup(group, group)
+    try:
+        nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+        edges = spark.createDataFrame(
+            [(0, 1), (1, 2), (3, 4)], "src long, dst long"
+        )
+        connected_components(nodes, edges)
+        st = sc.statusTracker()
+        names = [
+            st.getStageInfo(s).name
+            for j in st.getJobIdsForGroup(group)
+            for s in st.getJobInfo(j).stageIds
+            if st.getStageInfo(s) is not None
+        ]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert names  # the eager checkpoints ran under the group
+    assert not [
+        n for n in names if n.startswith("collect at ") and "graph.py" in n
+    ]
+
+
+def test_undirected_matches_union_distinct(spark):
+    """One exploded branch returns exactly the old union + distinct set,
+    and reads its input once."""
+    from pyspark.sql import functions as F
+
+    from audios_to_dataset_spark.operators.graph import undirected
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 2), (2, 1), (3, 3), (None, 4), (5, None),
+         (None, None), (6, 7)],
+        "src long, dst long",
+    )
+    old = (
+        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+        .unionByName(
+            edges.select(F.col("dst").alias("a"), F.col("src").alias("b"))
+        )
+        .distinct()
+    )
+    got = undirected(edges)
+    assert got.columns == ["a", "b"]
+    assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+        map(tuple, old.collect()), key=repr
+    )
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("LogicalRDD") == 1
 
 
 def _tri(spark, edges):

@@ -187,6 +187,20 @@ def test_triangle_count_no_cartesian(spark, sf_dir):
         or "BroadcastHashJoin" in e
 
 
+def test_clustering_coeff_reads_checkpointed_graph(spark, sf_dir):
+    """oriented_triangles checkpoints its edge list and degree table, so
+    q_clustering_coeff's plan reads both from the checkpointed RDDs and
+    never re-plans the lineitem co-purchase build above them (without
+    the checkpoints the plan carried ~13 copies of it, each re-optimized
+    by AQE)."""
+    from audios_to_dataset_spark.plans.analytics import q_clustering_coeff
+
+    e = _explain(q_clustering_coeff(spark, sf_dir))
+    assert "Scan ExistingRDD" in e
+    assert "Scan parquet" not in e
+    assert "lineitem" not in e
+
+
 def test_gap_fill_broadcasts_counts(spark, sf_dir):
     from audios_to_dataset_spark.plans.events import q_gap_fill
 

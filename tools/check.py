@@ -38,7 +38,9 @@ from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# check the engine of the checkout this file is in
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
