@@ -6,8 +6,8 @@ Each module defines two dicts:
 - ``ORACLES``: name -> ANSI-SQL string DuckDB runs on the same parquet
   (omitted for non-SQL-expressible ops → the driver does a rows-only check)
 
-``all_queries()`` / ``all_oracles()`` merge every module; this is the single
-source of truth for the driver contract.
+``all_queries()`` / ``all_oracles()`` merge every module in ``_modules()``
+order; this is the single source of truth for the driver contract.
 """
 
 from __future__ import annotations
@@ -45,68 +45,11 @@ def _modules():
         versioning,
     )
 
-    # Order matters: the driver's correctness gate samples queries in
-    # iteration order. Module order is no longer the window mechanism:
-    # ``all_queries`` reorders by ``_ROTATION_FIRST`` (below), which
-    # front-loads every query that has never produced a CORRECTNESS row.
     return (sketches, analytics, textops, events, tpch2, versioning, paths,
             textops2, dedup, similarity, multimodal, streaming_events,
             curation, relational, relational2, evalmetrics, timeseries,
             textmetrics, infostats, survival, expstats, nonparam,
             stats2, stats3)
-
-
-# ROUND 12 rotation (VERDICT r9 item 1: age-aware rotation). The driver's
-# correctness gate samples the first ~50 queries in iteration order.
-# ``_ROTATION_FIRST`` pins new/changed queries at the very front so every
-# round-12 addition is attested immediately; additions are CAPPED at 6
-# this round (VERDICT r11 item 1) so the 50-slot window's 44 tail slots
-# retire ALL 42 queries last attested in r3 (plus the 2 oldest r4). The
-# REMAINDER is ordered by OLDEST last driver attestation (parsed from
-# the committed CORRECTNESS_r*.json files), so the tail re-attests old
-# queries before anything newer and no query's attestation age grows
-# without bound.
-_ROTATION_FIRST = (
-    # --- round-12 additions ---
-    # streaming drawdown tracker (streaming/events.py, full oracle)
-    "q_stream_drawdown",
-    # round-12 statistics wave (plans/stats3.py)
-    "q_ljung_box", "q_runs_test", "q_cvm_test", "q_durbin_watson",
-    # --- changed-in-r12 (re-attest) ---
-    # q_kendall_tau: tie terms t_x/t_y and n0 moved to integer-exact
-    # DECIMAL(38,0)/HUGEINT arithmetic with integral div 2 (ADVICE r11).
-    "q_kendall_tau",
-)
-
-
-def _attestation_rounds() -> dict[str, int]:
-    """query name -> latest round with a driver CORRECTNESS row.
-
-    Reads the committed ``CORRECTNESS_r*.json`` artifacts at the repo
-    root (three levels above this file). Missing/unreadable files simply
-    contribute nothing; a query with no row anywhere sorts as round 0
-    (never attested → front of the rotation tail).
-    """
-    import json
-    import re
-    from pathlib import Path
-
-    rounds: dict[str, int] = {}
-    root = Path(__file__).resolve().parents[2]
-    for path in sorted(root.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r(\d+)", path.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.loads(path.read_text())
-        except (OSError, ValueError):
-            continue
-        if not isinstance(data, dict):
-            continue
-        for name in data:
-            rounds[name] = max(rounds.get(name, 0), rnd)
-    return rounds
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -116,13 +59,7 @@ def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         if overlap:
             raise ValueError(f"duplicate query ids: {overlap}")
         merged.update(mod.QUERIES)
-    front = {n: merged[n] for n in _ROTATION_FIRST if n in merged}
-    ages = _attestation_rounds()
-    order = {n: i for i, n in enumerate(merged)}  # module order breaks ties
-    tail = sorted((n for n in merged if n not in front),
-                  key=lambda n: (ages.get(n, 0), order[n]))
-    front.update((n, merged[n]) for n in tail)
-    return front
+    return merged
 
 
 def all_oracles() -> dict[str, str]:

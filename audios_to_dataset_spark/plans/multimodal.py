@@ -3771,7 +3771,8 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # band self-join, and Catalyst plans a self-join as two full copies
     # of the subtree — with join-key isnotnull filters pushed below the
     # UDF projection, the synth+decode+dHash chain was evaluated FOUR
-    # times per run (r12 udf_dup_audit). Materializing the tiny
+    # times per run (plan_audit's DuplicatedPythonEval flag pins the
+    # fix). Materializing the tiny
     # (doc_id, hi, lo) proxy — guide §8: decide on small rows, decode
     # heavy bytes once — runs the decode exactly once; lazy so plan-only
     # consumers (plan_audit, explain capture) never execute it.

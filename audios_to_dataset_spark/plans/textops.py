@@ -1095,11 +1095,6 @@ ORDER BY chi2 DESC, token LIMIT 15
 """
 
 
-# Iteration order matters: the driver's correctness gate samples the
-# merged query dict in order, so the queries that have never had a
-# driver row (r1-r3 windows covered the first nine) lead —
-# q_inverted_index first (flagged absent from every CORRECTNESS_r* by
-# the r3 review).
 QUERIES = {
     "q_token_drift": q_token_drift,
     "q_inverted_index": q_inverted_index,

@@ -499,8 +499,9 @@ def q_sole_offender(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 optimization (guide §2.3 aggregate-before-you-shuffle): the
     # correlated EXISTS / NOT EXISTS decorrelated into a semi + an anti
     # join, each moving a full lineitem projection (broadcast at bench
-    # scale — plans/r13/q_sole_offender_before.txt broadcasts the FACT
-    # table twice; sort-merge at 100 TB, i.e. two extra lineitem-scale
+    # scale, where the old plan broadcast the FACT table twice —
+    # `git show bf09572:plans/r13/q_sole_offender_before.txt`;
+    # sort-merge at 100 TB, i.e. two extra lineitem-scale
     # shuffles). Both predicates are per-ORDER facts, so ONE per-order
     # aggregate replaces them:
     #   EXISTS l2 (same order, l2.suppkey <> l1.suppkey)

@@ -3,12 +3,12 @@
 Two concerns, separated because the driver may hand us an already-built
 session:
 
-- :func:`get_session` builds a session for tests/bench (local[N] on this
-  rig, but every knob chosen to survive a 1000-executor cluster: AQE with
-  skew-join handling, broadcast threshold, Arrow transfers).
-- :func:`tune` applies the *runtime-settable* subset to any session, so
-  query plans behave identically under the driver's session (UTC timestamps,
-  AQE, Arrow).
+- :func:`get_session` builds a session for tests/bench: launch settings
+  only (local[N] on this rig, driver memory), then :func:`tune`.
+- :func:`tune` applies every planner knob to any session, so query plans
+  behave identically under the driver's session (UTC timestamps, AQE with
+  skew-join handling, broadcast threshold, Arrow), each chosen to survive
+  a 1000-executor cluster.
 """
 
 from __future__ import annotations
@@ -17,17 +17,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable conf applied to any session before running our plans.
+
+def _cpus() -> str:
+    """Local core count, read when a session is built or tuned (tests
+    and perfbench set ``SPARK_GRAFT_CPUS`` after importing this module)."""
+    return os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+# Runtime-settable conf applied to any session before running our plans
+# (tune() adds the shuffle partition count).
 _RUNTIME_CONF = {
-    # A plain (driver-built) session defaults to 200 shuffle partitions —
-    # wasteful 200-task stages for this rig's data volumes, and streaming
-    # state partitioning is pinned at first checkpoint. Match the local
-    # core count; AQE coalescing makes this safe either way. On a real
-    # cluster this would be ~2-3x total cores via spark-defaults, which
-    # tune() leaves in place (see _SIZING_KEYS).
-    "spark.sql.shuffle.partitions": os.environ.get(
-        "SPARK_GRAFT_CPUS", "32"
-    ),
     # Broadcast joins up to 64 MB (Spark's default is 10 MB), so a
     # session built elsewhere picks the same join strategies as
     # get_session. The pipeline's path -> shard mapping is estimated at
@@ -65,7 +64,14 @@ _SIZING_KEYS = frozenset(
 
 def tune(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable tuning/parity conf to an existing session."""
-    for k, v in _RUNTIME_CONF.items():
+    # A plain (driver-built) session defaults to 200 shuffle partitions —
+    # wasteful 200-task stages for this rig's data volumes, and streaming
+    # state partitioning is pinned at first checkpoint. Match the local
+    # core count; AQE coalescing makes this safe either way. On a real
+    # cluster this would be ~2-3x total cores via spark-defaults, which
+    # stay in place (see _SIZING_KEYS).
+    conf = {"spark.sql.shuffle.partitions": _cpus(), **_RUNTIME_CONF}
+    for k, v in conf.items():
         try:
             # sizing keys are not parity: a value the user or cluster
             # already set wins
@@ -82,22 +88,15 @@ def tune(spark: SparkSession) -> SparkSession:
 def get_session(app_name: str = "audios-to-dataset-spark") -> SparkSession:
     """Build (or reuse) a SparkSession for tests and bench runs.
 
-    local[$SPARK_GRAFT_CPUS] single-JVM here; the static conf mirrors what
-    we would set cluster-wide via spark-defaults at real scale.
+    local[$SPARK_GRAFT_CPUS] single-JVM here. The builder sets launch
+    settings only; every planner knob comes from :func:`tune`, so this
+    session plans like a driver-built one.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        # One shuffle partition per core on this rig. On a cluster this
-        # would be ~2-3x total cores; AQE coalesces small partitions anyway.
-        .config("spark.sql.shuffle.partitions", cpus)
+        .master(f"local[{_cpus()}]")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         .config("spark.driver.maxResultSize", "4g")
-        # Keep partition sizes bounded when scanning big files (100 TB
-        # design point: ~128MB splits feed ~1 task each).
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
     )
-    spark = builder.getOrCreate()
-    return tune(spark)
+    return tune(builder.getOrCreate())

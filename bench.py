@@ -1,13 +1,8 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: min_of_2_sec}, "cold": {name: first_run_sec},
-"sf": ...}.
-
-Execution is forced through the noop sink (full computation, no driver
-collect) so we measure the engine, not result transfer. Each query is
-timed twice and reported as min-of-2 (see the comment at the timing
-loop); pass --single for the legacy one-run cold numbers.
+"""Benchmark harness: times the queries ``SECTIONS`` declares at
+$SPARK_GRAFT_SF_DIR (default sf0.1) on local[$SPARK_GRAFT_CPUS] through
+the noop sink (full computation, no driver collect), writes the summary
+to BENCH_LOCAL.json and prints it as ONE slim JSON line. Each section
+reports the min of its runs; ``--single`` times everything once.
 """
 
 from __future__ import annotations
@@ -18,102 +13,98 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from audios_to_dataset_spark.plans import all_queries  # noqa: E402
 from audios_to_dataset_spark.session import get_session  # noqa: E402
 
-# Headline set: one per operator family, weighted toward what dominates a
-# 100 TB run (scans, joins, aggs, windows, dedup, similarity). The O(N^2)
-# brute-force correctness baselines stay out — their scale path (LSH) is in.
-HEADLINE = [
-    "q_agg_count",
-    "q_join_inner",
-    "q_join_left",
-    "q_filter_in",
-    "q_window_rownum",
-    "q_window_rank",
-    "q_sort_limit",
-    "q_tumbling_window",
-    "q_session_gap",
-    "q_dedup_first",
-    "q_dedup_exact",
-    "q_dedup_minhash_lsh",
-    "q_text_stats",
-    "q_lang_id",
-    "q_cosine_scores",
-    "q_ann_topk",
-    "q_approx_distinct",
-    "q_approx_percentile",
-    "q_skew_join",
-    "q_bloom_join",
-    "q_pagerank",
-    "q_repetition",
-    "q_zorder",
-    "q_chunk_dedup",
-    "q_gap_fill",
-    "q_cust_distribution",
-    "q_forecast_revenue",
-    "q_profit",
-    "q_bpe_merges",
-    "q_seq_pack",
-    "q_rarity_score",
-    "q_knn_graph",
-    "q_hybrid_search",
-    # round-4 additions — totals before r04 exclude these four (~9 s,
-    # q_kcore's k-NN base dominating): compare per-query, not the
-    # headline total, across rounds
-    "q_bm25",
-    "q_weighted_sample",
-    "q_kcore",
-    "q_ann_pq",
-    "q_sparse_cosine",
-    "q_dsir_select",
-]
+X10_DIR = "/tmp/spark_graft_scale10"  # tools/scale_smoke.py's ×10 cache
+DEFAULT_SF = "/root/testdata/sf0.1"
 
-# Round 9 (VERDICT r8 item 3): the iterative fixpoints carry ±1.3 s+
-# run-to-run variance even within one session (r8's committed headline
-# read +4.3 s vs r7 purely from pagerank/kcore jitter — plans untouched;
-# it cost both builder and judge isolated reruns to disprove). They are
-# pulled OUT of the min-of-2 headline loop and measured as isolated
-# min-of-3 under their own key, with all three raw runs preserved, so a
-# BENCH file is self-explanatory: flat "stable" total + spread visible
-# in "iterative_runs" = jitter, not regression. "value" remains
-# stable + iterative mins — the same 40-query set as r5-r8.
-ITERATIVE = ["q_pagerank", "q_kcore"]
-STABLE = [q for q in HEADLINE if q not in ITERATIVE]
+# section -> (queries, data dir: "sf" or the ×10 cache "x10", timed runs).
+# headline: one query per operator family, weighted toward what dominates
+# a 100 TB run (brute-force baselines stay out; their LSH paths are in).
+# iterative: the headline's fixpoints, which vary run to run, timed apart;
+# value = headline + iterative mins (39 queries). sf1: the heavies on the
+# ×10 copy of the same sf dir. extras: outside value; the perceptual
+# near-dup queries stay out (their fixtures fix the group count, so pair
+# density at sf0.1 is a fixture artifact). sf1_scaling: re-timed at 8
+# cores in a subprocess when the bench runs on >= 16 (a core count is a
+# JVM-start property; at sf0.1 fixed per-query costs hide parallelism).
+SECTIONS = {
+    "headline": ("""
+    q_agg_count q_join_inner q_join_left q_filter_in q_window_rownum
+    q_window_rank q_sort_limit q_tumbling_window q_session_gap q_dedup_first
+    q_dedup_exact q_dedup_minhash_lsh q_text_stats q_lang_id q_cosine_scores
+    q_ann_topk q_approx_distinct q_approx_percentile q_skew_join q_bloom_join
+    q_repetition q_zorder q_chunk_dedup q_gap_fill q_cust_distribution
+    q_forecast_revenue q_profit q_bpe_merges q_seq_pack q_rarity_score
+    q_knn_graph q_hybrid_search q_bm25 q_weighted_sample q_ann_pq
+    q_sparse_cosine q_dsir_select
+    """.split(), "sf", 2),
+    "iterative": (["q_pagerank", "q_kcore"], "sf", 3),
+    "sf1": ("""
+    q_dedup_minhash_lsh q_pagerank q_sparse_cosine q_knn_graph q_kcore
+    q_gif_anim q_split_assign q_dbscan q_clustering_coeff q_hard_negatives
+    q_decontaminate q_degree_assortativity q_silhouette
+    """.split(), "x10", 3),
+    "extras": ("""
+    q_t_closeness q_ks_drift q_cms_join_estimate q_robust_outliers
+    q_mixture_temperature q_audio_headers q_video_headers q_dbscan
+    q_kmv_overlap q_split_assign q_flac_decode q_changepoint q_incremental_agg
+    q_coreset q_label_noise q_matryoshka_recall q_url_dedup q_html_strip
+    q_pii_audit q_sole_offender q_zone_map q_key_skew_audit q_dir_rollup q_acf
+    q_qoi_pixels q_audio_aiff q_audio_au q_exif_scrub q_audio_vad
+    q_class_balance q_audio_extensible q_gif_anim q_image_tiles q_audio_zcr
+    q_audio_transcode q_auc q_calibration_bins q_confusion_matrix q_bq_recall
+    q_embed_dim_stats q_mode_value q_decay_weights q_histogram q_id_gaps
+    q_audio_clipping q_audio_windows q_audio_aac q_ohlc q_time_weighted_avg
+    q_interpolate q_lttb q_ndcg q_mrr q_map_at_k q_cohen_kappa q_readability
+    q_heaps_law q_clustering_coeff q_ogg_pages q_pr_auc q_ece q_gini_length
+    q_ebml_walk q_hard_negatives q_psi q_lift_curve q_chi2_independence
+    q_mutual_information q_spearman q_winsorized_mean q_degree_assortativity
+    q_zipf_slope q_decontaminate q_boilerplate_prefixes q_kaplan_meier
+    q_logrank q_woe_iv q_bh_fdr q_entropy_rate q_sorted_neighborhood
+    q_wasserstein q_xcorr q_smd_balance q_cuped q_theil_sen q_mann_whitney
+    q_welch_t q_attribution q_mcc q_best_split q_silhouette q_range_frame q_rfm
+    q_anova_f q_cohens_d q_kendall_tau q_jensen_shannon q_kruskal_wallis
+    q_permutation_entropy q_brier_decomposition q_macro_f1 q_rank_overlap
+    q_bollinger q_drawdown q_lorenz_gini q_stream_bollinger q_tail_index
+    q_ljung_box q_runs_test q_cvm_test q_durbin_watson q_stream_drawdown
+    """.split(), "sf", 2),
+    "sf1_scaling": (["q_dbscan", "q_split_assign", "q_knn_graph",
+                     "q_clustering_coeff", "q_gif_anim"], "x10", 3),
+}
 
-# Round 13 (VERDICT r12 item 6): at sf0.1 every 8-vs-32-core ratio is
-# ~1 because the fixed ~0.5 s per-query scheduler/codegen cost
-# dominates — the headline bench cannot see parallelism changes. The
-# sf1 heavies, where compute dominates, are re-timed at 8 cores in a
-# SUBPROCESS (a core count is a JVM-start property) and the c8/c32
-# ratio is recorded additively under ``sf1_scaling``.
-SF1_SCALING_HEAVIES = [
-    "q_dbscan", "q_split_assign", "q_knn_graph",
-    "q_clustering_coeff", "q_gif_anim",
-]
+NOTES = {"protocol": "untimed warm-up; each query then runs back to back"
+         " through the noop sink, SECTIONS' count of times (the audio"
+         " pipeline twice) and reports the min; first runs under cold/"
+         "extras_cold, all runs under iterative_runs/sf1_runs"}
 
 
-def run_sf1_heavies() -> None:
-    """Subprocess mode: min-of-3 of the sf1 heavies at the CURRENT
-    $SPARK_GRAFT_CPUS against the ×10 cache; prints one JSON line."""
-    x10_dir = "/tmp/spark_graft_scale10"
-    spark = get_session("bench-sf1-scaling")
-    spark.sparkContext.setLogLevel("ERROR")
+def _noop(df) -> None:
+    df.write.mode("overwrite").format("noop").save()
+
+
+def _time(spark, fn, data_dir: str, reps: int) -> list[float]:
+    """Seconds of each of ``reps`` back-to-back runs of ``fn(spark, dir)``."""
+    runs = []
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        _noop(fn(spark, data_dir))
+        runs.append(round(time.perf_counter() - t0, 3))
+    return runs
+
+
+def run_section(spark, section: str, sf_dir: str,
+                single: bool = False) -> dict[str, list[float]]:
+    """query -> timed runs; an undeclared name raises KeyError."""
     queries = all_queries()
-    spark.range(2_000_000).selectExpr("sum(id) as s").collect()
-    sf1: dict[str, float] = {}
-    for name in SF1_SCALING_HEAVIES:
-        runs = []
-        for _ in range(3):
-            t0 = time.perf_counter()
-            queries[name](spark, x10_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        sf1[name] = min(runs)
-    print(json.dumps({"sf1": sf1}))
+    names, where, reps = SECTIONS[section]
+    data_dir = X10_DIR if where == "x10" else sf_dir
+    return {n: _time(spark, queries[n], data_dir, 1 if single else reps)
+            for n in names}
 
 
 def bench_audio_pipeline(spark, n_files: int = 400) -> float:
@@ -122,35 +113,29 @@ def bench_audio_pipeline(spark, n_files: int = 400) -> float:
     workload shape (its CI smoke processes one HF dataset shard)."""
     import shutil
     import tempfile
-    import time
+    from pathlib import Path
 
     from audios_to_dataset_spark.functions.wav import synth_wav
     from audios_to_dataset_spark.pipeline import run_pipeline
 
-    root = tempfile.mkdtemp(prefix="bench_audio_")
+    root = Path(tempfile.mkdtemp(prefix="bench_audio_"))
     try:
-        audio_dir = os.path.join(root, "in")
-        os.makedirs(audio_dir)
         payload = synth_wav(sample_rate=16_000)  # ~32 KB each
+        (root / "in").mkdir()
         for i in range(n_files):
-            with open(os.path.join(audio_dir, f"clip_{i:05d}.wav"), "wb") as f:
-                f.write(payload)
-        # Spin up the Python UDF workers on a throwaway run so the timed
+            (root / "in" / f"clip_{i:05d}.wav").write_bytes(payload)
+        # Spin up the Python workers on a throwaway run so the timed
         # number reflects steady-state throughput, not worker fork cost.
-        warm_dir = os.path.join(root, "warm")
-        os.makedirs(warm_dir)
-        with open(os.path.join(warm_dir, "w.wav"), "wb") as f:
-            f.write(payload)
-        run_pipeline(spark, warm_dir, os.path.join(root, "warm_out"))
-        meta = os.path.join(root, "meta.csv")
-        with open(meta, "w") as f:
-            f.write("file_name,transcription\n")
-            for i in range(0, n_files, 2):
-                f.write(f"clip_{i:05d}.wav,transcript {i}\n")
+        (root / "warm").mkdir()
+        (root / "warm" / "w.wav").write_bytes(payload)
+        run_pipeline(spark, str(root / "warm"), str(root / "warm_out"))
+        (root / "meta.csv").write_text("file_name,transcription\n" + "".join(
+            f"clip_{i:05d}.wav,transcript {i}\n"
+            for i in range(0, n_files, 2)))
         t0 = time.perf_counter()
         receipts = run_pipeline(
-            spark, audio_dir, os.path.join(root, "out"),
-            metadata_file=meta, files_per_shard=100,
+            spark, str(root / "in"), str(root / "out"),
+            metadata_file=str(root / "meta.csv"), files_per_shard=100,
         )
         elapsed = time.perf_counter() - t0
         assert sum(r.n_rows for r in receipts) == n_files
@@ -159,399 +144,149 @@ def bench_audio_pipeline(spark, n_files: int = 400) -> float:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def main() -> None:
-    if "--sf1-heavies" in sys.argv:
-        run_sf1_heavies()
-        return
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
-
-    spark = get_session("bench")
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = all_queries()
-
-    # JVM/codegen/page-cache warmup, untimed: r03 showed session startup +
-    # Janino compilation + cold parquet footers landing on whichever timed
-    # query ran first (q_agg_count +80% with zero code change). Prime every
-    # heavy shape the headline set uses — fact-table scans, partial/final
-    # hash aggregate, shuffle + broadcast join, window — on plans that are
-    # NOT themselves timed, so the timed numbers stay cold-per-plan but
-    # warm-JVM.
+def _warm_up(spark, sf_dir: str) -> None:
+    """Untimed: JVM start, codegen and cold parquet footers would land on
+    the first timed query. Primes the headline's heavy shapes (fact scans,
+    partial/final aggregate, shuffle and broadcast join, window) on plans
+    that are not themselves timed."""
     from pyspark.sql import functions as F
 
     from audios_to_dataset_spark.catalog import load
 
     spark.range(2_000_000).selectExpr(
-        "sum(id) as s", "count(distinct id % 7) as d"
-    ).collect()
+        "sum(id) as s", "count(distinct id % 7) as d").collect()
     lineitem = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
-    lineitem.groupBy("l_linestatus").agg(
-        F.count(F.lit(1)).alias("n")
-    ).write.mode("overwrite").format("noop").save()
-    lineitem.join(
-        orders, lineitem.l_orderkey == orders.o_orderkey
-    ).select("o_orderdate", "l_quantity").write.mode("overwrite").format(
-        "noop"
-    ).save()
-    queries["q_sort_limit"](spark, sf_dir).write.mode("overwrite").format(
-        "noop"
-    ).save()
+    _noop(lineitem.groupBy("l_linestatus").agg(F.count(F.lit(1)).alias("n")))
+    _noop(lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
+          .select("o_orderdate", "l_quantity"))
+    _noop(all_queries()["q_sort_limit"](spark, sf_dir))
 
-    # Each query runs TWICE and reports the min (r4 postmortem: the same
-    # untouched q_knn_graph plan measured 7.6 s one round and 10.6 s the
-    # next purely from run/session state — a 1.7x cold-vs-warm spread
-    # that masqueraded as a regression). min-of-2 keeps per-plan codegen
-    # in run 1 out of the reported figure while staying cheap; the raw
-    # first-run times ride along under "cold" so a real plan regression
-    # (both runs slow) is distinguishable from run-state noise (run 1
-    # slow, run 2 not). --single restores the old one-run cold mode.
-    single = "--single" in sys.argv
-    timings: dict[str, float] = {}
-    cold: dict[str, float] = {}
-    for name in STABLE:
-        fn = queries[name]
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        t1 = round(time.perf_counter() - t0, 3)
-        cold[name] = t1
-        if single:
-            timings[name] = t1
-            continue
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        t2 = round(time.perf_counter() - t0, 3)
-        timings[name] = min(t1, t2)
 
-    # Iterative fixpoints: isolated min-of-3, all raw runs preserved
-    # (see the ITERATIVE comment above). Runs are back-to-back with
-    # nothing interleaved so the numbers match the "isolated min-of-3
-    # A/B" protocol CLAUDE.md prescribes for this family.
-    iterative: dict[str, float] = {}
-    iterative_runs: dict[str, list[float]] = {}
-    for name in ITERATIVE:
-        fn = queries[name]
-        runs = []
-        for _ in range(1 if single else 3):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            runs.append(round(time.perf_counter() - t0, 3))
-        cold[name] = runs[0]
-        iterative_runs[name] = runs
-        iterative[name] = min(runs)
-
-    # The audio pipeline follows the same min-of-2 protocol as the
-    # declared queries (VERDICT r5 item 5): run twice, report the min,
-    # keep the first run under "cold".
-    a1 = bench_audio_pipeline(spark)
-    cold["audio_pipeline_400wav"] = a1
-    if single:
-        timings["audio_pipeline_400wav"] = a1
-    else:
-        a2 = bench_audio_pipeline(spark)
-        timings["audio_pipeline_400wav"] = min(a1, a2)
-
-    # sf1 section (VERDICT r5 item 8): when the ×10 dir built by
-    # tools/scale_smoke.py is present, time the 5 heaviest queries at
-    # ~sf1 too, so the scaling exponent is readable directly from one
-    # BENCH file. Single-run (these are minutes-scale; min-of-2 would
-    # double a cost the cross-sf comparison doesn't need). Since
-    # round 7, q_knn_graph / q_kcore AUTO-SCALE their hyperplane count
-    # from the corpus row count (plans/dedup.knn_n_planes — the
-    # DECLARED plan is the scaled operating point at any N); the
-    # frozen-plane twin below keeps the old anti-pattern measurable in
-    # the same JSON.
-    sf1: dict[str, float] = {}
-    sf1_runs: dict[str, list[float]] = {}
-    sf1_error = ""
-    x10_dir = "/tmp/spark_graft_scale10"
-    # ADVICE r10 (bench.py:246): the x10 section must be a x10 of the
-    # SAME sf dir the headline benched — a bench pointed at a different
-    # SPARK_GRAFT_SF_DIR must not silently pair a mismatched cache or
-    # rebuild from the hardcoded default. The cache carries a SOURCE.txt
-    # provenance marker (tools/scale_smoke.build_scale_dir); a missing
-    # marker means a pre-r11 cache, which was only ever built from the
-    # default sf0.1.
-    _default_src = "/root/testdata/sf0.1"
-    _src_marker = os.path.join(x10_dir, "SOURCE.txt")
-    if os.path.isdir(os.path.join(x10_dir, "lineitem.parquet")):
-        cached_src = (
-            open(_src_marker).read().strip()
-            if os.path.exists(_src_marker) else _default_src
-        )
-        if os.path.abspath(cached_src) != os.path.abspath(sf_dir):
-            sf1_error = (
-                f"x10 cache at {x10_dir} was built from {cached_src}, "
-                f"but this bench reads {sf_dir} — skipping the sf1 "
-                "section rather than pairing mismatched scales "
-                "(rebuild with tools/scale_smoke.py --keep)"
-            )
-            print(f"SF1 SECTION MISSING: {sf1_error}", file=sys.stderr)
-    if not sf1_error and not os.path.isdir(
-        os.path.join(x10_dir, "lineitem.parquet")
-    ):
-        # Round 10 (VERDICT r9 item 2): the sf1 section must never
-        # silently vanish. A scale_smoke run WITHOUT --keep removes the
-        # x10 cache at exit, and r9's bench then omitted sf1 with no
-        # trace. Rebuild the cache here (duckdb COPY, ~1 min); if the
-        # build fails, say so loudly in BOTH stderr and the JSON.
+def _x10_error(sf_dir: str) -> str:
+    """Why the sf1 section cannot run ("" if it can). The ×10 cache must
+    copy the sf dir the headline read (SOURCE.txt names it; a cache
+    without one was built from the default). An absent cache is rebuilt
+    (duckdb COPY, ~1 min) so the section never silently vanishes."""
+    if not os.path.isdir(os.path.join(X10_DIR, "lineitem.parquet")):
         try:
-            sys.path.insert(
-                0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                "tools"))
             from scale_smoke import build_scale_dir
 
             build_scale_dir(sf_dir, keep=True)
         except Exception as exc:  # noqa: BLE001 — bench must still emit
-            sf1_error = f"x10 cache absent and rebuild failed: {exc!r}"
-            print(f"SF1 SECTION MISSING: {sf1_error}", file=sys.stderr)
-    if not sf1_error and os.path.isdir(
-        os.path.join(x10_dir, "lineitem.parquet")
-    ):
-        # q_gif_anim joins the sf1 track in round 8 (VERDICT r7 item
-        # 6): the codec family is pure per-row CPU with no shuffle, so
-        # its sf0.1 -> sf1 ratio should read ~10x (linear) — pinning
-        # codec throughput scaling in the same JSON as the LSH growth.
-        # q_split_assign / q_dbscan join the sf1 track in round 9
-        # (VERDICT r8 item 2); q_clustering_coeff / q_hard_negatives in
-        # the round-9 continuation (O(m^1.5) wedge walk + LSH rider).
-        # Round 10 (VERDICT r9 item 2): EVERY tracked sf1 entry is now
-        # isolated min-of-3 with raw runs preserved under ``sf1_runs`` —
-        # single-shot sf1 numbers swung 14.0 vs 23.2 s (q_knn_graph)
-        # between same-code runs and cost reruns to interpret, exactly
-        # the r8 headline problem the min-of-3 protocol fixed there.
-        # q_decontaminate / q_degree_assortativity / q_silhouette join
-        # the sf1 track in round 11 (VERDICT r10 item 4): the three r10
-        # heavies whose scale claims (bounded shingle fan-out, one
-        # orders⋈lineitem edge shuffle, O(N·k) centroid join) get their
-        # x10 growth pinned in the same JSON.
-        for name in ("q_dedup_minhash_lsh", "q_pagerank",
-                     "q_sparse_cosine", "q_knn_graph", "q_kcore",
-                     "q_gif_anim", "q_split_assign", "q_dbscan",
-                     "q_clustering_coeff", "q_hard_negatives",
-                     "q_decontaminate", "q_degree_assortativity",
-                     "q_silhouette"):
-            runs = []
-            for _ in range(1 if single else 3):
-                t0 = time.perf_counter()
-                queries[name](spark, x10_dir).write.mode(
-                    "overwrite"
-                ).format("noop").save()
-                runs.append(round(time.perf_counter() - t0, 3))
-            sf1_runs[name] = runs
-            sf1[name] = min(runs)
-        # the frozen-plane twin (the sf0.1 plane count applied at x10):
-        # the quadratic anti-pattern the auto rule exists to prevent,
-        # kept measurable without cross-referencing scale_smoke
-        from audios_to_dataset_spark.catalog import load as _load
-        from audios_to_dataset_spark.operators.similarity import knn_graph
-        from audios_to_dataset_spark.plans.dedup import knn_planes
-        from audios_to_dataset_spark.plans.similarity import KNN_K
+            return f"x10 cache absent and rebuild failed: {exc!r}"
+        return ""
+    marker = os.path.join(X10_DIR, "SOURCE.txt")
+    src = open(marker).read().strip() if os.path.exists(marker) else DEFAULT_SF
+    if os.path.abspath(src) == os.path.abspath(sf_dir):
+        return ""
+    return (f"x10 cache at {X10_DIR} was built from {src}, but this bench"
+            f" reads {sf_dir} — skipping the sf1 section rather than pairing"
+            " mismatched scales (rebuild with tools/scale_smoke.py --keep)")
 
-        planes_frozen = knn_planes(2000)  # sf0.1's operating point
-        em10 = _load(spark, x10_dir, "embeddings")
-        t0 = time.perf_counter()
-        knn_graph(em10, planes_frozen, k=KNN_K).write.mode(
-            "overwrite"
-        ).format("noop").save()
-        sf1["q_knn_graph_frozen_planes"] = round(
-            time.perf_counter() - t0, 3
-        )
 
-    # Round-6 capability families, timed OUTSIDE the headline total so
-    # BENCH files stay round-over-round comparable on the identical
-    # 40-entry set. Since round 8 these follow the same min-of-2
-    # protocol as the headline (VERDICT r7 item 4: single-run extras
-    # produced a phantom 2x "regression" — q_flac_decode 11.9 s cold vs
-    # 6.6 s warm — that cost the judge a rerun to disprove); the first
-    # run is kept under ``extras_cold``. The perceptual near-dup
-    # queries are deliberately absent: their fixtures keep a FIXED
-    # group count, so at sf0.1 the pair density is a fixture artifact
-    # (100x pairs for 10x docs), not an operator cost — their scale
-    # story lives in the docstring band-width dial and the sf0.01
-    # differential gate.
-    extras: dict[str, float] = {}
-    extras_cold: dict[str, float] = {}
-    for name in (
-        "q_t_closeness", "q_ks_drift", "q_cms_join_estimate",
-        "q_robust_outliers", "q_mixture_temperature",
-        "q_audio_headers", "q_video_headers",
-        "q_dbscan", "q_kmv_overlap", "q_split_assign", "q_flac_decode",
-        "q_changepoint", "q_incremental_agg", "q_coreset",
-        "q_label_noise", "q_matryoshka_recall",
-        # session-4 additions (map-heavy curation + codec + layout ops)
-        "q_url_dedup", "q_html_strip", "q_pii_audit", "q_sole_offender",
-        "q_zone_map", "q_key_skew_audit", "q_dir_rollup", "q_acf",
-        "q_qoi_pixels", "q_audio_aiff", "q_audio_au", "q_exif_scrub",
-        "q_audio_vad", "q_class_balance", "q_audio_extensible",
-        "q_gif_anim", "q_image_tiles", "q_audio_zcr", "q_audio_transcode",
-        # round-9 additions (eval-metrics family + the new operators)
-        "q_auc", "q_calibration_bins", "q_confusion_matrix",
-        "q_bq_recall", "q_embed_dim_stats", "q_mode_value",
-        "q_decay_weights", "q_histogram", "q_id_gaps",
-        "q_audio_clipping", "q_audio_windows", "q_audio_aac",
-        # round-9 second wave (time-series resampling, ranking
-        # metrics, text metrics, graph cc, Ogg page walk)
-        "q_ohlc", "q_time_weighted_avg", "q_interpolate", "q_lttb",
-        "q_ndcg", "q_mrr", "q_map_at_k", "q_cohen_kappa",
-        "q_readability", "q_heaps_law", "q_clustering_coeff",
-        "q_ogg_pages",
-        "q_pr_auc", "q_ece", "q_gini_length", "q_ebml_walk",
-        "q_hard_negatives", "q_psi", "q_lift_curve",
-        # round-10 additions (info-stats / split-hygiene family)
-        "q_chi2_independence", "q_mutual_information", "q_spearman",
-        "q_winsorized_mean", "q_degree_assortativity", "q_zipf_slope",
-        "q_decontaminate", "q_boilerplate_prefixes",
-        # round-10 survival / risk-statistics family
-        "q_kaplan_meier", "q_logrank", "q_woe_iv", "q_bh_fdr",
-        "q_entropy_rate", "q_sorted_neighborhood",
-        # round-10 experiment-health family
-        "q_wasserstein", "q_xcorr", "q_smd_balance", "q_cuped",
-        # round-10 nonparametric / attribution family
-        "q_theil_sen", "q_mann_whitney", "q_welch_t", "q_attribution",
-        # round-10 eval-metric additions
-        "q_mcc", "q_best_split",
-        # round-10 fourth wave
-        "q_silhouette", "q_range_frame", "q_rfm",
-        # round-11 statistics wave (plans/stats2.py)
-        "q_anova_f", "q_cohens_d", "q_kendall_tau", "q_jensen_shannon",
-        "q_kruskal_wallis", "q_permutation_entropy",
-        "q_brier_decomposition", "q_macro_f1", "q_rank_overlap",
-        "q_bollinger", "q_drawdown", "q_lorenz_gini",
-        "q_stream_bollinger", "q_tail_index",
-        # round-12 additions (landed in the interrupted build phase,
-        # attested green at round-12 start; additive per the contract)
-        "q_ljung_box", "q_runs_test", "q_cvm_test", "q_durbin_watson",
-        "q_stream_drawdown",
-    ):
-        if name not in queries:
-            continue
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        t1 = round(time.perf_counter() - t0, 3)
-        extras_cold[name] = t1
-        if single:
-            extras[name] = t1
-            continue
-        t0 = time.perf_counter()
-        queries[name](spark, sf_dir).write.mode("overwrite").format(
-            "noop"
-        ).save()
-        extras[name] = min(t1, round(time.perf_counter() - t0, 3))
+def _frozen_planes(spark) -> float:
+    """q_knn_graph at ×10 with sf0.1's hyperplane count: the quadratic
+    anti-pattern the auto-scaled plane count prevents, one run."""
+    from audios_to_dataset_spark.catalog import load
+    from audios_to_dataset_spark.operators.similarity import knn_graph
+    from audios_to_dataset_spark.plans.dedup import knn_planes
+    from audios_to_dataset_spark.plans.similarity import KNN_K
 
+    planes, em10 = knn_planes(2000), load(spark, X10_DIR, "embeddings")
+    return _time(spark, lambda s, d: knn_graph(em10, planes, k=KNN_K),
+                 X10_DIR, 1)[0]
+
+
+def _sf1_scaling(sf1: dict[str, float], cpus_hi: int) -> dict:
+    import subprocess
+
+    r = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--sf1-heavies"],
+        env=dict(os.environ, SPARK_GRAFT_CPUS="8"),
+        capture_output=True, text=True, timeout=3600,
+    )
+    lo = json.loads(r.stdout.strip().splitlines()[-1])["sf1"]
+    return {"cpus_lo": 8, "cpus_hi": cpus_hi, "lo_sec": lo,
+            "ratio": {q: round(lo[q] / sf1[q], 2) for q in lo if sf1.get(q)}}
+
+
+def main() -> None:
+    heavies = "--sf1-heavies" in sys.argv
+    spark = get_session("bench-sf1-scaling" if heavies else "bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    if heavies:
+        spark.range(2_000_000).selectExpr("sum(id) as s").collect()
+        runs = run_section(spark, "sf1_scaling", DEFAULT_SF)
+        print(json.dumps({"sf1": {q: min(r) for q, r in runs.items()}}))
+        return
+    single = "--single" in sys.argv
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF)
+    _warm_up(spark, sf_dir)
+
+    headline = run_section(spark, "headline", sf_dir, single)
+    iterative = run_section(spark, "iterative", sf_dir, single)
+    audio = [bench_audio_pipeline(spark) for _ in range(1 if single else 2)]
+    sf1_runs: dict[str, list[float]] = {}
+    sf1_error = _x10_error(sf_dir)
+    if sf1_error:
+        print(f"SF1 SECTION MISSING: {sf1_error}", file=sys.stderr)
+    elif os.path.isdir(os.path.join(X10_DIR, "lineitem.parquet")):
+        sf1_runs = run_section(spark, "sf1", sf_dir, single)
+    sf1 = {q: min(r) for q, r in sf1_runs.items()}
+    if sf1:
+        sf1["q_knn_graph_frozen_planes"] = _frozen_planes(spark)
+    extras = run_section(spark, "extras", sf_dir, single)
+
+    timings = {q: min(r) for q, r in headline.items()}
+    timings["audio_pipeline_400wav"] = min(audio)
     stable_total = round(sum(timings.values()), 3)
-    total = round(stable_total + sum(iterative.values()), 3)
+    iterative_min = {q: min(r) for q, r in iterative.items()}
+    m = re.search(r"sf([0-9.]+)", sf_dir)
     out = {
-        "metric": "headline_queries_total"
-        + ("_cold" if single else "_min2"),
-        "value": total,
+        "metric": "headline_queries_total" + ("_cold" if single else "_min2"),
+        "value": round(stable_total + sum(iterative_min.values()), 3),
         "unit": "sec",
         "stable_total": stable_total,
         "queries": timings,
-        "iterative": iterative,
-        "iterative_runs": iterative_runs,
-        "cold": cold,
-        "sf": sf,
+        "iterative": iterative_min,
+        "iterative_runs": iterative,
+        "cold": {**{q: r[0] for q, r in {**headline, **iterative}.items()},
+                 "audio_pipeline_400wav": audio[0]},
+        "sf": float(m.group(1)) if m else -1.0,
     }
     if sf1:
-        out["sf1"] = sf1
-        out["sf1_runs"] = sf1_runs
-        out["sf1_source"] = sf_dir
+        out.update(sf1=sf1, sf1_runs=sf1_runs, sf1_source=sf_dir)
     if sf1_error:
         out["sf1_error"] = sf1_error
-    # sf1 scaling block (r13, VERDICT r12 item 6): re-time the compute-
-    # dominated heavies at 8 cores in a subprocess and record the
-    # lo/hi ratio. Additive keys only; skipped in --single mode and in
-    # low-core runs (the driver's own c8 pass must not nest another).
-    try:
-        cpus_now = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    except ValueError:
-        cpus_now = 0
-    if sf1 and not single and cpus_now >= 16:
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus_now = int(cpus) if cpus.strip().isdigit() else 0
+    if sf1 and not single and cpus_now >= 16:  # else 8 cores is no step down
         try:
-            import subprocess
-
-            env = dict(os.environ, SPARK_GRAFT_CPUS="8")
-            r = subprocess.run(
-                [sys.executable, os.path.abspath(__file__),
-                 "--sf1-heavies"],
-                env=env, capture_output=True, text=True, timeout=3600,
-            )
-            lo = json.loads(r.stdout.strip().splitlines()[-1])["sf1"]
-            out["sf1_scaling"] = {
-                "cpus_lo": 8,
-                "cpus_hi": cpus_now,
-                "lo_sec": lo,
-                "ratio": {
-                    q: round(lo[q] / sf1[q], 2)
-                    for q in lo
-                    if sf1.get(q)
-                },
-            }
+            out["sf1_scaling"] = _sf1_scaling(sf1, cpus_now)
         except Exception as exc:  # noqa: BLE001 — bench must still emit
             out["sf1_scaling_error"] = repr(exc)[:200]
-    if extras:
-        out["extras"] = extras
-        out["extras_cold"] = extras_cold
-    # Static provenance notes so a BENCH file explains its own deltas
-    # without a rerun (VERDICT r8 item 3).
-    out["notes"] = {
-        "iterative": "pagerank/kcore are isolated min-of-3 (raw runs"
-        " under iterative_runs); their documented ±1.3s session"
-        " variance no longer moves the stable_total",
-        "q_split_assign": "r8's 2x swing settled in r9: isolated"
-        " min-of-3 [14.7, 9.5, 8.1] -> 8.06s matches the committed"
-        " 7.9s; the spread is JVM warmth across ~20 tiny CC-fixpoint"
-        " stages, not the plan (x10 e2e: 19.2s, all 50k docs labeled"
-        " exactly once — tools/scale_smoke.py)",
-        "q_dbscan_sf1": "r9 fix: the first sf1 entry caught q_dbscan's"
-        " planes frozen at 12x4 (152.5s at x10); planes now auto-scale"
-        " via the knn_n_planes rule with a DEDUP_PLANES-prefix family,"
-        " so gate-scale results are bit-identical and x10 runs ~22-25s",
-        "sf1": "since r10 every tracked sf1 entry is isolated min-of-3"
-        " (raw runs under sf1_runs); the x10 cache is rebuilt in-process"
-        " when absent and a build failure is reported under sf1_error"
-        " instead of silently omitting the section. The frozen-planes"
-        " twin stays single-run: it is an anti-pattern pin, not a"
-        " tracked trend",
-    }
-    # Persist the FULL summary (incl. notes) next to the repo (VERDICT
-    # r6 item 5): the driver captures stdout's tail, which has truncated
-    # the one-line JSON before (BENCH_r06 lost its warm dict, BENCH_r11
-    # lost the whole round-over-round PERF table) — a committed artifact
-    # can't be torn.
+    out["extras"] = {q: min(r) for q, r in extras.items()}
+    out["extras_cold"] = {q: r[0] for q, r in extras.items()}
+    out["notes"] = NOTES
+    # The full summary goes to a file (a caller keeping only stdout's
+    # tail can cut a long line); stdout's last line keeps the contract
+    # keys and small tracked sections, under 2000 chars.
+    local = os.path.join(ROOT, "BENCH_LOCAL.json")
     try:
-        local = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
-        )
-        tmp = local + ".tmp"
-        with open(tmp, "w") as f:
+        with open(local + ".tmp", "w") as f:
             json.dump(out, f, indent=1)
             f.write("\n")
-        os.replace(tmp, local)
+        os.replace(local + ".tmp", local)
     except OSError:
         pass  # read-only checkout: stdout line already carries the data
-    # The stdout line is what the driver parses, and it only captures a
-    # 2000-char TAIL: r11's whole round-over-round PERF table was lost
-    # because the line (static notes blob + 117 extras entries) blew past
-    # that (VERDICT r12 item 5). Emit ONLY the contract keys + the small
-    # tracked sections (headline queries, iterative mins, sf1 mins) and
-    # make it the absolute LAST line printed; the full detail (extras,
-    # cold runs, raw min-of-3 arrays, notes) lives in BENCH_LOCAL.json,
-    # written above. Nothing is removed from "queries" — same 40 keys.
-    slim_keys = (
-        "metric", "value", "unit", "stable_total", "queries",
-        "iterative", "sf", "sf1", "sf1_scaling", "sf1_error",
-    )
-    slim = {k: out[k] for k in slim_keys if k in out}
+    slim = {k: out[k] for k in ("metric", "value", "unit", "stable_total",
+                                "queries", "iterative", "sf", "sf1",
+                                "sf1_scaling", "sf1_error") if k in out}
     line = json.dumps(slim)
     if len(line) >= 2000:  # pragma: no cover — keep the tail parseable
         line = json.dumps(
-            {k: slim[k] for k in slim if k not in ("sf1", "sf1_scaling")}
-        )
+            {k: slim[k] for k in slim if k not in ("sf1", "sf1_scaling")})
     print(line)
 
 

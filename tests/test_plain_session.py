@@ -67,6 +67,23 @@ def test_load_keeps_user_shuffle_partitions(spark, sf_dir):
         spark.conf.set(key, prior)
 
 
+def test_tune_reads_core_count_when_called(spark, monkeypatch):
+    """tune() sizes shuffle partitions from SPARK_GRAFT_CPUS as it is when
+    called, not as it was when the session module was imported (conftest
+    and perfbench set it after that import)."""
+    from audios_to_dataset_spark.session import tune
+
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    try:
+        spark.conf.unset(key)
+        tune(spark)
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prior)
+
+
 def test_load_sets_broadcast_threshold_only_when_unset(spark, sf_dir):
     """catalog.load gives a session without a broadcast threshold the
     64 MB one get_session plans with, and keeps one the user set."""

@@ -10,31 +10,21 @@ upgrade or an innocent plan edit can undo; this test pins them.
 
 Scope: every query in plans.multimodal — the only module whose declared
 batch plans reach Python (per the repo convention, pandas UDFs are for
-WAV/MIME/multimodal byte work only; tools/udf_dup_audit.py sweeps all
-406 and found offenders only here). Plan-only, no execution.
+WAV/MIME/multimodal byte work only; tools/plan_audit.py's
+DuplicatedPythonEval flag sweeps all 406). Plan-only, no execution.
 """
 
 from __future__ import annotations
 
-import re
+import os
+import sys
 
+sys.path.insert(
+    0, os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools")
+)
 
-def _python_eval_sigs(txt: str) -> list[str]:
-    """Arguments signatures of every ArrowEvalPython/BatchEvalPython
-    node, with expression ids stripped so two eval sites of the same
-    UDF call compare equal (same normalization as
-    tools/udf_dup_audit.py)."""
-    sigs = []
-    lines = txt.splitlines()
-    for i, ln in enumerate(lines):
-        if re.match(r"^\(\d+\) (ArrowEvalPython|BatchEvalPython)", ln):
-            for j in range(i + 1, min(i + 5, len(lines))):
-                if lines[j].startswith("Arguments:"):
-                    sig = re.sub(r"#\d+", "#", lines[j])
-                    sig = re.sub(r"\[pythonUDF\d+#\]", "", sig)
-                    sigs.append(sig)
-                    break
-    return sigs
+from plan_audit import python_eval_sigs  # noqa: E402
 
 
 def test_no_duplicated_python_eval_in_multimodal_plans(spark, sf_dir):
@@ -47,7 +37,7 @@ def test_no_duplicated_python_eval_in_multimodal_plans(spark, sf_dir):
             spark._jvm.org.apache.spark.sql.execution.ExplainMode
             .fromString("formatted")
         )
-        sigs = _python_eval_sigs(txt)
+        sigs = python_eval_sigs(txt)
         dup = sorted({s for s in sigs if sigs.count(s) > 1})
         if dup:
             bad[name] = [f"{sigs.count(s)}x {s[:120]}" for s in dup]

@@ -1,7 +1,6 @@
 """Physical-plan audit over every declared batch query.
 
-Sweeps ``queries()`` and flags the three plan shapes that kill a 100 TB
-run:
+Sweeps ``queries()`` and flags the plan shapes that kill a 100 TB run:
 
 - ``CartesianProduct``        — all-pairs join, O(N·M) rows moved
 - ``BroadcastNestedLoopJoin`` — per-row loop join; only acceptable when
@@ -10,6 +9,15 @@ run:
 - single-partition Window     — ``Exchange SinglePartition`` feeding a
                                 ``Window``: the whole table sorts on one
                                 task
+- ``DuplicatedPythonEval``    — the same ArrowEvalPython/BatchEvalPython
+                                call evaluated at two plan sites (a filter
+                                pushed below an Exchange with a copy of
+                                its UDF: the input decoded twice)
+
+It also prints one plan-shape row per query: the counts of shuffle
+Exchange, SortMergeJoin, BroadcastHashJoin, BroadcastNestedLoopJoin and
+Python nodes (any operator that runs Python: UDF evals, grouped and
+mapped pandas/Arrow functions).
 
 Queries where a flagged shape is *intentional* (brute-force correctness
 baselines kept next to their LSH scale paths; the reference-semantics
@@ -217,12 +225,44 @@ def _window_on_single_partition(plan: str) -> bool:
     return False
 
 
+def python_eval_sigs(plan: str) -> list[str]:
+    """Arguments signatures of every ArrowEvalPython/BatchEvalPython node
+    of a formatted explain, with expression ids stripped so two eval
+    sites of the same UDF call compare equal."""
+    sigs = []
+    lines = plan.splitlines()
+    for i, ln in enumerate(lines):
+        if re.match(r"^\(\d+\) (ArrowEvalPython|BatchEvalPython)", ln):
+            for j in range(i + 1, min(i + 5, len(lines))):
+                if lines[j].startswith("Arguments:"):
+                    sig = re.sub(r"#\d+", "#", lines[j])
+                    sig = re.sub(r"\[pythonUDF\d+#\]", "", sig)
+                    sigs.append(sig)
+                    break
+    return sigs
+
+
+SHAPE_COLUMNS = ("Exchange", "SortMergeJoin", "BroadcastHashJoin",
+                 "BroadcastNestedLoopJoin", "Python")
+PYTHON_NODE = re.compile(r"Python|InPandas|InArrow")
+
+
+def plan_shape(plan: str) -> dict[str, int]:
+    """Node counts per ``SHAPE_COLUMNS`` from the numbered node list of a
+    formatted explain (subqueries included)."""
+    names = re.findall(r"^\(\d+\) (\w+)", plan, re.M)
+    shape = {c: names.count(c) for c in SHAPE_COLUMNS[:-1]}
+    shape["Python"] = sum(bool(PYTHON_NODE.search(n)) for n in names)
+    return shape
+
+
 def audit(spark, sf_dir: str) -> int:
     from audios_to_dataset_spark.plans import all_queries
     from audios_to_dataset_spark.streaming.events import BATCH_TWINS
 
     flags: list[tuple[str, str, bool]] = []
     n_checked = 0
+    print(f"{'query':<32}" + "".join(f"  {c}" for c in SHAPE_COLUMNS))
     for name, fn in sorted(all_queries().items()):
         if name.startswith("q_stream_"):
             # Streaming queries execute on call (availableNow into a
@@ -235,6 +275,9 @@ def audit(spark, sf_dir: str) -> int:
             df.explain("formatted")
         plan = buf.getvalue()
         n_checked += 1
+        shape = plan_shape(plan)
+        print(f"{name:<32}"
+              + "".join(f"{shape[c]:>{len(c) + 2}}" for c in SHAPE_COLUMNS))
 
         found: list[str] = []
         if "CartesianProduct" in plan:
@@ -244,6 +287,9 @@ def audit(spark, sf_dir: str) -> int:
             found.append("BroadcastNestedLoopJoin")
         if _window_on_single_partition(plan):
             found.append("SinglePartitionWindow")
+        sigs = python_eval_sigs(plan)
+        if len(set(sigs)) < len(sigs):
+            found.append("DuplicatedPythonEval")
 
         for f in found:
             allowed = (name, f) in ALLOW
