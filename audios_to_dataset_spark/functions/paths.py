@@ -26,8 +26,15 @@ def normalize_path_str(col: Column) -> Column:
 
 
 def basename(col: Column) -> Column:
-    """P3: final path segment (csv_path_rewriter.py:120)."""
+    """P3 (src/main.rs:771-780, csv_path_rewriter.py:120): final path
+    segment."""
     return F.element_at(F.split(normalize_path_str(col), "/"), -1)
+
+
+def local_path(col: Column) -> Column:
+    """Absolute local path of a ``file:`` URI (binaryFile's ``path``
+    column); other strings pass through unchanged."""
+    return F.regexp_replace(col, r"^file:/*", "/")
 
 
 def common_dir_prefix(df: DataFrame, col: str = "file_name") -> str:

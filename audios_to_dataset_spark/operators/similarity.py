@@ -76,6 +76,22 @@ def _norm(a: Column) -> Column:
     )
 
 
+def _cosine(a: Column, b: Column) -> Column:
+    """Cosine of two float arrays: ``_dot(a, b) / (|a| * |b|)``, the one
+    formula every oracle in plans/similarity.py replays."""
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _indexable(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Drop rows that cannot be indexed: a NULL id or a NULL vector.
+
+    Seeds are the lowest ids and Spark sorts NULL ids FIRST, so one
+    NULL-id row would become a seed, and a NULL-vector seed NULLs every
+    cosine against it: one dirty row would empty a whole clustering
+    (found by the --nulls sweep)."""
+    return df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
+
+
 def cosine_vs_query(
     df: DataFrame,
     query_id: int = 0,
@@ -83,7 +99,20 @@ def cosine_vs_query(
     vec_col: str = "embedding",
     decimals: int = 3,
 ) -> DataFrame:
-    """Cosine similarity of every vector against one query vector.
+    """Cosine similarity of every vector against one query vector."""
+    return _vs_query(df, df, query_id, id_col, vec_col, decimals)
+
+
+def _vs_query(
+    cand: DataFrame,
+    df: DataFrame,
+    query_id: int,
+    id_col: str,
+    vec_col: str,
+    decimals: int,
+) -> DataFrame:
+    """(id, cos_sim): every ``cand`` vector's cosine, rounded to
+    ``decimals`` places, against the vector of ``query_id`` in ``df``.
 
     The 1-row query side is cross-joined broadcast — no shuffle of the big
     side at all; the scan streams through a codegen'd projection.
@@ -91,13 +120,18 @@ def cosine_vs_query(
     q = df.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("query_vec")
     )
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
+    cos = _cosine(F.col(vec_col), F.col("query_vec"))
+    return cand.crossJoin(F.broadcast(q)).select(
+        id_col, sround(cos, decimals).alias("cos_sim")
     )
-    return (
-        df.crossJoin(F.broadcast(q))
-        .select(id_col, sround(cos, decimals).alias("cos_sim"))
-    )
+
+
+def _top(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The ``k`` best ``cos_sim`` rows, ordered on the *rounded* score
+    with an id tie-break so the cutoff is engine-independent. Spark plans
+    the orderBy+limit as TakeOrderedAndProject (per-partition top-k, no
+    global sort shuffle)."""
+    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
 
 
 def topk_vs_query(
@@ -108,14 +142,10 @@ def topk_vs_query(
     vec_col: str = "embedding",
     decimals: int = 3,
 ) -> DataFrame:
-    """Top-k nearest by cosine — ordered on the *rounded* score with an id
-    tie-break so the cutoff is engine-independent. Spark plans the
-    orderBy+limit as TakeOrderedAndProject (per-partition top-k, no global
-    sort shuffle)."""
-    scored = cosine_vs_query(df, query_id, id_col, vec_col, decimals)
-    return scored.orderBy(
-        F.col("cos_sim").desc(), F.col(id_col)
-    ).limit(k)
+    """Top-k nearest by cosine (:func:`_top`)."""
+    return _top(
+        cosine_vs_query(df, query_id, id_col, vec_col, decimals), k, id_col
+    )
 
 
 def cosine_neardup_pairs(
@@ -130,9 +160,7 @@ def cosine_neardup_pairs(
     :func:`lsh_bucketed_neardup_pairs` at scale."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    cos = _dot(F.col("va"), F.col("vb")) / (
-        _norm(F.col("va")) * _norm(F.col("vb"))
-    )
+    cos = _cosine(F.col("va"), F.col("vb"))
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
@@ -225,51 +253,37 @@ def ivf_assignments(
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: (centroids, assignments).
 
-    Default centroids are the ``n_centroids`` lowest-id vectors —
-    deterministic, no RNG, good enough as a coarse partitioner. The pick
-    is ``orderBy(id).limit(n)`` — Spark plans TakeOrderedAndProject
-    (per-partition top-k, never a global single-partition sort) — and
-    the centroid's own id doubles as ``centroid_id`` (id order = rank
-    order, so every tie-break downstream sorts identically), so no
-    window function touches the vector table at all. Pass ``centroids``
-    (a (centroid_id, centroid_vec) frame, e.g. from
+    Default centroids are the ``n_centroids`` lowest-id vectors, i.e.
+    the seeds of :func:`kmeans_centroids` (zero training rounds):
+    deterministic, no RNG, good enough as a coarse partitioner; the
+    centroid's own id doubles as ``centroid_id``. Pass ``centroids`` (a
+    (centroid_id, centroid_vec) frame, e.g. from
     :func:`kmeans_centroids`) to swap in a trained quantizer. Each
-    vector is assigned to its max-cosine centroid via a broadcast cross
-    join + argmax — the big side streams once, no shuffle.
-    NULL-id / NULL-vector rows are dropped at entry: Spark sorts NULL
-    ids FIRST, so one dirty row would otherwise become a NULL centroid
-    whose NULL cosines poison every assignment (--nulls sweep).
+    vector goes to its nearest centroid (:func:`_nearest`): a broadcast
+    join + argmax, the big side streams once. NULL-id / NULL-vector rows
+    are dropped.
     """
-    df = df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
     if centroids is None:
-        centroids = (
-            df.select(
-                F.col(id_col).alias("centroid_id"),
-                F.col(vec_col).alias("centroid_vec"),
-            )
-            .orderBy("centroid_id")
-            .limit(n_centroids)
+        cents, a = _seeded_kmeans(df, n_centroids, 0, id_col, vec_col)
+    else:
+        cents = centroids.select(
+            F.lit(0).alias("s"),
+            F.col("centroid_id").alias("cid"),
+            F.col("centroid_vec").alias("cvec"),
         )
-    cos = _dot(F.col(vec_col), F.col("centroid_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("centroid_vec"))
+        df = _indexable(df, id_col, vec_col)
+        a = _nearest(_whole(df, id_col, vec_col), cents, id_col)
+    return (
+        cents.select(
+            F.col("cid").alias("centroid_id"),
+            F.col("cvec").alias("centroid_vec"),
+        ),
+        a.select(
+            id_col,
+            F.col("sub").alias(vec_col),
+            F.col("cid").alias("centroid_id"),
+        ),
     )
-    # assignment ordering uses the stable-rounded cosine so the argmax is
-    # engine-reproducible (ties then break on centroid_id)
-    scored = df.crossJoin(F.broadcast(centroids)).select(
-        id_col,
-        vec_col,
-        "centroid_id",
-        sround(cos, 6).alias("_ccos"),
-    )
-    pick = Window.partitionBy(id_col).orderBy(
-        F.col("_ccos").desc(), "centroid_id"
-    )
-    assignments = (
-        scored.withColumn("_pick", F.row_number().over(pick))
-        .filter(F.col("_pick") == 1)
-        .select(id_col, vec_col, "centroid_id")
-    )
-    return centroids, assignments
 
 
 def ivf_topk_vs_query(
@@ -294,9 +308,7 @@ def ivf_topk_vs_query(
     q = df.filter(F.col(id_col) == query_id).select(
         F.col(vec_col).alias("query_vec")
     )
-    ccos = _dot(F.col("centroid_vec"), F.col("query_vec")) / (
-        _norm(F.col("centroid_vec")) * _norm(F.col("query_vec"))
-    )
+    ccos = _cosine(F.col("centroid_vec"), F.col("query_vec"))
     probe = (
         centroids.crossJoin(F.broadcast(q))
         .select("centroid_id", sround(ccos, 6).alias("_qc"))
@@ -305,14 +317,10 @@ def ivf_topk_vs_query(
         .select("centroid_id")
     )
     candidates = assignments.join(F.broadcast(probe), "centroid_id")
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-    )
-    return (
-        candidates.crossJoin(F.broadcast(q))
-        .select(id_col, sround(cos, decimals).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return _top(
+        _vs_query(candidates, df, query_id, id_col, vec_col, decimals),
+        k,
+        id_col,
     )
 
 
@@ -341,20 +349,9 @@ def lsh_topk_vs_query(
         .select("id")
         .distinct()
     )
-    cand = df.join(
-        cand_ids.withColumnRenamed("id", id_col), id_col
-    )
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("query_vec")
-    )
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-    )
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(id_col, sround(cos, decimals).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    cand = df.join(cand_ids.withColumnRenamed("id", id_col), id_col)
+    return _top(
+        _vs_query(cand, df, query_id, id_col, vec_col, decimals), k, id_col
     )
 
 
@@ -408,42 +405,117 @@ def multiprobe_topk_vs_query(
         bucketed.join(F.broadcast(probes), "bucket").select("id").distinct()
     )
     cand = df.join(cand_ids.withColumnRenamed("id", id_col), id_col)
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("query_vec")
-    )
-    cos = _dot(F.col(vec_col), F.col("query_vec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("query_vec"))
-    )
-    return (
-        cand.crossJoin(F.broadcast(q))
-        .select(id_col, sround(cos, decimals).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    return _top(
+        _vs_query(cand, df, query_id, id_col, vec_col, decimals), k, id_col
     )
 
 
-def _kmeans_assign(
-    df: DataFrame, cents: DataFrame, id_col: str, vec_col: str
-) -> DataFrame:
-    """Assign every vector to its max-rounded-cosine centroid (broadcast
-    the k centroids (cid, cvec), argmax per vector — the big side streams,
-    one narrow window per id)."""
-    cos = _dot(F.col(vec_col), F.col("cvec")) / (
-        _norm(F.col(vec_col)) * _norm(F.col("cvec"))
-    )
-    scored = df.select(id_col, vec_col).crossJoin(
-        F.broadcast(cents)
+def _whole(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, s, sub): each whole vector as the single subspace ``s = 0``."""
+    return df.select(id_col, F.lit(0).alias("s"), F.col(vec_col).alias("sub"))
+
+
+def _nearest(sub: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+    """(id, s, sub, cid, cos): every subvector's nearest centroid in its
+    subspace, the one argmax behind k-means, PQ and IVF.
+
+    The (s, cid, cvec) centroids are broadcast and joined on the
+    subspace, so the big side streams once. The join is a cross join
+    with the subspace condition: PQ plans it as a broadcast hash join,
+    and with one subspace (s = 0 on both sides) the optimizer folds the
+    condition away, leaving the broadcast Cross nested loop the plan
+    audit accepts. ``cos`` is the cosine rounded to 6 places, so the
+    argmax is engine-reproducible; ties go to the lower cid inside one
+    (id, s) window."""
+    scored = sub.join(
+        F.broadcast(cents.withColumnRenamed("s", "_s")),
+        F.col("s") == F.col("_s"),
+        "cross",
     ).select(
-        id_col, vec_col, "cid", sround(cos, 6).alias("_c6")
+        id_col,
+        "s",
+        "sub",
+        "cid",
+        sround(_cosine(F.col("sub"), F.col("cvec")), 6).alias("cos"),
     )
-    pick = Window.partitionBy(id_col).orderBy(
-        F.col("_c6").desc(), "cid"
+    pick = Window.partitionBy(id_col, "s").orderBy(
+        F.col("cos").desc(), "cid"
     )
     return (
         scored.withColumn("_rn", F.row_number().over(pick))
         .filter(F.col("_rn") == 1)
-        .select(id_col, vec_col, "cid")
+        .drop("_rn")
     )
+
+
+def _seeded_kmeans(
+    df: DataFrame,
+    k: int,
+    iters: int,
+    id_col: str,
+    vec_col: str,
+    m: int = 1,
+    subdim: int | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """Seeded k-means on cosine, trained in every subspace at once:
+    (centroids (s, cid, cvec), assignments (id, s, sub, cid, cos)).
+
+    Vectors split into ``m`` contiguous ``subdim``-wide subspaces
+    (:func:`pq_subvectors`); ``subdim=None`` keeps each whole vector as
+    the single subspace ``s = 0``, so plain k-means is one-subspace
+    product quantization and both run this one loop.
+
+    Init: the ``k`` lowest-id vectors, split the same way
+    (TakeOrderedAndProject, no RNG); a seed's id is its centroid id.
+    Each iteration assigns every subvector (:func:`_nearest`), then
+    takes each centroid's per-dimension *decimal* mean (posexplode →
+    groupBy(s, cid, pos): one uniform shuffle on m × k × subdim keys)
+    and reassembles it in pos order. Every step is engine-reproducible,
+    so the DuckDB oracles replay the identical iteration. Each round's
+    centroids (m × k rows) are cut with an eager localCheckpoint, as in
+    operators/graph.py: the next round reads k rows instead of
+    replaying the lineage (uncut, q_kmeans executed in 3.3 s instead of
+    0.6 s at sf0.1 on 4 cores), and ContextCleaner reclaims the checkpoint
+    once the frame is gone, where a cached frame would stay in the
+    CacheManager for the whole app. Rows with a NULL id or vector are
+    dropped (:func:`_indexable`)."""
+    from ..plans._util import DEC
+
+    def split(d: DataFrame) -> DataFrame:
+        if subdim is None:
+            return _whole(d, id_col, vec_col)
+        return pq_subvectors(d, m, subdim, id_col, vec_col)
+
+    df = _indexable(df, id_col, vec_col)
+    sub = split(df)
+    cents = split(
+        df.select(id_col, vec_col).orderBy(id_col).limit(k)
+    ).select("s", F.col(id_col).alias("cid"), F.col("sub").alias("cvec"))
+    for _ in range(iters):
+        flat = _nearest(sub, cents, id_col).select(
+            "s", "cid", F.posexplode(F.col("sub")).alias("pos", "val")
+        )
+        means = flat.groupBy("s", "cid", "pos").agg(
+            (
+                F.sum(F.col("val").cast("double").cast(DEC)).cast("double")
+                / F.count(F.lit(1))
+            ).alias("m")
+        )
+        cents = (
+            means.groupBy("s", "cid")
+            .agg(
+                F.array_sort(
+                    F.collect_list(F.struct("pos", "m"))
+                ).alias("_pm")
+            )
+            .select(
+                "s",
+                "cid",
+                F.transform("_pm", lambda x: x["m"]).alias("cvec"),
+            )
+            .localCheckpoint(eager=True)
+        )
+    return cents, _nearest(sub, cents, id_col)
 
 
 def kmeans_centroids(
@@ -453,63 +525,10 @@ def kmeans_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Deterministic seeded KMeans → the final k centroids (cid, cvec).
-
-    Init: the ``k`` lowest-id vectors (TakeOrderedAndProject, no RNG).
-    Each iteration: (1) argmax-rounded-cosine assignment against the
-    broadcast centroids; (2) recompute centroids as the per-dimension
-    *decimal* mean of their members (posexplode → groupBy(cid, pos) —
-    one uniform shuffle on (k × dim) keys — then reassembled in pos
-    order). Every arithmetic step is engine-reproducible, so a DuckDB
-    oracle replays the identical iteration.
-    """
-    from ..plans._util import DEC
-
-    # Unindexable rows (NULL id or NULL vector) must not reach training:
-    # the seed is orderBy(id).limit(k) and Spark sorts NULLs FIRST, so a
-    # single NULL-id row would become a seed and a NULL-vector seed
-    # NULLs every distance — one dirty row in 100 TB would empty the
-    # whole clustering (found by the --nulls sweep).
-    df = df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-    cents = (
-        df.select(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec")
-        )
-        .orderBy("cid")
-        .limit(k)
-    )
-    prev = None
-    for _ in range(iters):
-        a = _kmeans_assign(df, cents, id_col, vec_col)
-        flat = a.select(
-            "cid", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        means = flat.groupBy("cid", "pos").agg(
-            (
-                F.sum(F.col("val").cast("double").cast(DEC)).cast("double")
-                / F.count(F.lit(1))
-            ).alias("m")
-        )
-        cents = (
-            means.groupBy("cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("_pm")
-            )
-            .select(
-                "cid", F.transform("_pm", lambda s: s["m"]).alias("cvec")
-            )
-            # k rows — cache so each reuse (assignment + next recompute)
-            # doesn't replay the whole iteration lineage
-            .cache()
-        )
-        # drop the previous iteration's dead cache entry (caller owns the
-        # final frame), mirroring pq_codebooks
-        if prev is not None:
-            prev.unpersist()
-        prev = cents
-    return cents
+    """Deterministic seeded KMeans → the final k centroids (cid, cvec):
+    :func:`_seeded_kmeans` over whole vectors."""
+    cents, _ = _seeded_kmeans(df, k, iters, id_col, vec_col)
+    return cents.drop("s")
 
 
 def kmeans_assignments(
@@ -523,10 +542,9 @@ def kmeans_assignments(
     assignment of every vector against :func:`kmeans_centroids`'s final
     centroids. At 100 TB: per-iteration cost is one broadcast + one
     (cid, pos) shuffle; centroids (k×dim doubles) stay driver-small.
-    NULL-id / NULL-vector rows are dropped (see kmeans_centroids)."""
-    df = df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-    cents = kmeans_centroids(df, k, iters, id_col, vec_col)
-    return _kmeans_assign(df, cents, id_col, vec_col).select(id_col, "cid")
+    NULL-id / NULL-vector rows are dropped."""
+    _, a = _seeded_kmeans(df, k, iters, id_col, vec_col)
+    return a.select(id_col, "cid")
 
 
 def pq_subvectors(
@@ -552,29 +570,6 @@ def pq_subvectors(
     ).select(id_col, F.col("_p.s").alias("s"), F.col("_p.sub").alias("sub"))
 
 
-def _pq_assign(
-    sub: DataFrame, cents: DataFrame, id_col: str
-) -> DataFrame:
-    """Per-subspace centroid assignment: broadcast the (s, cid, cvec)
-    codebooks, equi-join on the subspace, argmax rounded cosine with a
-    cid tie-break — the grouped twin of :func:`_kmeans_assign` (identical
-    arithmetic per subspace, so the same SQL replay applies)."""
-    cos = _dot(F.col("sub"), F.col("cvec")) / (
-        _norm(F.col("sub")) * _norm(F.col("cvec"))
-    )
-    scored = sub.join(F.broadcast(cents), "s").select(
-        id_col, "s", "sub", "cid", sround(cos, 6).alias("_c6")
-    )
-    pick = Window.partitionBy(id_col, "s").orderBy(
-        F.col("_c6").desc(), "cid"
-    )
-    return (
-        scored.withColumn("_rn", F.row_number().over(pick))
-        .filter(F.col("_rn") == 1)
-        .select(id_col, "s", "sub", "cid")
-    )
-
-
 def pq_codebooks(
     df: DataFrame,
     m: int,
@@ -585,57 +580,11 @@ def pq_codebooks(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """(s, cid, cvec) codebooks for all ``m`` PQ subspaces, trained as
-    ONE grouped seeded kmeans: the subvector table (id, s, sub) carries
-    every subspace, each iteration is a single broadcast assignment plus
-    a single (s, cid, pos) decimal-mean shuffle — m codebooks for the
-    per-iteration cost of one. Seeds are the k lowest ids (identical
-    across subspaces), matching :func:`kmeans_centroids`'s init, so the
-    arithmetic per subspace equals the independent-loop formulation and
-    the same DuckDB replay oracle applies."""
-    from ..plans._util import DEC
-
-    # same dirty-row discipline as kmeans_centroids: NULL ids/vectors
-    # can't seed or train (Spark sorts NULL ids first in the seed scan)
-    df = df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-    sub = pq_subvectors(df, m, subdim, id_col, vec_col)
-    seed_ids = df.select(id_col).orderBy(id_col).limit(k)
-    cents = sub.join(F.broadcast(seed_ids), id_col).select(
-        "s", F.col(id_col).alias("cid"), F.col("sub").alias("cvec")
-    )
-    prev = None
-    for _ in range(iters):
-        a = _pq_assign(sub, cents, id_col)
-        flat = a.select(
-            "s", "cid", F.posexplode(F.col("sub")).alias("pos", "val")
-        )
-        means = flat.groupBy("s", "cid", "pos").agg(
-            (
-                F.sum(F.col("val").cast("double").cast(DEC)).cast("double")
-                / F.count(F.lit(1))
-            ).alias("m")
-        )
-        cents = (
-            means.groupBy("s", "cid")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("_pm")
-            )
-            .select(
-                "s",
-                "cid",
-                F.transform("_pm", lambda x: x["m"]).alias("cvec"),
-            )
-            # m×k rows — cache so the next assignment and recompute don't
-            # replay the whole iteration lineage
-            .cache()
-        )
-        # the previous iteration's cached centroids are dead once the new
-        # ones exist; unpersist so repeated PQ queries don't accumulate
-        # cache entries for the app lifetime (caller owns the final frame)
-        if prev is not None:
-            prev.unpersist()
-        prev = cents
+    ONE grouped seeded kmeans (:func:`_seeded_kmeans`): each iteration
+    is a single broadcast assignment plus a single (s, cid, pos)
+    decimal-mean shuffle — m codebooks for the per-iteration cost of
+    one."""
+    cents, _ = _seeded_kmeans(df, k, iters, id_col, vec_col, m, subdim)
     return cents
 
 
@@ -650,7 +599,7 @@ def pq_codes(
 ) -> DataFrame:
     """Product quantization (Jégou, Douze & Schmid 2011, public
     literature): split each vector into ``m`` contiguous ``subdim``-wide
-    subvectors, train a seeded-kmeans codebook per subspace (same
+    subvectors, train a seeded-kmeans codebook per subspace (the same
     deterministic cosine kmeans as :func:`kmeans_centroids`, so the
     DuckDB oracle replays it), and emit each vector's code word — the
     centroid id — per subspace. m codes of log2(k) bits replace
@@ -659,15 +608,11 @@ def pq_codes(
     broadcast; distances against codes become m table lookups).
 
     Scale shape: all subspaces train and assign through the grouped
-    subvector table (:func:`pq_codebooks`) — one scan + one (id, s)
-    window per assignment, one (s, cid, pos) shuffle per recompute,
-    regardless of m; the final per-vector code row is a pivot-free
-    max(CASE) aggregate keyed on the id. NULL-id / NULL-vector rows are
-    dropped (see kmeans_centroids — they cannot be coded)."""
-    df = df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
-    sub = pq_subvectors(df, m, subdim, id_col, vec_col)
-    cents = pq_codebooks(df, m, subdim, k, iters, id_col, vec_col)
-    a = _pq_assign(sub, cents, id_col).select(id_col, "s", "cid")
+    subvector table — one scan + one (id, s) window per assignment, one
+    (s, cid, pos) shuffle per recompute, regardless of m; the final
+    per-vector code row is a pivot-free max(CASE) aggregate keyed on the
+    id. NULL-id / NULL-vector rows cannot be coded and are dropped."""
+    _, a = _seeded_kmeans(df, k, iters, id_col, vec_col, m, subdim)
     return a.groupBy(id_col).agg(
         *[
             F.max(F.when(F.col("s") == s, F.col("cid"))).alias(f"code_{s}")
@@ -947,9 +892,7 @@ def lsh_topk_batch(
     qv = df.filter(F.col(id_col).isin(*ids)).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
     )
-    cos = _dot(F.col("vec"), F.col("qvec")) / (
-        _norm(F.col("vec")) * _norm(F.col("qvec"))
-    )
+    cos = _cosine(F.col("vec"), F.col("qvec"))
     w = Window.partitionBy("qid").orderBy(
         F.col("cos_sim").desc(), F.col("id")
     )
@@ -988,19 +931,33 @@ def cluster_bucketed_neardup_pairs(
     buckets, so precision is 1; recall misses only pairs split across
     cluster boundaries."""
     assign = kmeans_assignments(df, k, iters, id_col, vec_col)
-    left = df.join(assign, id_col).select(
+    return _cluster_pairs(df, assign, threshold, id_col, vec_col, decimals)
+
+
+def _cluster_pairs(
+    df: DataFrame,
+    assign: DataFrame,
+    threshold: float,
+    id_col: str,
+    vec_col: str,
+    decimals: int,
+) -> DataFrame:
+    """(id_a, id_b, cos_sim): pairs of cluster-mates (same ``cid`` in the
+    (id, cid) frame ``assign``), id_a < id_b, whose cosine rounded to
+    ``decimals`` places is >= threshold."""
+    mates = df.join(assign, id_col)
+    left = mates.select(
         "cid", F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
     )
-    right = df.join(assign, id_col).select(
+    right = mates.select(
         "cid", F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (
-        _norm(F.col("va")) * _norm(F.col("vb"))
     )
     return (
         left.join(right, "cid")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", sround(cos, decimals))
+        .withColumn(
+            "cos_sim", sround(_cosine(F.col("va"), F.col("vb")), decimals)
+        )
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
@@ -1021,25 +978,13 @@ def semantic_dedup_decisions(
     the same deterministic rule as exact_dedup_groups); ``max_lower_cos``
     reports the strongest such mate (-1.0 when none qualifies).
 
-    KMeans assignments are computed ONCE and cached — they feed both
-    sides of the pair join and the final decision frame. Scale shape is
-    unchanged from the pair search: per-cluster (N/k)^2 candidates with
-    k raised alongside N, then an (id) groupBy and a left join."""
-    assign = kmeans_assignments(df, k, iters, id_col, vec_col).cache()
-    left = df.join(assign, id_col).select(
-        "cid", F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
-    )
-    right = df.join(assign, id_col).select(
-        "cid", F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
-    )
-    cos = _dot(F.col("va"), F.col("vb")) / (
-        _norm(F.col("va")) * _norm(F.col("vb"))
-    )
+    The KMeans assignments feed both sides of the pair join and the
+    final decision frame. Scale shape is unchanged from the pair search:
+    per-cluster (N/k)^2 candidates with k raised alongside N, then an
+    (id) groupBy and a left join."""
+    assign = kmeans_assignments(df, k, iters, id_col, vec_col)
     drops = (
-        left.join(right, "cid")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", sround(cos, decimals))
-        .filter(F.col("cos_sim") >= threshold)
+        _cluster_pairs(df, assign, threshold, id_col, vec_col, decimals)
         .groupBy("id_b")
         .agg(F.max("cos_sim").alias("max_lower_cos"))
     )
@@ -1061,7 +1006,6 @@ def dbscan_clusters(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     decimals: int = 4,
-    max_iter: int = 20,
 ) -> DataFrame:
     """Density-based clustering (DBSCAN, Ester et al. KDD'96) over an
     embedding column, with the eps-neighborhood realized as the
@@ -1120,9 +1064,9 @@ def dbscan_clusters(
         .join(core.select(F.col("id").alias("id_b")), "id_b", "semi")
         .select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
-    core_lab = connected_components(
-        core, core_edges, max_iter=max_iter
-    ).select("id", "cluster_id")
+    core_lab = connected_components(core, core_edges).select(
+        "id", "cluster_id"
+    )
 
     border = (
         und.join(core, "id", "left_anti")
@@ -1142,9 +1086,9 @@ def dbscan_clusters(
     # the pair graph can never label NULL-id / NULL-vector rows (NULL
     # comparisons drop them before any candidate forms), so the noise
     # leg must exclude them too or the --nulls sweep diverges
-    all_ids = df.filter(
-        F.col(id_col).isNotNull() & F.col(vec_col).isNotNull()
-    ).select(F.col(id_col).alias("id"))
+    all_ids = _indexable(df, id_col, vec_col).select(
+        F.col(id_col).alias("id")
+    )
     noise = all_ids.join(labeled, "id", "left_anti").select(
         "id",
         F.lit(None).cast("bigint").alias("cluster_id"),

@@ -1996,22 +1996,12 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     query norm are driver-small, and the top-k is
     TakeOrderedAndProject. Completes q_pq_codes' compression story with
     the serving path."""
-    from ..operators.similarity import (
-        _dot,
-        _pq_assign,
-        pq_codebooks,
-        pq_subvectors,
-    )
+    from ..operators.similarity import _dot, _seeded_kmeans, pq_subvectors
 
     em = load(spark, sf_dir, "embeddings")
-    # only indexable vectors get codes — same dirty-row guard as
-    # pq_codes (NULL id/vector; pinned by the --nulls sweep)
-    emc = em.filter(
-        F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
+    cents, codes = _seeded_kmeans(
+        em, PQ_K, PQ_ITERS, "vec_id", "embedding", PQ_M, PQ_SUBDIM
     )
-    sub = pq_subvectors(emc, PQ_M, PQ_SUBDIM)
-    cents = pq_codebooks(emc, PQ_M, PQ_SUBDIM, k=PQ_K, iters=PQ_ITERS)
-    codes = _pq_assign(sub, cents, "vec_id").select("vec_id", "s", "cid")
     qdf = em.filter(F.col("vec_id") == QUERY_ID)
     qsubs = pq_subvectors(qdf, PQ_M, PQ_SUBDIM).select(
         "s", F.col("sub").alias("qsub")
@@ -2105,33 +2095,17 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one grouped assignment (broadcast codebooks + per-(id,s)
     window) and one (s, cid) aggregate — map-side combinable; means go
     through the decimal domain."""
-    from ..operators.similarity import (
-        _dot,
-        _norm,
-        _pq_assign,
-        pq_codebooks,
-        pq_subvectors,
-    )
+    from ..operators.similarity import _seeded_kmeans
 
     em = load(spark, sf_dir, "embeddings")
-    # same dirty-row guard as pq_codes / q_ann_pq (--nulls sweep)
-    emc = em.filter(
-        F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
-    )
-    sub = pq_subvectors(emc, PQ_M, PQ_SUBDIM)
-    cents = pq_codebooks(emc, PQ_M, PQ_SUBDIM, k=PQ_K, iters=PQ_ITERS)
-    a = _pq_assign(sub, cents, "vec_id")
-    cos = _dot(F.col("sub"), F.col("cvec")) / (
-        _norm(F.col("sub")) * _norm(F.col("cvec"))
-    )
-    joined = a.join(F.broadcast(cents), ["s", "cid"]).select(
-        "s", "cid", sround(cos, 6).alias("_c6")
+    _, a = _seeded_kmeans(
+        em, PQ_K, PQ_ITERS, "vec_id", "embedding", PQ_M, PQ_SUBDIM
     )
     return (
-        joined.groupBy("s", "cid")
+        a.groupBy("s", "cid")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_members"),
-            (dsum("_c6") / F.count(F.lit(1))).alias("_m"),
+            (dsum("cos") / F.count(F.lit(1))).alias("_m"),
         )
         .select(
             F.col("s").cast("bigint").alias("subspace"),

@@ -400,15 +400,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
     li = load(spark, sf_dir, "lineitem")
     edges = trade_edges(o, li)
-    # edge partitioning tracks the cluster's parallelism (measured ~20%
-    # at sf0.1 local[32] over the old fixed 8; values are unaffected —
-    # the decimal sums are order-independent by construction)
-    r = pagerank(
-        edges,
-        iters=PR_ITERS,
-        damping=PR_DAMPING,
-        partitions=spark.sparkContext.defaultParallelism,
-    )
+    r = pagerank(edges, iters=PR_ITERS, damping=PR_DAMPING)
     return r.select(
         F.col("id").cast("bigint").alias("node_id"),
         sround(F.col("rank"), 9).alias("rank"),
@@ -803,7 +795,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     if each endpoint ranks the other in its top-k (mutual k-NN), then
     ``KCORE_ROUNDS`` synchronous peel rounds drop every node whose
     degree falls below ``KCORE_K`` (Seidman 1983 k-core, bounded-round
-    like connected_components' max_iter). Survivors are the dense
+    like connected_components' MAX_CC_ROUNDS). Survivors are the dense
     "semantic core" a curation pipeline keeps; at sf0.01 the cascade is
     genuinely multi-round (500 → 362 → 316 → 293 nodes).
 

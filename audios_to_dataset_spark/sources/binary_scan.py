@@ -29,6 +29,8 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.paths import basename, local_path, normalize_path_str
+
 DEFAULT_MAX_DEPTH = 50  # src/main.rs:71-73
 
 # Above this many symlink entries the exclusion switches from in-plan
@@ -62,31 +64,18 @@ def _symlink_entries(input_dir: str) -> tuple[list[str], list[str]]:
     return files, dirs
 
 
-def normalize_path(col: Column) -> Column:
-    """P1 (src/main.rs:112-122): backslash→slash, strip leading './'."""
-    return F.regexp_replace(
-        F.regexp_replace(col, r"\\", "/"), r"^(\./)+", ""
-    )
-
-
 def relative_path(col: Column, input_dir: str) -> Column:
     """P2 (src/main.rs:743-758): strip the input-dir prefix then normalize;
     empty result falls back to the basename."""
-    # binaryFile paths arrive as file: URIs — strip the scheme first.
-    no_scheme = F.regexp_replace(col, r"^file:/*", "/")
+    no_scheme = local_path(col)
     prefix = os.path.abspath(input_dir).rstrip("/") + "/"
     rel = F.when(
         no_scheme.startswith(prefix),
         F.substring(no_scheme, len(prefix) + 1, 1 << 30),
     ).otherwise(no_scheme)
-    rel = normalize_path(rel)
+    rel = normalize_path_str(rel)
     base = F.element_at(F.split(rel, "/"), -1)
     return F.when(rel == "", base).otherwise(rel)
-
-
-def basename(col: Column) -> Column:
-    """P3 (src/main.rs:771-780): final path segment."""
-    return F.element_at(F.split(normalize_path(col), "/"), -1)
 
 
 def scan_audio_files(
@@ -114,7 +103,7 @@ def scan_audio_files(
     # space/unicode/% names), so plain string compare works.
     if not input_dir.startswith(("s3", "hdfs", "gs")):
         link_files, link_dirs = _symlink_entries(input_dir)
-        no_scheme = F.regexp_replace(F.col("path"), r"^file:/*", "/")
+        no_scheme = local_path(F.col("path"))
         if len(link_files) + len(link_dirs) > _SYMLINK_LITERAL_CAP:
             banned = [(p,) for p in link_files]
             df = df.join(
@@ -151,10 +140,7 @@ def scan_audio_files(
     if metadata_file is not None:
         meta_abs = os.path.abspath(metadata_file)
         meta_rel = os.path.relpath(meta_abs, os.path.abspath(input_dir))
-        df = df.filter(
-            F.regexp_replace(F.col("path"), r"^file:/*", "/")
-            != F.lit(meta_abs)
-        )
+        df = df.filter(local_path(F.col("path")) != F.lit(meta_abs))
         # The relative-path exclusion only applies when the metadata file
         # actually lives under the input dir: a '../'-prefixed relpath
         # must NOT be prefix-stripped into a name that shadows an

@@ -26,6 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.paths import normalize_path_str
 from ..schema import KEY_COLUMNS, widen_metadata_columns
 
 
@@ -60,10 +61,6 @@ def _with_line_number(df: DataFrame) -> DataFrame:
     return df.withColumn("_line", F.monotonically_increasing_id())
 
 
-def _normalize_relpath(col):
-    return F.regexp_replace(F.regexp_replace(col, r"\\", "/"), r"^(\./)+", "")
-
-
 def _prepare_keys(df: DataFrame) -> DataFrame:
     """Normalize/nullify the key columns the way the reference extracts
     them: empty strings count as missing; relative_path is normalized."""
@@ -77,7 +74,7 @@ def _prepare_keys(df: DataFrame) -> DataFrame:
         df = df.withColumn(
             "relative_path",
             F.nullif(
-                _normalize_relpath(F.col("relative_path").cast("string")),
+                normalize_path_str(F.col("relative_path").cast("string")),
                 F.lit(""),
             ),
         )

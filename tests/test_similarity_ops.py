@@ -212,6 +212,43 @@ def test_pq_codes_cluster_by_subspace_direction(spark):
     assert got == {0: (0, 0), 1: (1, 1), 2: (0, 0), 3: (1, 1)}
 
 
+def test_kmeans_is_one_subspace_pq(spark, vectors):
+    """Seeded k-means equals PQ with one subspace spanning the whole
+    vector: the same seeds, the same assignments and the same decimal
+    means, so identical centroids once the subspace column is dropped."""
+    km = {
+        r.cid: r.cvec
+        for r in S.kmeans_centroids(vectors, k=4, iters=2).collect()
+    }
+    pq = {
+        r.cid: r.cvec
+        for r in S.pq_codebooks(vectors, m=1, subdim=8, k=4, iters=2)
+        .drop("s")
+        .collect()
+    }
+    assert len(km) == 4
+    assert km == pq
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_kmeans", "q_ann_ivf_kmeans", "q_pq_codes", "q_ann_pq",
+        "q_pq_distortion", "q_semdedup_keep", "q_cluster_purity",
+        "q_dedup_semantic",
+    ],
+)
+def test_kmeans_family_leaves_no_cache(spark, sf_dir, name):
+    """Building and collecting a k-means query registers nothing in the
+    session's CacheManager, so no centroid or assignment frame outlives
+    the query."""
+    from audios_to_dataset_spark.plans import all_queries
+
+    spark.catalog.clearCache()
+    all_queries()[name](spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_semdedup_keep_consistent_with_pair_query(spark, sf_dir):
     from audios_to_dataset_spark.plans.similarity import (
         q_dedup_semantic,

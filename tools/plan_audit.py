@@ -17,7 +17,15 @@ Sweeps ``queries()`` and flags the plan shapes that kill a 100 TB run:
 It also prints one plan-shape row per query: the counts of shuffle
 Exchange, SortMergeJoin, BroadcastHashJoin, BroadcastNestedLoopJoin and
 Python nodes (any operator that runs Python: UDF evals, grouped and
-mapped pandas/Arrow functions).
+mapped pandas/Arrow functions), and ``BuildJobs``, the Spark jobs that
+building the query ran (job group ``audit:<query>``).
+
+Only the FINAL plan is audited. A query whose build runs an eager
+localCheckpoint fixpoint (connected components, k-means centroid
+rounds) returns a scan of its last checkpoint, so the flags and shape
+counts never see the plans that ran before it; those rows show a high
+``BuildJobs`` (11-56 at sf0.001, against 1-3 for most queries), and
+their exchanges have to be read from the event log.
 
 Queries where a flagged shape is *intentional* (brute-force correctness
 baselines kept next to their LSH scale paths; the reference-semantics
@@ -262,22 +270,29 @@ def audit(spark, sf_dir: str) -> int:
 
     flags: list[tuple[str, str, bool]] = []
     n_checked = 0
-    print(f"{'query':<32}" + "".join(f"  {c}" for c in SHAPE_COLUMNS))
+    columns = SHAPE_COLUMNS + ("BuildJobs",)
+    sc = spark.sparkContext
+    print(f"{'query':<32}" + "".join(f"  {c}" for c in columns))
     for name, fn in sorted(all_queries().items()):
         if name.startswith("q_stream_"):
             # Streaming queries execute on call (availableNow into a
             # memory sink); audit the structurally identical batch twin
             # (same shuffle keys / join types / window partitioning).
             fn = BATCH_TWINS[name]
+        sc.setJobGroup(f"audit:{name}", f"plan audit {name}")
         df = fn(spark, sf_dir)
+        build_jobs = len(
+            sc.statusTracker().getJobIdsForGroup(f"audit:{name}")
+        )
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         plan = buf.getvalue()
         n_checked += 1
         shape = plan_shape(plan)
+        shape["BuildJobs"] = build_jobs
         print(f"{name:<32}"
-              + "".join(f"{shape[c]:>{len(c) + 2}}" for c in SHAPE_COLUMNS))
+              + "".join(f"{shape[c]:>{len(c) + 2}}" for c in columns))
 
         found: list[str] = []
         if "CartesianProduct" in plan:
@@ -295,6 +310,8 @@ def audit(spark, sf_dir: str) -> int:
             allowed = (name, f) in ALLOW
             flags.append((name, f, allowed))
 
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    sc.setLocalProperty("spark.job.description", None)
     bad = 0
     for name, f, allowed in flags:
         if allowed:
