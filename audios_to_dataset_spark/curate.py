@@ -63,7 +63,11 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def near_dedup(docs: DataFrame, est_threshold: float) -> DataFrame:
-    sigs = D.minhash_signatures(docs, num_hashes=NUM_HASHES, n=NGRAM_N)
+    # cut here too: the signatures are joined again below, outside
+    # lsh_candidate_pairs' own checkpoint
+    sigs = D.minhash_signatures(
+        docs, num_hashes=NUM_HASHES, n=NGRAM_N
+    ).localCheckpoint(eager=True)
     pairs = D.lsh_candidate_pairs(
         sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
     )

@@ -52,7 +52,7 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -402,30 +402,21 @@ def synth_gray_bmp(doc_id: int) -> bytes:
     return encode_bmp(px)
 
 
-def with_synth_bmp(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
+def with_fixture(
+    df: DataFrame, synth: Callable[[int], bytes | None]
 ) -> DataFrame:
-    """Attach the deterministic BMP fixture bytes for each id."""
+    """Set ``content`` to the fixture bytes ``synth(doc_id)`` of each row
+    through one scalar pandas UDF; a NULL id gets NULL content. Every
+    multimodal fixture query builds its media column here. The UDF keeps
+    the name ``_synth``: it is the ``_synth(doc_id#…)`` argument that
+    plan_audit's DuplicatedPythonEval flag and test_udf_dup_gate read."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("binary")
     def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_bmp(int(i)) for i in ids])
+        return pd.Series([None if pd.isna(i) else synth(int(i)) for i in ids])
 
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
-def with_synth_png(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic filter-cycled PNG fixture bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_png(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
+    return df.withColumn("content", _synth(F.col("doc_id")))
 
 
 # ---------------------------------------------------------------------------
@@ -844,19 +835,6 @@ def synth_png16(doc_id: int) -> bytes:
     return encode_png16(px, interlace=False)
 
 
-def with_synth_png16(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic 16-bit-PNG fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_png16(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
 def encode_png_palette(
     idx2d: np.ndarray, palette: np.ndarray, interlace: bool = False
 ) -> bytes:
@@ -1169,84 +1147,21 @@ def synth_pal_png(doc_id: int) -> bytes:
     return encode_png_palette(idx, pal, interlace=True)
 
 
-def with_synth_pal_png(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic interlaced-palette-PNG fixture bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_pal_png(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
-def with_synth_jpeg(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic DC-exact baseline-JPEG fixture bytes
-    (functions.jpeg.synth_gray_jpeg) for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .jpeg import synth_gray_jpeg
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_jpeg(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
-def with_synth_media_or_null(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach a media fixture cycling the decoder families by
-    ``doc_id % 5`` (1=PNG, 2=GIF, 3=baseline JPEG, 4=progressive JPEG)
-    with NULL bytes for ``doc_id % 5 == 0`` AND for NULL ids — the
-    dirty-corpus shape where a fetch failed or a row lost its key.
-    Exists for q_media_null_content, the one fixture query that stays
-    eligible for the ``--nulls`` sweep: every decoder must map NULL
+def synth_media_or_null(doc_id: int) -> bytes | None:
+    """A media fixture cycling the decoder families by ``doc_id % 5``
+    (1=PNG, 2=GIF, 3=baseline JPEG, 4=progressive JPEG) with NULL bytes
+    for ``doc_id % 5 == 0`` (``with_fixture`` gives NULL ids NULL bytes
+    too) — the dirty-corpus shape where a fetch failed or a row lost its
+    key. Exists for q_media_null_content, the one fixture query that
+    stays eligible for the ``--nulls`` sweep: every decoder must map NULL
     content to NULL outputs instead of crashing the batch."""
-    from pyspark.sql.functions import pandas_udf
-
     from .jpeg import synth_gray_jpeg, synth_gray_jpeg_progressive
 
-    fams = {
-        1: synth_gray_png,
-        2: synth_gray_gif,
-        3: synth_gray_jpeg,
-        4: synth_gray_jpeg_progressive,
-    }
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        out = []
-        for i in ids:
-            if pd.isna(i):
-                out.append(None)
-                continue
-            fn = fams.get(int(i) % 5)
-            out.append(fn(int(i)) if fn else None)
-        return pd.Series(out)
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
-def with_synth_jpeg_progressive(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic 4-scan PROGRESSIVE-JPEG fixture bytes
-    (functions.jpeg.synth_gray_jpeg_progressive) for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    from .jpeg import synth_gray_jpeg_progressive
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_jpeg_progressive(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
+    fam = doc_id % 5
+    if fam == 0:
+        return None
+    return (synth_gray_png, synth_gray_gif, synth_gray_jpeg,
+            synth_gray_jpeg_progressive)[fam - 1](doc_id)
 
 
 def synth_gray_gif_interlaced(doc_id: int) -> bytes:
@@ -1264,32 +1179,6 @@ def synth_gray_gif_interlaced(doc_id: int) -> bytes:
                 16,
             )
     return encode_gif_gray(px, interlace=True, local_palette=True)
-
-
-def with_synth_gif_interlaced(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the interlaced/local-palette GIF fixture bytes."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_gif_interlaced(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
-def with_synth_gif(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic GIF fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_gif(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -1584,19 +1473,6 @@ def synth_avi(doc_id: int) -> bytes:
     return encode_avi_raw(frames)
 
 
-def with_synth_avi(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic AVI fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_avi(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
 def encode_avi_mjpg(jpeg_frames: list[bytes], w: int, h: int,
                     fps: int = 10) -> bytes:
     """Wrap already-encoded baseline JPEGs as an MJPEG AVI ('MJPG'
@@ -1664,19 +1540,6 @@ def synth_mjpg_avi(doc_id: int) -> bytes:
                 blocks[yb, xb, 0] = v - 128
         frames.append(encode_jpeg_gray(blocks, w, h))
     return encode_avi_mjpg(frames, w, h)
-
-
-def with_synth_mjpg_avi(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic MJPEG-AVI fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_mjpg_avi(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
 
 
 def _rle8_row(row: bytes, absolute: bool) -> bytes:
@@ -1807,19 +1670,6 @@ def synth_mrle_avi(doc_id: int) -> bytes:
     return encode_avi_mrle(frames, w, h)
 
 
-def with_synth_mrle_avi(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic MS-RLE8 AVI fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_mrle_avi(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
 def sample_fake_frames(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1937,19 +1787,6 @@ def synth_group_bmp(doc_id: int) -> bytes:
                 v = (v + PHASH_SHIFT) % 256
             px[y, x, :] = v
     return encode_bmp(px)
-
-
-def with_synth_group_bmp(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic near-dup BMP fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_group_bmp(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
 
 
 def dhash64(px: np.ndarray) -> tuple[int, int]:
@@ -2252,19 +2089,6 @@ def synth_msvc_avi(doc_id: int) -> bytes:
     return encode_avi_msvc(frames, w, h)
 
 
-def with_synth_msvc_avi(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic MS Video 1 AVI fixture bytes per id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_msvc_avi(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
 # ---------------------------------------------------------------------------
 # Truevision TGA — type 2 (uncompressed) + type 10 (RLE) true-color
 # ---------------------------------------------------------------------------
@@ -2406,19 +2230,6 @@ def synth_gray_tga(doc_id: int) -> bytes:
     return encode_tga_rle(px, top_down=doc_id % 2 == 0)
 
 
-def with_synth_tga(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic RLE-TGA fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_tga(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
-
-
 # ---------------------------------------------------------------------------
 # REAL ICO decode (Windows icon container: DIB-with-doubled-height or
 # embedded-PNG entries, per the documented ICONDIR/ICONDIRENTRY layout)
@@ -2518,19 +2329,6 @@ def synth_gray_ico(doc_id: int) -> bytes:
             )
             px[y, x, :] = v
     return encode_ico(px, as_png=doc_id % 2 == 1)
-
-
-def with_synth_ico(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic ICO fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_ico(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -2637,19 +2435,6 @@ def synth_gray_pnm(doc_id: int) -> bytes:
             )
             px[y, x, :] = v
     return encode_pnm(px, gray=doc_id % 2 == 0)
-
-
-def with_synth_pnm(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic Netpbm fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_pnm(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
 
 
 # ---------------------------------------------------------------------------
@@ -2907,19 +2692,6 @@ def synth_gray_tiff(doc_id: int) -> bytes:
     return encode_tiff(
         px, little=doc_id % 2 == 0, packbits=doc_id % 3 != 2
     )
-
-
-def with_synth_tiff(
-    df: DataFrame, id_col: str = "doc_id", out_col: str = "content"
-) -> DataFrame:
-    """Attach the deterministic TIFF fixture bytes for each id."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("binary")
-    def _synth(ids: pd.Series) -> pd.Series:
-        return pd.Series([synth_gray_tiff(int(i)) for i in ids])
-
-    return df.withColumn(out_col, _synth(F.col(id_col)))
 
 
 # ---------------------------------------------------------------------------

@@ -338,6 +338,8 @@ def run_pipeline(
         # transcoding rewrites to .flac — a re-run would re-ingest
         # every input as "new"; refuse instead of silently duplicating
         raise ValueError("transcode_flac is not supported with incremental")
+    if manifest and output_format != "parquet":
+        raise ValueError("manifest requires parquet output")
     if incremental:
         if output_format != "parquet":
             raise ValueError("incremental mode requires parquet output")
@@ -412,8 +414,6 @@ def run_pipeline(
         )
     rows = receipts.collect()
     if manifest:
-        if output_format != "parquet":
-            raise ValueError("manifest requires parquet output")
         from .sinks.parquet_shards import write_manifest
 
         if incremental:

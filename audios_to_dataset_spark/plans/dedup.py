@@ -865,7 +865,11 @@ def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact shingle intersection. Joins the two signature rows per
     candidate pair; no shingle data moves."""
     d = load(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(d, num_hashes=NUM_HASHES, n=NGRAM_N)
+    # cut here too: the signatures are joined again below, outside
+    # lsh_candidate_pairs' own checkpoint
+    sigs = D.minhash_signatures(
+        d, num_hashes=NUM_HASHES, n=NGRAM_N
+    ).localCheckpoint(eager=True)
     pairs = D.lsh_candidate_pairs(
         sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
     )
@@ -1002,7 +1006,11 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted by an equi-join onto the candidate set first), so the
     expensive part stays proportional to candidates, not all pairs."""
     d = load(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(d, num_hashes=NUM_HASHES, n=NGRAM_N)
+    # cut here too: the signatures are joined again below, outside
+    # lsh_candidate_pairs' own checkpoint
+    sigs = D.minhash_signatures(
+        d, num_hashes=NUM_HASHES, n=NGRAM_N
+    ).localCheckpoint(eager=True)
     pairs = D.lsh_candidate_pairs(
         sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
     )
@@ -1860,7 +1868,11 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, no window), then a groupBy on the 9-value threshold key.
     est_jaccard = t/16 is the single correctly-rounded division."""
     d = load(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(d, num_hashes=NUM_HASHES, n=NGRAM_N)
+    # cut here too: the signatures are joined again below, outside
+    # lsh_candidate_pairs' own checkpoint
+    sigs = D.minhash_signatures(
+        d, num_hashes=NUM_HASHES, n=NGRAM_N
+    ).localCheckpoint(eager=True)
     pairs = D.lsh_candidate_pairs(
         sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
     )

@@ -19,7 +19,9 @@ from ._util import sround
 from ..functions.multimodal import (
     sample_fake_frames,
     with_content_embedding,
+    with_fixture,
     with_image_info,
+    with_pixel_mean,
 )
 
 
@@ -37,6 +39,115 @@ def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "documents")
         .select("doc_id")
         .repartition(spark.sparkContext.defaultParallelism)
+    )
+
+
+def _pixel_probe(img: DataFrame) -> DataFrame:
+    """Header decode + exact pixel mean of each row's ``content``, in the
+    (doc_id, img_format, img_width, img_height, mean_px) projection that
+    every image fixture query ends in."""
+    return with_pixel_mean(with_image_info(img)).select(
+        "doc_id",
+        F.col("image.format").alias("img_format"),
+        F.col("image.width").cast("long").alias("img_width"),
+        F.col("image.height").cast("long").alias("img_height"),
+        "mean_px",
+    )
+
+
+def _decoded_pixels(img: DataFrame, decode) -> DataFrame:
+    """(img_width, img_height, exact mean_px) of ``decode(content)``
+    (bytes → (h, w, c) uint8 array or None) through a dedicated decoder
+    UDF, for the formats ``_pixel_probe`` does not decode (TGA, which has
+    no magic bytes, and QOI)."""
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
+
+    out_t = T.StructType(
+        [
+            T.StructField("img_width", T.LongType()),
+            T.StructField("img_height", T.LongType()),
+            T.StructField("mean_px", T.DoubleType()),
+        ]
+    )
+
+    @pandas_udf(out_t)
+    def _dec(content):  # type: ignore[no-untyped-def]
+        import numpy as np
+        import pandas as pd
+
+        ws, hs, ms = [], [], []
+        for b in content:
+            px = decode(bytes(b) if b is not None else None)
+            if px is None:
+                ws.append(None)
+                hs.append(None)
+                ms.append(None)
+            else:
+                hs.append(px.shape[0])
+                ws.append(px.shape[1])
+                ms.append(int(px.astype(np.int64).sum()) / px.size)
+        return pd.DataFrame(
+            {"img_width": ws, "img_height": hs, "mean_px": ms}
+        )
+
+    return img.withColumn("r", _dec(F.col("content"))).select(
+        "doc_id",
+        F.col("r.img_width").alias("img_width"),
+        F.col("r.img_height").alias("img_height"),
+        F.col("r.mean_px").alias("mean_px"),
+    )
+
+
+def _decoded_signal_stats(d: DataFrame, synth, decode) -> DataFrame:
+    """Fixture bytes ``synth(doc_id)`` → ``decode`` (bytes → (rate,
+    int16-scale samples) or None) → (sampling_rate, n_samples, rms,
+    peak) over s / 32768, the tail shared by the FLAC, AIFF and AU
+    decode queries."""
+    from pyspark.sql import types as T
+    from pyspark.sql.functions import pandas_udf
+
+    out_t = T.StructType(
+        [
+            T.StructField("sampling_rate", T.IntegerType()),
+            T.StructField("n_samples", T.LongType()),
+            T.StructField("rms", T.DoubleType()),
+            T.StructField("peak", T.DoubleType()),
+        ]
+    )
+
+    @pandas_udf(out_t)
+    def _dec(content):  # type: ignore[no-untyped-def]
+        import math
+
+        import numpy as np
+        import pandas as pd
+
+        rows = []
+        for b in content:
+            got = decode(bytes(b) if b is not None else None)
+            if got is None:
+                rows.append((None, None, None, None))
+                continue
+            sr, s = got
+            p = s.astype(np.float64) / 32768.0
+            rms = (
+                math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
+            )
+            rows.append(
+                (sr, p.size, rms, float(np.abs(p).max()) if p.size else 0.0)
+            )
+        return pd.DataFrame(
+            rows, columns=["sampling_rate", "n_samples", "rms", "peak"]
+        )
+
+    out = with_fixture(d, synth).withColumn("r", _dec(F.col("content")))
+    return out.select(
+        "doc_id",
+        F.col("r.sampling_rate").alias("sampling_rate"),
+        F.col("r.n_samples").alias("n_samples"),
+        sround(F.col("r.rms"), 6).alias("rms"),
+        F.col("r.peak").alias("peak"),
     )
 
 
@@ -123,23 +234,10 @@ def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixels from the same md5 formula (source coord = (i*dim)//8), so ANY
     bug in the encoder, decoder, row padding, bottom-up flip, or index
     map corrupts the sampled values and fails the hash."""
-    from ..functions.multimodal import (
-        resize_images_bmp,
-        with_pixel_mean,
-        with_synth_bmp,
-    )
+    from ..functions.multimodal import resize_images_bmp, synth_gray_bmp
 
-    d = _doc_ids(spark, sf_dir)
-    bmp = with_synth_bmp(d)
-    small = resize_images_bmp(bmp, RESIZE_OUT, RESIZE_OUT)
-    info = with_image_info(small)
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    bmp = with_fixture(_doc_ids(spark, sf_dir), synth_gray_bmp)
+    return _pixel_probe(resize_images_bmp(bmp, RESIZE_OUT, RESIZE_OUT))
 
 
 ORACLE_IMAGE_RESIZE = f"""
@@ -170,10 +268,10 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel from the md5 formula, so any container/unpadding/flip bug
     fails the hash. (The compressed-codec twin is q_mjpeg_frames —
     MJPEG '00dc' chunks through the real baseline-JPEG decoder.)"""
-    from ..functions.multimodal import sample_avi_frames, with_synth_avi
+    from ..functions.multimodal import sample_avi_frames, synth_avi
 
     d = _doc_ids(spark, sf_dir)
-    return sample_avi_frames(with_synth_avi(d), every_n=2)
+    return sample_avi_frames(with_fixture(d, synth_avi), every_n=2)
 
 
 ORACLE_VIDEO_FRAMES = """
@@ -210,17 +308,10 @@ def q_png_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     the channel layout fails the value hash. (Palette and Adam7
     interlace are covered by q_png_palette; only 16-bit depth keeps the
     NULL fallback — documented.)"""
-    from ..functions.multimodal import with_pixel_mean, with_synth_png
+    from ..functions.multimodal import synth_gray_png
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_png(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_png))
 
 
 ORACLE_PNG_PIXELS = """
@@ -252,17 +343,10 @@ def q_gif_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean. Oracle recomputes every pixel from the md5 formula — LZW,
     sub-block framing, or palette bugs fail the value hash. With this,
     only DCT-based JPEG remains genuinely codec-bound."""
-    from ..functions.multimodal import with_pixel_mean, with_synth_gif
+    from ..functions.multimodal import synth_gray_gif
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_gif(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_gif))
 
 
 ORACLE_GIF_PIXELS = """
@@ -295,17 +379,10 @@ def q_png_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes every channel value from the two md5
     formulas, so a wrong pass grid, pass-boundary filter reset, or
     palette lookup fails the value hash."""
-    from ..functions.multimodal import with_pixel_mean, with_synth_pal_png
+    from ..functions.multimodal import synth_pal_png
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_pal_png(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_pal_png))
 
 
 ORACLE_PNG_PALETTE = """
@@ -347,17 +424,10 @@ def q_png_16bit(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle recomputes each channel's high byte as the first hex
     pair of its quad, so a wrong byte order, filter unit, or stride
     fails the value hash."""
-    from ..functions.multimodal import with_pixel_mean, with_synth_png16
+    from ..functions.multimodal import synth_png16
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_png16(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_png16))
 
 
 ORACLE_PNG_16BIT = """
@@ -395,17 +465,10 @@ def q_jpeg_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Huffman tables, DC prediction, dequant, IDCT scaling, or MCU-edge
     cropping fails the value hash. With this, no implementable codec
     remains gated (VERDICT r4 item 2)."""
-    from ..functions.multimodal import with_pixel_mean, with_synth_jpeg
+    from ..functions.jpeg import synth_gray_jpeg
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_jpeg(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_jpeg))
 
 
 ORACLE_JPEG_PIXELS = """
@@ -444,10 +507,10 @@ def q_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 
-    from ..functions.multimodal import decode_bmp_pixels, with_synth_bmp
+    from ..functions.multimodal import decode_bmp_pixels, synth_gray_bmp
 
     TILE, STRIDE = 8, 6
-    d = with_synth_bmp(_doc_ids(spark, sf_dir))
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_gray_bmp)
 
     out_t = T.StructType(
         [
@@ -548,13 +611,7 @@ def q_gif_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_gray_gif_anim,
     )
 
-    d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_gray_gif_anim(int(i)) for i in ids])
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_gray_gif_anim)
 
     out_t = T.ArrayType(
         T.StructType(
@@ -596,7 +653,7 @@ def q_gif_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode itself, so the result is unchanged.
     _frames_once = _frames.asNondeterministic()
     return (
-        d.withColumn("fs", _frames_once(_synth(F.col("doc_id"))))
+        d.withColumn("fs", _frames_once(F.col("content")))
         .select("doc_id", F.explode("fs").alias("f"))
         .select(
             "doc_id",
@@ -662,13 +719,7 @@ def q_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_jpeg_with_exif,
     )
 
-    d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_jpeg_with_exif(int(i)) for i in ids])
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_jpeg_with_exif)
 
     out_t = T.StructType(
         [
@@ -699,7 +750,7 @@ def q_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return pd.DataFrame({"removed_bytes": rem, "mean_px": mean})
 
-    out = d.withColumn("r", _scrub(_synth(F.col("doc_id"))))
+    out = d.withColumn("r", _scrub(F.col("content")))
     return out.select(
         "doc_id",
         F.col("r.removed_bytes").alias("removed_bytes"),
@@ -743,20 +794,10 @@ def q_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     reset fails the value hash. Closes VERDICT r5 item 2: the last
     dep-free codec gate — only inter-frame video codecs remain
     library-bound."""
-    from ..functions.multimodal import (
-        with_pixel_mean,
-        with_synth_jpeg_progressive,
-    )
+    from ..functions.jpeg import synth_gray_jpeg_progressive
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_jpeg_progressive(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_jpeg_progressive))
 
 
 ORACLE_JPEG_PROGRESSIVE = """
@@ -801,20 +842,10 @@ def q_media_null_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture queries this one STAYS in the --nulls sweep: a NULL-injected
     doc_id must flow through the fixture UDF, both mapInPandas decoders,
     and the projection without poisoning the batch."""
-    from ..functions.multimodal import (
-        with_pixel_mean,
-        with_synth_media_or_null,
-    )
+    from ..functions.multimodal import synth_media_or_null
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_media_or_null(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_media_or_null))
 
 
 def _media_family_sql(tag: str, fam: int, fmt: str, w_expr: str,
@@ -883,10 +914,10 @@ def q_mjpeg_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     retires from its former NotImplementedError gating (VERDICT r4
     item 8). Oracle recomputes every sampled pixel from the md5 block
     formula."""
-    from ..functions.multimodal import sample_video_frames, with_synth_mjpg_avi
+    from ..functions.multimodal import sample_video_frames, synth_mjpg_avi
 
     d = _doc_ids(spark, sf_dir)
-    return sample_video_frames(with_synth_mjpg_avi(d), every_n=2)
+    return sample_video_frames(with_fixture(d, synth_mjpg_avi), every_n=2)
 
 
 ORACLE_MJPEG_FRAMES = """
@@ -926,10 +957,10 @@ def q_rle_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     machine → every-2nd-frame sampling → exact pixel means. The oracle
     replays persistence in closed form: pixel (x,y,f) comes from paint
     generation g = f - ((f+y) % 3) when >= 1 else 0."""
-    from ..functions.multimodal import sample_video_frames, with_synth_mrle_avi
+    from ..functions.multimodal import sample_video_frames, synth_mrle_avi
 
     d = _doc_ids(spark, sf_dir)
-    return sample_video_frames(with_synth_mrle_avi(d), every_n=2)
+    return sample_video_frames(with_fixture(d, synth_mrle_avi), every_n=2)
 
 
 ORACLE_RLE_FRAMES = """
@@ -974,13 +1005,10 @@ def q_msvc_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = f - ((bx+by+f) % 3) (>=1 else 0) and every mode's md5 color
     formula, so a wrong skip count, flag order, quadrant map, or
     framebuffer carry fails the value hash."""
-    from ..functions.multimodal import (
-        sample_video_frames,
-        with_synth_msvc_avi,
-    )
+    from ..functions.multimodal import sample_video_frames, synth_msvc_avi
 
     d = _doc_ids(spark, sf_dir)
-    return sample_video_frames(with_synth_msvc_avi(d), every_n=2)
+    return sample_video_frames(with_fixture(d, synth_msvc_avi), every_n=2)
 
 
 def _oracle_msvc_frames() -> str:
@@ -1042,20 +1070,10 @@ def q_gif_interlace(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode (pass-order de-scatter + LCT mapping) → exact pixel mean.
     The oracle recomputes every pixel from the md5 formula, so a wrong
     pass stride or palette source fails the value hash."""
-    from ..functions.multimodal import (
-        with_pixel_mean,
-        with_synth_gif_interlaced,
-    )
+    from ..functions.multimodal import synth_gray_gif_interlaced
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_gif_interlaced(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_gif_interlaced))
 
 
 ORACLE_GIF_INTERLACE = """
@@ -1090,19 +1108,9 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     or int16-scaling bugs fail the hash. (Every arithmetic step is
     exact-in-double: v/32768 and its square are dyadic rationals, and
     the sums stay under 53 bits — see test_audio_stats_oracle_parity.)"""
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.wav import synth_wav_md5, with_wav_info, with_wav_stats
 
-    d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_md5(int(i)) for i in ids])
-
-    wav = d.withColumn("content", _synth(F.col("doc_id")))
+    wav = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
     out = wav.select(
         "doc_id",
         with_wav_info(F.col("content")).alias("info"),
@@ -1151,36 +1159,7 @@ def q_audio_ulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the ITU-T expansion formula per code with SQL bit
     ops, so a wrong complement, exponent shift, or bias breaks the
     value hash."""
-    from pyspark.sql.functions import pandas_udf
-
-    from ..functions.wav import (
-        synth_wav_md5_ulaw,
-        with_wav_info,
-        with_wav_stats,
-    )
-
-    d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_md5_ulaw(int(i)) for i in ids])
-
-    wav = d.withColumn("content", _synth(F.col("doc_id")))
-    out = wav.select(
-        "doc_id",
-        with_wav_info(F.col("content")).alias("info"),
-        with_wav_stats(F.col("content")).alias("stats"),
-    )
-    return out.select(
-        "doc_id",
-        F.col("info.sampling_rate").alias("sampling_rate"),
-        F.col("info.duration").alias("duration"),
-        F.col("stats.n_samples").alias("n_samples"),
-        sround(F.col("stats.rms"), 6).alias("rms"),
-        F.col("stats.peak").alias("peak"),
-    )
+    return _audio_stats_query("synth_wav_md5_ulaw")(spark, sf_dir)
 
 
 def _audio_stats_query(synth_name: str):
@@ -1190,20 +1169,10 @@ def _audio_stats_query(synth_name: str):
     format queries; q_audio_stats keeps its own richer projection."""
 
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql.functions import pandas_udf
-
         from ..functions import wav as W
 
         synth = getattr(W, synth_name)
-        d = _doc_ids(spark, sf_dir)
-
-        @pandas_udf("binary")
-        def _synth(ids):  # type: ignore[no-untyped-def]
-            import pandas as pd
-
-            return pd.Series([synth(int(i)) for i in ids])
-
-        wav = d.withColumn("content", _synth(F.col("doc_id")))
+        wav = with_fixture(_doc_ids(spark, sf_dir), synth)
         out = wav.select(
             "doc_id",
             W.with_wav_info(F.col("content")).alias("info"),
@@ -1266,7 +1235,7 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.flac import decode_flac, encode_flac
     from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    d = _doc_ids(spark, sf_dir)
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
 
     out_t = T.StructType(
         [
@@ -1276,12 +1245,6 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("peak", T.DoubleType()),
         ]
     )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_md5(int(i)) for i in ids])
 
     @pandas_udf(out_t)
     def _trans(content):  # type: ignore[no-untyped-def]
@@ -1323,7 +1286,7 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows, columns=["n_samples", "transcode_ok", "rms", "peak"]
         )
 
-    out = d.withColumn("r", _trans(_synth(F.col("doc_id"))))
+    out = d.withColumn("r", _trans(F.col("content")))
     return out.select(
         "doc_id",
         F.col("r.n_samples").alias("n_samples"),
@@ -1366,7 +1329,7 @@ def q_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    d = _doc_ids(spark, sf_dir)
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
 
     out_t = T.StructType(
         [
@@ -1375,12 +1338,6 @@ def q_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("zcr_hz", T.DoubleType()),
         ]
     )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_md5(int(i)) for i in ids])
 
     @pandas_udf(out_t)
     def _zcr(content):  # type: ignore[no-untyped-def]
@@ -1404,7 +1361,7 @@ def q_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows, columns=["n_samples", "zero_crossings", "zcr_hz"]
         )
 
-    out = d.withColumn("r", _zcr(_synth(F.col("doc_id"))))
+    out = d.withColumn("r", _zcr(F.col("content")))
     return out.select(
         "doc_id",
         F.col("r.n_samples").alias("n_samples"),
@@ -1455,7 +1412,7 @@ def q_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.wav import synth_wav_vad, vad_segments
 
-    d = _doc_ids(spark, sf_dir)
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_vad)
 
     out_t = T.StructType(
         [
@@ -1465,12 +1422,6 @@ def q_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("longest_run", T.LongType()),
         ]
     )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_vad(int(i)) for i in ids])
 
     @pandas_udf(out_t)
     def _vad(content):  # type: ignore[no-untyped-def]
@@ -1485,7 +1436,7 @@ def q_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
             columns=["n_frames", "n_voiced", "n_segments", "longest_run"],
         )
 
-    out = d.withColumn("r", _vad(_synth(F.col("doc_id"))))
+    out = d.withColumn("r", _vad(F.col("content")))
     return out.select(
         "doc_id",
         F.col("r.n_frames").alias("n_frames"),
@@ -1570,61 +1521,10 @@ def q_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     zigzag, bit-reader slip, or CRC acceptance of a bad frame fails the
     value hash. dyadic v/32768 arithmetic keeps rms/peak
     engine-exact (see test_audio_stats_oracle_parity)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.flac import decode_flac, synth_flac_md5
 
     d = _doc_ids(spark, sf_dir)
-
-    out_t = T.StructType(
-        [
-            T.StructField("sampling_rate", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("peak", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_flac_md5(int(i)) for i in ids])
-
-    @pandas_udf(out_t)
-    def _dec(content):  # type: ignore[no-untyped-def]
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for b in content:
-            got = decode_flac(bytes(b) if b is not None else None)
-            if got is None:
-                rows.append((None, None, None, None))
-                continue
-            sr, s = got
-            p = s.astype(np.float64) / 32768.0
-            rms = (
-                math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
-            )
-            rows.append(
-                (sr, p.size, rms, float(np.abs(p).max()) if p.size else 0.0)
-            )
-        return pd.DataFrame(
-            rows, columns=["sampling_rate", "n_samples", "rms", "peak"]
-        )
-
-    out = d.withColumn("r", _dec(_synth(F.col("doc_id"))))
-    return out.select(
-        "doc_id",
-        F.col("r.sampling_rate").alias("sampling_rate"),
-        F.col("r.n_samples").alias("n_samples"),
-        sround(F.col("r.rms"), 6).alias("rms"),
-        F.col("r.peak").alias("peak"),
-    )
+    return _decoded_signal_stats(d, synth_flac_md5, decode_flac)
 
 
 ORACLE_FLAC_DECODE = """
@@ -1661,64 +1561,10 @@ def q_audio_aiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interleaved index, so the oracle recomputes every sample: a
     byte-order slip, SSND offset bug, or 8-bit sign error fails the
     value hash."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    from ..functions.audio_headers import (
-        decode_aiff_samples,
-        synth_aiff_md5,
-    )
+    from ..functions.audio_headers import decode_aiff_samples, synth_aiff_md5
 
     d = _doc_ids(spark, sf_dir)
-
-    out_t = T.StructType(
-        [
-            T.StructField("sampling_rate", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("peak", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_aiff_md5(int(i)) for i in ids])
-
-    @pandas_udf(out_t)
-    def _dec(content):  # type: ignore[no-untyped-def]
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for b in content:
-            got = decode_aiff_samples(bytes(b) if b is not None else None)
-            if got is None:
-                rows.append((None, None, None, None))
-                continue
-            sr, s = got
-            p = s.astype(np.float64) / 32768.0
-            rms = (
-                math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
-            )
-            rows.append(
-                (sr, p.size, rms, float(np.abs(p).max()) if p.size else 0.0)
-            )
-        return pd.DataFrame(
-            rows, columns=["sampling_rate", "n_samples", "rms", "peak"]
-        )
-
-    out = d.withColumn("r", _dec(_synth(F.col("doc_id"))))
-    return out.select(
-        "doc_id",
-        F.col("r.sampling_rate").alias("sampling_rate"),
-        F.col("r.n_samples").alias("n_samples"),
-        sround(F.col("r.rms"), 6).alias("rms"),
-        F.col("r.peak").alias("peak"),
-    )
+    return _decoded_signal_stats(d, synth_aiff_md5, decode_aiff_samples)
 
 
 ORACLE_AUDIO_AIFF = """
@@ -1759,61 +1605,10 @@ def q_audio_au(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle replays each branch per sample (µ-law bit ops inline in
     SQL), so an encoding-dispatch slip, sign error, or BE/LE mixup
     fails the value hash."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.audio_headers import decode_au_samples, synth_au_md5
 
     d = _doc_ids(spark, sf_dir)
-
-    out_t = T.StructType(
-        [
-            T.StructField("sampling_rate", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("peak", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_au_md5(int(i)) for i in ids])
-
-    @pandas_udf(out_t)
-    def _dec(content):  # type: ignore[no-untyped-def]
-        import math
-
-        import numpy as np
-        import pandas as pd
-
-        rows = []
-        for b in content:
-            got = decode_au_samples(bytes(b) if b is not None else None)
-            if got is None:
-                rows.append((None, None, None, None))
-                continue
-            sr, s = got
-            p = s.astype(np.float64) / 32768.0
-            rms = (
-                math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
-            )
-            rows.append(
-                (sr, p.size, rms, float(np.abs(p).max()) if p.size else 0.0)
-            )
-        return pd.DataFrame(
-            rows, columns=["sampling_rate", "n_samples", "rms", "peak"]
-        )
-
-    out = d.withColumn("r", _dec(_synth(F.col("doc_id"))))
-    return out.select(
-        "doc_id",
-        F.col("r.sampling_rate").alias("sampling_rate"),
-        F.col("r.n_samples").alias("n_samples"),
-        sround(F.col("r.rms"), 6).alias("rms"),
-        F.col("r.peak").alias("peak"),
-    )
+    return _decoded_signal_stats(d, synth_au_md5, decode_au_samples)
 
 
 _ULAW_MAG = "((((c & 15) * 8 + 132) << ((c >> 4) & 7)) - 132)"
@@ -2063,47 +1858,10 @@ def q_tga_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     magic bytes, so it stays out of the generic decode_image_pixels
     sniffing path — a dedicated decoder UDF, the same isolation the
     spec's ambiguity forces on every real pipeline.)"""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+    from ..functions.multimodal import decode_tga_pixels, synth_gray_tga
 
-    from ..functions.multimodal import decode_tga_pixels, with_synth_tga
-
-    d = _doc_ids(spark, sf_dir)
-    img = with_synth_tga(d)
-    out_t = T.StructType(
-        [
-            T.StructField("img_width", T.LongType()),
-            T.StructField("img_height", T.LongType()),
-            T.StructField("mean_px", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _dec(content):  # type: ignore[no-untyped-def]
-        import numpy as np
-        import pandas as pd
-
-        ws, hs, ms = [], [], []
-        for b in content:
-            px = decode_tga_pixels(bytes(b) if b is not None else None)
-            if px is None:
-                ws.append(None)
-                hs.append(None)
-                ms.append(None)
-            else:
-                hs.append(px.shape[0])
-                ws.append(px.shape[1])
-                ms.append(int(px.astype(np.int64).sum()) / px.size)
-        return pd.DataFrame(
-            {"img_width": ws, "img_height": hs, "mean_px": ms}
-        )
-
-    return img.withColumn("r", _dec(F.col("content"))).select(
-        "doc_id",
-        F.col("r.img_width").alias("img_width"),
-        F.col("r.img_height").alias("img_height"),
-        F.col("r.mean_px").alias("mean_px"),
-    )
+    img = with_fixture(_doc_ids(spark, sf_dir), synth_gray_tga)
+    return _decoded_pixels(img, decode_tga_pixels)
 
 
 def q_ico_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2116,17 +1874,10 @@ def q_ico_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubled-height slip, mask misparse, or entry-offset bug fails the
     value hash. Header surface (with_image_info) reports entry-0 dims
     from ICONDIR itself — the 0-means-256 rule included."""
-    from ..functions.multimodal import with_pixel_mean, with_synth_ico
+    from ..functions.multimodal import synth_gray_ico
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_ico(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_ico))
 
 
 ORACLE_ICO_PIXELS = """
@@ -2160,17 +1911,10 @@ def q_pnm_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     whitespace runs + comment-to-newline) is exercised, not just the
     happy path. Oracle recomputes every pixel from the md5 formula;
     the format column pins the P5/P6 dispatch itself."""
-    from ..functions.multimodal import with_pixel_mean, with_synth_pnm
+    from ..functions.multimodal import synth_gray_pnm
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_pnm(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_pnm))
 
 
 ORACLE_PNM_PIXELS = """
@@ -2206,17 +1950,10 @@ def q_tiff_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     expansion all feed the exact pixel mean; the oracle recomputes
     every pixel from the md5 formula, so a wrong strip split, run
     expansion, or endianness slip fails the value hash."""
-    from ..functions.multimodal import with_pixel_mean, with_synth_tiff
+    from ..functions.multimodal import synth_gray_tiff
 
     d = _doc_ids(spark, sf_dir)
-    info = with_image_info(with_synth_tiff(d))
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_tiff))
 
 
 ORACLE_TIFF_PIXELS = """
@@ -2254,28 +1991,10 @@ def q_webp_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-decoded. Oracle recomputes every pixel from the md5 formula;
     the independently-written header parser (q_image_headers' VP8L
     branch) cross-checks the 14-bit dims of the same stream."""
-    from ..functions.multimodal import with_pixel_mean
     from ..functions.vp8l import synth_gray_webp
 
-    from pyspark.sql.functions import pandas_udf
-
     d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_gray_webp(int(i)) for i in ids])
-
-    img = d.withColumn("content", _synth(F.col("doc_id")))
-    info = with_image_info(img)
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_gray_webp))
 
 
 def q_audio_dropout(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2398,28 +2117,10 @@ def q_webp_lz77(spark: SparkSession, sf_dir: str) -> DataFrame:
     the wild-file paths q_webp_pixels' literal subset never reached.
     Same Arrow-batched mapInPandas shape as the rest of the codec
     family; no shuffle beyond the final orderBy."""
-    from ..functions.multimodal import with_pixel_mean
     from ..functions.vp8l import synth_tiled_webp
 
-    from pyspark.sql.functions import pandas_udf
-
     d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_tiled_webp(int(i)) for i in ids])
-
-    img = d.withColumn("content", _synth(F.col("doc_id")))
-    info = with_image_info(img)
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_tiled_webp))
 
 
 def q_webp_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2432,28 +2133,10 @@ def q_webp_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
     mis-unbundled index or a broken delta accumulation fails the value
     hash. Paletted images are the most common wild lossless-WebP shape
     (logos/icons), previously a subset gate."""
-    from ..functions.multimodal import with_pixel_mean
     from ..functions.vp8l import synth_palette_webp
 
-    from pyspark.sql.functions import pandas_udf
-
     d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_palette_webp(int(i)) for i in ids])
-
-    img = d.withColumn("content", _synth(F.col("doc_id")))
-    info = with_image_info(img)
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_palette_webp))
 
 
 ORACLE_WEBP_PALETTE = """
@@ -2491,28 +2174,10 @@ def q_webp_predictor(spark: SparkSession, sf_dir: str) -> DataFrame:
     only knows the original pixel formula — the whole transform must
     invert to the exact bytes (edge rules, avg2 floors, Select
     distances, clamp-add-subtract halving) or the value hash fails."""
-    from ..functions.multimodal import with_pixel_mean
     from ..functions.vp8l import synth_predictor_webp
 
-    from pyspark.sql.functions import pandas_udf
-
     d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_predictor_webp(int(i)) for i in ids])
-
-    img = d.withColumn("content", _synth(F.col("doc_id")))
-    info = with_image_info(img)
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_predictor_webp))
 
 
 ORACLE_WEBP_PREDICTOR = """
@@ -2548,28 +2213,10 @@ def q_webp_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     from three distinct md5 formulas so the deltas are non-trivial;
     the oracle averages the three channel formulas — a sign/shift slip
     anywhere in the delta math fails the value hash."""
-    from ..functions.multimodal import with_pixel_mean
     from ..functions.vp8l import synth_color_webp
 
-    from pyspark.sql.functions import pandas_udf
-
     d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_color_webp(int(i)) for i in ids])
-
-    img = d.withColumn("content", _synth(F.col("doc_id")))
-    info = with_image_info(img)
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_color_webp))
 
 
 ORACLE_WEBP_COLOR = """
@@ -2607,28 +2254,10 @@ def q_webp_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol (including all of a backreference's) is read under the
     group of its starting pixel. With this the decoder covers the
     COMPLETE VP8L format. Oracle replays the md5 pixel formula."""
-    from ..functions.multimodal import with_pixel_mean
     from ..functions.vp8l import synth_meta_webp
 
-    from pyspark.sql.functions import pandas_udf
-
     d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_meta_webp(int(i)) for i in ids])
-
-    img = d.withColumn("content", _synth(F.col("doc_id")))
-    info = with_image_info(img)
-    return with_pixel_mean(info).select(
-        "doc_id",
-        F.col("image.format").alias("img_format"),
-        F.col("image.width").cast("long").alias("img_width"),
-        F.col("image.height").cast("long").alias("img_height"),
-        "mean_px",
-    )
+    return _pixel_probe(with_fixture(d, synth_meta_webp))
 
 
 ORACLE_WEBP_META = """
@@ -2830,13 +2459,7 @@ def q_webp_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.vp8l import decode_webp_anim_frames, synth_anim_webp
 
-    d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_anim_webp(int(i)) for i in ids])
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_anim_webp)
 
     out_t = T.ArrayType(
         T.StructType(
@@ -2872,7 +2495,7 @@ def q_webp_anim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape as q_gif_anim (see the comment there); result unchanged.
     _frames_once = _frames.asNondeterministic()
     return (
-        d.withColumn("fs", _frames_once(_synth(F.col("doc_id"))))
+        d.withColumn("fs", _frames_once(F.col("content")))
         .select("doc_id", F.explode("fs").alias("f"))
         .select(
             "doc_id",
@@ -3008,54 +2631,10 @@ def q_qoi_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
     fails the value hash. Decoder is total (malformed → NULL row).
     QOI files land as opaque byte columns in the reference's scan
     (src/main.rs whole-file read); pixel decode is engine-side."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.qoi import decode_qoi_pixels, synth_qoi
 
-    d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_qoi(int(i)) for i in ids])
-
-    img = d.withColumn("content", _synth(F.col("doc_id")))
-    out_t = T.StructType(
-        [
-            T.StructField("img_width", T.LongType()),
-            T.StructField("img_height", T.LongType()),
-            T.StructField("mean_px", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _dec(content):  # type: ignore[no-untyped-def]
-        import numpy as np
-        import pandas as pd
-
-        ws, hs, ms = [], [], []
-        for b in content:
-            px = decode_qoi_pixels(bytes(b) if b is not None else None)
-            if px is None:
-                ws.append(None)
-                hs.append(None)
-                ms.append(None)
-            else:
-                hs.append(px.shape[0])
-                ws.append(px.shape[1])
-                ms.append(int(px.astype(np.int64).sum()) / px.size)
-        return pd.DataFrame(
-            {"img_width": ws, "img_height": hs, "mean_px": ms}
-        )
-
-    return img.withColumn("r", _dec(F.col("content"))).select(
-        "doc_id",
-        F.col("r.img_width").alias("img_width"),
-        F.col("r.img_height").alias("img_height"),
-        F.col("r.mean_px").alias("mean_px"),
-    )
+    img = with_fixture(_doc_ids(spark, sf_dir), synth_qoi)
+    return _decoded_pixels(img, decode_qoi_pixels)
 
 
 ORACLE_QOI_PIXELS = """
@@ -3695,10 +3274,10 @@ def q_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     luma from the md5 formula (including the perturbation) and re-packs
     the bits, so any decoder / resize / bit-order bug fails the hash.
     At 100 TB the hash is one mapInPandas pass — no shuffle at all."""
-    from ..functions.multimodal import with_dhash, with_synth_group_bmp
+    from ..functions.multimodal import synth_group_bmp, with_dhash
 
     d = _doc_ids(spark, sf_dir)
-    return with_dhash(with_synth_group_bmp(d)).select(
+    return with_dhash(with_fixture(d, synth_group_bmp)).select(
         "doc_id", "dhash_hi", "dhash_lo"
     )
 
@@ -3764,9 +3343,9 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     band equi-join costs ~N²/2^w per band — growth is absorbed by
     widening the hash (larger dHash grid → more/wider bands), the same
     log2(N) dial tools/scale_smoke pins for hyperplanes."""
-    from ..functions.multimodal import with_dhash, with_synth_group_bmp
+    from ..functions.multimodal import synth_group_bmp, with_dhash
 
-    d = _doc_ids(spark, sf_dir)
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_group_bmp)
     # localCheckpoint (lazy): the hash frame feeds BOTH sides of the
     # band self-join, and Catalyst plans a self-join as two full copies
     # of the subtree — with join-key isnotnull filters pushed below the
@@ -3783,7 +3362,7 @@ def q_image_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort-merge at fixture scale, so one sequential consumer
     # materializes first). Deterministic data, so perf-only either way.
     h = (
-        with_dhash(with_synth_group_bmp(d))
+        with_dhash(d)
         .select("doc_id", "dhash_hi", "dhash_lo")
         .localCheckpoint(eager=False)
     )
@@ -3883,17 +3462,8 @@ def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits — integer-exact on both sides. One mapInPandas pass, no
     shuffle at 100 TB."""
     from ..functions.wav import synth_wav_group, with_audio_fingerprint
-    from pyspark.sql.functions import pandas_udf
 
-    d = _doc_ids(spark, sf_dir)
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_group(int(i)) for i in ids])
-
-    wav = d.withColumn("content", _synth(F.col("doc_id")))
+    wav = with_fixture(_doc_ids(spark, sf_dir), synth_wav_group)
     return with_audio_fingerprint(wav).select("doc_id", "fp_hi", "fp_lo")
 
 
@@ -3964,17 +3534,9 @@ def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by widening the fingerprint (more windows -> more bands), the same
     log2(N) dial tools/scale_smoke pins for hyperplanes."""
     from ..functions.wav import synth_wav_group, with_audio_fingerprint
-    from pyspark.sql.functions import pandas_udf
 
-    d = _doc_ids(spark, sf_dir)
+    wav = with_fixture(_doc_ids(spark, sf_dir), synth_wav_group)
 
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_group(int(i)) for i in ids])
-
-    wav = d.withColumn("content", _synth(F.col("doc_id")))
     # localCheckpoint (lazy): same 4x-evaluation-under-self-join shape
     # as q_image_neardup (see the comment there, incl. the accepted
     # worst-case-2× materialization race) — synth+fingerprint runs
@@ -4213,7 +3775,7 @@ def q_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    d = _doc_ids(spark, sf_dir)
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
 
     out_t = T.StructType(
         [
@@ -4223,12 +3785,6 @@ def q_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("clip_ratio", T.DoubleType()),
         ]
     )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_md5(int(i)) for i in ids])
 
     @pandas_udf(out_t)
     def _clip(content):  # type: ignore[no-untyped-def]
@@ -4261,7 +3817,7 @@ def q_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
             columns=["n_samples", "n_clipped", "max_run", "clip_ratio"],
         )
 
-    out = d.withColumn("r", _clip(_synth(F.col("doc_id"))))
+    out = d.withColumn("r", _clip(F.col("content")))
     return out.select(
         "doc_id",
         F.col("r.n_samples").alias("n_samples"),
@@ -4322,7 +3878,7 @@ def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    d = _doc_ids(spark, sf_dir)
+    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
 
     out_t = T.StructType(
         [
@@ -4332,12 +3888,6 @@ def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("mean_energy", T.DoubleType()),
         ]
     )
-
-    @pandas_udf("binary")
-    def _synth(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        return pd.Series([synth_wav_md5(int(i)) for i in ids])
 
     @pandas_udf(out_t)
     def _frames(content):  # type: ignore[no-untyped-def]
@@ -4369,7 +3919,7 @@ def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
 
-    out = d.withColumn("r", _frames(_synth(F.col("doc_id"))))
+    out = d.withColumn("r", _frames(F.col("content")))
     return out.select(
         "doc_id",
         F.col("r.n_frames").alias("n_frames"),

@@ -92,10 +92,10 @@ def q_hll_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents")
-    # regs is consumed twice (per-source estimates + the merge); cache
-    # the tiny post-agg register table so documents scans once, not
-    # twice (sources x m rows — trivially memory-resident at any scale)
-    regs = hll_registers(d, "text", ["source"], m=HLL_M).cache()
+    # no .cache(): regs is consumed twice (per-source estimates + the
+    # merge), and both consumers share its register exchange through
+    # exchange reuse, so documents scans once
+    regs = hll_registers(d, "text", ["source"], m=HLL_M)
     per_src = hll_estimate_from_registers(regs, ["source"], m=HLL_M)
     merged = (
         regs.groupBy("reg")
@@ -153,7 +153,9 @@ def q_hll_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load(spark, sf_dir, "documents")
-    regs = hll_registers(d, "text", ["source"], m=HLL_M).cache()
+    # no .cache(): every consumer of regs shares its register exchange
+    # through exchange reuse
+    regs = hll_registers(d, "text", ["source"], m=HLL_M)
     est = hll_estimate_from_registers(regs, ["source"], m=HLL_M)
     s = d.select("source").distinct()
     pairs = (
@@ -1878,8 +1880,10 @@ def q_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.bloom import _position
 
     d = load(spark, sf_dir, "documents")
-    # consumed by the global counts AND all d per-source counters —
-    # cache the vocabulary-sized aggregate so the corpus explodes once
+    # consumed by the global counts AND all d per-source counters, with
+    # no exchange reuse between them — cut the vocabulary-sized
+    # aggregate with an eager checkpoint so the corpus explodes once and
+    # no cache outlives the query
     per_src = (
         d.select(
             "source",
@@ -1887,7 +1891,7 @@ def q_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .cache()
+        .localCheckpoint(eager=True)
     )
     counts = per_src.groupBy("token").agg(
         F.sum("n").cast("bigint").alias("n")

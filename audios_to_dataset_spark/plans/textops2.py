@@ -909,11 +909,13 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE heavy (doc, bucket) shuffle; every bucket/total statistic then
     # rolls up from this ≤64-rows-per-doc table instead of replaying the
-    # token explode (4.5 s → ~1 s at sf0.1).
+    # token explode (4.5 s → ~1 s at sf0.1). Exchange reuse covers only
+    # some of its consumers, so the table is an eager checkpoint, which
+    # no cache outlives.
     docb = (
         tb.groupBy("doc_id", "lang", "b")
         .agg(F.count("*").alias("cnt"))
-        .cache()
+        .localCheckpoint(eager=True)
     )
     bstats = docb.groupBy("b").agg(
         F.sum("cnt").alias("n_raw"),

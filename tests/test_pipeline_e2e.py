@@ -916,6 +916,22 @@ def test_manifest_merges_across_incremental_runs(spark, tmp_path, audio_dir):
     assert sum(d["n_rows"] for d in lines) == total == 3
 
 
+@pytest.mark.parametrize("output_format", ["duckdb", "orc"])
+def test_manifest_refused_before_any_write(
+    spark, tmp_path, audio_dir, output_format
+):
+    """manifest=True with a non-parquet sink raises with the other
+    argument checks, before anything is planned: the output dir holds no
+    shard file, and the request is never silently dropped."""
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match="manifest requires parquet"):
+        run_pipeline(
+            spark, audio_dir, str(out), output_format=output_format,
+            manifest=True,
+        )
+    assert not out.exists() or not any(p.is_file() for p in out.rglob("*"))
+
+
 def test_read_pruned_skips_shards(spark, tmp_path):
     """read_pruned selects only the shard files whose manifest duration
     zone overlaps the predicate — the read-side file skipping the

@@ -3,6 +3,7 @@ documents are all-unique, so real duplicates are synthesized here)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from audios_to_dataset_spark.operators import dedup as D
@@ -154,6 +155,27 @@ def test_dedup_clusters_leaves_no_cache(spark, sf_dir):
 
     spark.catalog.clearCache()
     q_dedup_clusters(spark, sf_dir)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_hll_union",
+        "q_hll_overlap",
+        "q_cms_merge",
+        "q_dsir_select",
+        "q_dedup_minhash_lsh",
+    ],
+)
+def test_sketch_and_lsh_queries_leave_no_cache(spark, sf_dir, name):
+    """Building and collecting a sketch-merge, DSIR or MinHash-LSH query
+    registers nothing in the session's CacheManager, so no register
+    table, bucket table or signature frame outlives the query."""
+    from audios_to_dataset_spark.plans import all_queries
+
+    spark.catalog.clearCache()
+    all_queries()[name](spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 

@@ -147,12 +147,15 @@ NULLS_QUERIES = [
 
 def nulls_excluded() -> set[str]:
     """Queries exempt from the NULL sweep: the multimodal/audio FIXTURE
-    queries synthesize their inputs from doc_id via pandas UDFs
-    (int(NULL) has no fixture) — their decode paths are NULL-fuzzed in
-    pytest instead (decoders return None/zeros on malformed bytes).
-    q_media_null_content is the deliberate exception: its fixture UDF
-    maps NULL ids to NULL content, so it proves the decoder family
-    propagates NULLs under the sweep itself."""
+    queries synthesize their inputs from doc_id (``with_fixture``, which
+    maps a NULL id to NULL content), so a NULL-injected copy only adds
+    NULL-content rows, and their DuckDB oracles recompute pixels and
+    samples per id with no NULL-content branch. Their decode paths are
+    NULL-fuzzed in pytest instead (decoders return None/zeros on
+    malformed bytes). q_media_null_content is the deliberate exception:
+    its fixture and oracle both carry NULL-content rows (doc_id % 5 == 0
+    and NULL ids), so it proves the decoder family propagates NULLs under
+    the sweep itself."""
     from audios_to_dataset_spark.plans import multimodal
 
     return set(multimodal.QUERIES) - {"q_media_null_content"}
@@ -387,21 +390,25 @@ def main() -> int:
             srows = [tuple(r) for r in df.collect()]
             scols = list(df.columns)
         except Exception as e:
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
+            print(f"FAIL {name}: spark error: {type(e).__name__}: {e}"
+                  f" (spark {time.time() - t0:.1f}s)")
             failures.append(name)
             continue
         spark_s = time.time() - t0
         if name not in oracles:
             print(f"ROWS-ONLY {name}: {len(srows)} rows ({spark_s:.1f}s)")
             continue
+        t0 = time.time()
         try:
             res = con.execute(oracles[name])
             ocols = [d[0] for d in res.description]
             orows = res.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
+            print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}"
+                  f" (spark {spark_s:.1f}s, duckdb {time.time() - t0:.1f}s)")
             failures.append(name)
             continue
+        secs = f"(spark {spark_s:.1f}s, duckdb {time.time() - t0:.1f}s)"
         problems = []
         if len(srows) != len(orows):
             problems.append(f"rowcount spark={len(srows)} duckdb={len(orows)}")
@@ -422,12 +429,12 @@ def main() -> int:
                         problems.append(f"  duckdb: {b[:200]}")
                         break
         if problems:
-            print(f"FAIL {name}: " + "; ".join(problems[:1]))
+            print(f"FAIL {name}: " + "; ".join(problems[:1]) + f" {secs}")
             for p in problems[1:]:
                 print(p)
             failures.append(name)
         else:
-            print(f"OK   {name}: {len(srows)} rows ({spark_s:.1f}s)")
+            print(f"OK   {name}: {len(srows)} rows {secs}")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     return 1 if failures else 0
