@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ._edges import copurchase_edges
+from ._oracle_sql import ORIENTED_TRIANGLES, cc_labels, jaccard_pairs
 from ._util import DEC, davg, davg_sql, dsum, dsum_sql, sround, sround_sql
 
 
@@ -192,54 +193,22 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components(ids, pairs, src="doc_a", dst="doc_b")
 
 
-def _cc_ctes() -> str:
-    """The WITH-RECURSIVE chain (toks..reach) that recomputes n-gram
-    Jaccard dup clusters in DuckDB — shared by the dedup-clusters
-    oracle and the cluster-aware split assigner in plans/curation so
-    the two can never drift."""
-    from .dedup import MAX_SHINGLE_FREQ, NGRAM_N, NGRAM_THRESHOLD
+def _dup_cluster_ctes() -> str:
+    """CTEs toks .. cc(id, cluster_id) of the n-gram Jaccard near-dup
+    clusters, read by the dedup-clusters oracle and by the
+    cluster-aware split assigner in plans/curation."""
+    from .dedup import NGRAM_THRESHOLD
 
-    return f"""toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-  WHERE doc_id IS NOT NULL
-), sh0 AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),
-             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-    FROM toks) u
-), sh AS (
-  -- stop-shingle cap, mirrored from ngram_jaccard_pairs(max_shingle_freq)
-  SELECT sh0.doc_id, sh0.s
-  FROM sh0 JOIN (
-    SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) <= {MAX_SHINGLE_FREQ}
-  ) keep ON sh0.s = keep.s
-), cnt AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), jpairs AS (
-  SELECT doc_a, doc_b FROM (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ) p JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (ca.n + cb.n - common)
-        >= {NGRAM_THRESHOLD}
-), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM jpairs
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM jpairs
-), reach(id, r) AS (
-  SELECT doc_id, doc_id FROM documents WHERE doc_id IS NOT NULL
-  UNION
-  SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
-)"""
+    docs = "documents WHERE doc_id IS NOT NULL"
+    return f"""{jaccard_pairs(docs, NGRAM_THRESHOLD)},
+{cc_labels(f"SELECT doc_id AS id FROM {docs}",
+           "SELECT doc_a AS a, doc_b AS b FROM jpairs")}"""
 
 
 def _oracle_dedup_clusters() -> str:
     return f"""
-WITH RECURSIVE {_cc_ctes()}
-SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id
+WITH RECURSIVE {_dup_cluster_ctes()}
+SELECT id, cluster_id FROM cc
 """
 
 
@@ -571,7 +540,7 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_dedup_pipeline() -> str:
-    from .dedup import MAX_SHINGLE_FREQ, NGRAM_N, NGRAM_THRESHOLD
+    from .dedup import NGRAM_THRESHOLD
 
     return f"""
 WITH RECURSIVE grp AS (
@@ -580,41 +549,9 @@ WITH RECURSIVE grp AS (
 ), docs AS (
   SELECT d.doc_id, d.text, grp.n_exact_copies
   FROM documents d JOIN grp ON d.doc_id = grp.doc_id
-), toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM docs
-), sh0 AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),
-             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-    FROM toks) u
-), sh AS (
-  SELECT sh0.doc_id, sh0.s
-  FROM sh0 JOIN (
-    SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) <= {MAX_SHINGLE_FREQ}
-  ) keep ON sh0.s = keep.s
-), cnt AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), jpairs AS (
-  SELECT doc_a, doc_b FROM (
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-    FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-  ) p JOIN cnt ca ON ca.doc_id = doc_a JOIN cnt cb ON cb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (ca.n + cb.n - common)
-        >= {NGRAM_THRESHOLD}
-), edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM jpairs
-  UNION
-  SELECT doc_b AS a, doc_a AS b FROM jpairs
-), reach(id, r) AS (
-  SELECT doc_id, doc_id FROM docs
-  UNION
-  SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
-), cc AS (
-  SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id
-), j AS (
+), {jaccard_pairs("docs", NGRAM_THRESHOLD)},
+{cc_labels("SELECT doc_id AS id FROM docs",
+           "SELECT doc_a AS a, doc_b AS b FROM jpairs")}, j AS (
   SELECT cc.id, cc.cluster_id,
          CAST(length(docs.text) AS BIGINT) AS text_len,
          docs.n_exact_copies
@@ -677,26 +614,12 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count(copurchase_edges(load(spark, sf_dir, "lineitem")))
 
 
-ORACLE_TRIANGLE_COUNT = """
-WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-e0 AS (SELECT DISTINCT a.p AS u, b.p AS v
-       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
-deg AS (SELECT node, COUNT(*) AS d
-        FROM (SELECT u AS node FROM e0 UNION ALL SELECT v AS node FROM e0)
-        GROUP BY node),
-oriented AS (
-  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v) THEN u ELSE v
-         END AS s,
-         CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v) THEN v ELSE u
-         END AS t
-  FROM e0 JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v),
-wedges AS (SELECT e1.t AS wu, e2.t AS wv
-           FROM oriented e1 JOIN oriented e2
-             ON e1.s = e2.s AND e1.t < e2.t)
+ORACLE_TRIANGLE_COUNT = f"""
+WITH {ORIENTED_TRIANGLES}
 SELECT (SELECT COUNT(*) FROM e0) AS n_edges,
        (SELECT COUNT(*) FROM deg) AS n_nodes,
        COUNT(*) AS n_triangles
-FROM wedges JOIN e0 ON e0.u = wedges.wu AND e0.v = wedges.wv
+FROM tri
 """
 
 
@@ -1218,22 +1141,7 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_CLUSTERING_COEFF = f"""
-WITH items AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-e0 AS (SELECT DISTINCT a.p AS u, b.p AS v
-       FROM items a JOIN items b ON a.o = b.o AND a.p < b.p),
-deg AS (SELECT node, CAST(COUNT(*) AS BIGINT) AS d
-        FROM (SELECT u AS node FROM e0 UNION ALL SELECT v AS node FROM e0)
-        GROUP BY node),
-oriented AS (
-  SELECT CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v) THEN u ELSE v
-         END AS s,
-         CASE WHEN du.d < dv.d OR (du.d = dv.d AND u < v) THEN v ELSE u
-         END AS t
-  FROM e0 JOIN deg du ON du.node = u JOIN deg dv ON dv.node = v),
-tri AS (
-  SELECT e1.s AS s, e1.t AS wu, e2.t AS wv
-  FROM oriented e1 JOIN oriented e2 ON e1.s = e2.s AND e1.t < e2.t
-  JOIN e0 ON e0.u = e1.t AND e0.v = e2.t),
+WITH {ORIENTED_TRIANGLES},
 tpn AS (
   SELECT node, CAST(COUNT(*) AS BIGINT) AS t
   FROM (SELECT s AS node FROM tri

@@ -17,8 +17,9 @@ from ..curate import (
     quality_gate,
     source_cap,
 )
+from ._oracle_sql import minhash_agree
 from ._util import sround, sround_sql
-from .dedup import NUM_HASHES, _oracle_minhash
+from .dedup import MINHASH_CTES, NUM_HASHES
 
 EST_THRESHOLD = 0.5
 CAP = 10
@@ -60,19 +61,9 @@ def _oracle_curation_funnel() -> str:
     # near-dedup survivor rule replayed on the minhash signature CTEs:
     # doc_b (the younger of a candidate pair) drops when >= half the
     # signature components agree with its lower-id partner.
-    base = _oracle_minhash()
-    head, _sep, _tail = base.rpartition("SELECT DISTINCT")
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(NUM_HASHES)
-    )
     need = int(EST_THRESHOLD * NUM_HASHES)
-    return f"""{head}, cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-              AND a.doc_id < b.doc_id
-), d1 AS (
+    return f"""
+WITH {MINHASH_CTES}, d1 AS (
   SELECT d.* FROM (SELECT * FROM documents
                    WHERE doc_id IS NOT NULL AND text IS NOT NULL) d
   JOIN (SELECT sha256(text) AS h, MIN(doc_id) AS keep
@@ -84,7 +75,7 @@ def _oracle_curation_funnel() -> str:
   FROM cand
   JOIN sig sa ON sa.doc_id = cand.doc_a
   JOIN sig sb ON sb.doc_id = cand.doc_b
-  WHERE ({agree}) >= {need}
+  WHERE ({minhash_agree("sa", "sb")}) >= {need}
 ), d2 AS (
   SELECT * FROM d1 WHERE doc_id NOT IN (SELECT doc_id FROM drops)
 ), scored AS (
@@ -513,13 +504,10 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_split_assign() -> str:
-    from .analytics import _cc_ctes
+    from .analytics import _dup_cluster_ctes
 
     return f"""
-WITH RECURSIVE {_cc_ctes()},
-cc AS (
-  SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id
-), hv AS (
+WITH RECURSIVE {_dup_cluster_ctes()}, hv AS (
   SELECT id, cluster_id,
          ('0x' || substr(md5('split:' || CAST(cluster_id AS VARCHAR)),
                          1, 15))::BIGINT % 100 AS h

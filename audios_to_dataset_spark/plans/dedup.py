@@ -13,6 +13,20 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import dedup as D
+from ._oracle_sql import (
+    VECTORS,
+    bands,
+    capped_shingles,
+    cc_labels,
+    cosine,
+    emb_pairs,
+    jaccard_pairs,
+    minhash_agree,
+    ngrams,
+    shingles,
+    signature,
+    tokens,
+)
 from ._util import sround, sround_sql
 
 NGRAM_N = 3
@@ -139,35 +153,8 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ngram_pairs_sql(threshold: float) -> str:
     return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-), sh0 AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),
-             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-    FROM toks) u
-), sh AS (
-  -- stop-shingle cap, mirrored from ngram_jaccard_pairs(max_shingle_freq)
-  SELECT sh0.doc_id, sh0.s
-  FROM sh0 JOIN (
-    SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) <= {MAX_SHINGLE_FREQ}
-  ) keep ON sh0.s = keep.s
-), cnt AS (
-  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
-), pairs AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT doc_a, doc_b,
-       round((CAST(common AS DOUBLE) / (ca.n + cb.n - common)) * 10000.0)
-         / 10000.0 + 0.0 AS jaccard
-FROM pairs
-JOIN cnt ca ON ca.doc_id = doc_a
-JOIN cnt cb ON cb.doc_id = doc_b
-WHERE CAST(common AS DOUBLE) / (ca.n + cb.n - common) >= {threshold}
+WITH {jaccard_pairs("documents", threshold)}
+SELECT doc_a, doc_b, jaccard FROM jpairs
 """
 
 
@@ -194,9 +181,10 @@ def q_sim_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_sim_histogram() -> str:
     return f"""
+WITH {jaccard_pairs("documents", 0.0)}
 SELECT CAST(floor(jaccard * 10) AS BIGINT) AS band,
        CAST(COUNT(*) AS BIGINT) AS n_pairs
-FROM ({_ngram_pairs_sql(0.0)}) p
+FROM jpairs
 GROUP BY band ORDER BY band
 """
 
@@ -208,41 +196,28 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.lsh_candidate_pairs(sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE)
 
 
-def _oracle_minhash() -> str:
-    mins = ",\n         ".join(
-        f"MIN(substr(md5('{i // 4}:' || s), {(i % 4) * 8 + 1}, 8)) AS mh{i}"
-        for i in range(NUM_HASHES)
-    )
-    n_bands = NUM_HASHES // BAND_SIZE
-    band_rows = "\n  UNION ALL\n".join(
-        "  SELECT doc_id, {b} AS band, md5({key}) AS band_key FROM sig".format(
-            b=b,
-            key=" || '|' || ".join(
-                f"mh{b * BAND_SIZE + j}" for j in range(BAND_SIZE)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+# CTEs toks .. cand(doc_a, doc_b): the MinHash-LSH candidate pairs of
+# documents, the oracle chain of minhash_signatures + lsh_candidate_pairs
+MINHASH_CTES = f"""toks AS (
+  {tokens("documents")}
 ), sh AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),
-             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-    FROM toks) u
+  {shingles("toks", NGRAM_N)}
 ), sig AS (
-  SELECT doc_id, {mins}
-  FROM sh GROUP BY doc_id
+  {signature("sh")}
 ), bands AS (
-{band_rows}
-)
-SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-FROM bands a
-JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-            AND a.doc_id < b.doc_id
+{bands("sig")}
+), cand AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+  FROM bands a
+  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
+              AND a.doc_id < b.doc_id
+)"""
+
+
+def _oracle_minhash() -> str:
+    return f"""
+WITH {MINHASH_CTES}
+SELECT doc_a, doc_b FROM cand
 """
 
 
@@ -444,108 +419,9 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _plane_sql(plane: list[float]) -> str:
-    return "CAST([" + ", ".join(repr(v) for v in plane) + "] AS DOUBLE[])"
-
-
-def _emb_pairs_ctes() -> str:
-    """CTE chain (v/buckets/cand/n/pairs) that recomputes the
-    DEDUP_PLANES LSH-bucketed near-dup pairs in DuckDB — shared by the
-    dedup-embedding oracle and the split-leakage oracle so the two
-    never drift."""
-    bucket_rows = []
-    for t, planes in enumerate(DEDUP_PLANES):
-        bits = " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * ({_plane_sql(p)})[i])) >= 0 "
-            "THEN '1' ELSE '0' END)"
-            for p in planes
-        )
-        bucket_rows.append(
-            f"  SELECT vec_id, '{t}:' || {bits} AS bucket FROM v"
-        )
-    buckets = "\n  UNION ALL\n".join(bucket_rows)
-    return f"""v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), buckets AS (
-{buckets}
-), cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM buckets a JOIN buckets b
-    ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-), n AS (
-  SELECT vec_id, e,
-         sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM v
-), pairs AS (
-  SELECT cand.id_a, cand.id_b,
-         round((list_sum(list_transform(range(1, len(a.e) + 1),
-                                        i -> a.e[i] * b.e[i]))
-                / (a.nrm * b.nrm)) * 10000.0) / 10000.0 + 0.0 AS cos_sim
-  FROM cand
-  JOIN n a ON a.vec_id = cand.id_a
-  JOIN n b ON b.vec_id = cand.id_b
-  WHERE round((list_sum(list_transform(range(1, len(a.e) + 1),
-                                       i -> a.e[i] * b.e[i]))
-               / (a.nrm * b.nrm)) * 10000.0) / 10000.0
-        >= {EMB_THRESHOLD}
-)"""
-
-
-def _emb_pairs_ctes_scaled() -> str:
-    """``_emb_pairs_ctes`` twin for the auto-scaled DBSCAN plane
-    family: all 12 family planes' sign bits are concatenated per
-    table, then substr() keeps the first P where P comes from the
-    knn_nplanes_sql row-count twin — the same prefix slice
-    ``dbscan_planes`` takes. Wherever P resolves to 4 (every gate
-    scale), the buckets are bit-identical to ``_emb_pairs_ctes``'s."""
-    bucket_rows = []
-    for t, planes in enumerate(DBSCAN_PLANES_FULL):
-        bits = " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * ({_plane_sql(p)})[i])) >= 0 "
-            "THEN '1' ELSE '0' END)"
-            for p in planes
-        )
-        bucket_rows.append(
-            f"  SELECT vec_id, '{t}:' || substr({bits}, 1, "
-            "(SELECT p FROM db_np)) AS bucket FROM v"
-        )
-    buckets = "\n  UNION ALL\n".join(bucket_rows)
-    return f"""db_np AS (
-  {knn_nplanes_sql("embeddings")}
-), v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), buckets AS (
-{buckets}
-), cand AS (
-  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
-  FROM buckets a JOIN buckets b
-    ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-), n AS (
-  SELECT vec_id, e,
-         sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM v
-), pairs AS (
-  SELECT cand.id_a, cand.id_b,
-         round((list_sum(list_transform(range(1, len(a.e) + 1),
-                                        i -> a.e[i] * b.e[i]))
-                / (a.nrm * b.nrm)) * 10000.0) / 10000.0 + 0.0 AS cos_sim
-  FROM cand
-  JOIN n a ON a.vec_id = cand.id_a
-  JOIN n b ON b.vec_id = cand.id_b
-  WHERE round((list_sum(list_transform(range(1, len(a.e) + 1),
-                                       i -> a.e[i] * b.e[i]))
-               / (a.nrm * b.nrm)) * 10000.0) / 10000.0
-        >= {EMB_THRESHOLD}
-)"""
-
-
 def _oracle_dedup_embedding() -> str:
     return f"""
-WITH {_emb_pairs_ctes()}
+WITH {emb_pairs(DEDUP_PLANES, len(DEDUP_PLANES[0]))}
 SELECT id_a, id_b, cos_sim FROM pairs
 """
 
@@ -559,23 +435,13 @@ def q_dedup_embedding_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return S.cosine_neardup_pairs(em, threshold=EMB_THRESHOLD)
 
 
+_EXACT_COS = cosine("a.e", "b.e", 4)
+
 ORACLE_DEDUP_EMBEDDING_EXACT = f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), n AS (
-  SELECT vec_id, e,
-         sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM v
-)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round((list_sum(list_transform(range(1, len(a.e) + 1),
-                                      i -> a.e[i] * b.e[i]))
-              / (a.nrm * b.nrm)) * 10000.0) / 10000.0 + 0.0 AS cos_sim
-FROM n a JOIN n b ON a.vec_id < b.vec_id
-WHERE round((list_sum(list_transform(range(1, len(a.e) + 1),
-                                     i -> a.e[i] * b.e[i]))
-             / (a.nrm * b.nrm)) * 10000.0) / 10000.0 >= {EMB_THRESHOLD}
+WITH {VECTORS}
+SELECT a.vec_id AS id_a, b.vec_id AS id_b, {_EXACT_COS} AS cos_sim
+FROM v a JOIN v b ON a.vec_id < b.vec_id
+WHERE {_EXACT_COS} >= {EMB_THRESHOLD}
 """
 
 
@@ -779,17 +645,11 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_decontaminate() -> str:
-    gram = " || ' ' || ".join(f"t[i + {j}]" for j in range(DECON_N))
     return f"""
 WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+  {tokens("documents")}
 ), sh AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {DECON_N - 1}, 0) + 1),
-             i -> {gram})) AS s
-    FROM toks) u
+  {shingles("toks", DECON_N)}
 ), bench AS (
   SELECT DISTINCT s FROM sh WHERE doc_id % {DECON_MOD} = 0
 )
@@ -801,61 +661,31 @@ GROUP BY sh.doc_id
 
 
 def _oracle_contamination() -> str:
-    mins = ",\n         ".join(
-        f"MIN(substr(md5('{i // 4}:' || s), {(i % 4) * 8 + 1}, 8)) AS mh{i}"
-        for i in range(NUM_HASHES)
-    )
-    n_bands = NUM_HASHES // BAND_SIZE
-
-    def band_rows(sig: str) -> str:
-        return "\n  UNION ALL\n".join(
-            f"  SELECT doc_id, {b} AS band, md5({key}) AS band_key"
-            f" FROM {sig}"
-            for b, key in (
-                (
-                    bb,
-                    " || '|' || ".join(
-                        f"mh{bb * BAND_SIZE + j}" for j in range(BAND_SIZE)
-                    ),
-                )
-                for bb in range(n_bands)
-            )
-        )
-
-    shingle = (
-        "SELECT DISTINCT doc_id, s FROM (\n"
-        "    SELECT doc_id,\n"
-        "           unnest(list_transform(\n"
-        f"             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),\n"
-        "             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s\n"
-        "    FROM {toks}) u"
-    )
     return f"""
 WITH toksA AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+  {tokens("documents")}
 ), toksB AS (
   SELECT doc_id + {CONTAM_OFFSET} AS doc_id,
          list_slice(string_split(lower(text), ' '), 2,
                     len(string_split(lower(text), ' '))) AS t
   FROM documents WHERE doc_id % {CONTAM_MOD} = {CONTAM_PICK}
 ), shA AS (
-  {shingle.format(toks="toksA")}
+  {shingles("toksA", NGRAM_N)}
 ), shB AS (
-  {shingle.format(toks="toksB")}
+  {shingles("toksB", NGRAM_N)}
 ), sigA AS (
-  SELECT doc_id, {mins} FROM shA GROUP BY doc_id
+  {signature("shA")}
 ), sigB AS (
-  SELECT doc_id, {mins} FROM shB GROUP BY doc_id
+  {signature("shB")}
 ), bandsA AS (
-{band_rows("sigA")}
+{bands("sigA")}
 ), bandsB AS (
-{band_rows("sigB")}
+{bands("sigB")}
 )
 SELECT DISTINCT a.doc_id AS train_id, b.doc_id AS eval_id
 FROM bandsA a
 JOIN bandsB b ON a.band = b.band AND a.band_key = b.band_key
 """
-
 
 
 def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,22 +727,11 @@ def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_minhash_jaccard() -> str:
-    base = _oracle_minhash()
-    # reuse the minhash oracle's CTE chain; rebuild the final select to
-    # join signatures back onto the candidate pairs
-    head, _sep, _tail = base.rpartition("SELECT DISTINCT")
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(NUM_HASHES)
-    )
-    return f"""{head}, cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-              AND a.doc_id < b.doc_id
-)
+    return f"""
+WITH {MINHASH_CTES}
 SELECT cand.doc_a, cand.doc_b,
-       CAST(({agree}) AS DOUBLE) / {float(NUM_HASHES)!r} AS jaccard_est
+       CAST(({minhash_agree("sa", "sb")}) AS DOUBLE)
+         / {float(NUM_HASHES)!r} AS jaccard_est
 FROM cand
 JOIN sig sa ON sa.doc_id = cand.doc_a
 JOIN sig sb ON sb.doc_id = cand.doc_b
@@ -964,35 +783,17 @@ def q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_containment() -> str:
+    ratio = "CAST(common AS DOUBLE) / CAST(ca.n AS DOUBLE)"
     return f"""
-WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-), sh0 AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),
-             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-    FROM toks) u
-), sh AS (
-  SELECT sh0.doc_id, sh0.s
-  FROM sh0 JOIN (
-    SELECT s FROM sh0 GROUP BY s HAVING COUNT(*) <= {MAX_SHINGLE_FREQ}
-  ) keep ON sh0.s = keep.s
-), cnt AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id
-), pairs AS (
+WITH {capped_shingles("documents")}, pairs AS (
   SELECT a.doc_id AS inner_doc, b.doc_id AS outer_doc,
          CAST(COUNT(*) AS BIGINT) AS common
   FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id <> b.doc_id
   GROUP BY 1, 2
 )
-SELECT inner_doc, outer_doc,
-       {sround_sql('CAST(common AS DOUBLE) / CAST(ca.n_sh AS DOUBLE)', 4)}
-         AS containment
+SELECT inner_doc, outer_doc, {sround_sql(ratio, 4)} AS containment
 FROM pairs JOIN cnt ca ON ca.doc_id = inner_doc
-WHERE {sround_sql('CAST(common AS DOUBLE) / CAST(ca.n_sh AS DOUBLE)', 4)}
-      >= {CONTAIN_THRESHOLD}
+WHERE {sround_sql(ratio, 4)} >= {CONTAIN_THRESHOLD}
 ORDER BY inner_doc, outer_doc
 """
 
@@ -1063,24 +864,17 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_minhash_error() -> str:
-    base = _oracle_minhash()
-    head, _sep, _tail = base.rpartition("SELECT DISTINCT")
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(NUM_HASHES)
+    est = (
+        f"CAST(({minhash_agree('sa', 'sb')}) AS DOUBLE)"
+        f" / {float(NUM_HASHES)!r}"
     )
-    est = f"CAST(({agree}) AS DOUBLE) / {float(NUM_HASHES)!r}"
     exact = (
         "CAST(COALESCE(common, 0) AS DOUBLE)"
-        " / CAST(ca.n_sh + cb.n_sh - COALESCE(common, 0) AS DOUBLE)"
+        " / CAST(ca.n + cb.n - COALESCE(common, 0) AS DOUBLE)"
     )
-    return f"""{head}, cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-              AND a.doc_id < b.doc_id
-), cnt AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_sh FROM sh GROUP BY doc_id
+    return f"""
+WITH {MINHASH_CTES}, cnt AS (
+  SELECT doc_id, COUNT(*) AS n FROM sh GROUP BY doc_id
 ), inter AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
          CAST(COUNT(*) AS BIGINT) AS common
@@ -1427,14 +1221,9 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLE_NGRAM_NOVELTY = f"""
 WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+  {tokens("documents")}
 ), sh AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),
-             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s
-    FROM toks) u
+  {shingles("toks", NGRAM_N)}
 ), first AS (
   SELECT s, MIN(doc_id) AS first_id FROM sh GROUP BY s
 )
@@ -1601,13 +1390,9 @@ _SPARSE_COS = "CAST(dot AS DOUBLE) / (na.nrm * nb.nrm)"
 
 ORACLE_SPARSE_COSINE = f"""
 WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
+  {tokens("documents")}
 ), gr AS (
-  SELECT doc_id,
-         unnest(list_transform(
-           range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),
-           i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS g
-  FROM toks
+  SELECT doc_id, {ngrams(NGRAM_N)} AS g FROM toks
 ), tf AS (
   SELECT doc_id AS id, g, CAST(COUNT(*) AS BIGINT) AS tf
   FROM gr GROUP BY id, g
@@ -1795,34 +1580,25 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_split_leakage() -> str:
     return f"""
-WITH RECURSIVE {_emb_pairs_ctes()},
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM pairs
-  UNION
-  SELECT id_b AS a, id_a AS b FROM pairs
-), reach(id, r) AS (
-  SELECT vec_id, vec_id FROM embeddings WHERE vec_id IS NOT NULL
-  UNION
-  SELECT reach.id, edges.b FROM reach JOIN edges ON reach.r = edges.a
-), cc AS (
-  SELECT id, MIN(r) AS rep FROM reach GROUP BY id
-), m AS (
+WITH RECURSIVE {emb_pairs(DEDUP_PLANES, len(DEDUP_PLANES[0]))},
+{cc_labels("SELECT vec_id AS id FROM embeddings WHERE vec_id IS NOT NULL",
+           "SELECT id_a AS a, id_b AS b FROM pairs")}, m AS (
   SELECT id,
     CASE WHEN ('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 4))::INT
               % {SPLIT_MOD} < {SPLIT_TRAIN_LT} THEN 'train'
          WHEN ('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 4))::INT
               % {SPLIT_MOD} = {SPLIT_TRAIN_LT} THEN 'val'
          ELSE 'test' END AS naive_s,
-    CASE WHEN ('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 4))::INT
+    CASE WHEN ('0x' || substr(md5(CAST(cluster_id AS VARCHAR)), 1, 4))::INT
               % {SPLIT_MOD} < {SPLIT_TRAIN_LT} THEN 'train'
-         WHEN ('0x' || substr(md5(CAST(rep AS VARCHAR)), 1, 4))::INT
+         WHEN ('0x' || substr(md5(CAST(cluster_id AS VARCHAR)), 1, 4))::INT
               % {SPLIT_MOD} = {SPLIT_TRAIN_LT} THEN 'val'
          ELSE 'test' END AS group_s
   FROM cc
 ), pj AS (
   SELECT a.naive_s AS na, b.naive_s AS nb, a.group_s AS ga,
          b.group_s AS gb
-  FROM pairs JOIN m a ON a.id = pairs.id_a JOIN m b ON b.id = pairs.id_b
+  FROM cc_pairs p JOIN m a ON a.id = p.a JOIN m b ON b.id = p.b
 ), agg AS (
   SELECT
     (SELECT COALESCE(SUM(CASE WHEN na <> nb THEN 1 ELSE 0 END), 0)
@@ -1918,18 +1694,9 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_threshold_sweep() -> str:
-    base = _oracle_minhash()
-    head, _sep, _tail = base.rpartition("SELECT DISTINCT")
-    agree = " + ".join(
-        f"(CASE WHEN sa.mh{i} = sb.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(NUM_HASHES)
-    )
-    return f"""{head}, cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM bands a
-  JOIN bands b ON a.band = b.band AND a.band_key = b.band_key
-              AND a.doc_id < b.doc_id
-), ag AS (
+    agree = minhash_agree("sa", "sb")
+    return f"""
+WITH {MINHASH_CTES}, ag AS (
   SELECT cand.doc_b, ({agree}) AS agree
   FROM cand
   JOIN sig sa ON sa.doc_id = cand.doc_a

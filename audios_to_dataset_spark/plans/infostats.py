@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import dedup as D
+from ._oracle_sql import shingles, tokens
 from ._util import sround, sround_sql
 
 TOTAL = "~~total~~"  # total-row label; sorts after all data values
@@ -855,21 +856,11 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-_DECON_GRAM_SQL = " || ' ' || ".join(
-    f"t[i + {j}]" for j in range(1, DECON_N)
-)
-
 ORACLE_DECONTAMINATE = f"""
 WITH toks AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t
-  FROM documents WHERE doc_id IS NOT NULL AND text IS NOT NULL
+  {tokens("documents WHERE doc_id IS NOT NULL AND text IS NOT NULL")}
 ), sh AS (
-  SELECT DISTINCT doc_id, s FROM (
-    SELECT doc_id,
-           unnest(list_transform(
-             range(1, greatest(len(t) - {DECON_N - 1}, 0) + 1),
-             i -> t[i] || ' ' || {_DECON_GRAM_SQL})) AS s
-    FROM toks) u
+  {shingles("toks", DECON_N)}
 ), train_sh AS (
   SELECT doc_id, s FROM sh WHERE doc_id % 10 <> 7
 ), eval_set AS (

@@ -7,26 +7,28 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import similarity as S
+from ._oracle_sql import (
+    AUTO_PLANES,
+    VECTORS,
+    cc_labels,
+    cosine,
+    emb_pairs,
+    lsh_buckets,
+    plane_sql,
+)
 from ._util import DEC, dsum, dsum_sql, sround, sround_sql
 
 QUERY_ID = 0
 TOP_K = 20
 
-_COS_CTE = """
-WITH q AS (
-  SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS qe
-  FROM embeddings WHERE vec_id = {qid}
-), v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
+# the rounded query cosine every exact query-vector oracle ranks on
+_QCOS = cosine("e", "qe", 3)
+
+_COS_CTE = f"""
+WITH {VECTORS}, q AS (
+  SELECT e AS qe FROM v WHERE vec_id = {{qid}}
 ), scored AS (
-  SELECT vec_id,
-         round((
-           list_sum(list_transform(range(1, len(e) + 1), i -> e[i] * qe[i]))
-           / (sqrt(list_sum(list_transform(e, x -> x * x)))
-              * sqrt(list_sum(list_transform(qe, x -> x * x))))
-           * 1000.0)) / 1000.0 + 0.0 AS cos_sim
-  FROM v, q
+  SELECT vec_id, {_QCOS} AS cos_sim FROM v, q
 )
 """
 
@@ -170,40 +172,17 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_lsh() -> str:
-    from .dedup import PLANES, _plane_sql
+    from .dedup import PLANES
 
-    bucket_rows = []
-    for t, planes in enumerate(PLANES):
-        bits = " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * ({_plane_sql(p)})[i])) >= 0 "
-            "THEN '1' ELSE '0' END)"
-            for p in planes
-        )
-        bucket_rows.append(
-            f"  SELECT vec_id, '{t}:' || {bits} AS bucket FROM v"
-        )
-    buckets = "\n  UNION ALL\n".join(bucket_rows)
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), buckets AS (
-{buckets}
-), qb AS (
+WITH {VECTORS}, {lsh_buckets(PLANES, len(PLANES[0]))}, qb AS (
   SELECT bucket FROM buckets WHERE vec_id = {QUERY_ID}
 ), cand AS (
   SELECT DISTINCT b.vec_id FROM buckets b JOIN qb ON b.bucket = qb.bucket
 ), q AS (
   SELECT e AS qe FROM v WHERE vec_id = {QUERY_ID}
 )
-SELECT v.vec_id,
-       round((
-         list_sum(list_transform(range(1, len(v.e) + 1),
-                                 i -> v.e[i] * qe[i]))
-         / (sqrt(list_sum(list_transform(v.e, x -> x * x)))
-            * sqrt(list_sum(list_transform(qe, x -> x * x))))
-         * 1000.0)) / 1000.0 + 0.0 AS cos_sim
+SELECT v.vec_id, {cosine("v.e", "qe", 3)} AS cos_sim
 FROM v JOIN cand USING (vec_id), q
 ORDER BY cos_sim DESC, vec_id LIMIT {TOP_K}
 """
@@ -223,28 +202,11 @@ def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_multiprobe() -> str:
-    from .dedup import PLANES, _plane_sql
+    from .dedup import PLANES
 
     n_planes = len(PLANES[0])
-    bucket_rows = []
-    for t, planes in enumerate(PLANES):
-        bits = " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * ({_plane_sql(p)})[i])) >= 0 "
-            "THEN '1' ELSE '0' END)"
-            for p in planes
-        )
-        bucket_rows.append(
-            f"  SELECT vec_id, '{t}:' || {bits} AS bucket FROM v"
-        )
-    buckets = "\n  UNION ALL\n".join(bucket_rows)
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), buckets AS (
-{buckets}
-), qb AS (
+WITH {VECTORS}, {lsh_buckets(PLANES, n_planes)}, qb AS (
   SELECT bucket FROM buckets WHERE vec_id = {QUERY_ID}
 ), probes AS (
   SELECT DISTINCT
@@ -261,13 +223,7 @@ WITH v AS (
 ), q AS (
   SELECT e AS qe FROM v WHERE vec_id = {QUERY_ID}
 )
-SELECT v.vec_id,
-       round((
-         list_sum(list_transform(range(1, len(v.e) + 1),
-                                 i -> v.e[i] * qe[i]))
-         / (sqrt(list_sum(list_transform(v.e, x -> x * x)))
-            * sqrt(list_sum(list_transform(qe, x -> x * x))))
-         * 1000.0)) / 1000.0 + 0.0 AS cos_sim
+SELECT v.vec_id, {cosine("v.e", "qe", 3)} AS cos_sim
 FROM v JOIN cand USING (vec_id), q
 ORDER BY cos_sim DESC, vec_id LIMIT {TOP_K}
 """
@@ -354,21 +310,8 @@ def _knn_graph_sql_body() -> str:
     sign bits are concatenated, then substr() keeps the first P where
     P comes from the knn_nplanes_sql row-count twin — the same prefix
     slice the Spark side takes."""
-    from .dedup import KNN_PLANES_FULL, _plane_sql, knn_nplanes_sql
+    from .dedup import KNN_PLANES_FULL, knn_nplanes_sql
 
-    bucket_rows = []
-    for t, planes in enumerate(KNN_PLANES_FULL):
-        bits = " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * ({_plane_sql(p)})[i])) >= 0 "
-            "THEN '1' ELSE '0' END)"
-            for p in planes
-        )
-        bucket_rows.append(
-            f"  SELECT vec_id, '{t}:' || substr({bits}, 1, "
-            "(SELECT p FROM knn_np)) AS bucket FROM v"
-        )
-    buckets = "\n  UNION ALL\n".join(bucket_rows)
     # unit-vector dot, mirroring knn_graph's pre-normalized scoring
     cos = "list_sum(list_transform(range(1, len(a.u) + 1), i -> a.u[i] * b.u[i]))"
     return f"""
@@ -387,9 +330,7 @@ WITH knn_np AS (
 ), vu AS (
   SELECT vec_id, list_transform(e, x -> x / nrm) AS u FROM vn
   WHERE nrm > 0
-), buckets AS (
-{buckets}
-), cand AS (
+), {lsh_buckets(KNN_PLANES_FULL, AUTO_PLANES)}, cand AS (
   SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
   FROM buckets x JOIN buckets y
     ON x.bucket = y.bucket AND x.vec_id <> y.vec_id
@@ -506,18 +447,10 @@ def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_ann_recall() -> str:
     knn = _oracle_knn_graph().replace("ORDER BY src, rank", "")
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), probes AS (
+WITH {VECTORS}, probes AS (
   SELECT vec_id AS src, e AS qe FROM v WHERE vec_id < 5
 ), scored AS (
-  SELECT probes.src, v.vec_id AS dst,
-         round((list_sum(list_transform(range(1, len(e) + 1),
-                 i -> e[i] * qe[i]))
-           / (sqrt(list_sum(list_transform(e, x -> x * x)))
-              * sqrt(list_sum(list_transform(qe, x -> x * x)))))
-           * 1000.0) / 1000.0 + 0.0 AS cos_sim
+  SELECT probes.src, v.vec_id AS dst, {_QCOS} AS cos_sim
   FROM v CROSS JOIN probes WHERE v.vec_id <> probes.src
 ), exact AS (
   SELECT src, dst FROM (
@@ -1219,34 +1152,10 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_lsh_recall() -> str:
-    from .dedup import PLANES, _plane_sql
+    from .dedup import PLANES
 
-    bucket_rows = []
-    for t, planes in enumerate(PLANES):
-        bits = " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * ({_plane_sql(p)})[i])) >= 0 "
-            "THEN '1' ELSE '0' END)"
-            for p in planes
-        )
-        bucket_rows.append(
-            f"  SELECT vec_id, '{t}:' || {bits} AS bucket FROM v"
-        )
-    buckets = "\n  UNION ALL\n".join(bucket_rows)
-    cos = (
-        "round((list_sum(list_transform(range(1, len(e) + 1),"
-        " i -> e[i] * qe[i]))"
-        " / (sqrt(list_sum(list_transform(e, x -> x * x)))"
-        " * sqrt(list_sum(list_transform(qe, x -> x * x)))))"
-        " * 1000.0) / 1000.0 + 0.0"
-    )
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), buckets AS (
-{buckets}
-), qb AS (
+WITH {VECTORS}, {lsh_buckets(PLANES, len(PLANES[0]))}, qb AS (
   SELECT vec_id AS src, bucket FROM buckets WHERE vec_id < 5
 ), cand AS (
   SELECT DISTINCT qb.src, b.vec_id AS dst
@@ -1257,12 +1166,12 @@ WITH v AS (
   SELECT src, dst FROM (
     SELECT c.src, c.dst,
            row_number() OVER (PARTITION BY c.src
-                              ORDER BY {cos} DESC, c.dst) AS rk
+                              ORDER BY {_QCOS} DESC, c.dst) AS rk
     FROM cand c JOIN v ON v.vec_id = c.dst
                 JOIN probes p ON p.src = c.src) t
   WHERE rk <= {TOP_K}
 ), exactscored AS (
-  SELECT p.src, v.vec_id AS dst, {cos} AS cos_sim
+  SELECT p.src, v.vec_id AS dst, {_QCOS} AS cos_sim
   FROM v CROSS JOIN probes p WHERE v.vec_id <> p.src
 ), exact AS (
   SELECT src, dst FROM (
@@ -1306,13 +1215,7 @@ def _oracle_dedup_semantic() -> str:
     final = f"a{KMEANS_ITERS + 1}"
     ctes.append(_kmeans_assign_cte(final, cfin))
     joined = ",\n".join(ctes)
-    cos = (
-        "round((list_sum(list_transform(range(1, len(a.e) + 1),"
-        " i -> a.e[i] * b.e[i]))"
-        " / (sqrt(list_sum(list_transform(a.e, x -> x * x)))"
-        " * sqrt(list_sum(list_transform(b.e, x -> x * x)))))"
-        " * 10000.0) / 10000.0 + 0.0"
-    )
+    cos = cosine("a.e", "b.e", 4)
     return f"""WITH {joined},
 pairs AS (
   SELECT x.vec_id AS id_a, y.vec_id AS id_b
@@ -1810,41 +1713,18 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_batch() -> str:
-    from .dedup import PLANES, _plane_sql
+    from .dedup import PLANES
 
-    bucket_rows = []
-    for t, planes in enumerate(PLANES):
-        bits = " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * ({_plane_sql(p)})[i])) >= 0 "
-            "THEN '1' ELSE '0' END)"
-            for p in planes
-        )
-        bucket_rows.append(
-            f"  SELECT vec_id, '{t}:' || {bits} AS bucket FROM v"
-        )
-    buckets = "\n  UNION ALL\n".join(bucket_rows)
     qids = ", ".join(str(q) for q in BATCH_QUERY_IDS)
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), buckets AS (
-{buckets}
-), qb AS (
+WITH {VECTORS}, {lsh_buckets(PLANES, len(PLANES[0]))}, qb AS (
   SELECT vec_id AS qid, bucket FROM buckets WHERE vec_id IN ({qids})
 ), cand AS (
   SELECT DISTINCT qb.qid, b.vec_id
   FROM buckets b JOIN qb ON b.bucket = qb.bucket
   WHERE b.vec_id <> qb.qid
 ), scored AS (
-  SELECT cand.qid, cand.vec_id,
-         round((
-           list_sum(list_transform(range(1, len(cv.e) + 1),
-                                   i -> cv.e[i] * qv.e[i]))
-           / (sqrt(list_sum(list_transform(cv.e, x -> x * x)))
-              * sqrt(list_sum(list_transform(qv.e, x -> x * x))))
-           * 1000.0)) / 1000.0 + 0.0 AS cos_sim
+  SELECT cand.qid, cand.vec_id, {cosine("cv.e", "qv.e", 3)} AS cos_sim
   FROM cand
   JOIN v cv ON cv.vec_id = cand.vec_id
   JOIN v qv ON qv.vec_id = cand.qid
@@ -1895,11 +1775,9 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_random_projection() -> str:
-    from .dedup import _plane_sql
-
     comps = ",\n       ".join(
         "round(list_sum(list_transform(range(1, len(e) + 1), "
-        f"i -> e[i] * ({_plane_sql(p)})[i])) * 1000000.0) / 1000000.0 + 0.0"
+        f"i -> e[i] * ({plane_sql(p)})[i])) * 1000000.0) / 1000000.0 + 0.0"
         f" AS p{j}"
         for j, p in enumerate(_rp_planes())
     )
@@ -2172,21 +2050,11 @@ def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_pq_recall() -> str:
-    cos = (
-        "round((list_sum(list_transform(range(1, len(e) + 1),"
-        " i -> e[i] * qe[i]))"
-        " / (sqrt(list_sum(list_transform(e, x -> x * x)))"
-        " * sqrt(list_sum(list_transform(qe, x -> x * x)))))"
-        " * 1000.0) / 1000.0 + 0.0"
-    )
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), q AS (SELECT e AS qe FROM v WHERE vec_id = {QUERY_ID}),
+WITH {VECTORS}, q AS (SELECT e AS qe FROM v WHERE vec_id = {QUERY_ID}),
 exact AS (
   SELECT vec_id FROM (
-    SELECT vec_id, {cos} AS cos_sim FROM v CROSS JOIN q
+    SELECT vec_id, {_QCOS} AS cos_sim FROM v CROSS JOIN q
     WHERE vec_id <> {QUERY_ID})
   ORDER BY cos_sim DESC, vec_id LIMIT {PQ_TOPK}
 ), pq AS (
@@ -2221,13 +2089,7 @@ def _oracle_semdedup_keep() -> str:
     final = f"a{KMEANS_ITERS + 1}"
     ctes.append(_kmeans_assign_cte(final, cfin))
     joined = ",\n".join(ctes)
-    cos = (
-        "round((list_sum(list_transform(range(1, len(a.e) + 1),"
-        " i -> a.e[i] * b.e[i]))"
-        " / (sqrt(list_sum(list_transform(a.e, x -> x * x)))"
-        " * sqrt(list_sum(list_transform(b.e, x -> x * x)))))"
-        " * 10000.0) / 10000.0 + 0.0"
-    )
+    cos = cosine("a.e", "b.e", 4)
     return f"""WITH {joined},
 pairs AS (
   SELECT x.vec_id AS id_a, y.vec_id AS id_b
@@ -2349,13 +2211,19 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_dbscan() -> str:
-    from .dedup import _emb_pairs_ctes_scaled
+    from .dedup import DBSCAN_PLANES_FULL, knn_nplanes_sql
 
     # MATERIALIZED hints are load-bearing: DuckDB inlines CTEs per
-    # reference, and `cedges` sits inside the recursive term — without
-    # them the 12-table LSH chain re-executes every fixpoint round
-    # (observed: minutes instead of seconds at sf0.01)
-    return f"""WITH RECURSIVE {_emb_pairs_ctes_scaled()},
+    # reference — without them the 12-table LSH chain re-executes for
+    # every reader of the pair list
+    core_pairs = (
+        "SELECT id_a AS a, id_b AS b FROM p"
+        " WHERE id_a IN (SELECT id FROM core)"
+        " AND id_b IN (SELECT id FROM core)"
+    )
+    return f"""WITH RECURSIVE knn_np AS (
+  {knn_nplanes_sql()}
+), {emb_pairs(DBSCAN_PLANES_FULL, AUTO_PLANES)},
 p AS MATERIALIZED (
   SELECT id_a, id_b FROM pairs
 ), und AS MATERIALIZED (
@@ -2366,25 +2234,13 @@ p AS MATERIALIZED (
   SELECT id, COUNT(*) AS n_nb FROM und GROUP BY id
 ), core AS MATERIALIZED (
   SELECT id FROM deg WHERE n_nb + 1 >= {DBSCAN_MIN_PTS}
-), cedges AS MATERIALIZED (
-  SELECT id_a AS a, id_b AS b FROM p
-  WHERE id_a IN (SELECT id FROM core) AND id_b IN (SELECT id FROM core)
-  UNION
-  SELECT id_b AS a, id_a AS b FROM p
-  WHERE id_a IN (SELECT id FROM core) AND id_b IN (SELECT id FROM core)
-), reach(id, r) AS (
-  SELECT id, id FROM core
-  UNION
-  SELECT reach.id, cedges.b FROM reach JOIN cedges ON reach.r = cedges.a
-), corelab AS (
-  SELECT id, MIN(r) AS cluster_id FROM reach GROUP BY id
-), borderlab AS (
+), {cc_labels("SELECT id FROM core", core_pairs)}, borderlab AS (
   SELECT u.id, MIN(c.cluster_id) AS cluster_id
-  FROM und u JOIN corelab c ON u.nb = c.id
+  FROM und u JOIN cc c ON u.nb = c.id
   WHERE u.id NOT IN (SELECT id FROM core)
   GROUP BY u.id
 ), lab AS (
-  SELECT id, cluster_id, 'core' AS role FROM corelab
+  SELECT id, cluster_id, 'core' AS role FROM cc
   UNION ALL
   SELECT id, cluster_id, 'border' AS role FROM borderlab
 )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
+from ._oracle_sql import bands, minhash_agree, shingles, signature, tokens
 from ._util import dsum, sround
 
 # Synthetic-but-deterministic update set: every 7th order gets a
@@ -280,66 +281,32 @@ def q_ingest_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ingest_novelty() -> str:
-    from .dedup import BAND_SIZE, NGRAM_N, NUM_HASHES
+    from .dedup import NGRAM_N, NUM_HASHES
 
-    mins = ",\n         ".join(
-        f"MIN(substr(md5('{i // 4}:' || s), {(i % 4) * 8 + 1}, 8)) AS mh{i}"
-        for i in range(NUM_HASHES)
-    )
-    n_bands = NUM_HASHES // BAND_SIZE
-
-    def band_rows(sig: str) -> str:
-        return "\n  UNION ALL\n".join(
-            f"  SELECT doc_id, {bb} AS band, md5({key}) AS band_key"
-            f" FROM {sig}"
-            for bb, key in (
-                (
-                    bb,
-                    " || '|' || ".join(
-                        f"mh{bb * BAND_SIZE + j}" for j in range(BAND_SIZE)
-                    ),
-                )
-                for bb in range(n_bands)
-            )
-        )
-
-    agree = " + ".join(
-        f"(CASE WHEN a.mh{i} = b.mh{i} THEN 1 ELSE 0 END)"
-        for i in range(NUM_HASHES)
-    )
-    shingle = (
-        "SELECT DISTINCT doc_id, s FROM (\n"
-        "    SELECT doc_id,\n"
-        "           unnest(list_transform(\n"
-        f"             range(1, greatest(len(t) - {NGRAM_N - 1}, 0) + 1),\n"
-        "             i -> t[i] || ' ' || t[i + 1] || ' ' || t[i + 2])) AS s\n"
-        "    FROM {toks}) u"
-    )
     return f"""
 WITH toksA AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-  WHERE doc_id < {NOVELTY_SPLIT}
+  {tokens(f"documents WHERE doc_id < {NOVELTY_SPLIT}")}
 ), toksB AS (
-  SELECT doc_id, string_split(lower(text), ' ') AS t FROM documents
-  WHERE doc_id >= {NOVELTY_SPLIT}
+  {tokens(f"documents WHERE doc_id >= {NOVELTY_SPLIT}")}
 ), shA AS (
-  {shingle.format(toks="toksA")}
+  {shingles("toksA", NGRAM_N)}
 ), shB AS (
-  {shingle.format(toks="toksB")}
+  {shingles("toksB", NGRAM_N)}
 ), sigA AS (
-  SELECT doc_id, {mins} FROM shA GROUP BY doc_id
+  {signature("shA")}
 ), sigB AS (
-  SELECT doc_id, {mins} FROM shB GROUP BY doc_id
+  {signature("shB")}
 ), bandsA AS (
-{band_rows("sigA")}
+{bands("sigA")}
 ), bandsB AS (
-{band_rows("sigB")}
+{bands("sigB")}
 ), cand AS (
   SELECT DISTINCT ba.doc_id AS id_a, bb.doc_id AS id_b
   FROM bandsA ba
   JOIN bandsB bb ON ba.band = bb.band AND ba.band_key = bb.band_key
 ), best AS (
-  SELECT id_b, MAX(CAST(({agree}) AS DOUBLE) / {float(NUM_HASHES)!r})
+  SELECT id_b, MAX(CAST(({minhash_agree("a", "b")}) AS DOUBLE)
+                   / {float(NUM_HASHES)!r})
            AS best_est
   FROM cand
   JOIN sigA a ON a.doc_id = cand.id_a

@@ -185,19 +185,6 @@ def _x10_error(sf_dir: str) -> str:
             " mismatched scales (rebuild with tools/scale_smoke.py --keep)")
 
 
-def _frozen_planes(spark) -> float:
-    """q_knn_graph at ×10 with sf0.1's hyperplane count: the quadratic
-    anti-pattern the auto-scaled plane count prevents, one run."""
-    from audios_to_dataset_spark.catalog import load
-    from audios_to_dataset_spark.operators.similarity import knn_graph
-    from audios_to_dataset_spark.plans.dedup import knn_planes
-    from audios_to_dataset_spark.plans.similarity import KNN_K
-
-    planes, em10 = knn_planes(2000), load(spark, X10_DIR, "embeddings")
-    return _time(spark, lambda s, d: knn_graph(em10, planes, k=KNN_K),
-                 X10_DIR, 1)[0]
-
-
 def _sf1_scaling(sf1: dict[str, float], cpus_hi: int) -> dict:
     import subprocess
 
@@ -234,8 +221,6 @@ def main() -> None:
     elif os.path.isdir(os.path.join(X10_DIR, "lineitem.parquet")):
         sf1_runs = run_section(spark, "sf1", sf_dir, single)
     sf1 = {q: min(r) for q, r in sf1_runs.items()}
-    if sf1:
-        sf1["q_knn_graph_frozen_planes"] = _frozen_planes(spark)
     extras = run_section(spark, "extras", sf_dir, single)
 
     timings = {q: min(r) for q, r in headline.items()}

@@ -1,8 +1,14 @@
-"""Oracle gate for the multimodal fixture queries: each query that builds
-its bytes through ``with_fixture`` runs at sf0.001 and must match its
-DuckDB twin in row count and canonical value hash, the comparison
-``tools/check.py`` and perfbench's ``check_results`` make. Without it the
-fixture refactors were checked by plan shape only (test_udf_dup_gate).
+"""Oracle gate in tier-1: each listed query runs at sf0.001 and must
+match its DuckDB twin in row count and canonical value hash, the
+comparison ``tools/check.py`` and perfbench's ``check_results`` make.
+
+Two families are listed. The multimodal fixture queries build their
+bytes through ``with_fixture``; without this gate their refactors were
+checked by plan shape only (test_udf_dup_gate). The fragment queries'
+oracles are composed from the shared fragments in
+``plans/_oracle_sql.py`` (shingles, MinHash, LSH buckets, rounded
+cosine, connected-component closure, oriented triangles), so an edit to
+one fragment is checked against every Spark operator it mirrors.
 """
 
 from __future__ import annotations
@@ -39,6 +45,27 @@ FIXTURE_QUERIES = [
     "q_audio_fingerprint", "q_audio_neardup",
 ]
 
+FRAGMENT_QUERIES = [
+    # word n-gram shingles, Jaccard pairs and the near-dup CC closure
+    "q_dedup_ngram", "q_sim_histogram", "q_containment", "q_ngram_novelty",
+    "q_sparse_cosine", "q_decontaminate_ngram", "q_decontaminate",
+    "q_dedup_clusters", "q_dedup_pipeline", "q_split_assign",
+    # MinHash signatures, bands and agreement
+    "q_dedup_minhash_lsh", "q_minhash_jaccard", "q_minhash_error",
+    "q_dedup_threshold_sweep", "q_source_overlap", "q_lsh_recall_text",
+    "q_contamination", "q_ingest_novelty", "q_curation_funnel",
+    "q_dedup_survivors",
+    # LSH buckets, embedding pairs and the rounded cosine
+    "q_dedup_embedding", "q_dedup_embedding_exact",
+    "q_dedup_embedding_recall", "q_split_leakage", "q_dbscan", "q_ann_lsh",
+    "q_ann_multiprobe", "q_ann_lsh_recall", "q_ann_batch", "q_knn_graph",
+    "q_ann_recall", "q_hard_negatives", "q_label_noise", "q_link_predict",
+    "q_kcore", "q_cosine_scores", "q_ann_topk", "q_ann_pq_recall",
+    "q_dedup_semantic", "q_semdedup_keep",
+    # degree-oriented triangles
+    "q_triangle_count", "q_clustering_coeff",
+]
+
 
 @pytest.fixture()
 def oracle_con(sf_dir):
@@ -50,20 +77,28 @@ def oracle_con(sf_dir):
 
 
 def test_fixture_query_list_is_complete():
-    from audios_to_dataset_spark.plans import multimodal
+    from audios_to_dataset_spark.plans import all_oracles, multimodal
 
     assert len(FIXTURE_QUERIES) == len(set(FIXTURE_QUERIES)) == 47
     assert set(FIXTURE_QUERIES) <= set(multimodal.QUERIES)
     assert set(FIXTURE_QUERIES) <= set(multimodal.ORACLES)
+    # every oracle holding the text of a shingle, MinHash, LSH-bucket,
+    # closure or triangle fragment is gated here
+    marks = ("greatest(len(t) -", " AS mh0", ".mh0 = ", "FROM v, planes",
+             "FROM reach JOIN edges", "oriented AS (")
+    composed = {n for n, sql in all_oracles().items()
+                if any(m in sql for m in marks)}
+    assert len(FRAGMENT_QUERIES) == len(set(FRAGMENT_QUERIES))
+    assert composed <= set(FRAGMENT_QUERIES)
 
 
-@pytest.mark.parametrize("name", FIXTURE_QUERIES)
+@pytest.mark.parametrize("name", FIXTURE_QUERIES + FRAGMENT_QUERIES)
 def test_fixture_query_matches_oracle(spark, sf_dir, oracle_con, name):
-    from audios_to_dataset_spark.plans import multimodal
+    from audios_to_dataset_spark.plans import all_oracles, all_queries
 
-    df = multimodal.QUERIES[name](spark, sf_dir)
+    df = all_queries()[name](spark, sf_dir)
     cols, rows = list(df.columns), [tuple(r) for r in df.collect()]
-    res = oracle_con.execute(multimodal.ORACLES[name])
+    res = oracle_con.execute(all_oracles()[name])
     ocols, orows = [c[0] for c in res.description], res.fetchall()
     assert rows
     assert (len(rows), table_hash(cols, rows)) == (
