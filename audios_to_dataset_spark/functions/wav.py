@@ -5,10 +5,17 @@ crate): parse the in-memory WAV; ``duration = samples_per_channel /
 sample_rate`` (f64 seconds), ``sampling_rate`` i32; ANY parse failure →
 ``(0.0, 0)`` so non-WAV files are kept with zero duration (README.md:94).
 
-``parse_wav_header`` is the one RIFF header parser: a pure-Python chunk
-walk, no JVM audio codec needed. The parquet and DuckDB sinks' shared
-shard writer (``sinks.write_shards``) calls it on each file of the
-shard's Arrow table, which already holds every file's bytes (the
+WAV bytes are read through ONE RIFF/WAVE chunk walk, ``wav_walk``, and
+written through ONE writer, ``wav_bytes``. Every decoder here
+(``parse_wav_header``, ``wav_pcm_stats``, ``wav_pcm16_samples``,
+``wav_pcm16_frames``, ``downmix_stereo``, ``segment_wav_bytes``) reads
+its fields off the walk and applies only its own format checks; every
+fixture and the segmenter build their bytes through the writer. Pure
+Python, no JVM audio codec needed.
+
+``parse_wav_header`` is the P4 decode. The parquet and DuckDB sinks'
+shared shard writer (``sinks.write_shards``) calls it on each file of
+the shard's Arrow table, which already holds every file's bytes (the
 reference decodes in the shard worker too), so the ingest map stage
 runs without Python. ``wav_info`` is the same decode as an
 Arrow-batched pandas UDF, for plans that need the columns before a sink
@@ -18,10 +25,10 @@ queries).
 
 from __future__ import annotations
 
+import hashlib
 import struct
 
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -36,35 +43,80 @@ WAV_RESULT_TYPE = T.StructType(
 _MAX_SAMPLE_RATE = 2**31 - 1
 
 
+def wav_walk(data: bytes | None):
+    """The one RIFF/WAVE chunk walk: ``(tag, channels, rate,
+    block_align, bits, fmt_body, body_off, body_len)`` of the LAST
+    ``fmt `` chunk with a full 16-byte body and the LAST ``data`` chunk
+    (its length clamped to the bytes present), or None when the bytes
+    are not RIFF/WAVE or lack either chunk. ``fmt_body`` is the chunk's
+    body as stored (clamped too), so extensions past the first 16 bytes
+    (cbSize, the EXTENSIBLE SubFormat GUID, ADPCM samples-per-block)
+    stay readable. The format tag is returned as stored: the caller
+    decides which tags it decodes."""
+    if data is None or len(data) < 12 or data[0:4] != b"RIFF" \
+            or data[8:12] != b"WAVE":
+        return None
+    pos = 12
+    n = len(data)
+    fmt_body = None
+    body_off = -1
+    body_len = 0
+    while pos + 8 <= n:
+        chunk_id = data[pos : pos + 4]
+        (chunk_size,) = struct.unpack_from("<I", data, pos + 4)
+        body = pos + 8
+        if chunk_id == b"fmt " and chunk_size >= 16 and body + 16 <= n:
+            fmt_body = data[body : body + chunk_size]
+        elif chunk_id == b"data":
+            body_off = body
+            body_len = min(chunk_size, n - body)
+        # chunks are word-aligned: odd sizes are padded by one byte
+        pos = body + chunk_size + (chunk_size & 1)
+    if fmt_body is None or body_off < 0:
+        return None
+    tag, channels, rate, _byte_rate, block_align, bits = struct.unpack_from(
+        "<HHIIHH", fmt_body
+    )
+    return tag, channels, rate, block_align, bits, fmt_body, body_off, body_len
+
+
+def wav_bytes(fmt_body: bytes, body: bytes) -> bytes:
+    """The one RIFF/WAVE writer: a ``fmt `` chunk holding ``fmt_body``
+    (an odd-sized body gets its word-alignment pad byte) followed by a
+    ``data`` chunk holding ``body``."""
+    fmt = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
+    if len(fmt_body) & 1:
+        fmt += b"\x00"
+    return (
+        b"RIFF"
+        + struct.pack("<I", 12 + len(fmt) + len(body))
+        + b"WAVE"
+        + fmt
+        + b"data"
+        + struct.pack("<I", len(body))
+        + bytes(body)
+    )
+
+
+def _fmt(tag: int, channels: int, rate: int, bits: int) -> bytes:
+    """16-byte ``fmt `` body of a frame-per-block format: block_align =
+    channels * bits / 8, byte_rate = rate * block_align."""
+    align = channels * bits // 8
+    return struct.pack(
+        "<HHIIHH", tag, channels, rate, rate * align, align, bits
+    )
+
+
 def parse_wav_header(data: bytes | None) -> tuple[float, int]:
-    """Parse RIFF/WAVE: find fmt (sample rate, block align) and data
-    (payload size); duration = data_size / block_align / sample_rate.
-    Any structural problem → (0.0, 0)."""
+    """Parse RIFF/WAVE through the walk: duration = data_size /
+    block_align / sample_rate. Any structural problem → (0.0, 0)."""
     try:
-        if data is None or len(data) < 12:
+        w = wav_walk(data)
+        if w is None:
             return 0.0, 0
-        if data[0:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return 0.0, 0
-        pos = 12
-        sample_rate = 0
-        block_align = 0
-        data_size = -1
-        n = len(data)
-        while pos + 8 <= n:
-            chunk_id = data[pos : pos + 4]
-            (chunk_size,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if chunk_id == b"fmt " and chunk_size >= 16 and body + 16 <= n:
-                (_fmt_tag, _channels, sample_rate, _byte_rate, block_align,
-                 _bits) = struct.unpack_from("<HHIIHH", data, body)
-            elif chunk_id == b"data":
-                data_size = min(chunk_size, n - body)
-            # chunks are word-aligned: odd sizes are padded by one byte
-            pos = body + chunk_size + (chunk_size & 1)
+        sample_rate, block_align, data_size = w[2], w[3], w[7]
         # the rate is a u32 on disk but an i32 in every sink schema
-        if not 0 < sample_rate <= _MAX_SAMPLE_RATE:
-            return 0.0, 0
-        if block_align <= 0 or data_size < 0:
+        if not 0 < sample_rate <= _MAX_SAMPLE_RATE or block_align <= 0:
             return 0.0, 0
         samples_per_channel = data_size // block_align
         return samples_per_channel / sample_rate, int(sample_rate)
@@ -81,12 +133,6 @@ def wav_info(content: pd.Series) -> pd.DataFrame:
             "sampling_rate": [s for _, s in out],
         }
     )
-
-
-def with_wav_info(col: Column) -> Column:
-    """Struct column ``(duration double, sampling_rate int)`` decoded from
-    WAV bytes."""
-    return wav_info(col)
 
 
 WAV_STATS_TYPE = T.StructType(
@@ -233,61 +279,37 @@ def wav_pcm_stats(data: bytes | None) -> tuple[float, float, float, int]:
     import numpy as np
 
     try:
-        if data is None or len(data) < 12:
+        w = wav_walk(data)
+        if w is None:
             return 0.0, 0.0, 0.0, 0
-        if data[0:4] != b"RIFF" or data[8:12] != b"WAVE":
-            return 0.0, 0.0, 0.0, 0
-        pos = 12
-        tag = 0
-        bits = 0
-        balign = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            chunk_id = data[pos : pos + 4]
-            (chunk_size,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if chunk_id == b"fmt " and chunk_size >= 16 and body + 16 <= n:
-                (tag, _ch, _sr, _br, balign, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-                if tag == 0xFFFE and chunk_size >= 40 and body + 40 <= n:
-                    # WAVE_FORMAT_EXTENSIBLE (Microsoft multichannel
-                    # spec): the real format lives in the SubFormat
-                    # GUID's Data1; the rest must be the fixed
-                    # KSDATAFORMAT suffix or the stream is rejected.
-                    guid = data[body + 24 : body + 40]
-                    if guid[2:] == _KSDATAFORMAT_SUFFIX:
-                        (tag,) = struct.unpack_from("<H", guid, 0)
-                    else:
-                        tag = 0
-            elif chunk_id == b"data":
-                body_off = body
-                body_len = min(chunk_size, n - body)
-            pos = body + chunk_size + (chunk_size & 1)
-        if body_off < 0 or body_len < 1:
+        tag, _ch, _sr, balign, bits, fmt_body, body_off, body_len = w
+        if tag == 0xFFFE and len(fmt_body) >= 40:
+            # WAVE_FORMAT_EXTENSIBLE (Microsoft multichannel spec): the
+            # real format lives in the SubFormat GUID's Data1; the rest
+            # must be the fixed KSDATAFORMAT suffix or the stream is
+            # rejected.
+            guid = fmt_body[24:40]
+            if guid[2:] == _KSDATAFORMAT_SUFFIX:
+                (tag,) = struct.unpack_from("<H", guid, 0)
+            else:
+                tag = 0
+        if body_len < 1:
             return 0.0, 0.0, 0.0, 0
         if tag == 1 and bits == 16 and body_len >= 2:
             ints = np.frombuffer(
                 data, dtype="<i2", count=body_len // 2, offset=body_off
             ).astype(np.float64)
-        elif tag == 1 and bits == 8:
-            # unsigned 8-bit PCM: midpoint 128, widened to 16-bit range
+        elif tag in (1, 6, 7) and bits == 8:
             codes = np.frombuffer(
                 data, dtype=np.uint8, count=body_len, offset=body_off
             )
-            ints = (codes.astype(np.float64) - 128.0) * 256.0
-        elif tag == 7 and bits == 8:
-            codes = np.frombuffer(
-                data, dtype=np.uint8, count=body_len, offset=body_off
-            )
-            ints = _mulaw_table()[codes].astype(np.float64)
-        elif tag == 6 and bits == 8:
-            codes = np.frombuffer(
-                data, dtype=np.uint8, count=body_len, offset=body_off
-            )
-            ints = _alaw_table()[codes].astype(np.float64)
+            if tag == 1:
+                # unsigned 8-bit PCM: midpoint 128, widened to 16-bit
+                ints = (codes.astype(np.float64) - 128.0) * 256.0
+            else:
+                # G.711 µ-law (7) / A-law (6) integer-table expansion
+                table = _mulaw_table() if tag == 7 else _alaw_table()
+                ints = table[codes].astype(np.float64)
         elif tag == 0x11 and bits == 4:
             # IMA/DVI ADPCM (mono): sequential nibble state machine
             decoded = _ima_decode(data, body_off, body_len, balign)
@@ -326,11 +348,16 @@ def wav_stats(content: pd.Series) -> pd.DataFrame:
     )
 
 
-def with_wav_stats(col: Column) -> Column:
-    """Struct column ``(rms, peak, clipped_frac, n_samples)`` from WAV
-    bytes — Arrow-batched; the only Python work is the header walk, the
-    math is numpy-vectorized."""
-    return wav_stats(col)
+def _md5_int(key: str, digits: int) -> int:
+    """The first ``digits`` hex digits of md5(``key``) as an integer —
+    the per-sample formula every md5 fixture below and its SQL oracle
+    share."""
+    return int(hashlib.md5(key.encode()).hexdigest()[:digits], 16)
+
+
+def _pcm16(samples) -> bytes:
+    """Little-endian int16 PCM body of ``samples``."""
+    return struct.pack(f"<{len(samples)}h", *samples)
 
 
 def synth_wav(
@@ -346,20 +373,12 @@ def synth_wav(
 
     if n_samples is None:
         n_samples = sample_rate
-    body = bytearray()
-    for i in range(n_samples):
-        v = int(32767.0 * math.sin(2.0 * math.pi * freq_hz * i / sample_rate))
-        frame = struct.pack("<h", v) * channels
-        body += frame
-    block_align = 2 * channels
-    byte_rate = sample_rate * block_align
-    data_size = len(body)
-    hdr = b"RIFF" + struct.pack("<I", 36 + data_size) + b"WAVE"
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 1, channels, sample_rate, byte_rate, block_align, 16
-    )
-    data = b"data" + struct.pack("<I", data_size)
-    return bytes(hdr + fmt + data + body)
+    mono = [
+        int(32767.0 * math.sin(2.0 * math.pi * freq_hz * i / sample_rate))
+        for i in range(n_samples)
+    ]
+    body = _pcm16([v for v in mono for _ in range(channels)])
+    return wav_bytes(_fmt(1, channels, sample_rate, 16), body)
 
 
 def segment_wav_bytes(
@@ -375,36 +394,12 @@ def segment_wav_bytes(
     tolerance, /root/reference/src/main.rs:768).
     """
     try:
-        if data is None or len(data) < 12 or data[0:4] != b"RIFF" \
-                or data[8:12] != b"WAVE":
+        w = wav_walk(data)
+        if w is None:
             return []
-        pos = 12
-        n = len(data)
-        fmt_body = None
-        sample_rate = 0
-        block_align = 0
-        data_off = -1
-        data_size = -1
-        while pos + 8 <= n:
-            chunk_id = data[pos : pos + 4]
-            (chunk_size,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if chunk_id == b"fmt " and chunk_size >= 16 and body + 16 <= n:
-                fmt_body = data[body : body + chunk_size]
-                (_t, _c, sample_rate, _br, block_align, _b) = (
-                    struct.unpack_from("<HHIIHH", data, body)
-                )
-            elif chunk_id == b"data":
-                data_off = body
-                data_size = min(chunk_size, n - body)
-            pos = body + chunk_size + (chunk_size & 1)
-        if (
-            fmt_body is None
-            or sample_rate <= 0
-            or block_align <= 0
-            or data_off < 0
-            or data_size < 0
-        ):
+        (_tag, _ch, sample_rate, block_align, _bits, fmt_body, data_off,
+         data_size) = w
+        if sample_rate <= 0 or block_align <= 0:
             return []
         frames = data_size // block_align
         frames_per_seg = max(int(seg_seconds * sample_rate), 1)
@@ -413,65 +408,17 @@ def segment_wav_bytes(
             seg_frames = min(frames_per_seg, frames - start)
             lo = data_off + start * block_align
             seg_body = data[lo : lo + seg_frames * block_align]
-            fmt = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-            if len(fmt_body) & 1:
-                fmt += b"\x00"
-            dchunk = b"data" + struct.pack("<I", len(seg_body)) + seg_body
-            riff = (
-                b"RIFF"
-                + struct.pack("<I", 4 + len(fmt) + len(dchunk))
-                + b"WAVE"
-                + fmt
-                + dchunk
-            )
             out.append(
                 (
                     idx,
                     start / sample_rate,
                     seg_frames / sample_rate,
-                    riff,
+                    wav_bytes(fmt_body, seg_body),
                 )
             )
         return out
     except Exception:
         return []
-
-
-SEGMENT_SCHEMA = (
-    "path string, seg_idx int, seg_start double,"
-    " seg_duration double, seg_bytes binary"
-)
-
-
-def segment_wavs(
-    df, content_col: str = "content", path_col: str = "path",
-    seg_seconds: float = 0.25,
-):
-    """Explode whole-file WAV rows into fixed-duration segment rows via
-    mapInPandas — the audio-chunking pass a training pipeline runs to
-    normalize clip lengths. Arrow-batched; each input batch yields one
-    output frame, so memory is bounded by batch size × segment count,
-    and the operator parallelizes per input partition with no shuffle.
-    """
-    import pandas as pd  # noqa: F811 — local for the worker closure
-
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for p, b in zip(pdf[path_col], pdf[content_col]):
-                for idx, st, dur, sb in segment_wav_bytes(b, seg_seconds):
-                    rows.append((p, idx, st, dur, sb))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "path", "seg_idx", "seg_start", "seg_duration",
-                    "seg_bytes",
-                ],
-            )
-
-    return df.select(path_col, content_col).mapInPandas(
-        gen, SEGMENT_SCHEMA
-    )
 
 
 def synth_wav_md5(doc_id: int) -> bytes:
@@ -481,24 +428,10 @@ def synth_wav_md5(doc_id: int) -> bytes:
     8000/12000/16000 by id. Feeds q_audio_stats: the real RIFF parse +
     numpy PCM stats must reproduce values a SQL oracle derives from the
     same formula, so header-walk or scaling bugs fail the value hash."""
-    import hashlib
-
     n = 64 + doc_id % 37
     sr = 8000 + (doc_id % 3) * 4000
-    body = b"".join(
-        struct.pack(
-            "<h",
-            int(
-                hashlib.md5(f"au:{doc_id}:{i}".encode()).hexdigest()[:4], 16
-            )
-            - 32768,
-        )
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = _pcm16([_md5_int(f"au:{doc_id}:{i}", 4) - 32768 for i in range(n)])
+    return wav_bytes(_fmt(1, 1, sr, 16), body)
 
 
 def synth_wav_md5_alaw(doc_id: int) -> bytes:
@@ -506,18 +439,9 @@ def synth_wav_md5_alaw(doc_id: int) -> bytes:
     block_align 1): code i = first md5 byte of ``al:{id}:{i}``,
     n = 40 + id % 23 samples at 8 kHz. Drives the G.711 A-law expansion
     through q_audio_alaw's value-hash oracle."""
-    import hashlib
-
     n = 40 + doc_id % 23
-    sr = 8000
-    body = bytes(
-        int(hashlib.md5(f"al:{doc_id}:{i}".encode()).hexdigest()[:2], 16)
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 6, 1, sr, sr, 1, 8)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = bytes(_md5_int(f"al:{doc_id}:{i}", 2) for i in range(n))
+    return wav_bytes(_fmt(6, 1, 8000, 8), body)
 
 
 def synth_wav_md5_pcm8(doc_id: int) -> bytes:
@@ -525,18 +449,9 @@ def synth_wav_md5_pcm8(doc_id: int) -> bytes:
     sample i = first md5 byte of ``p8:{id}:{i}``, n = 56 + id % 31 at
     11025 Hz. The decoder must recentre on 128 and widen <<8; the
     oracle replays (v - 128) * 256 / 32768 exactly."""
-    import hashlib
-
     n = 56 + doc_id % 31
-    sr = 11025
-    body = bytes(
-        int(hashlib.md5(f"p8:{doc_id}:{i}".encode()).hexdigest()[:2], 16)
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr, 1, 8)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = bytes(_md5_int(f"p8:{doc_id}:{i}", 2) for i in range(n))
+    return wav_bytes(_fmt(1, 1, 11025, 8), body)
 
 
 def synth_wav_md5_f32(doc_id: int) -> bytes:
@@ -545,28 +460,11 @@ def synth_wav_md5_f32(doc_id: int) -> bytes:
     16-bit dyadic rational, so the float32 write and float64 read are
     both EXACT and the SQL oracle needs no float32 rounding model.
     n = 32 + id % 19 samples at 16 kHz."""
-    import hashlib
-
     n = 32 + doc_id % 19
-    sr = 16000
-    body = b"".join(
-        struct.pack(
-            "<f",
-            (
-                int(
-                    hashlib.md5(f"f3:{doc_id}:{i}".encode()).hexdigest()[:4],
-                    16,
-                )
-                - 32768
-            )
-            / 32768.0,
-        )
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 3, 1, sr, sr * 4, 4, 32)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    vals = [
+        (_md5_int(f"f3:{doc_id}:{i}", 4) - 32768) / 32768.0 for i in range(n)
+    ]
+    return wav_bytes(_fmt(3, 1, 16000, 32), struct.pack(f"<{n}f", *vals))
 
 
 def synth_wav_md5_ext(doc_id: int) -> bytes:
@@ -578,31 +476,20 @@ def synth_wav_md5_ext(doc_id: int) -> bytes:
     dyadic v/32768 storage makes both subformats EXACTLY the same
     signal, so ONE oracle formula covers the whole family and any
     GUID-dispatch bug shows up as a zeroed row."""
-    import hashlib
-
     n = 44 + doc_id % 31
     sr = 8000 + (doc_id % 3) * 4000
-    is_f32 = doc_id % 2 == 1
-    vals = [
-        int(hashlib.md5(f"wx:{doc_id}:{i}".encode()).hexdigest()[:4], 16)
-        - 32768
-        for i in range(n)
-    ]
-    if is_f32:
-        body = b"".join(struct.pack("<f", v / 32768.0) for v in vals)
-        sub, bits, width = 3, 32, 4
+    vals = [_md5_int(f"wx:{doc_id}:{i}", 4) - 32768 for i in range(n)]
+    if doc_id % 2 == 1:
+        body = struct.pack(f"<{n}f", *(v / 32768.0 for v in vals))
+        sub, bits = 3, 32
     else:
-        body = b"".join(struct.pack("<h", v) for v in vals)
-        sub, bits, width = 1, 16, 2
+        body = _pcm16(vals)
+        sub, bits = 1, 16
     guid = struct.pack("<H", sub) + _KSDATAFORMAT_SUFFIX
-    fmt_body = struct.pack(
-        "<HHIIHH", 0xFFFE, 1, sr, sr * width, width, bits
-    ) + struct.pack("<HHI", 22, bits, 0x4) + guid
-    hdr = b"RIFF" + struct.pack("<I", 20 + len(fmt_body) + len(body)) \
-        + b"WAVE"
-    fmt = b"fmt " + struct.pack("<I", len(fmt_body)) + fmt_body
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    fmt_body = (
+        _fmt(0xFFFE, 1, sr, bits) + struct.pack("<HHI", 22, bits, 0x4) + guid
+    )
+    return wav_bytes(fmt_body, body)
 
 
 def resample_linear(
@@ -643,26 +530,11 @@ def downmix_stereo(data: bytes | None) -> tuple[list[float], int]:
     import numpy as np
 
     try:
-        if data is None or len(data) < 44 or data[:4] != b"RIFF":
+        w = wav_walk(data)
+        if w is None:
             return [], 0
-        pos = 12
-        tag = ch = sr = bits = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            cid = data[pos : pos + 4]
-            (csz,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if cid == b"fmt " and csz >= 16 and body + 16 <= n:
-                (tag, ch, sr, _br, _ba, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-            elif cid == b"data":
-                body_off = body
-                body_len = min(csz, n - body)
-            pos = body + csz + (csz & 1)
-        if tag != 1 or ch != 2 or bits != 16 or body_off < 0:
+        tag, ch, sr, _ba, bits, _fmt_body, body_off, body_len = w
+        if tag != 1 or ch != 2 or bits != 16:
             return [], 0
         x = np.frombuffer(
             data, dtype="<i2", count=(body_len // 4) * 2, offset=body_off
@@ -681,25 +553,15 @@ def synth_wav_dropout(doc_id: int) -> bytes:
     ADC/link produces), else the centered md5 value of ``dr:{id}:{i}``.
     n = 200 + id % 41 samples at 16 kHz. Feeds q_audio_dropout; the
     SQL oracle replays the same CASE + md5 formula."""
-    import hashlib
-
     n = 200 + doc_id % 41
-    sr = 16000
-
-    def s(i: int) -> int:
-        if (i // 16) % 7 == doc_id % 7:
-            return 0
-        return (
-            int(hashlib.md5(f"dr:{doc_id}:{i}".encode()).hexdigest()[:4],
-                16)
-            - 32768
-        )
-
-    body = b"".join(struct.pack("<h", s(i)) for i in range(n))
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = _pcm16(
+        [
+            0 if (i // 16) % 7 == doc_id % 7
+            else _md5_int(f"dr:{doc_id}:{i}", 4) - 32768
+            for i in range(n)
+        ]
+    )
+    return wav_bytes(_fmt(1, 1, 16000, 16), body)
 
 
 def synth_wav_md5_stereo(doc_id: int) -> bytes:
@@ -707,25 +569,15 @@ def synth_wav_md5_stereo(doc_id: int) -> bytes:
     sample = md5(``sl:{id}:{i}``) two bytes - 32768, right =
     md5(``sr:{id}:{i}``) likewise; n = 40 + id % 21 frames at 16 kHz,
     interleaved L/R per the RIFF spec."""
-    import hashlib
-
     n = 40 + doc_id % 21
-    sr = 16000
-
-    def s(tag: str, i: int) -> int:
-        return (
-            int(hashlib.md5(f"{tag}:{doc_id}:{i}".encode()).hexdigest()[:4],
-                16)
-            - 32768
-        )
-
-    body = b"".join(
-        struct.pack("<hh", s("sl", i), s("sr", i)) for i in range(n)
+    body = _pcm16(
+        [
+            _md5_int(f"{ch}:{doc_id}:{i}", 4) - 32768
+            for i in range(n)
+            for ch in ("sl", "sr")
+        ]
     )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 2, sr, sr * 4, 4, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    return wav_bytes(_fmt(1, 2, 16000, 16), body)
 
 
 def synth_wav_md5_adpcm(doc_id: int) -> bytes:
@@ -735,28 +587,22 @@ def synth_wav_md5_adpcm(doc_id: int) -> bytes:
     of md5(``ad:{id}:{k}``); n_nibbles = 24 + 2*(id % 11) (even, so no
     padding nibble). The SQL oracle replays the decode recurrence as a
     recursive CTE against the same md5 formulas."""
-    import hashlib
-
     n_nib = 24 + 2 * (doc_id % 11)
     sr = 8000
-    pred0 = int(hashlib.md5(f"ap:{doc_id}".encode()).hexdigest()[:4], 16) - 32768
-    idx0 = int(hashlib.md5(f"ai:{doc_id}".encode()).hexdigest()[:2], 16) % 89
-    nibbles = [
-        int(hashlib.md5(f"ad:{doc_id}:{k}".encode()).hexdigest()[0], 16)
-        for k in range(n_nib)
-    ]
+    pred0 = _md5_int(f"ap:{doc_id}", 4) - 32768
+    idx0 = _md5_int(f"ai:{doc_id}", 2) % 89
+    nibbles = [_md5_int(f"ad:{doc_id}:{k}", 1) for k in range(n_nib)]
     payload = bytearray(struct.pack("<hBB", pred0, idx0, 0))
     for j in range(0, n_nib, 2):
         payload.append(nibbles[j] | (nibbles[j + 1] << 4))
     block_align = len(payload)
     spb = 1 + n_nib
-    hdr = b"RIFF" + struct.pack("<I", 40 + len(payload)) + b"WAVE"
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHHHH", 20, 0x11, 1, sr,
-        sr * block_align // spb, block_align, 4, 2, spb,
+    # the 20-byte IMA fmt body: cbSize 2, then samples per block
+    fmt_body = struct.pack(
+        "<HHIIHHHH", 0x11, 1, sr, sr * block_align // spb, block_align, 4,
+        2, spb,
     )
-    data = b"data" + struct.pack("<I", len(payload))
-    return hdr + fmt + data + bytes(payload)
+    return wav_bytes(fmt_body, payload)
 
 
 def synth_wav_md5_ulaw(doc_id: int) -> bytes:
@@ -764,18 +610,9 @@ def synth_wav_md5_ulaw(doc_id: int) -> bytes:
     block_align 1): code i = first md5 byte of ``ul:{id}:{i}``,
     n = 48 + id % 29 samples at 8 kHz. Drives the G.711 expansion
     through q_audio_ulaw's value-hash oracle."""
-    import hashlib
-
     n = 48 + doc_id % 29
-    sr = 8000
-    body = bytes(
-        int(hashlib.md5(f"ul:{doc_id}:{i}".encode()).hexdigest()[:2], 16)
-        for i in range(n)
-    )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 7, 1, sr, sr, 1, 8)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    body = bytes(_md5_int(f"ul:{doc_id}:{i}", 2) for i in range(n))
+    return wav_bytes(_fmt(7, 1, 8000, 8), body)
 
 
 # ---------------------------------------------------------------------------
@@ -797,10 +634,7 @@ AFP_SAMPLES = AFP_WIN * AFP_WINDOWS
 
 def _afp_sample(key: str) -> int:
     """First 4 md5 hex digits % 40000 - 20000 (int16-safe)."""
-    import hashlib
-
-    return int(hashlib.md5(key.encode()).hexdigest()[:4], 16) % 40000 \
-        - 20000
+    return _md5_int(key, 4) % 40000 - 20000
 
 
 def synth_wav_group(doc_id: int) -> bytes:
@@ -811,22 +645,16 @@ def synth_wav_group(doc_id: int) -> bytes:
     md5('afp:{doc_id}:{i}') — both formulas a DuckDB oracle replays."""
     g = doc_id % AFP_GROUPS
     pwin = (doc_id // AFP_GROUPS) % AFP_WINDOWS
-    body = b"".join(
-        struct.pack(
-            "<h",
+    body = _pcm16(
+        [
             _afp_sample(
                 f"afp:{doc_id}:{i}" if i // AFP_WIN == pwin
                 else f"af:{g}:{i}"
-            ),
-        )
-        for i in range(AFP_SAMPLES)
+            )
+            for i in range(AFP_SAMPLES)
+        ]
     )
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack(
-        "<IHHIIHH", 16, 1, 1, 16000, 32000, 2, 16
-    )
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    return wav_bytes(_fmt(1, 1, 16000, 16), body)
 
 
 def wav_pcm16_samples(data: bytes | None):
@@ -836,27 +664,11 @@ def wav_pcm16_samples(data: bytes | None):
     import numpy as np
 
     try:
-        if data is None or len(data) < 12 or data[0:4] != b"RIFF" \
-                or data[8:12] != b"WAVE":
+        w = wav_walk(data)
+        if w is None:
             return None
-        pos = 12
-        tag = bits = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            cid = data[pos : pos + 4]
-            (csize,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if cid == b"fmt " and csize >= 16 and body + 16 <= n:
-                (tag, _ch, _sr, _br, _ba, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-            elif cid == b"data":
-                body_off = body
-                body_len = min(csize, n - body)
-            pos = body + csize + (csize & 1)
-        if tag != 1 or bits != 16 or body_off < 0 or body_len < 2:
+        tag, _ch, _sr, _ba, bits, _fmt_body, body_off, body_len = w
+        if tag != 1 or bits != 16 or body_len < 2:
             return None
         return np.frombuffer(
             data, dtype="<i2", count=body_len // 2, offset=body_off
@@ -875,28 +687,12 @@ def wav_pcm16_frames(data: bytes | None):
     import numpy as np
 
     try:
-        if data is None or len(data) < 12 or data[0:4] != b"RIFF" \
-                or data[8:12] != b"WAVE":
+        w = wav_walk(data)
+        if w is None:
             return None
-        pos = 12
-        tag = bits = ch = sr = 0
-        body_off = -1
-        body_len = 0
-        n = len(data)
-        while pos + 8 <= n:
-            cid = data[pos : pos + 4]
-            (csize,) = struct.unpack_from("<I", data, pos + 4)
-            body = pos + 8
-            if cid == b"fmt " and csize >= 16 and body + 16 <= n:
-                (tag, ch, sr, _br, _ba, bits) = struct.unpack_from(
-                    "<HHIIHH", data, body
-                )
-            elif cid == b"data":
-                body_off = body
-                body_len = min(csize, n - body)
-            pos = body + csize + (csize & 1)
-        if tag != 1 or bits != 16 or body_off < 0 or body_len < 2 \
-                or not 1 <= ch <= 8 or sr <= 0:
+        tag, ch, sr, _ba, bits, _fmt_body, body_off, body_len = w
+        if tag != 1 or bits != 16 or body_len < 2 or not 1 <= ch <= 8 \
+                or sr <= 0:
             return None
         frames = body_len // (2 * ch)
         if frames == 0:
@@ -963,32 +759,16 @@ def synth_wav_vad(doc_id: int) -> bytes:
     safely above any sane threshold); silent frames are all zeros.
     The voiced/silent pattern — and therefore every VAD statistic —
     has a closed-form SQL oracle."""
-    import hashlib
-
     n_frames = 6 + doc_id % 5
     samples = []
     for b in range(n_frames):
-        hb = int(
-            hashlib.md5(f"vd:{doc_id}:{b}".encode()).hexdigest()[:2], 16
-        )
-        if hb >= 128:
+        if _md5_int(f"vd:{doc_id}:{b}", 2) >= 128:
             for i in range(40):
-                h16 = int(
-                    hashlib.md5(
-                        f"vd:{doc_id}:{b}:{i}".encode()
-                    ).hexdigest()[:4],
-                    16,
-                )
-                mag = 8192 + h16 % 8192
+                mag = 8192 + _md5_int(f"vd:{doc_id}:{b}:{i}", 4) % 8192
                 samples.append(mag if i % 2 == 0 else -mag)
         else:
             samples.extend([0] * 40)
-    body = b"".join(struct.pack("<h", s) for s in samples)
-    sr = 8000
-    hdr = b"RIFF" + struct.pack("<I", 36 + len(body)) + b"WAVE"
-    fmt = b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, sr, sr * 2, 2, 16)
-    data = b"data" + struct.pack("<I", len(body))
-    return hdr + fmt + data + body
+    return wav_bytes(_fmt(1, 1, 8000, 16), _pcm16(samples))
 
 
 def vad_segments(

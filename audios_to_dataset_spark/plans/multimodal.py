@@ -55,47 +55,52 @@ def _pixel_probe(img: DataFrame) -> DataFrame:
     )
 
 
+def _decoded_fields(
+    d: DataFrame, fields: str, decode, *cols: str
+) -> DataFrame:
+    """doc_id plus ``fields`` (a DDL list such as ``"n long, ok
+    boolean"``) from ``decode(*bytes)`` over the fixture columns
+    ``cols`` (default ``content``) of each row, through one
+    Arrow-batched pandas UDF. ``decode`` returns one tuple in field
+    order, or None when the bytes do not decode; that and a NULL
+    fixture both give NULL fields. The tail of the fixture queries whose
+    decoder output is one flat record."""
+    from pyspark.sql.functions import pandas_udf
+
+    names = [f.split()[0] for f in fields.split(",")]
+    nulls = (None,) * len(names)
+
+    @pandas_udf(fields)
+    def _dec(*contents):  # type: ignore[no-untyped-def]
+        import pandas as pd
+
+        rows = []
+        for bs in zip(*contents):
+            got = None if None in bs else decode(*bs)
+            rows.append(nulls if got is None else tuple(got))
+        return pd.DataFrame(rows, columns=names)
+
+    out = d.withColumn("r", _dec(*(cols or ("content",))))
+    return out.select("doc_id", *[F.col(f"r.{n}").alias(n) for n in names])
+
+
 def _decoded_pixels(img: DataFrame, decode) -> DataFrame:
     """(img_width, img_height, exact mean_px) of ``decode(content)``
     (bytes → (h, w, c) uint8 array or None) through a dedicated decoder
     UDF, for the formats ``_pixel_probe`` does not decode (TGA, which has
     no magic bytes, and QOI)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    out_t = T.StructType(
-        [
-            T.StructField("img_width", T.LongType()),
-            T.StructField("img_height", T.LongType()),
-            T.StructField("mean_px", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _dec(content):  # type: ignore[no-untyped-def]
+    def _px(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        ws, hs, ms = [], [], []
-        for b in content:
-            px = decode(bytes(b) if b is not None else None)
-            if px is None:
-                ws.append(None)
-                hs.append(None)
-                ms.append(None)
-            else:
-                hs.append(px.shape[0])
-                ws.append(px.shape[1])
-                ms.append(int(px.astype(np.int64).sum()) / px.size)
-        return pd.DataFrame(
-            {"img_width": ws, "img_height": hs, "mean_px": ms}
-        )
+        px = decode(b)
+        if px is None:
+            return None
+        mean_px = int(px.astype(np.int64).sum()) / px.size
+        return px.shape[1], px.shape[0], mean_px
 
-    return img.withColumn("r", _dec(F.col("content"))).select(
-        "doc_id",
-        F.col("r.img_width").alias("img_width"),
-        F.col("r.img_height").alias("img_height"),
-        F.col("r.mean_px").alias("mean_px"),
+    return _decoded_fields(
+        img, "img_width long, img_height long, mean_px double", _px
     )
 
 
@@ -104,51 +109,26 @@ def _decoded_signal_stats(d: DataFrame, synth, decode) -> DataFrame:
     int16-scale samples) or None) → (sampling_rate, n_samples, rms,
     peak) over s / 32768, the tail shared by the FLAC, AIFF and AU
     decode queries."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
-    out_t = T.StructType(
-        [
-            T.StructField("sampling_rate", T.IntegerType()),
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("peak", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _dec(content):  # type: ignore[no-untyped-def]
+    def _stats(b):  # type: ignore[no-untyped-def]
         import math
 
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for b in content:
-            got = decode(bytes(b) if b is not None else None)
-            if got is None:
-                rows.append((None, None, None, None))
-                continue
-            sr, s = got
-            p = s.astype(np.float64) / 32768.0
-            rms = (
-                math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
-            )
-            rows.append(
-                (sr, p.size, rms, float(np.abs(p).max()) if p.size else 0.0)
-            )
-        return pd.DataFrame(
-            rows, columns=["sampling_rate", "n_samples", "rms", "peak"]
-        )
+        got = decode(b)
+        if got is None:
+            return None
+        sr, s = got
+        p = s.astype(np.float64) / 32768.0
+        rms = math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
+        return sr, p.size, rms, float(np.abs(p).max()) if p.size else 0.0
 
-    out = with_fixture(d, synth).withColumn("r", _dec(F.col("content")))
-    return out.select(
-        "doc_id",
-        F.col("r.sampling_rate").alias("sampling_rate"),
-        F.col("r.n_samples").alias("n_samples"),
-        sround(F.col("r.rms"), 6).alias("rms"),
-        F.col("r.peak").alias("peak"),
+    out = _decoded_fields(
+        with_fixture(d, synth),
+        "sampling_rate int, n_samples long, rms double, peak double",
+        _stats,
     )
+    return out.withColumn("rms", sround(F.col("rms"), 6))
 
 
 def q_multimodal_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -504,59 +484,35 @@ def q_image_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     every tile sum from the md5 pixel formula, so a stride slip,
     boundary tile leak, or off-by-one in the grid fails the hash.
     At 100 TB tiling is a pure map stage (mapInPandas shape)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.multimodal import decode_bmp_pixels, synth_gray_bmp
 
     TILE, STRIDE = 8, 6
-    d = with_fixture(_doc_ids(spark, sf_dir), synth_gray_bmp)
 
-    out_t = T.StructType(
-        [
-            T.StructField("n_tiles", T.LongType()),
-            T.StructField("mean_tile", T.DoubleType()),
-            T.StructField("max_tile", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _tile(content):  # type: ignore[no-untyped-def]
+    def _tile(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for b in content:
-            px = decode_bmp_pixels(bytes(b) if b is not None else None)
-            if px is None:
-                rows.append((None, None, None))
-                continue
-            g = px[:, :, 0].astype(np.int64)
-            h, w = g.shape
-            sums = [
-                int(g[ty : ty + TILE, tx : tx + TILE].sum())
-                for ty in range(0, h - TILE + 1, STRIDE)
-                for tx in range(0, w - TILE + 1, STRIDE)
-            ]
-            n = len(sums)
-            area = TILE * TILE
-            rows.append(
-                (
-                    n,
-                    sum(sums) / (area * n) if n else 0.0,
-                    max(sums) / area if n else 0.0,
-                )
-            )
-        return pd.DataFrame(
-            rows, columns=["n_tiles", "mean_tile", "max_tile"]
+        px = decode_bmp_pixels(b)
+        if px is None:
+            return None
+        g = px[:, :, 0].astype(np.int64)
+        h, w = g.shape
+        sums = [
+            int(g[ty : ty + TILE, tx : tx + TILE].sum())
+            for ty in range(0, h - TILE + 1, STRIDE)
+            for tx in range(0, w - TILE + 1, STRIDE)
+        ]
+        n = len(sums)
+        area = TILE * TILE
+        return (
+            n,
+            sum(sums) / (area * n) if n else 0.0,
+            max(sums) / area if n else 0.0,
         )
 
-    out = d.withColumn("r", _tile(F.col("content")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_tiles").alias("n_tiles"),
-        F.col("r.mean_tile").alias("mean_tile"),
-        F.col("r.max_tile").alias("max_tile"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_gray_bmp),
+        "n_tiles long, mean_tile double, max_tile double",
+        _tile,
     )
 
 
@@ -1108,13 +1064,13 @@ def q_audio_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     or int16-scaling bugs fail the hash. (Every arithmetic step is
     exact-in-double: v/32768 and its square are dyadic rationals, and
     the sums stay under 53 bits — see test_audio_stats_oracle_parity.)"""
-    from ..functions.wav import synth_wav_md5, with_wav_info, with_wav_stats
+    from ..functions.wav import synth_wav_md5, wav_info, wav_stats
 
     wav = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
     out = wav.select(
         "doc_id",
-        with_wav_info(F.col("content")).alias("info"),
-        with_wav_stats(F.col("content")).alias("stats"),
+        wav_info(F.col("content")).alias("info"),
+        wav_stats(F.col("content")).alias("stats"),
     )
     return out.select(
         "doc_id",
@@ -1175,8 +1131,8 @@ def _audio_stats_query(synth_name: str):
         wav = with_fixture(_doc_ids(spark, sf_dir), synth)
         out = wav.select(
             "doc_id",
-            W.with_wav_info(F.col("content")).alias("info"),
-            W.with_wav_stats(F.col("content")).alias("stats"),
+            W.wav_info(F.col("content")).alias("info"),
+            W.wav_stats(F.col("content")).alias("stats"),
         )
         return out.select(
             "doc_id",
@@ -1229,71 +1185,37 @@ def q_audio_transcode(spark: SparkSession, sf_dir: str) -> DataFrame:
     compressed byte size is deterministic but has no closed form the
     oracle could derive independently, so it is not a checked column.)
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.flac import decode_flac, encode_flac
-    from ..functions.wav import synth_wav_md5, wav_pcm16_samples
-
-    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("transcode_ok", T.BooleanType()),
-            T.StructField("rms", T.DoubleType()),
-            T.StructField("peak", T.DoubleType()),
-        ]
+    from ..functions.wav import (
+        parse_wav_header,
+        synth_wav_md5,
+        wav_pcm16_samples,
     )
 
-    @pandas_udf(out_t)
-    def _trans(content):  # type: ignore[no-untyped-def]
+    def _trans(b):  # type: ignore[no-untyped-def]
         import math
 
         import numpy as np
-        import pandas as pd
 
-        from audios_to_dataset_spark.functions.wav import parse_wav_header
-
-        rows = []
-        for b in content:
-            bb = bytes(b) if b is not None else None
-            s = wav_pcm16_samples(bb)
-            if s is None:
-                rows.append((None, None, None, None))
-                continue
-            _dur, sr = parse_wav_header(bb)
-            flac = encode_flac(s, sr)
-            got = decode_flac(flac)
-            ok = (
-                got is not None
-                and got[0] == sr
-                and np.array_equal(got[1], s)
-            )
-            p = (got[1] if ok else s).astype(np.float64) / 32768.0
-            rms = (
-                math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
-            )
-            rows.append(
-                (
-                    int(p.size),
-                    bool(ok),
-                    rms,
-                    float(np.abs(p).max()) if p.size else 0.0,
-                )
-            )
-        return pd.DataFrame(
-            rows, columns=["n_samples", "transcode_ok", "rms", "peak"]
+        s = wav_pcm16_samples(b)
+        if s is None:
+            return None
+        _dur, sr = parse_wav_header(b)
+        got = decode_flac(encode_flac(s, sr))
+        ok = got is not None and got[0] == sr and np.array_equal(got[1], s)
+        p = (got[1] if ok else s).astype(np.float64) / 32768.0
+        rms = math.sqrt(float((p * p).sum()) / p.size) if p.size else 0.0
+        return (
+            int(p.size), bool(ok), rms,
+            float(np.abs(p).max()) if p.size else 0.0,
         )
 
-    out = d.withColumn("r", _trans(F.col("content")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_samples").alias("n_samples"),
-        F.col("r.transcode_ok").alias("transcode_ok"),
-        sround(F.col("r.rms"), 6).alias("rms"),
-        F.col("r.peak").alias("peak"),
+    out = _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "n_samples long, transcode_ok boolean, rms double, peak double",
+        _trans,
     )
+    return out.withColumn("rms", sround(F.col("rms"), 6))
 
 
 ORACLE_AUDIO_TRANSCODE = """
@@ -1324,49 +1246,27 @@ def q_audio_zcr(spark: SparkSession, sf_dir: str) -> DataFrame:
     products, no float model), and report the per-second rate as one
     exact division. The oracle replays the count with a LAG window
     over the md5 sample formula."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    from ..functions.wav import synth_wav_md5, wav_pcm16_samples
-
-    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("zero_crossings", T.LongType()),
-            T.StructField("zcr_hz", T.DoubleType()),
-        ]
+    from ..functions.wav import (
+        parse_wav_header,
+        synth_wav_md5,
+        wav_pcm16_samples,
     )
 
-    @pandas_udf(out_t)
-    def _zcr(content):  # type: ignore[no-untyped-def]
+    def _zcr(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        from audios_to_dataset_spark.functions.wav import parse_wav_header
+        s = wav_pcm16_samples(b)
+        if s is None or s.size < 2:
+            return None
+        _dur, sr = parse_wav_header(b)
+        v = s.astype(np.int64)
+        zc = int(((v[1:] * v[:-1]) < 0).sum())
+        return s.size, zc, zc * sr / s.size
 
-        rows = []
-        for b in content:
-            bb = bytes(b) if b is not None else None
-            s = wav_pcm16_samples(bb)
-            if s is None or s.size < 2:
-                rows.append((None, None, None))
-                continue
-            _dur, sr = parse_wav_header(bb)
-            v = s.astype(np.int64)
-            zc = int(((v[1:] * v[:-1]) < 0).sum())
-            rows.append((s.size, zc, zc * sr / s.size))
-        return pd.DataFrame(
-            rows, columns=["n_samples", "zero_crossings", "zcr_hz"]
-        )
-
-    out = d.withColumn("r", _zcr(F.col("content")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_samples").alias("n_samples"),
-        F.col("r.zero_crossings").alias("zero_crossings"),
-        F.col("r.zcr_hz").alias("zcr_hz"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "n_samples long, zero_crossings long, zcr_hz double",
+        _zcr,
     )
 
 
@@ -1407,42 +1307,12 @@ def q_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     voiced segments. The voiced/silent pattern has a closed-form SQL
     oracle (gaps-and-islands over the per-frame coin), so a windowing
     off-by-one, threshold slip, or run-merge bug fails the hash."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.wav import synth_wav_vad, vad_segments
 
-    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_vad)
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("n_voiced", T.LongType()),
-            T.StructField("n_segments", T.LongType()),
-            T.StructField("longest_run", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _vad(content):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        rows = []
-        for b in content:
-            got = vad_segments(bytes(b) if b is not None else None)
-            rows.append(got if got is not None else (None,) * 4)
-        return pd.DataFrame(
-            rows,
-            columns=["n_frames", "n_voiced", "n_segments", "longest_run"],
-        )
-
-    out = d.withColumn("r", _vad(F.col("content")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_frames").alias("n_frames"),
-        F.col("r.n_voiced").alias("n_voiced"),
-        F.col("r.n_segments").alias("n_segments"),
-        F.col("r.longest_run").alias("longest_run"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_vad),
+        "n_frames long, n_voiced long, n_segments long, longest_run long",
+        vad_segments,
     )
 
 
@@ -1654,24 +1524,10 @@ def q_image_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     real bytes, the oracle recomputes the dims from the id formulas."""
     import struct as _s
 
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
     from ..functions.multimodal import parse_image_header
 
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("tiff_fmt", T.StringType()),
-            T.StructField("tiff_w", T.LongType()),
-            T.StructField("tiff_h", T.LongType()),
-            T.StructField("webp_fmt", T.StringType()),
-            T.StructField("webp_w", T.LongType()),
-            T.StructField("webp_h", T.LongType()),
-        ]
-    )
-
-    def _tiff(w: int, h: int, little: bool) -> bytes:
+    def _tiff(i: int) -> bytes:
+        w, h, little = 100 + i % 41, 50 + i % 29, i % 2 == 0
         e = "<" if little else ">"
         hdr = (b"II*\x00" if little else b"MM\x00*") + _s.pack(e + "I", 8)
 
@@ -1687,45 +1543,20 @@ def q_image_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
             + _s.pack(e + "I", 0)
         )
 
-    def _vp8l(w: int, h: int) -> bytes:
-        bits = (w - 1) | ((h - 1) << 14)
+    def _vp8l(i: int) -> bytes:
+        bits = (i % 1000) | ((i % 777) << 14)
         body = b"VP8L" + _s.pack("<I", 5) + b"\x2f" + _s.pack("<I", bits)
         return b"RIFF" + _s.pack("<I", 4 + len(body)) + b"WEBP" + body
 
-    @pandas_udf(out_t)
-    def _hdr(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        rows = []
-        for i in ids:
-            i = int(i)
-            tw, th = 100 + i % 41, 50 + i % 29
-            ww, wh = 1 + i % 1000, 1 + i % 777
-            tf, tpw, tph = parse_image_header(
-                _tiff(tw, th, little=i % 2 == 0)
-            )
-            wf, wpw, wph = parse_image_header(_vp8l(ww, wh))
-            rows.append((tf, tpw, tph, wf, wpw, wph))
-        return pd.DataFrame(
-            {
-                "tiff_fmt": [r[0] for r in rows],
-                "tiff_w": pd.Series([r[1] for r in rows], dtype="int64"),
-                "tiff_h": pd.Series([r[2] for r in rows], dtype="int64"),
-                "webp_fmt": [r[3] for r in rows],
-                "webp_w": pd.Series([r[4] for r in rows], dtype="int64"),
-                "webp_h": pd.Series([r[5] for r in rows], dtype="int64"),
-            }
-        )
-
-    out = d.withColumn("r", _hdr(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.tiff_fmt").alias("tiff_fmt"),
-        F.col("r.tiff_w").alias("tiff_w"),
-        F.col("r.tiff_h").alias("tiff_h"),
-        F.col("r.webp_fmt").alias("webp_fmt"),
-        F.col("r.webp_w").alias("webp_w"),
-        F.col("r.webp_h").alias("webp_h"),
+    d = with_fixture(_doc_ids(spark, sf_dir), _tiff)
+    d = with_fixture(d.withColumnRenamed("content", "tiff"), _vp8l)
+    return _decoded_fields(
+        d,
+        "tiff_fmt string, tiff_w long, tiff_h long,"
+        " webp_fmt string, webp_w long, webp_h long",
+        lambda tiff, webp: (*parse_image_header(tiff),
+                            *parse_image_header(webp)),
+        "tiff", "content",
     )
 
 
@@ -1752,9 +1583,6 @@ def q_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     parses over real bytes; the
     oracle recomputes rates/channels/durations from the id formulas
     (durations are exact integer-floor milliseconds)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
     from ..functions.audio_headers import (
         parse_aiff_header,
         parse_flac_header,
@@ -1767,55 +1595,22 @@ def q_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("mp3_sr", T.LongType()),
-            T.StructField("mp3_ch", T.LongType()),
-            T.StructField("mp3_ms", T.LongType()),
-            T.StructField("flac_sr", T.LongType()),
-            T.StructField("flac_ch", T.LongType()),
-            T.StructField("flac_ms", T.LongType()),
-            T.StructField("opus_sr", T.LongType()),
-            T.StructField("opus_ch", T.LongType()),
-            T.StructField("aiff_sr", T.LongType()),
-            T.StructField("aiff_ch", T.LongType()),
-            T.StructField("aiff_ms", T.LongType()),
-        ]
-    )
+    for c, synth in (("mp3", synth_mp3), ("flac", synth_flac),
+                     ("opus", synth_opus), ("aiff", synth_aiff)):
+        d = with_fixture(d, synth).withColumnRenamed("content", c)
 
-    @pandas_udf(out_t)
-    def _hdr(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        rows = []
-        for i in ids:
-            i = int(i)
-            _mf, msr, mch, mms = parse_mp3_header(synth_mp3(i))
-            _ff, fsr, fch, fms = parse_flac_header(synth_flac(i))
-            _of, osr, och, _oms = parse_opus_header(synth_opus(i))
-            _af, asr, ach, ams = parse_aiff_header(synth_aiff(i))
-            rows.append(
-                (msr, mch, mms, fsr, fch, fms, osr, och, asr, ach, ams)
-            )
-        cols = [
-            "mp3_sr", "mp3_ch", "mp3_ms", "flac_sr", "flac_ch",
-            "flac_ms", "opus_sr", "opus_ch", "aiff_sr", "aiff_ch",
-            "aiff_ms",
-        ]
-        return pd.DataFrame(
-            {
-                c: pd.Series([r[k] for r in rows], dtype="int64")
-                for k, c in enumerate(cols)
-            }
+    def _hdr(mp3, flac, opus, aiff):  # type: ignore[no-untyped-def]
+        return (
+            *parse_mp3_header(mp3)[1:], *parse_flac_header(flac)[1:],
+            *parse_opus_header(opus)[1:3], *parse_aiff_header(aiff)[1:],
         )
 
-    out = d.withColumn("r", _hdr(F.col("doc_id")))
-    return out.select(
-        "doc_id", *[F.col(f"r.{c}").alias(c) for c in (
-            "mp3_sr", "mp3_ch", "mp3_ms", "flac_sr", "flac_ch",
-            "flac_ms", "opus_sr", "opus_ch", "aiff_sr", "aiff_ch",
-            "aiff_ms",
-        )]
+    return _decoded_fields(
+        d,
+        "mp3_sr long, mp3_ch long, mp3_ms long, flac_sr long,"
+        " flac_ch long, flac_ms long, opus_sr long, opus_ch long,"
+        " aiff_sr long, aiff_ch long, aiff_ms long",
+        _hdr, "mp3", "flac", "opus", "aiff",
     )
 
 
@@ -2013,58 +1808,27 @@ def q_audio_dropout(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one Arrow-batched pandas stage over the audio bytes
     (per-row numpy run-length, no shuffle); the oracle's window is the
     verification burden, not the plan's."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.wav import synth_wav_dropout, wav_pcm16_samples
 
-    d = _doc_ids(spark, sf_dir)
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("n_zero", T.LongType()),
-            T.StructField("max_zero_run", T.LongType()),
-            T.StructField("n_dropouts", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _audit(ids):  # type: ignore[no-untyped-def]
+    def _audit(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for i in ids:
-            s = wav_pcm16_samples(synth_wav_dropout(int(i)))
-            z = np.flatnonzero(s == 0)
-            if z.size == 0:
-                rows.append((int(s.size), 0, 0, 0))
-                continue
-            # split the zero-index list into consecutive runs
-            breaks = np.flatnonzero(np.diff(z) > 1)
-            run_lens = np.diff(
-                np.concatenate(([0], breaks + 1, [z.size]))
-            )
-            rows.append(
-                (
-                    int(s.size),
-                    int(z.size),
-                    int(run_lens.max()),
-                    int((run_lens >= 8).sum()),
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=["n_samples", "n_zero", "max_zero_run", "n_dropouts"],
+        s = wav_pcm16_samples(b)
+        z = np.flatnonzero(s == 0)
+        if z.size == 0:
+            return int(s.size), 0, 0, 0
+        # split the zero-index list into consecutive runs
+        breaks = np.flatnonzero(np.diff(z) > 1)
+        run_lens = np.diff(np.concatenate(([0], breaks + 1, [z.size])))
+        return (
+            int(s.size), int(z.size), int(run_lens.max()),
+            int((run_lens >= 8).sum()),
         )
 
-    return d.withColumn("audit", _audit(F.col("doc_id"))).select(
-        "doc_id",
-        F.col("audit.n_samples").alias("n_samples"),
-        F.col("audit.n_zero").alias("n_zero"),
-        F.col("audit.max_zero_run").alias("max_zero_run"),
-        F.col("audit.n_dropouts").alias("n_dropouts"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_dropout),
+        "n_samples long, n_zero long, max_zero_run long, n_dropouts long",
+        _audit,
     )
 
 
@@ -2294,9 +2058,6 @@ def q_webp_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     found, whether any remains after the scrub, and the decoded pixel
     mean of the scrubbed image (proof the scrub never touched image
     bytes). Odd EXIF lengths exercise the RIFF padding rule."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.vp8l import (
         decode_vp8l_pixels,
         extract_webp_still,
@@ -2304,50 +2065,26 @@ def q_webp_exif_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_exif_webp,
     )
 
-    d = _doc_ids(spark, sf_dir)
-
-    out_t = T.StructType(
-        [
-            T.StructField("had_exif", T.BooleanType()),
-            T.StructField("removed_bytes", T.LongType()),
-            T.StructField("clean_after", T.BooleanType()),
-            T.StructField("mean_px", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _scrub(ids):  # type: ignore[no-untyped-def]
+    def _scrub(raw):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for i in ids:
-            raw = synth_exif_webp(int(i))
-            scrubbed, had = scrub_webp_metadata(raw)
-            _again, had2 = scrub_webp_metadata(scrubbed)
-            px = decode_vp8l_pixels(extract_webp_still(scrubbed))
-            rows.append(
-                (
-                    bool(had),
-                    len(raw) - len(scrubbed),
-                    not had2,
-                    int(px.astype(np.int64).sum()) / px.size
-                    if px is not None
-                    else None,
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=["had_exif", "removed_bytes", "clean_after", "mean_px"],
+        scrubbed, had = scrub_webp_metadata(raw)
+        _again, had2 = scrub_webp_metadata(scrubbed)
+        px = decode_vp8l_pixels(extract_webp_still(scrubbed))
+        return (
+            bool(had),
+            len(raw) - len(scrubbed),
+            not had2,
+            int(px.astype(np.int64).sum()) / px.size
+            if px is not None
+            else None,
         )
 
-    a = d.withColumn("s", _scrub(F.col("doc_id")))
-    return a.select(
-        "doc_id",
-        F.col("s.had_exif").alias("had_exif"),
-        F.col("s.removed_bytes").alias("removed_bytes"),
-        F.col("s.clean_after").alias("clean_after"),
-        F.col("s.mean_px").alias("mean_px"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_exif_webp),
+        "had_exif boolean, removed_bytes long, clean_after boolean,"
+        " mean_px double",
+        _scrub,
     )
 
 
@@ -2386,38 +2123,25 @@ def q_audio_dc(spark: SparkSession, sf_dir: str) -> DataFrame:
     REAL RIFF decode (wav_pcm16_samples) on the q_audio_stats fixture
     family, so a re-centering bug flips specific flags. One
     Arrow-batched stage, no shuffle."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    d = _doc_ids(spark, sf_dir)
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("sum_samples", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _dc(ids):  # type: ignore[no-untyped-def]
+    def _dc(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for i in ids:
-            s = wav_pcm16_samples(synth_wav_md5(int(i)))
-            rows.append((int(s.size), int(s.astype(np.int64).sum())))
-        return pd.DataFrame(rows, columns=["n_samples", "sum_samples"])
+        s = wav_pcm16_samples(b)
+        return int(s.size), int(s.astype(np.int64).sum())
 
-    a = d.withColumn("dc", _dc(F.col("doc_id")))
-    n = F.col("dc.n_samples")
-    sm = F.col("dc.sum_samples")
+    a = _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "n_samples long, sum_samples long",
+        _dc,
+    )
+    n = F.col("n_samples")
+    sm = F.col("sum_samples")
     return a.select(
         "doc_id",
-        n.alias("n_samples"),
-        sm.alias("sum_samples"),
+        n,
+        sm,
         (F.round(sm / n, 6) + F.lit(0.0)).alias("dc_mean"),
         (F.abs(sm) > 64 * n).alias("dc_flag"),
     )
@@ -2673,43 +2397,12 @@ def q_video_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic end-to-end (duration is exact floor
     milliseconds). Real parse over real bytes; the oracle recomputes
     every field from the id formulas."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
     from ..functions.audio_headers import parse_mp4_header, synth_mp4
 
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("mp4_timescale", T.LongType()),
-            T.StructField("mp4_tracks", T.LongType()),
-            T.StructField("mp4_ms", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _hdr(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        rows = []
-        for i in ids:
-            _f, ts, nt, ms = parse_mp4_header(synth_mp4(int(i)))
-            rows.append((ts, nt, ms))
-        return pd.DataFrame(
-            {
-                c: pd.Series([r[k] for r in rows], dtype="int64")
-                for k, c in enumerate(
-                    ["mp4_timescale", "mp4_tracks", "mp4_ms"]
-                )
-            }
-        )
-
-    out = d.withColumn("r", _hdr(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.mp4_timescale").alias("mp4_timescale"),
-        F.col("r.mp4_tracks").alias("mp4_tracks"),
-        F.col("r.mp4_ms").alias("mp4_ms"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_mp4),
+        "mp4_timescale long, mp4_tracks long, mp4_ms long",
+        lambda b: parse_mp4_header(b)[1:],
     )
 
 
@@ -2735,57 +2428,21 @@ def q_audio_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparisons on the decoded PCM (threshold on the RAW int16 value),
     so the oracle replays it exactly; docs whose fixture never clears
     the threshold report an empty span (-1, -1, 0)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
+    from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    from ..functions import wav as W
-
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("first_loud", T.LongType()),
-            T.StructField("last_loud", T.LongType()),
-            T.StructField("n_kept", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _tr(ids):  # type: ignore[no-untyped-def]
+    def _trim(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for i in ids:
-            data = W.synth_wav_md5(int(i))
-            x = np.frombuffer(data[44:], dtype="<i2").astype(np.int64)
-            loud = np.abs(x) >= TRIM_THRESHOLD
-            idx = np.flatnonzero(loud)
-            if idx.size:
-                rows.append(
-                    (x.size, int(idx[0]), int(idx[-1]),
-                     int(idx[-1] - idx[0] + 1))
-                )
-            else:
-                rows.append((x.size, -1, -1, 0))
-        return pd.DataFrame(
-            {
-                "n_samples": pd.Series([r[0] for r in rows], dtype="int64"),
-                "first_loud": pd.Series(
-                    [r[1] for r in rows], dtype="int64"
-                ),
-                "last_loud": pd.Series([r[2] for r in rows], dtype="int64"),
-                "n_kept": pd.Series([r[3] for r in rows], dtype="int64"),
-            }
-        )
+        x = wav_pcm16_samples(b).astype(np.int64)
+        idx = np.flatnonzero(np.abs(x) >= TRIM_THRESHOLD)
+        if idx.size == 0:
+            return x.size, -1, -1, 0
+        return x.size, int(idx[0]), int(idx[-1]), int(idx[-1] - idx[0] + 1)
 
-    out = d.withColumn("r", _tr(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_samples").alias("n_samples"),
-        F.col("r.first_loud").alias("first_loud"),
-        F.col("r.last_loud").alias("last_loud"),
-        F.col("r.n_kept").alias("n_kept"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "n_samples long, first_loud long, last_loud long, n_kept long",
+        _trim,
     )
 
 
@@ -2823,57 +2480,23 @@ def q_audio_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     passed through unchanged. Reports the clip's original peak, the
     post-gain peak (32767 unless silent), and the exact post-gain
     absolute sum (the energy figure a curation filter thresholds)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
+    from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    from ..functions import wav as W
-
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("peak", T.LongType()),
-            T.StructField("norm_peak", T.LongType()),
-            T.StructField("norm_abs_sum", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _nm(ids):  # type: ignore[no-untyped-def]
+    def _norm(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for i in ids:
-            data = W.synth_wav_md5(int(i))
-            x = np.frombuffer(data[44:], dtype="<i2").astype(np.int64)
-            peak = int(np.abs(x).max()) if x.size else 0
-            if peak == 0:
-                y = x
-            else:
-                y = np.sign(x) * (np.abs(x) * 32767 // peak)
-            rows.append(
-                (x.size, peak, int(np.abs(y).max()) if y.size else 0,
-                 int(np.abs(y).sum()))
-            )
-        return pd.DataFrame(
-            {
-                "n_samples": pd.Series([r[0] for r in rows], dtype="int64"),
-                "peak": pd.Series([r[1] for r in rows], dtype="int64"),
-                "norm_peak": pd.Series([r[2] for r in rows], dtype="int64"),
-                "norm_abs_sum": pd.Series(
-                    [r[3] for r in rows], dtype="int64"
-                ),
-            }
+        x = wav_pcm16_samples(b).astype(np.int64)
+        peak = int(np.abs(x).max()) if x.size else 0
+        y = x if peak == 0 else np.sign(x) * (np.abs(x) * 32767 // peak)
+        return (
+            x.size, peak, int(np.abs(y).max()) if y.size else 0,
+            int(np.abs(y).sum()),
         )
 
-    out = d.withColumn("r", _nm(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_samples").alias("n_samples"),
-        F.col("r.peak").alias("peak"),
-        F.col("r.norm_peak").alias("norm_peak"),
-        F.col("r.norm_abs_sum").alias("norm_abs_sum"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "n_samples long, peak long, norm_peak long, norm_abs_sum long",
+        _norm,
     )
 
 
@@ -2914,67 +2537,33 @@ def q_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats. The fixture rates make every interpolation position a dyadic
     rational, so the oracle replays the interpolation arithmetic
     bit-for-bit in SQL — no tolerance anywhere."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
-
-    from ..functions import wav as W
-
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("sr_in", T.IntegerType()),
-            T.StructField("n_in", T.LongType()),
-            T.StructField("n_out", T.LongType()),
-            T.StructField("rms_out", T.DoubleType()),
-            T.StructField("peak_out", T.DoubleType()),
-        ]
+    from ..functions.wav import (
+        resample_linear,
+        synth_wav_md5,
+        wav_pcm16_frames,
     )
 
-    @pandas_udf(out_t)
-    def _rs(ids):  # type: ignore[no-untyped-def]
+    def _rs(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for i in ids:
-            data = W.synth_wav_md5(int(i))
-            _dur, sr = W.parse_wav_header(data)
-            _r, _p, _c, n_in = W.wav_pcm_stats(data)
-            # re-decode the raw ints for the interpolation (stats are
-            # normalized; interp runs on the [-1, 1) samples)
-            import struct as _s
-
-            body = data[44:]
-            x = np.frombuffer(body, dtype="<i2").astype(np.float64) / 32768.0
-            y = W.resample_linear(x, sr, RESAMPLE_SR)
-            rows.append(
-                (
-                    int(sr),
-                    int(x.size),
-                    int(y.size),
-                    float(np.sqrt(np.mean(y * y))) if y.size else 0.0,
-                    float(np.max(np.abs(y))) if y.size else 0.0,
-                )
-            )
-        return pd.DataFrame(
-            {
-                "sr_in": pd.Series([r[0] for r in rows], dtype="int32"),
-                "n_in": pd.Series([r[1] for r in rows], dtype="int64"),
-                "n_out": pd.Series([r[2] for r in rows], dtype="int64"),
-                "rms_out": pd.Series([r[3] for r in rows], dtype="float64"),
-                "peak_out": pd.Series([r[4] for r in rows], dtype="float64"),
-            }
+        s, sr, _ch = wav_pcm16_frames(b)
+        # interpolation runs on the [-1, 1) samples
+        x = s.astype(np.float64) / 32768.0
+        y = resample_linear(x, sr, RESAMPLE_SR)
+        return (
+            sr,
+            x.size,
+            y.size,
+            float(np.sqrt(np.mean(y * y))) if y.size else 0.0,
+            float(np.max(np.abs(y))) if y.size else 0.0,
         )
 
-    out = d.withColumn("r", _rs(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.sr_in").alias("sr_in"),
-        F.col("r.n_in").alias("n_in"),
-        F.col("r.n_out").alias("n_out"),
-        sround(F.col("r.rms_out"), 6).alias("rms_out"),
-        F.col("r.peak_out").alias("peak_out"),
+    r = _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "sr_in int, n_in long, n_out long, rms_out double, peak_out double",
+        _rs,
     )
+    return r.withColumn("rms_out", sround(F.col("rms_out"), 6))
 
 
 ORACLE_AUDIO_RESAMPLE = f"""
@@ -3027,62 +2616,27 @@ def q_audio_downmix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact (l + r) * 0.5 power-of-two scaling, report frame count
     and mono signal stats. Every arithmetic step is exact-in-double, so
     the oracle replays it with no tolerance."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql import types as T
+    from ..functions.wav import downmix_stereo, synth_wav_md5_stereo
 
-    from ..functions import wav as W
-
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("sampling_rate", T.IntegerType()),
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("rms_mono", T.DoubleType()),
-            T.StructField("peak_mono", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _dm(ids):  # type: ignore[no-untyped-def]
+    def _dm(b):  # type: ignore[no-untyped-def]
         import math
 
-        import pandas as pd
-
-        rows = []
-        for i in ids:
-            mono, sr = W.downmix_stereo(W.synth_wav_md5_stereo(int(i)))
-            nfr = len(mono)
-            rows.append(
-                (
-                    sr,
-                    nfr,
-                    math.sqrt(sum(p * p for p in mono) / nfr)
-                    if nfr
-                    else 0.0,
-                    max(abs(p) for p in mono) if nfr else 0.0,
-                )
-            )
-        return pd.DataFrame(
-            {
-                "sampling_rate": pd.Series(
-                    [r[0] for r in rows], dtype="int32"
-                ),
-                "n_frames": pd.Series([r[1] for r in rows], dtype="int64"),
-                "rms_mono": pd.Series([r[2] for r in rows], dtype="float64"),
-                "peak_mono": pd.Series(
-                    [r[3] for r in rows], dtype="float64"
-                ),
-            }
+        mono, sr = downmix_stereo(b)
+        nfr = len(mono)
+        return (
+            sr,
+            nfr,
+            math.sqrt(sum(p * p for p in mono) / nfr) if nfr else 0.0,
+            max(abs(p) for p in mono) if nfr else 0.0,
         )
 
-    out = d.withColumn("r", _dm(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.sampling_rate").alias("sampling_rate"),
-        F.col("r.n_frames").alias("n_frames"),
-        sround(F.col("r.rms_mono"), 6).alias("rms_mono"),
-        F.col("r.peak_mono").alias("peak_mono"),
+    r = _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5_stereo),
+        "sampling_rate int, n_frames long, rms_mono double,"
+        " peak_mono double",
+        _dm,
     )
+    return r.withColumn("rms_mono", sround(F.col("rms_mono"), 6))
 
 
 ORACLE_AUDIO_DOWNMIX = """
@@ -3770,60 +3324,31 @@ def q_audio_clipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle replays the run structure as gaps-and-islands over the
     md5 sample formula, so an off-by-one in the run merge fails the
     hash. Row-wise pandas UDF, shuffle-free."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_samples", T.LongType()),
-            T.StructField("n_clipped", T.LongType()),
-            T.StructField("max_run", T.LongType()),
-            T.StructField("clip_ratio", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _clip(content):  # type: ignore[no-untyped-def]
+    def _clip(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for b in content:
-            bb = bytes(b) if b is not None else None
-            s = wav_pcm16_samples(bb)
-            if s is None or s.size == 0:
-                rows.append((None, None, None, None))
-                continue
-            c = np.abs(s.astype(np.int64)) >= CLIP_T
-            n_clip = int(c.sum())
-            if n_clip == 0:
-                max_run = 0
-            else:
-                # run lengths: split the clipped mask at the edges
-                edges = np.flatnonzero(np.diff(c.astype(np.int8)))
-                bounds = np.concatenate(([0], edges + 1, [c.size]))
-                lens = np.diff(bounds)
-                starts_clipped = c[bounds[:-1]]
-                max_run = int(lens[starts_clipped].max())
-            rows.append(
-                (s.size, n_clip, max_run, n_clip / s.size)
-            )
-        return pd.DataFrame(
-            rows,
-            columns=["n_samples", "n_clipped", "max_run", "clip_ratio"],
-        )
+        s = wav_pcm16_samples(b)
+        if s is None or s.size == 0:
+            return None
+        c = np.abs(s.astype(np.int64)) >= CLIP_T
+        n_clip = int(c.sum())
+        if n_clip == 0:
+            max_run = 0
+        else:
+            # run lengths: split the clipped mask at the edges
+            edges = np.flatnonzero(np.diff(c.astype(np.int8)))
+            bounds = np.concatenate(([0], edges + 1, [c.size]))
+            lens = np.diff(bounds)
+            starts_clipped = c[bounds[:-1]]
+            max_run = int(lens[starts_clipped].max())
+        return s.size, n_clip, max_run, n_clip / s.size
 
-    out = d.withColumn("r", _clip(F.col("content")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_samples").alias("n_samples"),
-        F.col("r.n_clipped").alias("n_clipped"),
-        F.col("r.max_run").alias("max_run"),
-        F.col("r.clip_ratio").alias("clip_ratio"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "n_samples long, n_clipped long, max_run long, clip_ratio double",
+        _clip,
     )
 
 
@@ -3873,59 +3398,26 @@ def q_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pure int64 (16-bit samples² × 16 ≤ 2^34), so the argmax is
     engine-exact. Row-wise pandas UDF over the decoded PCM; the oracle
     rebuilds frames with a range join on the md5 formula."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.wav import synth_wav_md5, wav_pcm16_samples
 
-    d = with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5)
-
-    out_t = T.StructType(
-        [
-            T.StructField("n_frames", T.LongType()),
-            T.StructField("peak_frame", T.LongType()),
-            T.StructField("peak_energy", T.LongType()),
-            T.StructField("mean_energy", T.DoubleType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _frames(content):  # type: ignore[no-untyped-def]
+    def _frames(b):  # type: ignore[no-untyped-def]
         import numpy as np
-        import pandas as pd
 
-        rows = []
-        for b in content:
-            bb = bytes(b) if b is not None else None
-            s = wav_pcm16_samples(bb)
-            if s is None or s.size < AW_WIN:
-                rows.append((None, None, None, None))
-                continue
-            v = s.astype(np.int64)
-            nf = (v.size - AW_WIN) // AW_HOP + 1
-            idx = (
-                np.arange(nf)[:, None] * AW_HOP
-                + np.arange(AW_WIN)[None, :]
-            )
-            en = (v[idx] ** 2).sum(axis=1)
-            pk = int(en.argmax())  # numpy argmax = first max (tie rule)
-            rows.append(
-                (nf, pk, int(en[pk]), float(en.sum()) / nf)
-            )
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "n_frames", "peak_frame", "peak_energy", "mean_energy",
-            ],
-        )
+        s = wav_pcm16_samples(b)
+        if s is None or s.size < AW_WIN:
+            return None
+        v = s.astype(np.int64)
+        nf = (v.size - AW_WIN) // AW_HOP + 1
+        idx = np.arange(nf)[:, None] * AW_HOP + np.arange(AW_WIN)[None, :]
+        en = (v[idx] ** 2).sum(axis=1)
+        pk = int(en.argmax())  # numpy argmax = first max (tie rule)
+        return nf, pk, int(en[pk]), float(en.sum()) / nf
 
-    out = d.withColumn("r", _frames(F.col("content")))
-    return out.select(
-        "doc_id",
-        F.col("r.n_frames").alias("n_frames"),
-        F.col("r.peak_frame").alias("peak_frame"),
-        F.col("r.peak_energy").alias("peak_energy"),
-        F.col("r.mean_energy").alias("mean_energy"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_wav_md5),
+        "n_frames long, peak_frame long, peak_energy long,"
+        " mean_energy double",
+        _frames,
     )
 
 
@@ -3976,36 +3468,12 @@ def q_audio_aac(spark: SparkSession, sf_dir: str) -> DataFrame:
     the walk to size every frame from its own header. Row-wise pandas
     UDF; the oracle replays rate/channels/duration from the id
     formulas with the table as a literal CASE."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.audio_headers import parse_adts_header, synth_adts
 
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("aac_sr", T.LongType()),
-            T.StructField("aac_ch", T.LongType()),
-            T.StructField("aac_ms", T.LongType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _hdr(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        rows = []
-        for i in ids:
-            _f, sr, ch, ms = parse_adts_header(synth_adts(int(i)))
-            rows.append((sr, ch, ms))
-        return pd.DataFrame(rows, columns=["aac_sr", "aac_ch", "aac_ms"])
-
-    out = d.withColumn("r", _hdr(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.aac_sr").alias("aac_sr"),
-        F.col("r.aac_ch").alias("aac_ch"),
-        F.col("r.aac_ms").alias("aac_ms"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_adts),
+        "aac_sr long, aac_ch long, aac_ms long",
+        lambda b: parse_adts_header(b)[1:],
     )
 
 
@@ -4043,48 +3511,13 @@ def q_ogg_pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     pandas UDF over synthesized streams; the oracle replays
     pages/packets/granule from the id formulas (n_packets =
     5·n_pages − 3 is a construction invariant of the fixture)."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.audio_headers import parse_ogg_pages, synth_ogg_stream
 
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("ogg_pages", T.LongType()),
-            T.StructField("ogg_packets", T.LongType()),
-            T.StructField("ogg_granule", T.LongType()),
-            T.StructField("ogg_crc_ok", T.BooleanType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _walk(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        rows = []
-        for i in ids:
-            pages, packets, gran, ok = parse_ogg_pages(
-                synth_ogg_stream(int(i))
-            )
-            rows.append((pages, packets, gran, ok))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "ogg_pages",
-                "ogg_packets",
-                "ogg_granule",
-                "ogg_crc_ok",
-            ],
-        )
-
-    out = d.withColumn("r", _walk(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.ogg_pages").alias("ogg_pages"),
-        F.col("r.ogg_packets").alias("ogg_packets"),
-        F.col("r.ogg_granule").alias("ogg_granule"),
-        F.col("r.ogg_crc_ok").alias("ogg_crc_ok"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_ogg_stream),
+        "ogg_pages long, ogg_packets long, ogg_granule long,"
+        " ogg_crc_ok boolean",
+        parse_ogg_pages,
     )
 
 
@@ -4112,49 +3545,13 @@ def q_ebml_walk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster varies in size. Row-wise pandas UDF; the oracle replays
     counts/depth/leaf bytes from the id formulas, recomputing the
     variable block sizes with a generate_series sum."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
     from ..functions.audio_headers import parse_ebml, synth_ebml
 
-    d = _doc_ids(spark, sf_dir)
-    out_t = T.StructType(
-        [
-            T.StructField("ebml_elems", T.LongType()),
-            T.StructField("ebml_depth", T.LongType()),
-            T.StructField("ebml_clusters", T.LongType()),
-            T.StructField("ebml_leaf_bytes", T.LongType()),
-            T.StructField("ebml_ok", T.BooleanType()),
-        ]
-    )
-
-    @pandas_udf(out_t)
-    def _walk(ids):  # type: ignore[no-untyped-def]
-        import pandas as pd
-
-        rows = []
-        for i in ids:
-            n, depth, nc, leaf, ok = parse_ebml(synth_ebml(int(i)))
-            rows.append((n, depth, nc, leaf, ok))
-        return pd.DataFrame(
-            rows,
-            columns=[
-                "ebml_elems",
-                "ebml_depth",
-                "ebml_clusters",
-                "ebml_leaf_bytes",
-                "ebml_ok",
-            ],
-        )
-
-    out = d.withColumn("r", _walk(F.col("doc_id")))
-    return out.select(
-        "doc_id",
-        F.col("r.ebml_elems").alias("ebml_elems"),
-        F.col("r.ebml_depth").alias("ebml_depth"),
-        F.col("r.ebml_clusters").alias("ebml_clusters"),
-        F.col("r.ebml_leaf_bytes").alias("ebml_leaf_bytes"),
-        F.col("r.ebml_ok").alias("ebml_ok"),
+    return _decoded_fields(
+        with_fixture(_doc_ids(spark, sf_dir), synth_ebml),
+        "ebml_elems long, ebml_depth long, ebml_clusters long,"
+        " ebml_leaf_bytes long, ebml_ok boolean",
+        parse_ebml,
     )
 
 

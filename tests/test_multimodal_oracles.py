@@ -26,6 +26,19 @@ sys.path.insert(
 
 from check import TABLES, table_hash  # noqa: E402
 
+# decoded through ``_decoded_fields``: a NULL fixture is a NULL row
+DECODED_FIELD_QUERIES = [
+    # images and video
+    "q_image_tiles", "q_tga_pixels", "q_qoi_pixels", "q_image_headers",
+    "q_video_headers", "q_webp_exif_scrub",
+    # audio
+    "q_flac_decode", "q_audio_aiff", "q_audio_au", "q_audio_transcode",
+    "q_audio_zcr", "q_audio_vad", "q_audio_clipping", "q_audio_windows",
+    "q_audio_dc", "q_audio_trim", "q_audio_normalize", "q_audio_resample",
+    "q_audio_downmix", "q_audio_dropout", "q_audio_headers", "q_audio_aac",
+    "q_ogg_pages", "q_ebml_walk",
+]
+
 FIXTURE_QUERIES = [
     # images ending in the pixel probe
     "q_image_resize", "q_png_pixels", "q_gif_pixels", "q_png_palette",
@@ -34,16 +47,14 @@ FIXTURE_QUERIES = [
     "q_pnm_pixels", "q_tiff_pixels", "q_webp_pixels", "q_webp_lz77",
     "q_webp_palette", "q_webp_predictor", "q_webp_color", "q_webp_meta",
     # other image and video decoders
-    "q_image_tiles", "q_tga_pixels", "q_qoi_pixels", "q_gif_anim",
-    "q_webp_anim", "q_exif_scrub", "q_image_dhash", "q_image_neardup",
-    "q_video_frames", "q_mjpeg_frames", "q_rle_frames", "q_msvc_frames",
+    "q_gif_anim", "q_webp_anim", "q_exif_scrub", "q_image_dhash",
+    "q_image_neardup", "q_video_frames", "q_mjpeg_frames", "q_rle_frames",
+    "q_msvc_frames",
     # audio
     "q_audio_stats", "q_audio_ulaw", "q_audio_alaw", "q_audio_pcm8",
     "q_audio_float32", "q_audio_extensible", "q_audio_adpcm",
-    "q_flac_decode", "q_audio_aiff", "q_audio_au", "q_audio_transcode",
-    "q_audio_zcr", "q_audio_vad", "q_audio_clipping", "q_audio_windows",
     "q_audio_fingerprint", "q_audio_neardup",
-]
+] + DECODED_FIELD_QUERIES
 
 FRAGMENT_QUERIES = [
     # word n-gram shingles, Jaccard pairs and the near-dup CC closure
@@ -79,7 +90,7 @@ def oracle_con(sf_dir):
 def test_fixture_query_list_is_complete():
     from audios_to_dataset_spark.plans import all_oracles, multimodal
 
-    assert len(FIXTURE_QUERIES) == len(set(FIXTURE_QUERIES)) == 47
+    assert len(FIXTURE_QUERIES) == len(set(FIXTURE_QUERIES)) == 60
     assert set(FIXTURE_QUERIES) <= set(multimodal.QUERIES)
     assert set(FIXTURE_QUERIES) <= set(multimodal.ORACLES)
     # every oracle holding the text of a shingle, MinHash, LSH-bucket,
@@ -103,3 +114,30 @@ def test_fixture_query_matches_oracle(spark, sf_dir, oracle_con, name):
     assert rows
     assert (len(rows), table_hash(cols, rows)) == (
         len(orows), table_hash(ocols, orows))
+
+
+def test_null_doc_id_gives_null_fields(spark, sf_dir, tmp_path):
+    """A NULL doc_id gets NULL fixture bytes from ``with_fixture`` and so
+    a row of NULL fields, not a failed batch; every other row decodes."""
+    from audios_to_dataset_spark.plans import all_queries
+
+    con = duckdb.connect()
+    con.execute(
+        "COPY (SELECT * REPLACE (CASE WHEN doc_id % 7 = 0 THEN NULL"
+        f" ELSE doc_id END AS doc_id) FROM '{sf_dir}/documents.parquet')"
+        f" TO '{tmp_path}/documents.parquet' (FORMAT PARQUET)"
+    )
+    n_docs, n_null = con.execute(
+        f"SELECT COUNT(*), COUNT(*) - COUNT(doc_id)"
+        f" FROM '{tmp_path}/documents.parquet'"
+    ).fetchone()
+    con.close()
+    assert n_null > 0
+    for name in DECODED_FIELD_QUERIES:
+        rows = all_queries()[name](spark, str(tmp_path)).collect()
+        assert len(rows) == n_docs, name
+        null_rows = [r for r in rows if r["doc_id"] is None]
+        assert len(null_rows) == n_null, name
+        assert all(v is None for r in null_rows for v in r[1:]), name
+        assert all(v is not None for r in rows if r["doc_id"] is not None
+                   for v in r[1:]), name

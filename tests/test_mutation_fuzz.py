@@ -36,9 +36,12 @@ from audios_to_dataset_spark.functions.vp8l import (
     encode_vp8l_lz77,
 )
 from audios_to_dataset_spark.functions.wav import (
+    downmix_stereo,
     parse_wav_header,
+    segment_wav_bytes,
     synth_wav,
     wav_pcm16_frames,
+    wav_pcm16_samples,
     wav_pcm_stats,
 )
 
@@ -63,6 +66,9 @@ def _wav_all(b: bytes):
     parse_wav_header(b)
     wav_pcm16_frames(b)
     wav_pcm_stats(b)
+    segment_wav_bytes(b, 0.005)
+    downmix_stereo(b)
+    wav_pcm16_samples(b)
 
 
 def test_decoders_never_raise_on_mutated_valid_streams():

@@ -7,8 +7,11 @@ of exactly `sample_rate` samples → duration exactly 1.0 s; parse failures
 
 from __future__ import annotations
 
+import struct
+
 import pytest
 
+from audios_to_dataset_spark.functions import wav as W
 from audios_to_dataset_spark.functions.wav import parse_wav_header, synth_wav
 
 
@@ -86,26 +89,85 @@ def test_segment_wav_bytes_roundtrip():
     assert segment_wav_bytes(None, 0.25) == []
 
 
-def test_segment_wavs_spark(spark, tmp_path):
-    import os
+def _chunk(cid: bytes, body: bytes) -> bytes:
+    pad = b"\x00" * (len(body) & 1)
+    return cid + struct.pack("<I", len(body)) + body + pad
 
-    from audios_to_dataset_spark.functions.wav import segment_wavs, synth_wav
-    from audios_to_dataset_spark.sources.binary_scan import scan_audio_files
 
-    for i in range(3):
-        (tmp_path / f"c{i}.wav").write_bytes(
-            synth_wav(16000, n_samples=16000 * (i + 1))
-        )
-    files = scan_audio_files(spark, str(tmp_path))
-    segs = segment_wavs(files, seg_seconds=1.0).collect()
-    # 1 + 2 + 3 one-second segments
-    assert len(segs) == 6
-    by_file = {}
-    for r in segs:
-        by_file.setdefault(os.path.basename(r.path), []).append(r)
-    assert sorted(len(v) for v in by_file.values()) == [1, 2, 3]
-    assert all(r.seg_duration == 1.0 for r in segs)
-    assert all(r.seg_bytes[:4] == b"RIFF" for r in segs)
+def _riff(*chunks: bytes, form: bytes = b"WAVE") -> bytes:
+    body = b"".join(chunks)
+    return b"RIFF" + struct.pack("<I", 4 + len(body)) + form + body
+
+
+# 10 stereo PCM16 frames at 8 Hz, so 0.5 s segments hold 4 frames
+_FMT = struct.pack("<HHIIHH", 1, 2, 8, 32, 4, 16)
+_PCM = struct.pack("<20h", *range(-10, 10))
+_EXT_FMT = (
+    struct.pack("<HHIIHH", 0xFFFE, 2, 8, 32, 4, 16)
+    + struct.pack("<HHI", 22, 16, 3)
+    + struct.pack("<H", 1) + W._KSDATAFORMAT_SUFFIX
+)
+_WALK_CASES = {
+    # an odd-sized chunk is followed by its pad byte
+    "odd_list_before_data": _riff(
+        _chunk(b"fmt ", _FMT), _chunk(b"LIST", b"INFOx"),
+        _chunk(b"data", _PCM),
+    ),
+    "fmt_after_data": _riff(_chunk(b"data", _PCM), _chunk(b"fmt ", _FMT)),
+    "last_fmt_and_data_win": _riff(
+        _chunk(b"fmt ", struct.pack("<HHIIHH", 1, 1, 8, 8, 1, 8)),
+        _chunk(b"data", _PCM[:6]), _chunk(b"fmt ", _FMT),
+        _chunk(b"data", _PCM),
+    ),
+    "extensible": _riff(_chunk(b"fmt ", _EXT_FMT), _chunk(b"data", _PCM)),
+    "not_wave": _riff(
+        _chunk(b"fmt ", _FMT), _chunk(b"data", _PCM), form=b"AVI "
+    ),
+}
+# decoder -> its result on bytes it does not decode
+_DECODERS = {
+    "parse_wav_header": (0.0, 0),
+    "wav_pcm_stats": (0.0, 0.0, 0.0, 0),
+    "wav_pcm16_samples": None,
+    "wav_pcm16_frames": None,
+    "downmix_stereo": ([], 0),
+    "segment_wav_bytes": [],
+}
+_PCM16_ONLY = {"wav_pcm16_samples", "wav_pcm16_frames", "downmix_stereo"}
+
+
+def _decode(name: str, data: bytes):
+    """The decoder's result with arrays and segments made comparable."""
+    import numpy as np
+
+    if name == "segment_wav_bytes":
+        return [
+            (i, st, dur, parse_wav_header(seg), seg[W.wav_walk(seg)[6]:])
+            for i, st, dur, seg in W.segment_wav_bytes(data, 0.5)
+        ]
+    out = getattr(W, name)(data)
+    if isinstance(out, np.ndarray):
+        return out.tobytes()
+    if name == "wav_pcm16_frames" and out is not None:
+        return (out[0].tobytes(),) + out[1:]
+    return out
+
+
+@pytest.mark.parametrize("case", sorted(_WALK_CASES))
+@pytest.mark.parametrize("name", sorted(_DECODERS))
+def test_riff_walk_semantics(name, case):
+    """Every decoder reads the one chunk walk: a layout the walk accepts
+    decodes like the plain ``fmt ``+``data`` file; a non-WAVE form is
+    undecodable everywhere; WAVE_FORMAT_EXTENSIBLE is resolved by
+    ``wav_pcm_stats`` (and carried by the header parse and the
+    segmenter) but rejected by the PCM16-only decoders."""
+    plain = _decode(name, W.wav_bytes(_FMT, _PCM))
+    assert plain != _DECODERS[name]
+    got = _decode(name, _WALK_CASES[case])
+    if case == "not_wave" or (case == "extensible" and name in _PCM16_ONLY):
+        assert got == _DECODERS[name]
+    else:
+        assert got == plain
 
 
 def test_wav_stats_sine(spark):
@@ -116,13 +178,13 @@ def test_wav_stats_sine(spark):
 
     from audios_to_dataset_spark.functions.wav import (
         synth_wav,
-        with_wav_stats,
+        wav_stats,
     )
 
     df = spark.createDataFrame(
         [(synth_wav(sample_rate=8000),)], "content binary"
     )
-    row = df.select(with_wav_stats(F.col("content")).alias("s")).select(
+    row = df.select(wav_stats(F.col("content")).alias("s")).select(
         "s.*"
     ).collect()[0]
     assert row.n_samples == 8000
@@ -137,14 +199,14 @@ def test_wav_stats_silence_and_garbage(spark):
 
     from audios_to_dataset_spark.functions.wav import (
         synth_wav,
-        with_wav_stats,
+        wav_stats,
     )
 
     silent = synth_wav(sample_rate=1000, freq_hz=0.0)
     df = spark.createDataFrame(
         [(silent,), (b"not a wav",), (None,)], "content binary"
     )
-    rows = df.select(with_wav_stats(F.col("content")).alias("s")).select(
+    rows = df.select(wav_stats(F.col("content")).alias("s")).select(
         "s.*"
     ).collect()
     assert rows[0].rms == 0.0 and rows[0].n_samples == 1000
@@ -426,9 +488,7 @@ def test_vad_segments():
     # hand-built: 3 frames voiced-silent-voiced + 10 trailing samples
     def wav(samples):
         body = b"".join(_s.pack("<h", x) for x in samples)
-        hdr = b"RIFF" + _s.pack("<I", 36 + len(body)) + b"WAVE"
-        fmt = b"fmt " + _s.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
-        return hdr + fmt + b"data" + _s.pack("<I", len(body)) + body
+        return W.wav_bytes(_s.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16), body)
 
     loud = [9000 if i % 2 == 0 else -9000 for i in range(40)]
     sig = loud + [0] * 40 + loud + [9000] * 10  # partial tail dropped
