@@ -42,8 +42,6 @@ from pyspark.sql import functions as F
 
 from .operators import dedup as D
 
-NUM_HASHES = 16
-BAND_SIZE = 4
 NGRAM_N = 3
 
 
@@ -63,31 +61,13 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def near_dedup(docs: DataFrame, est_threshold: float) -> DataFrame:
-    # cut here too: the signatures are joined again below, outside
-    # lsh_candidate_pairs' own checkpoint
-    sigs = D.minhash_signatures(
-        docs, num_hashes=NUM_HASHES, n=NGRAM_N
-    ).localCheckpoint(eager=True)
-    pairs = D.lsh_candidate_pairs(
-        sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
-    )
-    a = sigs.select(
-        F.col("id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    b = sigs.select(
-        F.col("id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    )
+    sigs = D.minhash_signatures(docs, n=NGRAM_N)
+    pairs = D.lsh_candidate_pairs(sigs)
+    est = F.col("agree").cast("double") / float(D.NUM_HASHES)
     # doc_a < doc_b by construction: doc_b is the younger duplicate
     drops = (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .filter(agree.cast("double") / float(NUM_HASHES) >= est_threshold)
+        D.minhash_agreement(pairs, sigs, sigs)
+        .filter(est >= est_threshold)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )

@@ -318,10 +318,15 @@ def wav_pcm_stats(data: bytes | None) -> tuple[float, float, float, int]:
             ints = np.array(decoded, dtype=np.float64)
         elif tag == 3 and bits == 32 and body_len >= 4:
             # IEEE float samples are already normalized; scale up so the
-            # shared /32768 below is a no-op (exact power-of-two scaling)
-            ints = np.frombuffer(
+            # shared /32768 below is a no-op (exact power-of-two scaling).
+            # NaN/inf make the stream malformed; finite samples past
+            # ±1.0 clamp to full scale, so they count as clipped.
+            floats = np.frombuffer(
                 data, dtype="<f4", count=body_len // 4, offset=body_off
-            ).astype(np.float64) * 32768.0
+            ).astype(np.float64)
+            if not np.isfinite(floats).all():
+                return 0.0, 0.0, 0.0, 0
+            ints = np.clip(floats, -1.0, 1.0) * 32768.0
         else:
             return 0.0, 0.0, 0.0, 0
         pcm = ints / 32768.0

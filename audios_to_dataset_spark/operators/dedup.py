@@ -16,6 +16,14 @@ Scale notes (100 TB design point):
   transforms of the per-doc shingle array — no explode, no shuffle; LSH
   banding then buckets signatures so candidate generation is an equi-join
   on (band_id, band_key) — broadcast-free, skew-safe.
+
+MinHash-LSH has one shape: ``NUM_HASHES`` = 16 components, banded into
+16 / ``BAND_SIZE`` = 4 bands of 4 rows. ``minhash_signatures`` cuts its
+frame once with an eager ``localCheckpoint`` (every consumer reads it at
+least 4 times: once per band, again per agreement side), and every
+consumer builds on the three pieces below it: ``lsh_bands`` (the one band
+table), ``cross_lsh_candidates`` / ``lsh_candidate_pairs`` (the band
+equi-join) and ``minhash_agreement`` (the one equal-component count).
 """
 
 from __future__ import annotations
@@ -25,6 +33,8 @@ from pyspark.sql import functions as F
 
 from ..plans._util import sround
 
+NUM_HASHES = 16  # MinHash components per signature
+BAND_SIZE = 4  # signature components per LSH band
 
 def normalized_text(col: str | Column = "text") -> Column:
     """Lowercased, alnum-only content normalization for exact dedup."""
@@ -203,14 +213,28 @@ def ngram_jaccard_pairs(
 
 def minhash_signatures(
     df: DataFrame,
-    num_hashes: int = 16,
     n: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """MinHash signatures: hash family i is the 8-hex-char chunk
-    ``substr(md5((i//4) || ':' || shingle), (i%4)*8+1, 8)`` — 4 independent
-    32-bit hashes per md5 call — and mh_i = min over the doc's shingles.
+    """(id, mh0 .. mh15) MinHash signatures, cut once with an eager
+    ``localCheckpoint``: the signature fold is a long HOF pipeline and
+    every consumer reads the frame once per band and once per agreement
+    side, so uncut it would recompute 4-10 times (sf0.1, 4 cores,
+    build+exec median of q_dedup_minhash_lsh: cache 2.9 s, no cut
+    9.4 s, checkpoint 2.8 s). No cache outlives the call."""
+    return _signature_fold(df, n, id_col, text_col).localCheckpoint(
+        eager=True
+    )
+
+
+def _signature_fold(
+    df: DataFrame, n: int, id_col: str, text_col: str
+) -> DataFrame:
+    """The uncut signatures of ``minhash_signatures``: hash family i is
+    the 8-hex-char chunk ``substr(md5((i//4) || ':' || shingle),
+    (i%4)*8+1, 8)`` — 4 independent 32-bit hashes per md5 call — and
+    mh_i = min over the doc's shingles.
 
     String-min over fixed-width hex is a valid uniform min-hash and is
     reproducible in any engine with md5 (the DuckDB oracle uses the
@@ -231,7 +255,7 @@ def minhash_signatures(
     arr = shingle_arrays(df, id_col, text_col, n).filter(
         F.size("grams") > 0  # docs shorter than n tokens have no signature
     )
-    n_digests = (num_hashes + 3) // 4
+    n_digests = (NUM_HASHES + 3) // 4
 
     # Two array passes total: (1) one transform hashes each shingle into
     # a struct of its k/4 digests (md5 exactly once per shingle per
@@ -252,11 +276,11 @@ def minhash_signatures(
     digest_fields = ", ".join(
         f"'d{s}', md5(concat('{s}:', g))" for s in range(n_digests)
     )
-    init_fields = ", ".join(f"'m{i}', '~'" for i in range(num_hashes))
+    init_fields = ", ".join(f"'m{i}', '~'" for i in range(NUM_HASHES))
     merge_fields = ", ".join(
         f"'m{i}', least(acc.m{i}, "
         f"substring(x.d{i // 4}, {(i % 4) * 8 + 1}, 8))"
-        for i in range(num_hashes)
+        for i in range(NUM_HASHES)
     )
     packed = arr.select(
         "id",
@@ -270,47 +294,80 @@ def minhash_signatures(
     )
     return packed.select(
         "id",
-        *[F.col(f"_mh.m{i}").alias(f"mh{i}") for i in range(num_hashes)],
+        *[F.col(f"_mh.m{i}").alias(f"mh{i}") for i in range(NUM_HASHES)],
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame, num_hashes: int = 16, band_size: int = 4
-) -> DataFrame:
-    """LSH banding over MinHash signatures → distinct candidate pairs.
-
-    Each band's key is md5 of its concatenated mins; docs sharing any band
-    key become a candidate pair. Equi-join on (band, key) — the shuffle key
-    is a hash, so distribution is uniform at any scale.
-    """
-    n_bands = num_hashes // band_size
-    # The signature pipeline (map-side HOF mins) is referenced by every
-    # band and by both sides of the self-join. Exchange reuse shares only
-    # the scan's round-robin exchange, not the mins above it, so cut it
-    # with an eager checkpoint (tiny: one row per doc): it computes once,
-    # not 2×n_bands times, and no cache outlives the call (sf0.1, 4
-    # cores, build+exec median: cache 2.9 s, no cut 9.4 s, checkpoint
-    # 2.8 s).
-    signatures = signatures.localCheckpoint(eager=True)
-    bands = []
-    for b in range(n_bands):
-        cols = [f"mh{b * band_size + j}" for j in range(band_size)]
-        key = F.md5(F.concat_ws("|", *[F.col(c) for c in cols]))
-        bands.append(
-            signatures.select(
-                "id", F.lit(b).alias("band"), key.alias("band_key")
+def lsh_bands(sigs: DataFrame, id_out: str) -> DataFrame:
+    """The LSH band table of signatures ``sigs``: one (``id_out``, band,
+    band_key) row per signature per band, band_key = md5 of the band's
+    ``BAND_SIZE`` components joined by '|'."""
+    parts = []
+    for b in range(NUM_HASHES // BAND_SIZE):
+        cols = [F.col(f"mh{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
+        parts.append(
+            sigs.select(
+                F.col("id").alias(id_out),
+                F.lit(b).alias("band"),
+                F.md5(F.concat_ws("|", *cols)).alias("band_key"),
             )
         )
-    exploded = bands[0]
-    for extra in bands[1:]:
-        exploded = exploded.unionByName(extra)
-    a = exploded.select(F.col("id").alias("doc_a"), "band", "band_key")
-    b_ = exploded.select(F.col("id").alias("doc_b"), "band", "band_key")
+    out = parts[0]
+    for extra in parts[1:]:
+        out = out.unionByName(extra)
+    return out
+
+
+def cross_lsh_candidates(sig_a: DataFrame, sig_b: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) pairs whose signatures collide in any
+    band, doc_a from ``sig_a`` and doc_b from ``sig_b``: the eval-set
+    contamination check (did any training document near-duplicate an
+    eval document?) and, on one corpus, ``lsh_candidate_pairs``.
+
+    A pure equi-join on (band, band_key), a uniformly-distributed hash
+    key, so A×B scale costs one shuffle of each side's band table, never
+    a cross product.
+    """
     return (
-        a.join(b_, ["band", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
+        lsh_bands(sig_a, "doc_a")
+        .join(lsh_bands(sig_b, "doc_b"), ["band", "band_key"])
         .select("doc_a", "doc_b")
         .distinct()
+    )
+
+
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
+    """Distinct doc_a < doc_b candidate pairs of one corpus: the band
+    self-join of ``cross_lsh_candidates`` (the filter lands in the join
+    condition)."""
+    return cross_lsh_candidates(signatures, signatures).filter(
+        F.col("doc_a") < F.col("doc_b")
+    )
+
+
+def minhash_agreement(
+    pairs: DataFrame, sig_a: DataFrame, sig_b: DataFrame
+) -> DataFrame:
+    """``pairs`` (doc_a, doc_b, ...) plus ``agree``: how many of the
+    ``NUM_HASHES`` components of doc_a's signature in ``sig_a`` equal
+    doc_b's in ``sig_b`` (agree / NUM_HASHES estimates their Jaccard).
+    Pairs whose doc has no signature drop out."""
+    a = sig_a.select(
+        F.col("id").alias("doc_a"),
+        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
+    )
+    b = sig_b.select(
+        F.col("id").alias("doc_b"),
+        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
+    )
+    agree = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(NUM_HASHES)
+    )
+    return (
+        pairs.join(a, "doc_a")
+        .join(b, "doc_b")
+        .select(*pairs.columns, agree.alias("agree"))
     )
 
 
@@ -424,49 +481,6 @@ def simhash16(
         ).otherwise(F.lit(0))
         fp = bit if fp is None else fp + bit
     return with_votes.select("id", fp.cast("long").alias("simhash"))
-
-
-def cross_lsh_candidates(
-    sig_a: DataFrame,
-    sig_b: DataFrame,
-    num_hashes: int = 16,
-    band_size: int = 4,
-) -> DataFrame:
-    """LSH candidates ACROSS two corpora: (id_a, id_b) pairs whose
-    MinHash signatures collide in any band — the eval-set contamination
-    check (did any training document near-duplicate an eval document?).
-
-    Same banding as ``lsh_candidate_pairs`` but joining corpus A's bands
-    to corpus B's instead of self-joining: still a pure equi-join on a
-    uniformly-distributed hash key, so A×B scale costs one shuffle of
-    each side's band table, never a cross product.
-    """
-    n_bands = num_hashes // band_size
-
-    def banded(sigs: DataFrame, out_id: str) -> DataFrame:
-        parts = []
-        for b in range(n_bands):
-            cols = [f"mh{b * band_size + j}" for j in range(band_size)]
-            key = F.md5(F.concat_ws("|", *[F.col(c) for c in cols]))
-            parts.append(
-                sigs.select(
-                    F.col("id").alias(out_id),
-                    F.lit(b).alias("band"),
-                    key.alias("band_key"),
-                )
-            )
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra)
-        return out
-
-    a = banded(sig_a, "id_a")
-    b = banded(sig_b, "id_b")
-    return (
-        a.join(b, ["band", "band_key"])
-        .select("id_a", "id_b")
-        .distinct()
-    )
 
 
 def sparse_cosine_pairs(

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import dedup as D
+from ..operators.dedup import BAND_SIZE, NUM_HASHES  # noqa: F401 (re-exported)
 from ._oracle_sql import (
     VECTORS,
     bands,
@@ -31,8 +32,6 @@ from ._util import sround, sround_sql
 
 NGRAM_N = 3
 NGRAM_THRESHOLD = 0.2
-NUM_HASHES = 16
-BAND_SIZE = 4
 # Stop-shingle cap: shingles appearing in more docs than this carry no
 # dedup signal but dominate the inverted-index join (quadratic in the
 # hottest shingle). Exercised by the declared query and mirrored in the
@@ -192,8 +191,7 @@ GROUP BY band ORDER BY band
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands × 4 rows) candidate pairs."""
     d = load(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(d, num_hashes=NUM_HASHES, n=NGRAM_N)
-    return D.lsh_candidate_pairs(sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE)
+    return D.lsh_candidate_pairs(D.minhash_signatures(d, n=NGRAM_N))
 
 
 # CTEs toks .. cand(doc_a, doc_b): the MinHash-LSH candidate pairs of
@@ -599,13 +597,12 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.slice(F.split(F.col("text"), " "), 2, 1_000_000), " "
         ).alias("text"),
     )
-    sig_a = D.minhash_signatures(d, num_hashes=NUM_HASHES, n=NGRAM_N)
-    sig_b = D.minhash_signatures(evalset, num_hashes=NUM_HASHES, n=NGRAM_N)
     pairs = D.cross_lsh_candidates(
-        sig_a, sig_b, num_hashes=NUM_HASHES, band_size=BAND_SIZE
+        D.minhash_signatures(d, n=NGRAM_N),
+        D.minhash_signatures(evalset, n=NGRAM_N),
     )
     return pairs.select(
-        F.col("id_a").alias("train_id"), F.col("id_b").alias("eval_id")
+        F.col("doc_a").alias("train_id"), F.col("doc_b").alias("eval_id")
     )
 
 
@@ -694,36 +691,11 @@ def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cheap O(k) scorer a dedup pipeline uses before (or instead of)
     exact shingle intersection. Joins the two signature rows per
     candidate pair; no shingle data moves."""
-    d = load(spark, sf_dir, "documents")
-    # cut here too: the signatures are joined again below, outside
-    # lsh_candidate_pairs' own checkpoint
-    sigs = D.minhash_signatures(
-        d, num_hashes=NUM_HASHES, n=NGRAM_N
-    ).localCheckpoint(eager=True)
-    pairs = D.lsh_candidate_pairs(
-        sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
-    )
-    a = sigs.select(
-        F.col("id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    b = sigs.select(
-        F.col("id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    )
-    return (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (agree.cast("double") / float(NUM_HASHES)).alias("jaccard_est"),
-        )
-    )
+    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"), n=NGRAM_N)
+    est = F.col("agree").cast("double") / float(NUM_HASHES)
+    return D.minhash_agreement(
+        D.lsh_candidate_pairs(sigs), sigs, sigs
+    ).select("doc_a", "doc_b", est.alias("jaccard_est"))
 
 
 def _oracle_minhash_jaccard() -> str:
@@ -807,14 +779,8 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted by an equi-join onto the candidate set first), so the
     expensive part stays proportional to candidates, not all pairs."""
     d = load(spark, sf_dir, "documents")
-    # cut here too: the signatures are joined again below, outside
-    # lsh_candidate_pairs' own checkpoint
-    sigs = D.minhash_signatures(
-        d, num_hashes=NUM_HASHES, n=NGRAM_N
-    ).localCheckpoint(eager=True)
-    pairs = D.lsh_candidate_pairs(
-        sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
-    )
+    sigs = D.minhash_signatures(d, n=NGRAM_N)
+    pairs = D.lsh_candidate_pairs(sigs)
     sh = D.shingles(d, n=NGRAM_N)
     a = sh.select(F.col("id").alias("doc_a"), "shingle")
     b = sh.select(F.col("id").alias("doc_b"), "shingle")
@@ -828,30 +794,17 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = sh.groupBy("id").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_sh")
     )
-    sa = sigs.select(
-        F.col("id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    )
     ca = cnt.select(F.col("id").alias("doc_a"), F.col("n_sh").alias("na"))
     cb = cnt.select(F.col("id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    est = agree.cast("double") / float(NUM_HASHES)
+    est = F.col("agree").cast("double") / float(NUM_HASHES)
     exact = F.coalesce(F.col("common"), F.lit(0)).cast("double") / (
         F.col("na") + F.col("nb") - F.coalesce(F.col("common"), F.lit(0))
     ).cast("double")
     return (
-        pairs.join(common, ["doc_a", "doc_b"], "left")
+        D.minhash_agreement(pairs, sigs, sigs)
+        .join(common, ["doc_a", "doc_b"], "left")
         .join(ca, "doc_a")
         .join(cb, "doc_b")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -899,11 +852,12 @@ ORDER BY cand.doc_a, cand.doc_b
 ENTITY_THRESHOLD = 0.4
 
 
-def q_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity resolution: candidate duplicate part names by CHARACTER
-    trigram Jaccard — the fuzzy-matching pass that catches typo-level
-    variants word-shingle dedup misses (short strings have no word
-    n-grams to share).
+def _entity_pairs(
+    spark: SparkSession, sf_dir: str, threshold: float
+) -> DataFrame:
+    """(na, nb, jaccard): distinct part-name pairs na < nb whose
+    character-trigram Jaccard, rounded to 6 places, is at least
+    ``threshold``.
 
     Same inverted-index shape as document dedup, one granularity down:
     distinct names → distinct char-3-grams → gram equi-join →
@@ -945,13 +899,14 @@ def q_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         inter.join(sa, "na")
         .join(sb, "nb")
         .select("na", "nb", sround(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= ENTITY_THRESHOLD)
-        .orderBy("na", "nb")
+        .filter(F.col("jaccard") >= threshold)
     )
 
 
-ORACLE_ENTITY_MATCH = f"""
-WITH n AS (SELECT DISTINCT p_name AS name FROM part),
+def _entity_pairs_sql(threshold: float) -> str:
+    """CTEs n .. cand(na, nb, jaccard): the oracle of ``_entity_pairs``."""
+    jac = "CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)"
+    return f"""n AS (SELECT DISTINCT p_name AS name FROM part),
 g AS (SELECT name,
              unnest(list_distinct(list_transform(
                range(1, length(name) - 1), i -> substr(name, i, 3))))
@@ -961,18 +916,25 @@ sz AS (SELECT name, CAST(COUNT(*) AS BIGINT) AS sz FROM g GROUP BY name),
 inter AS (SELECT a.name AS na, b.name AS nb,
                  CAST(COUNT(*) AS BIGINT) AS inter
           FROM g a JOIN g b ON a.gram = b.gram AND a.name < b.name
-          GROUP BY a.name, b.name)
-SELECT na, nb,
-       {sround_sql(
-           'CAST(inter AS DOUBLE)'
-           ' / CAST(sa.sz + sb.sz - inter AS DOUBLE)', 6)} AS jaccard
-FROM inter
-JOIN sz sa ON sa.name = na
-JOIN sz sb ON sb.name = nb
-WHERE {sround_sql(
-    'CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)',
-    6)} >= {ENTITY_THRESHOLD}
-ORDER BY na, nb
+          GROUP BY a.name, b.name),
+scored AS (SELECT na, nb, {sround_sql(jac, 6)} AS jaccard
+           FROM inter
+           JOIN sz sa ON sa.name = na
+           JOIN sz sb ON sb.name = nb),
+cand AS (SELECT * FROM scored WHERE jaccard >= {threshold})"""
+
+
+def q_entity_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Entity resolution: candidate duplicate part names by CHARACTER
+    trigram Jaccard ≥ 0.4 — the fuzzy-matching pass that catches
+    typo-level variants word-shingle dedup misses (short strings have
+    no word n-grams to share)."""
+    return _entity_pairs(spark, sf_dir, ENTITY_THRESHOLD).orderBy("na", "nb")
+
+
+ORACLE_ENTITY_MATCH = f"""
+WITH {_entity_pairs_sql(ENTITY_THRESHOLD)}
+SELECT na, nb, jaccard FROM cand ORDER BY na, nb
 """
 
 
@@ -984,10 +946,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding of q_dedup_minhash_lsh (map-side signatures, band
     equi-join), then two slim doc_id→source joins and a small agg."""
     d = load(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(d, num_hashes=NUM_HASHES, n=NGRAM_N)
-    pairs = D.lsh_candidate_pairs(
-        sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
-    )
+    pairs = D.lsh_candidate_pairs(D.minhash_signatures(d, n=NGRAM_N))
     src = d.select("doc_id", "source")
     sa = src.select(
         F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a")
@@ -1035,40 +994,8 @@ def q_entity_match_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the candidate set, never all pairs. Both stages JVM-side;
     ``levenshtein`` is built into both engines with identical classic-DP
     semantics."""
-    p = load(spark, sf_dir, "part")
-    names = p.select(F.col("p_name").alias("name")).distinct()
-    grams = names.select(
-        "name",
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("name") - 2),
-                    lambda i: F.col("name").substr(i, F.lit(3)),
-                )
-            )
-        ).alias("gram"),
-    )
-    sz = grams.groupBy("name").agg(
-        F.count(F.lit(1)).cast("bigint").alias("sz")
-    )
-    a = grams.select(F.col("name").alias("na"), "gram")
-    b = grams.select(F.col("name").alias("nb"), "gram")
-    inter = (
-        a.join(b, "gram")
-        .filter(F.col("na") < F.col("nb"))
-        .groupBy("na", "nb")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("inter"))
-    )
-    sa = sz.select(F.col("name").alias("na"), F.col("sz").alias("sa"))
-    sb = sz.select(F.col("name").alias("nb"), F.col("sz").alias("sb"))
-    jac = F.col("inter").cast("double") / (
-        F.col("sa") + F.col("sb") - F.col("inter")
-    ).cast("double")
     return (
-        inter.join(sa, "na")
-        .join(sb, "nb")
-        .select("na", "nb", sround(jac, 6).alias("jaccard"))
-        .filter(F.col("jaccard") >= CAND_THRESHOLD)
+        _entity_pairs(spark, sf_dir, CAND_THRESHOLD)
         .withColumn(
             "edit_dist",
             F.levenshtein("na", "nb").cast("bigint"),
@@ -1079,28 +1006,7 @@ def q_entity_match_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_ENTITY_MATCH_VERIFIED = f"""
-WITH n AS (SELECT DISTINCT p_name AS name FROM part),
-g AS (SELECT name,
-             unnest(list_distinct(list_transform(
-               range(1, length(name) - 1), i -> substr(name, i, 3))))
-               AS gram
-      FROM n),
-sz AS (SELECT name, CAST(COUNT(*) AS BIGINT) AS sz FROM g GROUP BY name),
-inter AS (SELECT a.name AS na, b.name AS nb,
-                 CAST(COUNT(*) AS BIGINT) AS inter
-          FROM g a JOIN g b ON a.gram = b.gram AND a.name < b.name
-          GROUP BY a.name, b.name),
-cand AS (
-  SELECT na, nb,
-         {sround_sql(
-             'CAST(inter AS DOUBLE)'
-             ' / CAST(sa.sz + sb.sz - inter AS DOUBLE)', 6)} AS jaccard
-  FROM inter
-  JOIN sz sa ON sa.name = na
-  JOIN sz sb ON sb.name = nb
-  WHERE {sround_sql(
-      'CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)',
-      6)} >= {CAND_THRESHOLD})
+WITH {_entity_pairs_sql(CAND_THRESHOLD)}
 SELECT na, nb, jaccard,
        CAST(levenshtein(na, nb) AS BIGINT) AS edit_dist
 FROM cand WHERE levenshtein(na, nb) <= {EDIT_MAX}
@@ -1431,9 +1337,8 @@ def q_lsh_recall_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex = D.ngram_jaccard_pairs(
         d, threshold=0.0, n=NGRAM_N, max_shingle_freq=MAX_SHINGLE_FREQ
     )
-    sigs = D.minhash_signatures(d, num_hashes=NUM_HASHES, n=NGRAM_N)
     cand = D.lsh_candidate_pairs(
-        sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
+        D.minhash_signatures(d, n=NGRAM_N)
     ).withColumn("_hit", F.lit(1))
     return (
         ex.join(cand, ["doc_a", "doc_b"], "left")
@@ -1643,31 +1548,10 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a bounded explode (<= 9 rows per pair — linear, no inequality
     join, no window), then a groupBy on the 9-value threshold key.
     est_jaccard = t/16 is the single correctly-rounded division."""
-    d = load(spark, sf_dir, "documents")
-    # cut here too: the signatures are joined again below, outside
-    # lsh_candidate_pairs' own checkpoint
-    sigs = D.minhash_signatures(
-        d, num_hashes=NUM_HASHES, n=NGRAM_N
-    ).localCheckpoint(eager=True)
-    pairs = D.lsh_candidate_pairs(
-        sigs, num_hashes=NUM_HASHES, band_size=BAND_SIZE
-    )
-    a = sigs.select(
-        F.col("id").alias("doc_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    b = sigs.select(
-        F.col("id").alias("doc_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    )
+    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"), n=NGRAM_N)
     ag = (
-        pairs.join(a, "doc_a")
-        .join(b, "doc_b")
-        .select("doc_b", agree.alias("agree"))
+        D.minhash_agreement(D.lsh_candidate_pairs(sigs), sigs, sigs)
+        .select("doc_b", "agree")
         .filter(F.col("agree") >= SWEEP_MIN_T)
     )
     sw = ag.select(

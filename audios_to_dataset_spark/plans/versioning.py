@@ -237,34 +237,18 @@ def q_ingest_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly dedup gate of a continuously-crawled corpus: the prior
     side's signatures are precomputed once per release; each new batch
     pays only its own signature pass plus the band equi-join."""
-    from .dedup import BAND_SIZE, NGRAM_N, NUM_HASHES
+    from .dedup import NGRAM_N, NUM_HASHES
     from ..operators import dedup as D
 
     d = load(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") < NOVELTY_SPLIT)
     batch = d.filter(F.col("doc_id") >= NOVELTY_SPLIT)
-    sa = D.minhash_signatures(corpus, num_hashes=NUM_HASHES, n=NGRAM_N)
-    sb = D.minhash_signatures(batch, num_hashes=NUM_HASHES, n=NGRAM_N)
-    cand = D.cross_lsh_candidates(
-        sa, sb, num_hashes=NUM_HASHES, band_size=BAND_SIZE
-    )
-    a = sa.select(
-        F.col("id").alias("id_a"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(NUM_HASHES)],
-    )
-    b = sb.select(
-        F.col("id").alias("id_b"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(NUM_HASHES)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(NUM_HASHES)
-    )
-    est = matches.cast("double") / float(NUM_HASHES)
+    sa = D.minhash_signatures(corpus, n=NGRAM_N)
+    sb = D.minhash_signatures(batch, n=NGRAM_N)
+    est = F.col("agree").cast("double") / float(NUM_HASHES)
     best = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .groupBy("id_b")
+        D.minhash_agreement(D.cross_lsh_candidates(sa, sb), sa, sb)
+        .groupBy(F.col("doc_b").alias("id_b"))
         .agg(F.max(est).alias("best_est"))
     )
     return (

@@ -18,6 +18,7 @@ sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
 
 from audios_to_dataset_spark.plans import all_queries  # noqa: E402
 from audios_to_dataset_spark.session import get_session  # noqa: E402
+from perfbench.harness import isolate  # noqa: E402
 
 X10_DIR = "/tmp/spark_graft_scale10"  # tools/scale_smoke.py's ×10 cache
 DEFAULT_SF = "/root/testdata/sf0.1"
@@ -79,8 +80,10 @@ SECTIONS = {
 
 NOTES = {"protocol": "untimed warm-up; each query then runs back to back"
          " through the noop sink, SECTIONS' count of times (the audio"
-         " pipeline twice) and reports the min; first runs under cold/"
-         "extras_cold, all runs under iterative_runs/sf1_runs"}
+         " pipeline twice), each query run after perfbench's isolate()"
+         " dropped every cache and persisted RDD, and reports the min;"
+         " first runs under cold/extras_cold, all runs under"
+         " iterative_runs/sf1_runs"}
 
 
 def _noop(df) -> None:
@@ -88,9 +91,12 @@ def _noop(df) -> None:
 
 
 def _time(spark, fn, data_dir: str, reps: int) -> list[float]:
-    """Seconds of each of ``reps`` back-to-back runs of ``fn(spark, dir)``."""
+    """Seconds of each of ``reps`` back-to-back runs of ``fn(spark, dir)``,
+    each after ``isolate`` dropped every cache and persisted RDD, so no
+    run reads state an earlier one left behind."""
     runs = []
     for _ in range(reps):
+        isolate(spark)
         t0 = time.perf_counter()
         _noop(fn(spark, data_dir))
         runs.append(round(time.perf_counter() - t0, 3))

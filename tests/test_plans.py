@@ -368,14 +368,17 @@ def test_curation_stages_no_cartesian(spark):
 def test_minhash_signatures_mapside_no_aggregate(spark, sf_dir):
     """The MinHash signature pipeline must stay map-side: no aggregate
     (the mins are per-row array_min HOFs) and no exchange beyond the one
-    deliberate small-file fan-out repartition."""
+    deliberate small-file fan-out repartition. It explains the fold
+    below minhash_signatures' checkpoint: the cut frame is an RDD scan,
+    on which these checks would pass vacuously."""
     from audios_to_dataset_spark.catalog import load
-    from audios_to_dataset_spark.operators.dedup import minhash_signatures
+    from audios_to_dataset_spark.operators.dedup import _signature_fold
 
     d = load(spark, sf_dir, "documents")
     import re
 
-    e = _explain(minhash_signatures(d))
+    e = _explain(_signature_fold(d, 3, "doc_id", "text"))
+    assert "Scan parquet" in e
     assert "HashAggregate" not in e and "SortAggregate" not in e
     # formatted explain lists each node in the tree AND the detail
     # section; count distinct Exchange node ids

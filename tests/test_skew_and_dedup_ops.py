@@ -88,14 +88,19 @@ def test_ngram_jaccard_detects_near_duplicate(spark):
     assert not any(2 in p for p in pairs)
 
 
-def test_minhash_lsh_finds_exact_and_near_dups(spark):
+def _four_docs(spark):
+    """Two identical docs, a near-dup of them (3 of 38 shingles differ)
+    and an unrelated doc."""
     base = " ".join(f"w{i}" for i in range(40))
-    near = base.replace("w7", "x7")  # 3 shingles differ out of 38
-    df = spark.createDataFrame(
-        [(0, base), (1, base), (2, near), (3, "unrelated text entirely here")],
+    return spark.createDataFrame(
+        [(0, base), (1, base), (2, base.replace("w7", "x7")),
+         (3, "unrelated text entirely here")],
         "doc_id long, text string",
     )
-    sigs = D.minhash_signatures(df)
+
+
+def test_minhash_lsh_finds_exact_and_near_dups(spark):
+    sigs = D.minhash_signatures(_four_docs(spark))
     pairs = {
         (r.doc_a, r.doc_b)
         for r in D.lsh_candidate_pairs(sigs).collect()
@@ -103,6 +108,58 @@ def test_minhash_lsh_finds_exact_and_near_dups(spark):
     assert (0, 1) in pairs          # identical docs always collide
     assert (0, 2) in pairs or (1, 2) in pairs  # near-dup collides in ≥1 band
     assert not any(3 in p for p in pairs)
+
+
+def test_cross_lsh_on_one_corpus_is_the_self_join(spark):
+    sigs = D.minhash_signatures(_four_docs(spark))
+    cross = D.cross_lsh_candidates(sigs, sigs)
+    assert cross.columns == ["doc_a", "doc_b"]
+    got = {tuple(r) for r in cross.collect()}
+    want = {tuple(r) for r in D.lsh_candidate_pairs(sigs).collect()}
+    assert {(a, b) for a, b in got if a < b} == want and (0, 1) in want
+    # the cross join also pairs every doc with itself
+    assert {(i, i) for i in range(4)} <= got
+
+
+def test_minhash_agreement_counts_equal_components(spark):
+    sigs = D.minhash_signatures(_four_docs(spark))
+    pairs = spark.createDataFrame(
+        [(0, 1, "same"), (0, 2, "near"), (0, 3, "other")],
+        "doc_a long, doc_b long, tag string",
+    )
+    out = D.minhash_agreement(pairs, sigs, sigs)
+    assert out.columns == ["doc_a", "doc_b", "tag", "agree"]
+    agree = {r.tag: r.agree for r in out.collect()}
+    assert agree["same"] == D.NUM_HASHES
+    assert 0 < agree["near"] < D.NUM_HASHES
+    assert agree["other"] < agree["near"]
+
+
+def test_lsh_builds_run_no_job_past_the_signature_cut(spark):
+    """The signatures are cut once, inside minhash_signatures: building
+    bands, candidates and agreement on top of them runs no Spark job,
+    so no second checkpoint hides below the shared operators."""
+    sc = spark.sparkContext
+    df = _four_docs(spark)
+
+    def build_jobs(group, build):
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def everything():
+        sigs = D.minhash_signatures(df)
+        D.lsh_bands(sigs, "id")
+        pairs = D.lsh_candidate_pairs(sigs)
+        D.minhash_agreement(pairs, sigs, sigs)
+        D.cross_lsh_candidates(sigs, sigs)
+
+    alone = build_jobs("lsh:signatures", lambda: D.minhash_signatures(df))
+    assert alone >= 1  # the eager checkpoint itself
+    assert build_jobs("lsh:everything", everything) == alone
 
 
 def test_simhash_similar_docs_close(spark):
@@ -329,6 +386,7 @@ def test_minhash_sql_formulation(spark):
     substring windows, same least() fold, including single-token and
     punctuation-heavy docs."""
     from audios_to_dataset_spark.operators.dedup import (
+        NUM_HASHES,
         minhash_signatures,
         shingle_arrays,
     )
@@ -341,7 +399,7 @@ def test_minhash_sql_formulation(spark):
         (4, " ".join(f"tok{i % 7}" for i in range(25))),  # repeats
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    num_hashes, n_digests = 16, 4
+    n_digests = 4
 
     def _digest_struct(g):
         return F.struct(
@@ -352,7 +410,7 @@ def test_minhash_sql_formulation(spark):
         )
 
     init = F.struct(
-        *[F.lit("~").alias(f"m{i}") for i in range(num_hashes)]
+        *[F.lit("~").alias(f"m{i}") for i in range(NUM_HASHES)]
     )
 
     def _merge(acc, x):
@@ -362,7 +420,7 @@ def test_minhash_sql_formulation(spark):
                     acc[f"m{i}"],
                     F.substring(x[f"d{i // 4}"], (i % 4) * 8 + 1, 8),
                 ).alias(f"m{i}")
-                for i in range(num_hashes)
+                for i in range(NUM_HASHES)
             ]
         )
 
@@ -372,7 +430,7 @@ def test_minhash_sql_formulation(spark):
         .select("id", F.aggregate("digs", init, _merge).alias("_mh"))
         .select(
             "id",
-            *[F.col(f"_mh.m{i}").alias(f"mh{i}") for i in range(num_hashes)],
+            *[F.col(f"_mh.m{i}").alias(f"mh{i}") for i in range(NUM_HASHES)],
         )
     )
     new = minhash_signatures(df)

@@ -358,6 +358,21 @@ def test_wav_stats_alaw_pcm8_f32_vs_python():
     assert peak == max(abs(p) for p in ps)
 
 
+@pytest.mark.parametrize(
+    "samples, want",
+    [
+        # a NaN or infinite sample is a malformed stream: the zeros fallback
+        ((0.5, float("nan"), -0.25, float("inf")), (0.0, 0.0, 0.0, 0)),
+        # a finite sample past full scale clamps to 1.0 and counts clipped
+        ((0.5, 3e38), (0.625 ** 0.5, 1.0, 0.5, 2)),
+    ],
+)
+def test_wav_stats_float_outside_full_scale(samples, want):
+    body = struct.pack(f"<{len(samples)}f", *samples)
+    data = W.wav_bytes(W._fmt(3, 1, 8000, 32), body)
+    assert W.wav_pcm_stats(data) == want
+
+
 def test_wav_stats_ima_adpcm_vs_python():
     """The IMA ADPCM state machine against a literal python replay of
     the fixture recurrence (the same recurrence the SQL oracle runs as

@@ -188,27 +188,10 @@ def _pairs(counts_df) -> int:
 def minhash_candidates(spark, sf_dir: str) -> int:
     from audios_to_dataset_spark.catalog import load
     from audios_to_dataset_spark.operators import dedup as D
-    from audios_to_dataset_spark.plans.dedup import (
-        BAND_SIZE,
-        NGRAM_N,
-        NUM_HASHES,
-    )
+    from audios_to_dataset_spark.plans.dedup import NGRAM_N
 
-    sigs = D.minhash_signatures(
-        load(spark, sf_dir, "documents"), num_hashes=NUM_HASHES, n=NGRAM_N
-    )
-    n_bands = NUM_HASHES // BAND_SIZE
-    bands = []
-    for b in range(n_bands):
-        cols = [f"mh{b * BAND_SIZE + j}" for j in range(BAND_SIZE)]
-        key = F.md5(F.concat_ws("|", *[F.col(c) for c in cols]))
-        bands.append(
-            sigs.select(F.lit(b).alias("band"), key.alias("band_key"))
-        )
-    exploded = bands[0]
-    for extra in bands[1:]:
-        exploded = exploded.unionByName(extra)
-    return _pairs(exploded.groupBy("band", "band_key").count())
+    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"), n=NGRAM_N)
+    return _pairs(D.lsh_bands(sigs, "id").groupBy("band", "band_key").count())
 
 
 def knn_candidates(spark, sf_dir: str, planes) -> int:
