@@ -5,8 +5,17 @@ as the exact baseline, plus a random-hyperplane LSH bucketing as the scale
 path: at 100 TB you never do the O(N·Q) brute force; you bucket by sign
 hashes (equi-join shuffle on the bucket key) and only score within buckets.
 
+Each kernel is written once. ``_dot``, ``_norm`` and ``_cosine`` are the
+float math every vector query uses. ``_lsh_candidates`` is the one LSH
+candidate generator: the bucket self-join and the directed (src, dst)
+distinct behind the near-dup pairs (its src < dst half), the k-NN graph
+and hard-negative mining. ``_rank_unit`` is the one unit-vector ranker
+(``_unit_vectors``, the vector join-back and the per-src row_number)
+that the last two share. ``_nearest`` and ``_seeded_kmeans`` are the one
+nearest-centroid argmax and training loop behind k-means, PQ and IVF.
+
 All double math accumulates left-to-right in float64 so the DuckDB oracle
-(list_transform + list_sum with double casts) reproduces it bit-for-bit;
+(``plans/_oracle_sql.dot``/``cosine``) reproduces it bit-for-bit;
 results are rounded before any threshold/ordering so cross-engine float
 noise (≤1 ulp) cannot flip a comparison.
 """
@@ -621,6 +630,86 @@ def pq_codes(
     )
 
 
+def _lsh_candidates(
+    df: DataFrame,
+    tables: list[list[list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame]:
+    """(base, cand): the slim (id, vector) scan and every directed
+    (src, dst) pair of distinct ids that share a bucket in ANY table —
+    the one candidate generator behind the near-dup pairs, the k-NN graph
+    and hard-negative mining.
+
+    The self-join shuffles on (table, bucket) keys, uniform by
+    construction. The scan is spread to cluster width
+    (:func:`_spread_small_scan`, a no-op at scale), and the candidates
+    are repartitioned on the FULL pair before the distinct at
+    ``spark.sql.shuffle.partitions`` width: one ultra-hot src spreads
+    across every task (dst varies), the distinct's ClusteredDistribution
+    is satisfied exactly, and AQE's byte heuristic cannot collapse the
+    per-pair scoring stage, whose rows are small but whose interpreted
+    dot products are not. Only ids move through that exchange; the
+    vectors join back from ``base`` after the distinct."""
+    base = _spread_small_scan(df.select(id_col, vec_col))
+    bucketed = multitable_buckets(base, tables, id_col, vec_col)
+    a = bucketed.select(F.col("id").alias("src"), "bucket")
+    b = bucketed.select(F.col("id").alias("dst"), "bucket")
+    cand = (
+        a.join(b, "bucket")
+        .filter(F.col("src") != F.col("dst"))
+        .select("src", "dst")
+        .repartition(_shuffle_width(df), "src", "dst")
+        .distinct()
+    )
+    return base, cand
+
+
+def _unit_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, u): each vector divided by its norm, once per vector, so a
+    pair's cosine is one dot product instead of a dot and two norms. The
+    DuckDB oracles normalize with the identical per-element division.
+    Zero-norm (and NULL) vectors have no defined cosine and are dropped
+    rather than failing the job with DIVIDE_BY_ZERO under ANSI mode."""
+    return (
+        df.select(id_col, F.col(vec_col).alias("_v"))
+        .withColumn("_n", _norm(F.col("_v")))
+        .filter(F.col("_n") > 0)
+        .select(
+            id_col,
+            F.transform("_v", lambda x: x.cast("double") / F.col("_n"))
+            .alias("u"),
+        )
+    )
+
+
+def _rank_unit(
+    base: DataFrame,
+    cand: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    decimals: int,
+) -> DataFrame:
+    """``cand`` (src, dst, ...) plus ``cos_sim``, the unit-vector cosine
+    rounded to ``decimals`` places, and ``rank``, its row_number per src
+    (cos_sim desc, dst), kept to rank <= k. The window is PARTITIONED BY
+    src: no global sort."""
+    un = _unit_vectors(base, id_col, vec_col)
+    va = un.select(F.col(id_col).alias("src"), F.col("u").alias("ua"))
+    vb = un.select(F.col(id_col).alias("dst"), F.col("u").alias("ub"))
+    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), "dst")
+    return (
+        cand.join(va, "src")
+        .join(vb, "dst")
+        .withColumn(
+            "cos_sim", sround(_dot(F.col("ua"), F.col("ub")), decimals)
+        )
+        .withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .filter(F.col("rank") <= k)
+    )
+
+
 def lsh_bucketed_neardup_pairs(
     df: DataFrame,
     tables: list[list[list[float]]],
@@ -633,44 +722,18 @@ def lsh_bucketed_neardup_pairs(
 
     ``tables`` is a list of hash tables, each a list of hyperplanes; a
     pair is a candidate if it collides in ANY table (recall ≈
-    1 − (1 − p^b)^T for per-plane agreement p). Candidates are re-scored
-    exactly, so precision is 1 — only recall is approximate.
-
-    The self-join shuffles on (table, bucket) keys — uniform by
-    construction; at 1000 executors each bucket's pairs generate locally
-    post-shuffle. Candidate dedup moves only (id_a, id_b) pairs — the
-    heavy vector payloads are joined back *after* the distinct, so the
-    dedup shuffle is ids, not vectors. Tune: more planes/table → smaller
+    1 − (1 − p^b)^T for per-plane agreement p). Candidates are the
+    id_a < id_b half of :func:`_lsh_candidates` (the filter lands in the
+    bucket join condition) and are re-scored exactly, so precision is 1
+    — only recall is approximate. Tune: more planes/table → smaller
     buckets (cheaper, lower recall); more tables → higher recall
     (linearly more hashing)."""
-    # r12 optimization: spread the slim scan (no-op at scale) and pin
-    # the candidate partitioning before the distinct so the per-pair
-    # scoring stage runs at cluster parallelism instead of the 1-6
-    # partitions AQE's byte heuristic left it (guide §2.4/§2.5; same
-    # rationale as knn_graph above). r13 (VERDICT r12 item 7): key the
-    # exchange on the FULL pair (id_a, id_b) — one ultra-hot id_a now
-    # spreads across every task instead of landing in one (id_b varies),
-    # the distinct's ClusteredDistribution is satisfied exactly, and the
-    # width follows spark.sql.shuffle.partitions (cluster-sized in
-    # production) instead of the local core count.
-    base = _spread_small_scan(df.select(id_col, vec_col))
-    sc_p = _shuffle_width(df)
-    bucketed = multitable_buckets(base, tables, id_col, vec_col)
-    a = bucketed.select(F.col("id").alias("id_a"), "bucket")
-    b = bucketed.select(F.col("id").alias("id_b"), "bucket")
-    cand = (
-        a.join(b, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .repartition(sc_p, "id_a", "id_b")
-        .distinct()
-    )
-    # Norms are per-VECTOR, not per-pair: computing them on the N-row
-    # join side instead of inside the C >> N candidate projection cuts
-    # the interpreted per-pair work from 3 array folds to 1 (guide
-    # §1.2 step 2). norm(v) evaluated on the same array yields the
-    # identical double, so cos_sim is bit-unchanged and the DuckDB
-    # oracle needs no edit.
+    base, cand = _lsh_candidates(df, tables, id_col, vec_col)
+    # Norms are per-VECTOR, computed on the N-row join side rather than
+    # inside the C >> N candidate projection. The score is
+    # dot / (na * nb), not a unit-vector dot: its oracle
+    # (_oracle_sql.emb_pairs) computes the norms in place, and
+    # unit-vector scoring can round differently.
     vn = base.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v")
     ).withColumn("nrm", _norm(F.col("v")))
@@ -684,7 +747,9 @@ def lsh_bucketed_neardup_pairs(
     )
     cos = _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
     return (
-        cand.join(va, "id_a")
+        cand.filter(F.col("src") < F.col("dst"))
+        .select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
+        .join(va, "id_a")
         .join(vb, "id_b")
         .withColumn("cos_sim", sround(cos, decimals))
         .filter(F.col("cos_sim") >= threshold)
@@ -705,73 +770,11 @@ def knn_graph(
     among LSH bucket-mates (exact re-score inside buckets, so precision
     is 1 within the candidate set; recall grows with tables).
 
-    Scale shape: bucket self-join on uniform (table, bucket) keys, a
-    distinct on directed id pairs (ids only — vectors join back after),
-    then a row_number window PARTITIONED BY source id. No global sort,
-    no all-pairs anywhere."""
-    from pyspark.sql import Window
-
-    # r12 optimization (guide §2.4/§2.5): spread the slim (id, vec)
-    # scan so bucket hashing + candidate generation parallelize on
-    # single-file fixtures (no-op at scale, see _spread_small_scan),
-    # and pin the candidate frame's partitioning BEFORE the distinct:
-    # AQE's byte-based coalescing collapsed the post-distinct scoring
-    # stage to ~6 partitions (bytes are tiny, per-row interpreted dot
-    # cost is not). r13 (VERDICT r12 item 7): key the exchange on the
-    # FULL (src, dst) pair — one ultra-hot src spreads across every
-    # task in the expensive scoring stage instead of serializing in one
-    # (dst varies), the distinct's ClusteredDistribution is satisfied
-    # exactly, and the width follows spark.sql.shuffle.partitions
-    # (cluster-sized in production). The per-src rank window re-adds
-    # its own planner Exchange on src, but it moves only the slim
-    # (src, dst, cos_sim) rows and AQE manages it; the hot-src sort is
-    # inherent to row_number-per-src, not to scoring.
-    base = _spread_small_scan(df.select(id_col, vec_col))
-    sc_p = _shuffle_width(df)
-    bucketed = multitable_buckets(base, tables, id_col, vec_col)
-    a = bucketed.select(F.col("id").alias("src"), "bucket")
-    b = bucketed.select(F.col("id").alias("dst"), "bucket")
-    cand = (
-        a.join(b, "bucket")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .repartition(sc_p, "src", "dst")
-        .distinct()
-    )
-    # Pre-normalize to unit vectors ONCE per vector (N rows), so the
-    # per-candidate work is a single dot product instead of dot + two
-    # norms — 3 interpreted array aggregates down to 1 on the C >> N
-    # candidate rows (measured 2× on the scoring stage at sf0.1). The
-    # DuckDB oracle normalizes with the identical per-element division,
-    # so rounded scores stay bit-equal. Zero-norm vectors have no
-    # defined cosine and are dropped here rather than crashing the job
-    # with DIVIDE_BY_ZERO under ANSI mode (one dirty row in 100 TB
-    # must not kill the build; found by the candidate-budget
-    # hypothesis test).
-    un = (
-        base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
-        .withColumn("_n", _norm(F.col("_v")))
-        .filter(F.col("_n") > 0)
-        .select(
-            "id",
-            F.transform(
-                "_v", lambda x: x.cast("double") / F.col("_n")
-            ).alias("u"),
-        )
-    )
-    va = un.select(F.col("id").alias("src"), F.col("u").alias("ua"))
-    vb = un.select(F.col("id").alias("dst"), F.col("u").alias("ub"))
-    cos = _dot(F.col("ua"), F.col("ub"))
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), "dst"
-    )
-    return (
-        cand.join(va, "src")
-        .join(vb, "dst")
-        .withColumn("cos_sim", sround(cos, decimals))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("src", "dst", "cos_sim", "rank")
+    Scale shape: :func:`_lsh_candidates` then :func:`_rank_unit`. No
+    global sort, no all-pairs anywhere."""
+    base, cand = _lsh_candidates(df, tables, id_col, vec_col)
+    return _rank_unit(base, cand, k, id_col, vec_col, decimals).select(
+        "src", "dst", "cos_sim", "rank"
     )
 
 
@@ -787,34 +790,16 @@ def hard_negatives(
     """Hard-negative mining for contrastive training: for every
     labelled anchor, the top-k HIGHEST-cosine bucket-mates with a
     DIFFERENT label — the near-misses a metric-learning loss needs.
-    Same LSH candidate generation as :func:`knn_graph`; the label
-    filter runs BEFORE the per-anchor rank (a post-rank filter would
-    lose negatives hiding beyond rank k among same-label neighbors).
+    The :func:`knn_graph` ranking over label-filtered candidates: the
+    label filter runs BEFORE the per-anchor rank (a post-rank filter
+    would lose negatives hiding beyond rank k among same-label
+    neighbors).
 
     ``labels`` is an (id, label) frame; NULL-label rows drop out as
-    both anchors and candidates. Scale shape: identical to knn_graph
-    (bucket equi-join + per-anchor window) plus two label hash joins
-    on the candidate frame.
+    both anchors and candidates. Scale shape: knn_graph's plus two
+    label hash joins on the candidate frame.
     """
-    from pyspark.sql import Window
-
-    # r12 optimization (guide §2.4/§2.5): spread the slim (id, vec)
-    # scan and pin the candidate frame's partitioning BEFORE the
-    # distinct so scoring runs at full width. r13 (VERDICT r12 item 7):
-    # keyed on the FULL (src, dst) pair at shuffle.partitions width —
-    # hot-src-safe, cluster-sized; see the knn_graph comment above.
-    base = _spread_small_scan(df.select(id_col, vec_col))
-    sc_p = _shuffle_width(df)
-    bucketed = multitable_buckets(base, tables, id_col, vec_col)
-    a = bucketed.select(F.col("id").alias("src"), "bucket")
-    b = bucketed.select(F.col("id").alias("dst"), "bucket")
-    cand = (
-        a.join(b, "bucket")
-        .filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .repartition(sc_p, "src", "dst")
-        .distinct()
-    )
+    base, cand = _lsh_candidates(df, tables, id_col, vec_col)
     la = labels.select(
         F.col("id").alias("src"), F.col("label").alias("src_label")
     )
@@ -826,32 +811,8 @@ def hard_negatives(
         .join(lb, "dst")
         .filter(F.col("src_label") != F.col("dst_label"))
     )
-    un = (
-        base.select(F.col(id_col).alias("id"), F.col(vec_col).alias("_v"))
-        .withColumn("_n", _norm(F.col("_v")))
-        .filter(F.col("_n") > 0)
-        .select(
-            "id",
-            F.transform(
-                "_v", lambda x: x.cast("double") / F.col("_n")
-            ).alias("u"),
-        )
-    )
-    va = un.select(F.col("id").alias("src"), F.col("u").alias("ua"))
-    vb = un.select(F.col("id").alias("dst"), F.col("u").alias("ub"))
-    cos = _dot(F.col("ua"), F.col("ub"))
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), "dst"
-    )
-    return (
-        neg.join(va, "src")
-        .join(vb, "dst")
-        .withColumn("cos_sim", sround(cos, decimals))
-        .withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "src", "src_label", "dst", "dst_label", "cos_sim", "rank"
-        )
+    return _rank_unit(base, neg, k, id_col, vec_col, decimals).select(
+        "src", "src_label", "dst", "dst_label", "cos_sim", "rank"
     )
 
 
@@ -874,8 +835,6 @@ def lsh_topk_batch(
     of candidate rows — independent of the number of queries until the
     query side outgrows the broadcast threshold.
     """
-    from pyspark.sql import Window
-
     bucketed = multitable_buckets(df, tables, id_col, vec_col)
     ids = [F.lit(q) for q in query_ids]
     qb = (

@@ -4,9 +4,9 @@ Each fragment is the SQL twin of one Spark operator, written once so the
 oracles that replay it cannot drift apart: word n-gram shingles and
 their capped Jaccard pairs (operators.dedup), MinHash signatures, LSH
 bands and component agreement, hyperplane-LSH buckets and the
-embedding near-dup pairs (operators.similarity), the rounded cosine,
-the connected-component closure and the degree-oriented triangles
-(operators.graph).
+embedding near-dup pairs (operators.similarity), the list dot product
+and the rounded cosine built on it, the connected-component closure and
+the degree-oriented triangles (operators.graph).
 
 A fragment documented as CTEs returns comma-joined ``name AS (...)``
 items for a ``WITH``; the others return a query body or an expression. Constants come from plans/dedup, imported inside the
@@ -21,6 +21,13 @@ from ._util import sround_sql
 VECTORS = """v AS (
   SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
   FROM embeddings
+)"""
+
+# v(vec_id, e) without the rows operators.similarity._indexable drops: a
+# NULL id or a NULL vector
+INDEXED_VECTORS = """v AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
+  FROM embeddings WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
 )"""
 
 # substr length of the auto-scaled plane families: the knn_np CTE holds
@@ -127,6 +134,20 @@ def minhash_agree(a: str, b: str) -> str:
     )
 
 
+def dot(a: str, b: str) -> str:
+    """Left-to-right dot product of list expressions ``a`` and ``b``, the
+    one spelling of operators.similarity._dot."""
+    return (
+        f"list_sum(list_transform(range(1, len({a}) + 1),"
+        f" i -> {a}[i] * {b}[i]))"
+    )
+
+
+def norm(a: str) -> str:
+    """L2 norm of list expression ``a`` — operators.similarity._norm."""
+    return f"sqrt(list_sum(list_transform({a}, x -> x * x)))"
+
+
 def plane_sql(plane: list[float]) -> str:
     """One hyperplane as a DOUBLE[] literal (repr: exact round-trip)."""
     return "CAST([" + ", ".join(repr(v) for v in plane) + "] AS DOUBLE[])"
@@ -146,8 +167,7 @@ def lsh_buckets(tables: list[list[list[float]]], width: int | str) -> str:
     rows = "\n  UNION ALL\n".join(
         f"  SELECT vec_id, '{t}:' || substr("
         + " || ".join(
-            "(CASE WHEN list_sum(list_transform(range(1, len(e) + 1), "
-            f"i -> e[i] * p{t}_{j}[i])) >= 0 THEN '1' ELSE '0' END)"
+            f"(CASE WHEN {dot('e', f'p{t}_{j}')} >= 0 THEN '1' ELSE '0' END)"
             for j in range(len(planes))
         )
         + f", 1, {width}) AS bucket FROM v, planes"
@@ -163,12 +183,7 @@ def lsh_buckets(tables: list[list[list[float]]], width: int | str) -> str:
 def cosine(a: str, b: str, k: int) -> str:
     """Cosine of vector expressions ``a`` and ``b`` rounded to ``k``
     decimals (``sround_sql``), both norms computed in place."""
-    dot = (
-        f"list_sum(list_transform(range(1, len({a}) + 1),"
-        f" i -> {a}[i] * {b}[i]))"
-    )
-    norm = "sqrt(list_sum(list_transform({}, x -> x * x)))"
-    return sround_sql(f"{dot} / ({norm.format(a)} * {norm.format(b)})", k)
+    return sround_sql(f"{dot(a, b)} / ({norm(a)} * {norm(b)})", k)
 
 
 def emb_pairs(tables: list[list[list[float]]], width: int | str) -> str:

@@ -208,15 +208,14 @@ FROM s GROUP BY 1 ORDER BY 1
 """
 
 
-def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-class precision / recall / F1 from a confusion matrix —
-    the multi-class eval readout, computed as two tiny aggregations
-    over (true, pred) cells (shuffle width = classes², regardless of
-    corpus size). The deterministic stand-in classifier predicts the
-    true label except on vec_id % 3 == 0 rows, which shift one class
-    up (the q_label_noise corruption model) — so expected recall is
-    ~2/3 and the metric arithmetic (exact counts → one double
-    division each; F1 = 2PR/(P+R)) is fully engine-exact."""
+def confusion_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cls, n_true, n_pred, tp) per class: the confusion-matrix cells
+    of the deterministic stand-in classifier, which predicts the true
+    label except on vec_id % 3 == 0 rows, shifted one class up (the
+    q_label_noise corruption model). Two tiny aggregations over (true,
+    pred) cells: shuffle width is classes², whatever the corpus size.
+    Shared by q_confusion_matrix and q_macro_f1 (plans/stats2);
+    ``CONFUSION_CELLS`` is the oracle twin."""
     em = load(spark, sf_dir, "embeddings").filter(
         F.col("vec_id").isNotNull() & F.col("label").isNotNull()
     )
@@ -239,7 +238,7 @@ def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     pred_tot = cells.groupBy(
         F.col("pred_label").alias("cls")
     ).agg(F.sum("n").cast("bigint").alias("n_pred"))
-    j = (
+    return (
         true_tot.join(pred_tot, "cls", "full")
         .join(tp, "cls", "left")
         .select(
@@ -253,6 +252,14 @@ def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("tp", F.lit(0)).cast("bigint").alias("tp"),
         )
     )
+
+
+def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-class precision / recall / F1 from a confusion matrix —
+    the multi-class eval readout over :func:`confusion_cells`. Expected
+    recall is ~2/3 and the metric arithmetic (exact counts → one double
+    division each; F1 = 2PR/(P+R)) is fully engine-exact."""
+    j = confusion_cells(spark, sf_dir)
     prec = F.col("tp").cast("double") / F.col("n_pred").cast("double")
     rec = F.col("tp").cast("double") / F.col("n_true").cast("double")
     return j.select(
@@ -268,8 +275,8 @@ def q_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("cls")
 
 
-ORACLE_CONFUSION_MATRIX = f"""
-WITH cells AS (
+# CTEs cells .. j(cls, n_true, n_pred, tp): the twin of confusion_cells
+CONFUSION_CELLS = f"""cells AS (
   SELECT CAST(label AS BIGINT) AS true_label,
          CASE WHEN vec_id % 3 = 0
               THEN (CAST(label AS BIGINT) + 1) % {N_CLASSES}
@@ -294,7 +301,10 @@ WITH cells AS (
          CAST(COALESCE(tp.tp, 0) AS BIGINT) AS tp
   FROM tt FULL JOIN pt ON tt.cls = pt.cls
   LEFT JOIN tp ON COALESCE(tt.cls, pt.cls) = tp.cls
-)
+)"""
+
+ORACLE_CONFUSION_MATRIX = f"""
+WITH {CONFUSION_CELLS}
 SELECT cls, n_true, n_pred, tp,
        CAST(tp AS DOUBLE) / n_pred AS precision,
        CAST(tp AS DOUBLE) / n_true AS recall,

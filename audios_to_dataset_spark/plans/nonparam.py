@@ -277,15 +277,13 @@ FROM mid
 """
 
 
-def q_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t-test of order value between the
-    c_custkey-parity cohorts, with the Welch-Satterthwaite degrees of
-    freedom — the continuous-metric experiment readout next to
-    q_ab_test's two-proportion z (conversion) and q_mann_whitney
-    (rank-sum). o_totalprice has 2 decimal places with bounded
-    squares, so both moment sums are DECIMAL-exact; the t and df
-    expressions are identical IEEE trees. One row out.
-    """
+def cohort_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row (n0, n1, m0, m1, v0, v1): the count, mean and sample
+    variance of o_totalprice in the c_custkey-parity cohorts (0 =
+    control, 1 = treatment), the shared input of q_welch_t and
+    q_cohens_d (plans/stats2). o_totalprice has 2 decimal places with
+    bounded squares, so both moment sums are DECIMAL-exact; a variance
+    is NULL below two rows. ``COHORT_MOMENTS`` is the oracle twin."""
     o = load(spark, sf_dir, "orders").filter(
         F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull()
     ).select(
@@ -311,35 +309,15 @@ def q_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     m0, m1 = F.col("s0") / n0d, F.col("s1") / n1d
     v0 = (F.col("ss0") - (F.col("s0") * F.col("s0")) / n0d) / (n0d - 1.0)
     v1 = (F.col("ss1") - (F.col("s1") * F.col("s1")) / n1d) / (n1d - 1.0)
-    mid = piv.select(
+    return piv.select(
         "n0", "n1", m0.alias("m0"), m1.alias("m1"),
         F.when(F.col("n0") > 1, v0).alias("v0"),
         F.when(F.col("n1") > 1, v1).alias("v1"),
     )
-    a = F.col("v1") / F.col("n1").cast("double")
-    b = F.col("v0") / F.col("n0").cast("double")
-    se2 = a + b
-    dfree = (se2 * se2) / (
-        (a * a) / (F.col("n1").cast("double") - 1.0)
-        + (b * b) / (F.col("n0").cast("double") - 1.0)
-    )
-    ok = (F.col("v0").isNotNull() & F.col("v1").isNotNull())
-    return mid.select(
-        F.col("n1").alias("n_treat"), F.col("n0").alias("n_ctrl"),
-        sround(F.col("m1") - F.col("m0"), 9).alias("mean_diff"),
-        F.when(ok & (se2 > 0.0),
-               sround((F.col("m1") - F.col("m0")) / F.sqrt(se2), 9))
-        .alias("t_stat"),
-        F.when(ok & (se2 > 0.0), sround(dfree, 9)).alias("df"),
-    )
 
 
-_A_SQL = "(v1 / CAST(n1 AS DOUBLE))"
-_B_SQL = "(v0 / CAST(n0 AS DOUBLE))"
-_SE2_SQL = f"({_A_SQL} + {_B_SQL})"
-
-ORACLE_WELCH_T = f"""
-WITH o AS (
+# CTEs o .. mid(n0, n1, m0, m1, v0, v1): the twin of cohort_moments
+COHORT_MOMENTS = """o AS (
   SELECT CAST(o_custkey % 2 AS INTEGER) AS grp, o_totalprice AS x
   FROM orders
   WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
@@ -364,7 +342,42 @@ WITH o AS (
     CASE WHEN n1 > 1 THEN (ss1 - (s1 * s1) / CAST(n1 AS DOUBLE))
                           / (CAST(n1 AS DOUBLE) - 1.0) END AS v1
   FROM piv
-)
+)"""
+
+
+def q_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Welch's unequal-variance t-test of order value between the
+    c_custkey-parity cohorts, with the Welch-Satterthwaite degrees of
+    freedom — the continuous-metric experiment readout next to
+    q_ab_test's two-proportion z (conversion) and q_mann_whitney
+    (rank-sum). The moments come from :func:`cohort_moments`; the t
+    and df expressions are identical IEEE trees. One row out.
+    """
+    mid = cohort_moments(spark, sf_dir)
+    a = F.col("v1") / F.col("n1").cast("double")
+    b = F.col("v0") / F.col("n0").cast("double")
+    se2 = a + b
+    dfree = (se2 * se2) / (
+        (a * a) / (F.col("n1").cast("double") - 1.0)
+        + (b * b) / (F.col("n0").cast("double") - 1.0)
+    )
+    ok = (F.col("v0").isNotNull() & F.col("v1").isNotNull())
+    return mid.select(
+        F.col("n1").alias("n_treat"), F.col("n0").alias("n_ctrl"),
+        sround(F.col("m1") - F.col("m0"), 9).alias("mean_diff"),
+        F.when(ok & (se2 > 0.0),
+               sround((F.col("m1") - F.col("m0")) / F.sqrt(se2), 9))
+        .alias("t_stat"),
+        F.when(ok & (se2 > 0.0), sround(dfree, 9)).alias("df"),
+    )
+
+
+_A_SQL = "(v1 / CAST(n1 AS DOUBLE))"
+_B_SQL = "(v0 / CAST(n0 AS DOUBLE))"
+_SE2_SQL = f"({_A_SQL} + {_B_SQL})"
+
+ORACLE_WELCH_T = f"""
+WITH {COHORT_MOMENTS}
 SELECT n1 AS n_treat, n0 AS n_ctrl,
   {sround_sql("m1 - m0", 9)} AS mean_diff,
   CASE WHEN v0 IS NOT NULL AND v1 IS NOT NULL AND {_SE2_SQL} > 0.0

@@ -2,18 +2,21 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import similarity as S
 from ._oracle_sql import (
     AUTO_PLANES,
+    INDEXED_VECTORS,
     VECTORS,
     cc_labels,
     cosine,
+    dot,
     emb_pairs,
     lsh_buckets,
+    norm,
     plane_sql,
 )
 from ._util import DEC, dsum, dsum_sql, sround, sround_sql
@@ -24,12 +27,141 @@ TOP_K = 20
 # the rounded query cosine every exact query-vector oracle ranks on
 _QCOS = cosine("e", "qe", 3)
 
+# vu(vec_id, u): the indexable vectors scaled to unit length, zero norms
+# dropped — operators.similarity._unit_vectors
+_UNIT_VECTORS = f"""{INDEXED_VECTORS}, vu AS MATERIALIZED (
+  SELECT vec_id, list_transform(e, x -> x / nrm) AS u
+  FROM (SELECT vec_id, e, {norm("e")} AS nrm FROM v) n
+  WHERE nrm > 0
+)"""
+
+# (vec_id, label) of the labelled rows, labels as INT
+_LABELS = """lab AS (
+  SELECT vec_id, CAST(label AS INT) AS label FROM embeddings
+  WHERE vec_id IS NOT NULL AND label IS NOT NULL
+)"""
+
 _COS_CTE = f"""
 WITH {VECTORS}, q AS (
   SELECT e AS qe FROM v WHERE vec_id = {{qid}}
 ), scored AS (
   SELECT vec_id, {_QCOS} AS cos_sim FROM v, q
 )
+"""
+
+
+def _topk_per_src(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """(src, dst): per probe ``src``, the ``k`` rows of ``scored`` with
+    the highest ``score``, vec_id tie-break; dst is their vec_id."""
+    w = Window.partitionBy("src").orderBy(F.col(score).desc(), "vec_id")
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("src", F.col("vec_id").alias("dst"))
+    )
+
+
+def _exact_topk(
+    em: DataFrame, probe: Column, k: int, dim: int | None = None
+) -> DataFrame:
+    """(src, dst): the exact brute-force top-k of every probe vector
+    (the rows where ``probe`` holds) among the OTHER vectors, on the
+    3-place cosine of their first ``dim`` dimensions (all when None).
+    The probe rows broadcast against the table: probes × N scores,
+    linear in the corpus."""
+    probes = em.filter(probe).select(
+        F.col("vec_id").alias("src"), F.col("embedding").alias("qe")
+    )
+    e, qe = F.col("embedding"), F.col("qe")
+    if dim is not None:
+        e, qe = F.slice(e, 1, dim), F.slice(qe, 1, dim)
+    scored = (
+        em.crossJoin(F.broadcast(probes))
+        .filter(F.col("vec_id") != F.col("src"))
+        .withColumn("cos_sim", sround(S._cosine(e, qe), 3))
+    )
+    return _topk_per_src(scored, "cos_sim", k)
+
+
+def _recall_at_k(
+    exact: DataFrame, approx: list[tuple[str, str, DataFrame]]
+) -> DataFrame:
+    """Recall@k per probe: (src, n_exact, then one hit column per
+    ``(hit, recall, frame)`` of ``approx``, then the recall columns).
+    ``hit`` counts the exact (src, dst) rows ``frame`` also holds and
+    ``recall`` is hit / n_exact, an exact integer ratio."""
+    out = exact.groupBy("src").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_exact")
+    )
+    for hit, _, frame in approx:
+        n = (
+            exact.join(frame, ["src", "dst"], "left_semi")
+            .groupBy("src")
+            .agg(F.count(F.lit(1)).alias(hit))
+        )
+        out = out.join(n, "src", "left")
+    got = {hit: F.coalesce(hit, F.lit(0)) for hit, _, _ in approx}
+    return out.select(
+        "src",
+        "n_exact",
+        *[got[hit].cast("bigint").alias(hit) for hit, _, _ in approx],
+        *[
+            (got[hit].cast("double") / F.col("n_exact").cast("double"))
+            .alias(recall)
+            for hit, recall, _ in approx
+        ],
+    ).orderBy("src")
+
+
+def _topk_sql(name: str, scored: str, score: str, k: int) -> str:
+    """CTE ``name``(src, dst): per src, the ``k`` rows of relation
+    ``scored``(src, dst, ...) with the highest ``score``, dst tie-break
+    — the twin of :func:`_topk_per_src`."""
+    return f"""{name} AS (
+  SELECT src, dst FROM (
+    SELECT src, dst, row_number() OVER (PARTITION BY src
+             ORDER BY {score} DESC, dst) AS rk
+    FROM {scored}) x WHERE rk <= {k}
+)"""
+
+
+def _exact_topk_sql(name: str, k: int, dim: int | None = None) -> str:
+    """CTE ``name``(src, dst) over v and probes(src, qe): the twin of
+    :func:`_exact_topk`."""
+    e, qe = ("v.e", "p.qe") if dim is None else (
+        f"(v.e[1:{dim}])", f"(p.qe[1:{dim}])"
+    )
+    scored = f"""(
+    SELECT p.src, v.vec_id AS dst, {cosine(e, qe, 3)} AS cos_sim
+    FROM v CROSS JOIN probes p WHERE v.vec_id <> p.src) s"""
+    return _topk_sql(name, scored, "cos_sim", k)
+
+
+def _recall_sql(approx: list[tuple[str, str, str]]) -> str:
+    """The recall@k SELECT over CTE exact(src, dst), one
+    ``(hit, recall, cte)`` per approximate side — the twin of
+    :func:`_recall_at_k`."""
+    got = "COALESCE(MAX(h{}.n), 0)"
+    cols = [
+        f"CAST({got.format(i)} AS BIGINT) AS {hit}"
+        for i, (hit, _, _) in enumerate(approx)
+    ] + [
+        f"CAST({got.format(i)} AS DOUBLE)\n         / CAST(COUNT(*) AS DOUBLE)"
+        f" AS {recall}"
+        for i, (_, recall, _) in enumerate(approx)
+    ]
+    joins = "".join(
+        f"\nLEFT JOIN (\n  SELECT src, COUNT(*) AS n"
+        f" FROM exact JOIN {cte} USING (src, dst)\n  GROUP BY src) h{i}"
+        f" ON h{i}.src = e.src"
+        for i, (_, _, cte) in enumerate(approx)
+    )
+    sel = ",\n       ".join(cols)
+    return f"""
+SELECT e.src, CAST(COUNT(*) AS BIGINT) AS n_exact,
+       {sel}
+FROM exact e{joins}
+GROUP BY e.src ORDER BY e.src
 """
 
 
@@ -114,52 +246,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_ANN_IVF = f"""
-WITH v AS (
-  -- dirty-row exclusion mirrors ivf_assignments (--nulls sweep)
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-), nn AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM v
-), cents AS (
-  SELECT vec_id AS cid, e AS ce, nrm AS cnrm
-  FROM nn ORDER BY vec_id LIMIT {N_CENTROIDS}
-), scored AS (
-  SELECT nn.vec_id, cents.cid,
-         round((list_sum(list_transform(range(1, len(nn.e) + 1),
-                                        i -> nn.e[i] * cents.ce[i]))
-                / (nn.nrm * cents.cnrm)) * 1000000.0) / 1000000.0 + 0.0
-           AS c6
-  FROM nn, cents
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY c6 DESC, cid) AS rn
-    FROM scored) t WHERE rn = 1
-), q AS (
-  SELECT e AS qe, nrm AS qnrm FROM nn WHERE vec_id = {QUERY_ID}
-), probe AS (
-  SELECT cid FROM (
-    SELECT cents.cid,
-           round((list_sum(list_transform(range(1, len(cents.ce) + 1),
-                                          i -> cents.ce[i] * qe[i]))
-                  / (cents.cnrm * qnrm)) * 1000000.0) / 1000000.0 AS qc
-    FROM cents, q) t
-  ORDER BY qc DESC, cid LIMIT {NPROBE}
-), cand AS (
-  SELECT a.vec_id FROM assign a JOIN probe p ON a.cid = p.cid
-)
-SELECT nn.vec_id,
-       round((list_sum(list_transform(range(1, len(nn.e) + 1),
-                                      i -> nn.e[i] * qe[i]))
-              / (nn.nrm * qnrm)) * 1000.0) / 1000.0 + 0.0 AS cos_sim
-FROM nn JOIN cand USING (vec_id), q
-ORDER BY cos_sim DESC, vec_id LIMIT {TOP_K}
-"""
-
-
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH approximate top-k vs the query vector — the
     bucket-probe ANN scale path itself, oracle-checked (deterministic
@@ -232,58 +318,15 @@ ORDER BY cos_sim DESC, vec_id LIMIT {TOP_K}
 KNN_K = 3
 
 
-_KNN_COUNT_MEMO: dict[tuple, int] = {}
-
-
 def _knn_planes_for(em: DataFrame) -> list[list[list[float]]]:
-    """Auto-scaled plane set for the k-NN graph family: one cheap
-    count() picks planes-per-table via the integer log2 rule in
-    plans/dedup (knn_n_planes) — the plan adapts to corpus size
-    instead of carrying a hand-dialed bucket count to 100×.
-
-    The count is memoized per input-file set: five plans
-    (q_knn_graph, q_ann_recall, q_kcore, q_link_predict,
-    q_label_noise) each construct a plane set over the same
-    embeddings table, and without the memo each plan build launched
-    its own full-table count job. File-backed reads (the only way
-    these plans load embeddings) key on the parquet file list PLUS the
-    analyzed plan (expression ids stripped) so a filtered/projected
-    frame over the same files never reuses the bare-table count
-    (ADVICE r8); an in-memory DataFrame (tests) falls through to a
-    plain count.
-
-    Limitation (documented, not defended): an in-process rewrite of
-    the SAME parquet file paths would serve a stale count. Spark part
-    files carry fresh UUIDs per write, so this needs a non-Spark
-    writer reusing exact filenames; tools/scale_smoke.py's cache
-    rebuild goes through a full directory delete + Spark write and is
-    therefore safe. Call clear_knn_count_memo() if you do rewrite
-    paths in place."""
+    """Auto-scaled plane set for the k-NN graph family: one count() job
+    picks planes-per-table via the integer log2 rule in plans/dedup
+    (knn_n_planes) — the plan adapts to corpus size instead of carrying
+    a hand-dialed bucket count to 100×. Each build counts its own
+    input: no count is kept across builds."""
     from .dedup import knn_planes
 
-    return knn_planes(_corpus_count(em))
-
-
-def _corpus_count(em: DataFrame) -> int:
-    """Memoized row count shared by every plane-auto-scaling plan
-    (k-NN family + q_dbscan) — see the keying/invalidation notes on
-    :func:`_knn_planes_for`."""
-    import re as _re
-
-    files = tuple(sorted(em.inputFiles()))
-    if files:
-        plan = em._jdf.queryExecution().analyzed().toString()
-        key = (_re.sub(r"#\d+", "#", plan), files)
-        if key not in _KNN_COUNT_MEMO:
-            _KNN_COUNT_MEMO[key] = em.count()
-        return _KNN_COUNT_MEMO[key]
-    return em.count()
-
-
-def clear_knn_count_memo() -> None:
-    """Drop all memoized row counts (for callers that rewrite parquet
-    files in place within one process)."""
-    _KNN_COUNT_MEMO.clear()
+    return knn_planes(em.count())
 
 
 def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -303,47 +346,47 @@ def q_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_graph(em, planes, k=KNN_K).orderBy("src", "rank")
 
 
-def _knn_graph_sql_body() -> str:
-    """The k-NN-graph oracle minus its final ORDER BY — reusable as a
-    CTE base by downstream graph oracles (q_kcore in plans/sketches).
-    Buckets mirror the auto-scaled plane rule: all 12 family planes'
-    sign bits are concatenated, then substr() keeps the first P where
-    P comes from the knn_nplanes_sql row-count twin — the same prefix
-    slice the Spark side takes."""
+def _knn_ctes() -> str:
+    """CTEs knn_np .. scored(src, dst, cos_sim): every directed pair of
+    LSH bucket-mates and its 3-place unit-vector cosine — the candidates
+    and scores of operators.similarity.knn_graph. Buckets mirror the
+    auto-scaled plane rule: all 12 family planes' sign bits are
+    concatenated, then substr() keeps the first P where P comes from the
+    knn_nplanes_sql row-count twin — the same prefix slice the Spark
+    side takes."""
     from .dedup import KNN_PLANES_FULL, knn_nplanes_sql
 
-    # unit-vector dot, mirroring knn_graph's pre-normalized scoring
-    cos = "list_sum(list_transform(range(1, len(a.u) + 1), i -> a.u[i] * b.u[i]))"
-    return f"""
-WITH knn_np AS (
-  -- auto-scaled planes-per-table from the raw row count
-  -- (plans/dedup.knn_nplanes_sql, integer twin of knn_n_planes)
+    return f"""knn_np AS (
   {knn_nplanes_sql("embeddings")}
-), v AS (
-  -- dirty-row exclusion mirrors knn_graph: NULL ids/vectors and
-  -- zero-norm vectors are dropped (operator filters _n > 0)
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-), vn AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM v
-), vu AS (
-  SELECT vec_id, list_transform(e, x -> x / nrm) AS u FROM vn
-  WHERE nrm > 0
-), {lsh_buckets(KNN_PLANES_FULL, AUTO_PLANES)}, cand AS (
+), {_UNIT_VECTORS}, {lsh_buckets(KNN_PLANES_FULL, AUTO_PLANES)}, cand AS (
   SELECT DISTINCT x.vec_id AS src, y.vec_id AS dst
   FROM buckets x JOIN buckets y
     ON x.bucket = y.bucket AND x.vec_id <> y.vec_id
 ), scored AS (
-  SELECT src, dst,
-         round(({cos}) * 1000.0) / 1000.0 + 0.0 AS cos_sim
+  SELECT src, dst, {sround_sql(dot("a.u", "b.u"), 3)} AS cos_sim
   FROM cand JOIN vu a ON a.vec_id = src JOIN vu b ON b.vec_id = dst
-), ranked AS (
+)"""
+
+
+def _ranked_sql(rel: str, k: int, cols: str) -> str:
+    """A ranked CTE over relation ``rel``(src, dst, cos_sim, ...) — the
+    row_number per src (cos_sim desc, dst) — and the SELECT of ``cols``
+    with rank <= ``k``: the twin of operators.similarity._rank_unit."""
+    return f""", ranked AS (
   SELECT *, CAST(row_number() OVER (PARTITION BY src
               ORDER BY cos_sim DESC, dst) AS BIGINT) AS rank
-  FROM scored)
-SELECT src, dst, cos_sim, rank FROM ranked WHERE rank <= {KNN_K}
+  FROM {rel})
+SELECT {cols} FROM ranked WHERE rank <= {k}
 """
+
+
+def _knn_graph_sql_body() -> str:
+    """The k-NN-graph oracle without its ORDER BY: the knn relation of
+    the q_label_noise and q_ann_recall oracles and of q_kcore and
+    q_link_predict (plans/sketches)."""
+    return f"WITH {_knn_ctes()}" + _ranked_sql(
+        "scored", KNN_K, "src, dst, cos_sim, rank"
+    )
 
 
 def _oracle_knn_graph() -> str:
@@ -353,123 +396,29 @@ def _oracle_knn_graph() -> str:
 HN_K = 5
 
 
-def _hard_negatives_sql_body() -> str:
-    """Hard-negative oracle: the SAME bucket/score CTEs as the k-NN
-    twin up through ``scored``, then a label join that keeps only
-    DIFFERENT-label pairs before the per-anchor rank — so the rank
-    runs over negatives only, which is the operator's point (a
-    post-rank filter would lose negatives hiding beyond rank k)."""
-    body = _knn_graph_sql_body()
-    marker = "), ranked AS ("
-    prefix = body[: body.index(marker)]
-    return prefix + f"""), lab AS (
-  SELECT vec_id, CAST(label AS INT) AS label FROM embeddings
-  WHERE vec_id IS NOT NULL AND label IS NOT NULL
-), neg AS (
-  SELECT s.src, la.label AS src_label, s.dst,
-         lb.label AS dst_label, s.cos_sim
-  FROM scored s
-  JOIN lab la ON la.vec_id = s.src
-  JOIN lab lb ON lb.vec_id = s.dst
-  WHERE la.label <> lb.label
-), ranked AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY src
-              ORDER BY cos_sim DESC, dst) AS BIGINT) AS rank
-  FROM neg)
-SELECT src, src_label, dst, dst_label, cos_sim, rank
-FROM ranked WHERE rank <= {HN_K}
-"""
-
-
 def q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality evaluation: recall@3 of the LSH k-NN graph against
     exact brute-force top-3 for a 5-vector probe set — the measurement
     that decides whether the bucket configuration is good enough to
-    serve. Exact side: probe rows broadcast against the table (5·N
-    scores, linear); approx side: the same knn_graph plan restricted to
-    the probes. Recall is an exact integer ratio."""
-    from ..operators.similarity import knn_graph
-
+    serve. Exact side: :func:`_exact_topk`; approx side: the same
+    knn_graph plan restricted to the probes. Recall is an exact integer
+    ratio."""
     probe_ids = list(range(5))
     em = load(spark, sf_dir, "embeddings")
-    PLANES = _knn_planes_for(em)
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    v = em.select("vec_id", e.alias("e"))
-    probes = v.filter(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("src"), F.col("e").alias("qe")
-    )
-    dot = F.aggregate(
-        F.zip_with("e", "qe", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
-    )
-    cos = dot / (nrm(F.col("e")) * nrm(F.col("qe")))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), "vec_id"
-    )
-    exact = (
-        v.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("src"))
-        .withColumn("cos_sim", sround(cos, 3))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= KNN_K)
-        .select("src", F.col("vec_id").alias("dst"))
-    )
-    approx = knn_graph(em, PLANES, k=KNN_K).filter(
+    exact = _exact_topk(em, F.col("vec_id").isin(probe_ids), KNN_K)
+    approx = S.knn_graph(em, _knn_planes_for(em), k=KNN_K).filter(
         F.col("src").isin(probe_ids)
-    ).select("src", "dst")
-    hits = exact.join(approx, ["src", "dst"], "left_semi")
-    n_hits = hits.groupBy("src").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hit")
     )
-    return (
-        exact.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .join(n_hits, "src", "left")
-        .select(
-            "src",
-            "n_exact",
-            F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
-            (
-                F.coalesce("n_hit", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double")
-            ).alias("recall"),
-        )
-        .orderBy("src")
-    )
+    return _recall_at_k(exact, [("n_hit", "recall", approx)])
 
 
 def _oracle_ann_recall() -> str:
-    knn = _oracle_knn_graph().replace("ORDER BY src, rank", "")
     return f"""
 WITH {VECTORS}, probes AS (
   SELECT vec_id AS src, e AS qe FROM v WHERE vec_id < 5
-), scored AS (
-  SELECT probes.src, v.vec_id AS dst, {_QCOS} AS cos_sim
-  FROM v CROSS JOIN probes WHERE v.vec_id <> probes.src
-), exact AS (
-  SELECT src, dst FROM (
-    SELECT src, dst, row_number() OVER (PARTITION BY src
-             ORDER BY cos_sim DESC, dst) AS rk
-    FROM scored) x WHERE rk <= {KNN_K}
-), approx AS (
-  SELECT src, dst FROM ({knn}) g WHERE src < 5
-), hits AS (
-  SELECT exact.src, CAST(COUNT(*) AS BIGINT) AS n_hit
-  FROM exact JOIN approx USING (src, dst) GROUP BY exact.src
-)
-SELECT e.src, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS BIGINT) AS n_hit,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS recall
-FROM exact e LEFT JOIN hits h ON h.src = e.src
-GROUP BY e.src ORDER BY e.src
-"""
+), {_exact_topk_sql("exact", KNN_K)}, approx AS (
+  SELECT src, dst FROM ({_knn_graph_sql_body()}) g WHERE src < 5
+)""" + _recall_sql([("n_hit", "recall", "approx")])
 
 
 def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,10 +479,7 @@ def q_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_label_noise() -> str:
     return f"""
 WITH knn AS MATERIALIZED ({_knn_graph_sql_body()}),
-lab AS (
-  SELECT vec_id, CAST(label AS INT) AS label FROM embeddings
-  WHERE vec_id IS NOT NULL AND label IS NOT NULL
-), votes AS (
+{_LABELS}, votes AS (
   SELECT knn.src, lab.label AS nb_label, COUNT(*) AS n
   FROM knn JOIN lab ON lab.vec_id = knn.dst
   GROUP BY knn.src, lab.label
@@ -576,7 +522,18 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_hard_negatives() -> str:
-    return _hard_negatives_sql_body() + "ORDER BY src, rank"
+    """The k-NN candidates and scores, kept to DIFFERENT-label pairs
+    before the per-anchor rank, so the rank runs over negatives only."""
+    return f"""WITH {_knn_ctes()}, {_LABELS}, neg AS (
+  SELECT s.src, la.label AS src_label, s.dst,
+         lb.label AS dst_label, s.cos_sim
+  FROM scored s
+  JOIN lab la ON la.vec_id = s.src
+  JOIN lab lb ON lb.vec_id = s.dst
+  WHERE la.label <> lb.label
+)""" + _ranked_sql(
+        "neg", HN_K, "src, src_label, dst, dst_label, cos_sim, rank"
+    ) + "ORDER BY src, rank"
 
 CORESET_K = 8
 
@@ -598,39 +555,14 @@ def q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     round i never re-derives rounds 1..i-1 (the naive lazy-plan
     formulation re-evaluates exponentially — same lesson as the
     oracle's MATERIALIZED hints)."""
-    em = load(spark, sf_dir, "embeddings")
-    un = (
-        em.filter(
-            F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
-        )
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda x: x.cast("double")).alias(
-                "_e"
-            ),
-        )
-        .withColumn(
-            "_n",
-            F.sqrt(
-                F.aggregate(
-                    F.transform("_e", lambda x: x * x),
-                    F.lit(0.0),
-                    lambda a, x: a + x,
-                )
-            ),
-        )
-        .filter(F.col("_n") > 0)
-        .select(
-            "vec_id",
-            F.transform("_e", lambda x: x / F.col("_n")).alias("u"),
-        )
-        .localCheckpoint(eager=True)
+    em = load(spark, sf_dir, "embeddings").filter(
+        F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
     )
-    dot = F.aggregate(
-        F.zip_with("u", "cu", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
+    # the seed is the minimum vec_id, and Spark sorts a NULL id first
+    un = S._unit_vectors(em, "vec_id", "embedding").localCheckpoint(
+        eager=True
     )
+    udot = S._dot(F.col("u"), F.col("cu"))
     seed = un.orderBy("vec_id").limit(1)
     picked = [
         seed.select(
@@ -640,7 +572,7 @@ def q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     center = seed.select(F.col("u").alias("cu"))
     mind = (
         un.crossJoin(F.broadcast(center))
-        .select("vec_id", "u", sround(1.0 - dot, 4).alias("d"))
+        .select("vec_id", "u", sround(1.0 - udot, 4).alias("d"))
         .localCheckpoint(eager=True)
     )
     for step in range(2, CORESET_K + 1):
@@ -660,7 +592,7 @@ def q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "vec_id",
                 "u",
-                F.least(F.col("d"), sround(1.0 - dot, 4)).alias("d"),
+                F.least(F.col("d"), sround(1.0 - udot, 4)).alias("d"),
             )
             .localCheckpoint(eager=True)
         )
@@ -671,26 +603,14 @@ def q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_coreset() -> str:
-    base = """
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-), vn AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM v
-), vu AS MATERIALIZED (
-  SELECT vec_id, list_transform(e, x -> x / nrm) AS u FROM vn
-  WHERE nrm > 0
-), s1 AS MATERIALIZED (
+    d = sround_sql(f"1.0 - {dot('x.u', 'c.u')}", 4)
+    parts = [f"""
+WITH {_UNIT_VECTORS}, s1 AS MATERIALIZED (
   SELECT vec_id, u FROM vu ORDER BY vec_id LIMIT 1
-)"""
-    dot = "list_sum(list_transform(range(1, len(x.u) + 1), i -> x.u[i] * c.u[i]))"
-    parts = [base]
-    parts.append(f""", d1 AS MATERIALIZED (
-  SELECT x.vec_id, x.u,
-         round((1.0 - ({dot})) * 10000.0) / 10000.0 + 0.0 AS d
+), d1 AS MATERIALIZED (
+  SELECT x.vec_id, x.u, {d} AS d
   FROM vu x CROSS JOIN s1 c
-)""")
+)"""]
     for step in range(2, CORESET_K + 1):
         prev = step - 1
         parts.append(f""", s{step} AS MATERIALIZED (
@@ -699,9 +619,7 @@ WITH v AS (
         if step == CORESET_K:
             break
         parts.append(f""", d{step} AS MATERIALIZED (
-  SELECT x.vec_id, x.u,
-         LEAST(x.d,
-               round((1.0 - ({dot})) * 10000.0) / 10000.0 + 0.0) AS d
+  SELECT x.vec_id, x.u, LEAST(x.d, {d}) AS d
   FROM d{prev} x CROSS JOIN s{step} c
 )""")
     sels = [
@@ -729,116 +647,24 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_ann_pq_recall; both sides are deterministic brute force on the
     broadcast probe set (the yardstick, not the scale path), rounded
     before ranking with id tie-breaks."""
-    from pyspark.sql import Window
-
     em = load(spark, sf_dir, "embeddings")
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    v = em.select("vec_id", e.alias("e"))
-    probes = v.filter(F.col("vec_id") < MRL_PROBES).select(
-        F.col("vec_id").alias("src"), F.col("e").alias("qe")
-    )
-
-    def topk(dim: int | None, out: str) -> DataFrame:
-        ec = F.col("e") if dim is None else F.slice(F.col("e"), 1, dim)
-        qc = F.col("qe") if dim is None else F.slice(F.col("qe"), 1, dim)
-        dot = F.aggregate(
-            F.zip_with(ec, qc, lambda a, b: a * b),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        nrm = lambda c: F.sqrt(  # noqa: E731
-            F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
-        )
-        w = Window.partitionBy("src").orderBy(
-            F.col("cos_sim").desc(), "vec_id"
-        )
-        return (
-            v.crossJoin(F.broadcast(probes))
-            .filter(F.col("vec_id") != F.col("src"))
-            .withColumn("cos_sim", sround(dot / (nrm(ec) * nrm(qc)), 3))
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= MRL_K)
-            .select("src", F.col("vec_id").alias(out))
-        )
-
-    exact = topk(None, "dst")
-    hits32 = (
-        exact.join(
-            topk(32, "dst"), ["src", "dst"], "left_semi"
-        ).groupBy("src").agg(F.count(F.lit(1)).alias("h32"))
-    )
-    hits16 = (
-        exact.join(
-            topk(16, "dst"), ["src", "dst"], "left_semi"
-        ).groupBy("src").agg(F.count(F.lit(1)).alias("h16"))
-    )
-    return (
-        exact.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .join(hits32, "src", "left")
-        .join(hits16, "src", "left")
-        .select(
-            "src",
-            "n_exact",
-            F.coalesce("h32", F.lit(0)).cast("bigint").alias("hit_dim32"),
-            F.coalesce("h16", F.lit(0)).cast("bigint").alias("hit_dim16"),
-            (
-                F.coalesce("h32", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double")
-            ).alias("recall_dim32"),
-            (
-                F.coalesce("h16", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double")
-            ).alias("recall_dim16"),
-        )
-        .orderBy("src")
-    )
+    probe = F.col("vec_id") < MRL_PROBES
+    exact = _exact_topk(em, probe, MRL_K)
+    return _recall_at_k(exact, [
+        ("hit_dim32", "recall_dim32", _exact_topk(em, probe, MRL_K, 32)),
+        ("hit_dim16", "recall_dim16", _exact_topk(em, probe, MRL_K, 16)),
+    ])
 
 
 def _oracle_matryoshka_recall() -> str:
-    def scored(dim: str, name: str) -> str:
-        if dim == "full":
-            ee, qq = "e", "qe"
-        else:
-            ee, qq = f"e[1:{dim}]", f"qe[1:{dim}]"
-        return f"""{name} AS (
-  SELECT src, dst FROM (
-    SELECT probes.src, v.vec_id AS dst,
-           row_number() OVER (PARTITION BY probes.src ORDER BY
-             round((list_sum(list_transform(range(1, len({ee}) + 1),
-                     i -> ({ee})[i] * ({qq})[i]))
-               / (sqrt(list_sum(list_transform({ee}, x -> x * x)))
-                  * sqrt(list_sum(list_transform({qq}, x -> x * x)))))
-               * 1000.0) / 1000.0 + 0.0 DESC, v.vec_id) AS rk
-    FROM v CROSS JOIN probes WHERE v.vec_id <> probes.src) x
-  WHERE rk <= {MRL_K}
-)"""
-
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), probes AS (
+WITH {VECTORS}, probes AS (
   SELECT vec_id AS src, e AS qe FROM v WHERE vec_id < {MRL_PROBES}
-), {scored('full', 'exact')}, {scored('32', 't32')}, {scored('16', 't16')},
-h32 AS (
-  SELECT exact.src, CAST(COUNT(*) AS BIGINT) AS h
-  FROM exact JOIN t32 USING (src, dst) GROUP BY exact.src
-), h16 AS (
-  SELECT exact.src, CAST(COUNT(*) AS BIGINT) AS h
-  FROM exact JOIN t16 USING (src, dst) GROUP BY exact.src
-)
-SELECT e.src, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(COALESCE(MAX(a.h), 0) AS BIGINT) AS hit_dim32,
-       CAST(COALESCE(MAX(b.h), 0) AS BIGINT) AS hit_dim16,
-       CAST(COALESCE(MAX(a.h), 0) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS recall_dim32,
-       CAST(COALESCE(MAX(b.h), 0) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS recall_dim16
-FROM exact e LEFT JOIN h32 a ON a.src = e.src
-LEFT JOIN h16 b ON b.src = e.src
-GROUP BY e.src ORDER BY e.src
-"""
+), {_exact_topk_sql("exact", MRL_K)}, {_exact_topk_sql("t32", MRL_K, 32)},
+{_exact_topk_sql("t16", MRL_K, 16)}""" + _recall_sql([
+        ("hit_dim32", "recall_dim32", "t32"),
+        ("hit_dim16", "recall_dim16", "t16"),
+    ])
 
 
 HYBRID_KEYWORD = "small"
@@ -863,15 +689,7 @@ def q_hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = v.filter(F.col("vec_id") == QUERY_ID).select(
         F.col("e").alias("qe")
     )
-    dot = F.aggregate(
-        F.zip_with("e", "qe", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
-    )
-    cos = dot / (nrm(F.col("e")) * nrm(F.col("qe")))
+    cos = S._cosine(F.col("e"), F.col("qe"))
     return (
         hits.join(v, hits.doc_id == v.vec_id)
         .crossJoin(F.broadcast(q))
@@ -887,16 +705,8 @@ WITH hits AS (
   SELECT doc_id FROM documents
   WHERE list_contains(string_split(lower(text), ' '),
                       '{HYBRID_KEYWORD}')
-), v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-), q AS (SELECT e AS qe FROM v WHERE vec_id = {QUERY_ID})
-SELECT doc_id,
-       round((list_sum(list_transform(range(1, len(e) + 1),
-               i -> e[i] * qe[i]))
-         / (sqrt(list_sum(list_transform(e, x -> x * x)))
-            * sqrt(list_sum(list_transform(qe, x -> x * x)))))
-         * 1000.0) / 1000.0 + 0.0 AS cos_sim
+), {VECTORS}, q AS (SELECT e AS qe FROM v WHERE vec_id = {QUERY_ID})
+SELECT doc_id, {cosine("e", "qe", 3)} AS cos_sim
 FROM hits JOIN v ON vec_id = doc_id CROSS JOIN q
 ORDER BY cos_sim DESC, doc_id LIMIT 10
 """
@@ -918,18 +728,14 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmeans_assign_cte(name: str, cents: str, src: str = "v") -> str:
-    dot = (
-        f"list_sum(list_transform(range(1, len({src}.e) + 1),"
-        f" i -> {src}.e[i] * c.ce[i]))"
-    )
-    nrm_v = f"sqrt(list_sum(list_transform({src}.e, x -> x * x)))"
-    nrm_c = "sqrt(list_sum(list_transform(c.ce, x -> x * x)))"
-    c6 = f"round(({dot} / ({nrm_v} * {nrm_c})) * 1000000.0) / 1000000.0"
+    """CTE ``name``(vec_id, cid): each vector of ``src`` assigned to its
+    nearest centroid of ``cents`` on the 6-place cosine, cid tie-break
+    — operators.similarity._nearest."""
     return f"""{name} AS (
   SELECT vec_id, cid FROM (
     SELECT {src}.vec_id, c.cid,
            row_number() OVER (PARTITION BY {src}.vec_id
-                              ORDER BY {c6} DESC, c.cid) AS rn
+             ORDER BY {cosine(f"{src}.e", "c.ce", 6)} DESC, c.cid) AS rn
     FROM {src}, {cents} c) t WHERE rn = 1
 )"""
 
@@ -963,12 +769,7 @@ def _kmeans_ctes(
         # NULL-id / NULL-vector rows are excluded, mirroring the
         # operator-side dirty-row guard in kmeans_centroids (no-op on
         # clean data; pinned by the --nulls sweep)
-        ctes.append(
-            "v AS (SELECT vec_id,"
-            " list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e"
-            " FROM embeddings"
-            " WHERE vec_id IS NOT NULL AND embedding IS NOT NULL)"
-        )
+        ctes.append(INDEXED_VECTORS)
     ctes.append(
         f"{prefix}c0 AS (SELECT vec_id AS cid, e AS ce FROM {src}"
         f" ORDER BY vec_id LIMIT {k})"
@@ -981,13 +782,29 @@ def _kmeans_ctes(
     return ctes, prev
 
 
+def _kmeans_assigned() -> str:
+    """CTEs v .. km(vec_id, cid): the KMEANS_K / KMEANS_ITERS replay
+    and every vector's assignment to the final centroids — the
+    arithmetic of kmeans_assignments, as chained CTEs."""
+    ctes, cents = _kmeans_ctes(KMEANS_K, KMEANS_ITERS)
+    ctes.append(_kmeans_assign_cte("km", cents))
+    return ",\n".join(ctes)
+
+
+def _cluster_pairs_ctes() -> str:
+    """:func:`_kmeans_assigned` plus scored(id_a, id_b, cos_sim): every
+    cluster-mate pair id_a < id_b and its 4-place cosine —
+    operators.similarity._cluster_pairs before its threshold."""
+    return f"""{_kmeans_assigned()}, scored AS (
+  SELECT x.vec_id AS id_a, y.vec_id AS id_b,
+         {cosine("a.e", "b.e", 4)} AS cos_sim
+  FROM km x JOIN km y ON x.cid = y.cid AND x.vec_id < y.vec_id
+  JOIN v a ON a.vec_id = x.vec_id JOIN v b ON b.vec_id = y.vec_id
+)"""
+
+
 def _oracle_kmeans() -> str:
-    """Replay the exact kmeans_assignments arithmetic as chained CTEs."""
-    ctes, final_cents = _kmeans_ctes(KMEANS_K, KMEANS_ITERS)
-    final = f"a{KMEANS_ITERS + 1}"
-    ctes.append(_kmeans_assign_cte(final, final_cents))
-    joined = ",\n".join(ctes)
-    return f"WITH {joined}\nSELECT vec_id, cid FROM {final}"
+    return f"WITH {_kmeans_assigned()}\nSELECT vec_id, cid FROM km"
 
 
 
@@ -1015,49 +832,23 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _oracle_ann_ivf_kmeans() -> str:
-    """KMeans centroid replay (shared CTEs with _oracle_kmeans) feeding
-    the IVF probe replay of ORACLE_ANN_IVF."""
-    ctes, cfin = _kmeans_ctes(KMEANS_K, KMEANS_ITERS)
+def _oracle_ivf(k: int, iters: int, nprobe: int) -> str:
+    """IVF replay over the k-means centroids of :func:`_kmeans_ctes`
+    (zero iterations: the k lowest-id vectors): each vector's nearest
+    centroid, the ``nprobe`` centroid lists nearest the query, and the
+    exact top-k within them — operators.similarity.ivf_topk_vs_query."""
+    ctes, cents = _kmeans_ctes(k, iters)
+    ctes.append(_kmeans_assign_cte("assign", cents))
     joined = ",\n".join(ctes)
     return f"""WITH {joined},
-cents AS (
-  SELECT cid, ce, sqrt(list_sum(list_transform(ce, x -> x * x))) AS cnrm
-  FROM {cfin}
-), nn AS (
-  SELECT vec_id, e, sqrt(list_sum(list_transform(e, x -> x * x))) AS nrm
-  FROM v
-), ivfscored AS (
-  SELECT nn.vec_id, cents.cid,
-         round((list_sum(list_transform(range(1, len(nn.e) + 1),
-                                        i -> nn.e[i] * cents.ce[i]))
-                / (nn.nrm * cents.cnrm)) * 1000000.0) / 1000000.0 + 0.0
-           AS c6
-  FROM nn, cents
-), assign AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id
-                              ORDER BY c6 DESC, cid) AS rn
-    FROM ivfscored) t WHERE rn = 1
-), q AS (
-  SELECT e AS qe, nrm AS qnrm FROM nn WHERE vec_id = {QUERY_ID}
+q AS (
+  SELECT e AS qe FROM v WHERE vec_id = {QUERY_ID}
 ), probe AS (
-  SELECT cid FROM (
-    SELECT cents.cid,
-           round((list_sum(list_transform(range(1, len(cents.ce) + 1),
-                                          i -> cents.ce[i] * qe[i]))
-                  / (cents.cnrm * qnrm)) * 1000000.0) / 1000000.0 AS qc
-    FROM cents, q) t
-  ORDER BY qc DESC, cid LIMIT {NPROBE_KM}
-), cand AS (
-  SELECT a.vec_id FROM assign a JOIN probe p ON a.cid = p.cid
+  SELECT cid FROM {cents}, q
+  ORDER BY {cosine("ce", "qe", 6)} DESC, cid LIMIT {nprobe}
 )
-SELECT nn.vec_id,
-       round((list_sum(list_transform(range(1, len(nn.e) + 1),
-                                      i -> nn.e[i] * qe[i]))
-              / (nn.nrm * qnrm)) * 1000.0) / 1000.0 + 0.0 AS cos_sim
-FROM nn JOIN cand USING (vec_id), q
+SELECT v.vec_id, {cosine("v.e", "qe", 3)} AS cos_sim
+FROM v JOIN assign USING (vec_id) JOIN probe USING (cid), q
 ORDER BY cos_sim DESC, vec_id LIMIT {TOP_K}
 """
 
@@ -1066,129 +857,49 @@ def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN recall gate for the bucket-probe serving path: recall@20 of
     the hyperplane-LSH candidate top-k against exact brute-force top-k
     for the 5-vector probe set — mirrors q_ann_recall but measures the
-    q_ann_lsh query shape itself (any-table bucket collision →
-    candidate re-score → top-k) rather than the k-NN graph. Self-matches
-    are excluded on both sides so recall reflects neighbors, not the
-    trivial self-hit."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import multitable_buckets
+    bucket-probe serving shape itself (lsh_topk_batch, the q_ann_lsh
+    buckets: any-table bucket collision → candidate re-score → top-k)
+    rather than the k-NN graph. Self-matches are excluded on both sides
+    so recall reflects neighbors, not the trivial self-hit."""
     from .dedup import PLANES
 
     probe_ids = list(range(5))
     em = load(spark, sf_dir, "embeddings")
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    v = em.select("vec_id", e.alias("e"))
-
-    bucketed = multitable_buckets(em, PLANES)
-    qb = bucketed.filter(F.col("id").isin(probe_ids)).select(
-        F.col("id").alias("src"), "bucket"
+    exact = _exact_topk(em, F.col("vec_id").isin(probe_ids), TOP_K)
+    approx = S.lsh_topk_batch(em, PLANES, probe_ids, k=TOP_K).select(
+        F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
     )
-    cand = (
-        bucketed.join(F.broadcast(qb), "bucket")
-        .filter(F.col("id") != F.col("src"))
-        .select("src", F.col("id").alias("dst"))
-        .distinct()
-    )
-
-    probes = v.filter(F.col("vec_id").isin(probe_ids)).select(
-        F.col("vec_id").alias("src"), F.col("e").alias("qe")
-    )
-    dv = v.select(F.col("vec_id").alias("dst"), F.col("e").alias("de"))
-    nrm = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
-    )
-    cos_a = F.aggregate(
-        F.zip_with("de", "qe", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    ) / (nrm(F.col("de")) * nrm(F.col("qe")))
-    w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), "dst")
-    approx = (
-        cand.join(dv, "dst")
-        .join(F.broadcast(probes), "src")
-        .withColumn("cos_sim", sround(cos_a, 3))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("src", "dst")
-    )
-
-    cos_e = F.aggregate(
-        F.zip_with("e", "qe", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    ) / (nrm(F.col("e")) * nrm(F.col("qe")))
-    we = Window.partitionBy("src").orderBy(
-        F.col("cos_sim").desc(), "vec_id"
-    )
-    exact = (
-        v.crossJoin(F.broadcast(probes))
-        .filter(F.col("vec_id") != F.col("src"))
-        .withColumn("cos_sim", sround(cos_e, 3))
-        .withColumn("rk", F.row_number().over(we))
-        .filter(F.col("rk") <= TOP_K)
-        .select("src", F.col("vec_id").alias("dst"))
-    )
-
-    hits = exact.join(approx, ["src", "dst"], "left_semi")
-    n_hits = hits.groupBy("src").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hit")
-    )
-    return (
-        exact.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .join(n_hits, "src", "left")
-        .select(
-            "src",
-            "n_exact",
-            F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
-            (
-                F.coalesce("n_hit", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double")
-            ).alias("recall"),
-        )
-        .orderBy("src")
-    )
+    return _recall_at_k(exact, [("n_hit", "recall", approx)])
 
 
-def _oracle_ann_lsh_recall() -> str:
+def _lsh_batch_ctes(probe: str) -> str:
+    """CTEs v .. scored(src, dst, cos_sim): every bucket-mate of each
+    probe vector (the rows where predicate ``probe`` holds) over the
+    PLANES buckets, with its 3-place cosine — lsh_topk_batch before its
+    per-query rank."""
     from .dedup import PLANES
 
-    return f"""
-WITH {VECTORS}, {lsh_buckets(PLANES, len(PLANES[0]))}, qb AS (
-  SELECT vec_id AS src, bucket FROM buckets WHERE vec_id < 5
+    return f"""{VECTORS}, {lsh_buckets(PLANES, len(PLANES[0]))}, qb AS (
+  SELECT vec_id AS src, bucket FROM buckets WHERE {probe}
 ), cand AS (
   SELECT DISTINCT qb.src, b.vec_id AS dst
   FROM buckets b JOIN qb ON b.bucket = qb.bucket AND b.vec_id <> qb.src
-), probes AS (
+), scored AS (
+  SELECT cand.src, cand.dst, {cosine("dv.e", "qv.e", 3)} AS cos_sim
+  FROM cand
+  JOIN v dv ON dv.vec_id = cand.dst
+  JOIN v qv ON qv.vec_id = cand.src
+)"""
+
+
+def _oracle_ann_lsh_recall() -> str:
+    return f"""
+WITH {_lsh_batch_ctes("vec_id < 5")}, probes AS (
   SELECT vec_id AS src, e AS qe FROM v WHERE vec_id < 5
-), approx AS (
-  SELECT src, dst FROM (
-    SELECT c.src, c.dst,
-           row_number() OVER (PARTITION BY c.src
-                              ORDER BY {_QCOS} DESC, c.dst) AS rk
-    FROM cand c JOIN v ON v.vec_id = c.dst
-                JOIN probes p ON p.src = c.src) t
-  WHERE rk <= {TOP_K}
-), exactscored AS (
-  SELECT p.src, v.vec_id AS dst, {_QCOS} AS cos_sim
-  FROM v CROSS JOIN probes p WHERE v.vec_id <> p.src
-), exact AS (
-  SELECT src, dst FROM (
-    SELECT src, dst, row_number() OVER (PARTITION BY src
-             ORDER BY cos_sim DESC, dst) AS rk
-    FROM exactscored) x WHERE rk <= {TOP_K}
-), hits AS (
-  SELECT exact.src, CAST(COUNT(*) AS BIGINT) AS n_hit
-  FROM exact JOIN approx USING (src, dst) GROUP BY exact.src
-)
-SELECT e.src, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS BIGINT) AS n_hit,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS recall
-FROM exact e LEFT JOIN hits h ON h.src = e.src
-GROUP BY e.src ORDER BY e.src
-"""
+), {_topk_sql("approx", "scored", "cos_sim", TOP_K)},
+{_exact_topk_sql("exact", TOP_K)}""" + _recall_sql(
+        [("n_hit", "recall", "approx")]
+    )
 
 
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1211,20 +922,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_dedup_semantic() -> str:
     from .dedup import EMB_THRESHOLD
 
-    ctes, cfin = _kmeans_ctes(KMEANS_K, KMEANS_ITERS)
-    final = f"a{KMEANS_ITERS + 1}"
-    ctes.append(_kmeans_assign_cte(final, cfin))
-    joined = ",\n".join(ctes)
-    cos = cosine("a.e", "b.e", 4)
-    return f"""WITH {joined},
-pairs AS (
-  SELECT x.vec_id AS id_a, y.vec_id AS id_b
-  FROM {final} x JOIN {final} y
-    ON x.cid = y.cid AND x.vec_id < y.vec_id
-), scored AS (
-  SELECT id_a, id_b, {cos} AS cos_sim
-  FROM pairs JOIN v a ON a.vec_id = id_a JOIN v b ON b.vec_id = id_b
-)
+    return f"""WITH {_cluster_pairs_ctes()}
 SELECT id_a, id_b, cos_sim FROM scored WHERE cos_sim >= {EMB_THRESHOLD}
 """
 
@@ -1342,14 +1040,11 @@ def q_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe_ids = list(range(SQ_PROBES))
     em = load(spark, sf_dir, "embeddings")
     e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    nrm = F.sqrt(
-        F.aggregate(e, F.lit(0.0), lambda a, x: a + x * x)
-    )
     v = (
         em.filter(
             F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
         )
-        .select("vec_id", e.alias("e"), nrm.alias("nrm"))
+        .select("vec_id", e.alias("e"), S._norm(e).alias("nrm"))
         .filter(F.col("nrm") > 0)
         .select(
             "vec_id",
@@ -1367,109 +1062,43 @@ def q_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("qe"),
         F.col("q8").alias("qq"),
     )
-    pairs = v.crossJoin(F.broadcast(probes)).filter(
-        F.col("vec_id") != F.col("src")
-    )
-    fdot = F.aggregate(
-        F.zip_with("e", "qe", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    fn = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
-    )
     idot = F.aggregate(
         F.zip_with("q8", "qq", lambda a, b: a * b),
         F.lit(0).cast("long"),
         lambda a, x: a + x,
     )
-    scored = pairs.select(
-        "src",
-        "vec_id",
-        sround(fdot / (fn(F.col("e")) * fn(F.col("qe"))), 3).alias(
-            "cos_f"
-        ),
-        idot.alias("dot_q"),
-    )
-    w_exact = Window.partitionBy("src").orderBy(
-        F.col("cos_f").desc(), "vec_id"
-    )
-    w_quant = Window.partitionBy("src").orderBy(
-        F.col("dot_q").desc(), "vec_id"
-    )
-    exact = scored.withColumn(
-        "rk", F.row_number().over(w_exact)
-    ).filter(F.col("rk") <= SQ_K).select("src", "vec_id")
-    quant = scored.withColumn(
-        "rk", F.row_number().over(w_quant)
-    ).filter(F.col("rk") <= SQ_K).select("src", "vec_id")
-    hits = exact.join(quant, ["src", "vec_id"], "left_semi")
-    n_hits = hits.groupBy("src").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hit")
-    )
-    return (
-        exact.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .join(n_hits, "src", "left")
+    scored = (
+        v.crossJoin(F.broadcast(probes))
+        .filter(F.col("vec_id") != F.col("src"))
         .select(
             "src",
-            "n_exact",
-            F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
-            (
-                F.coalesce("n_hit", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double")
-            ).alias("recall"),
+            "vec_id",
+            sround(S._cosine(F.col("e"), F.col("qe")), 3).alias("cos_f"),
+            idot.alias("dot_q"),
         )
-        .orderBy("src")
     )
+    return _recall_at_k(_topk_per_src(scored, "cos_f", SQ_K), [
+        ("n_hit", "recall", _topk_per_src(scored, "dot_q", SQ_K)),
+    ])
 
 
 ORACLE_SQ_RECALL = f"""
-WITH v0 AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
-), v AS (
+WITH {INDEXED_VECTORS}, sq AS (
   SELECT vec_id, e,
-         list_transform(e, x -> CAST(round(x * 127.0 /
-             sqrt(list_sum(list_transform(e, y -> y * y)))) AS BIGINT))
-           AS q8
-  FROM v0
-  WHERE sqrt(list_sum(list_transform(e, y -> y * y))) > 0
+         list_transform(e, x -> CAST(round(x * 127.0 / {norm("e")})
+                                     AS BIGINT)) AS q8
+  FROM v WHERE {norm("e")} > 0
 ), probes AS (
-  SELECT vec_id AS src, e AS qe, q8 AS qq FROM v
+  SELECT vec_id AS src, e AS qe, q8 AS qq FROM sq
   WHERE vec_id < {SQ_PROBES}
 ), scored AS (
-  SELECT probes.src, v.vec_id,
-         round((list_sum(list_transform(range(1, len(e) + 1),
-                 i -> e[i] * qe[i]))
-           / (sqrt(list_sum(list_transform(e, x -> x * x)))
-              * sqrt(list_sum(list_transform(qe, x -> x * x)))))
-           * 1000.0) / 1000.0 + 0.0 AS cos_f,
-         CAST(list_sum(list_transform(range(1, len(q8) + 1),
-                 i -> q8[i] * qq[i])) AS BIGINT) AS dot_q
-  FROM v CROSS JOIN probes WHERE v.vec_id <> probes.src
-), exact AS (
-  SELECT src, vec_id FROM (
-    SELECT src, vec_id, row_number() OVER (PARTITION BY src
-             ORDER BY cos_f DESC, vec_id) AS rk
-    FROM scored) x WHERE rk <= {SQ_K}
-), quant AS (
-  SELECT src, vec_id FROM (
-    SELECT src, vec_id, row_number() OVER (PARTITION BY src
-             ORDER BY dot_q DESC, vec_id) AS rk
-    FROM scored) x WHERE rk <= {SQ_K}
-), hits AS (
-  SELECT exact.src, CAST(COUNT(*) AS BIGINT) AS n_hit
-  FROM exact JOIN quant USING (src, vec_id) GROUP BY exact.src
+  SELECT probes.src, sq.vec_id AS dst, {cosine("e", "qe", 3)} AS cos_f,
+         CAST({dot("q8", "qq")} AS BIGINT) AS dot_q
+  FROM sq CROSS JOIN probes WHERE sq.vec_id <> probes.src
+), {_topk_sql("exact", "scored", "cos_f", SQ_K)},
+{_topk_sql("quant", "scored", "dot_q", SQ_K)}""" + _recall_sql(
+    [("n_hit", "recall", "quant")]
 )
-SELECT e.src, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS BIGINT) AS n_hit,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS recall
-FROM exact e LEFT JOIN hits h ON h.src = e.src
-GROUP BY e.src ORDER BY e.src
-"""
 
 
 def q_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1507,17 +1136,6 @@ def q_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("qe"),
         F.col("b").alias("qb"),
     )
-    pairs = v.crossJoin(F.broadcast(probes)).filter(
-        F.col("vec_id") != F.col("src")
-    )
-    fdot = F.aggregate(
-        F.zip_with("e", "qe", lambda a, b: a * b),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    fn = lambda c: F.sqrt(  # noqa: E731
-        F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x)
-    )
     matches = F.aggregate(
         F.zip_with(
             "b", "qb",
@@ -1526,91 +1144,40 @@ def q_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long"),
         lambda a, x: a + x,
     )
-    scored = pairs.select(
-        "src",
-        "vec_id",
-        sround(fdot / (fn(F.col("e")) * fn(F.col("qe"))), 3).alias(
-            "cos_f"
-        ),
-        matches.alias("n_match"),
-    )
-    w_exact = Window.partitionBy("src").orderBy(
-        F.col("cos_f").desc(), "vec_id"
-    )
-    w_bin = Window.partitionBy("src").orderBy(
-        F.col("n_match").desc(), "vec_id"
-    )
-    exact = scored.withColumn(
-        "rk", F.row_number().over(w_exact)
-    ).filter(F.col("rk") <= SQ_K).select("src", "vec_id")
-    binq = scored.withColumn(
-        "rk", F.row_number().over(w_bin)
-    ).filter(F.col("rk") <= SQ_K).select("src", "vec_id")
-    hits = exact.join(binq, ["src", "vec_id"], "left_semi")
-    n_hits = hits.groupBy("src").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_hit")
-    )
-    return (
-        exact.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_exact"))
-        .join(n_hits, "src", "left")
+    scored = (
+        v.crossJoin(F.broadcast(probes))
+        .filter(F.col("vec_id") != F.col("src"))
         .select(
             "src",
-            "n_exact",
-            F.coalesce("n_hit", F.lit(0)).cast("bigint").alias("n_hit"),
-            (
-                F.coalesce("n_hit", F.lit(0)).cast("double")
-                / F.col("n_exact").cast("double")
-            ).alias("recall"),
+            "vec_id",
+            sround(S._cosine(F.col("e"), F.col("qe")), 3).alias("cos_f"),
+            matches.alias("n_match"),
         )
-        .orderBy("src")
     )
+    return _recall_at_k(_topk_per_src(scored, "cos_f", SQ_K), [
+        ("n_hit", "recall", _topk_per_src(scored, "n_match", SQ_K)),
+    ])
 
 
 ORACLE_BQ_RECALL = f"""
-WITH v AS (
-  SELECT vec_id,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e,
-         list_transform(embedding,
-             x -> CASE WHEN CAST(x AS DOUBLE) >= 0
+WITH {INDEXED_VECTORS}, bq AS (
+  SELECT vec_id, e,
+         list_transform(e, x -> CASE WHEN x >= 0
                   THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END) AS b
-  FROM embeddings
-  WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
+  FROM v
 ), probes AS (
-  SELECT vec_id AS src, e AS qe, b AS qb FROM v
+  SELECT vec_id AS src, e AS qe, b AS qb FROM bq
   WHERE vec_id < {SQ_PROBES}
 ), scored AS (
-  SELECT probes.src, v.vec_id,
-         round((list_sum(list_transform(range(1, len(e) + 1),
-                 i -> e[i] * qe[i]))
-           / (sqrt(list_sum(list_transform(e, x -> x * x)))
-              * sqrt(list_sum(list_transform(qe, x -> x * x)))))
-           * 1000.0) / 1000.0 + 0.0 AS cos_f,
+  SELECT probes.src, bq.vec_id AS dst, {cosine("e", "qe", 3)} AS cos_f,
          CAST(list_sum(list_transform(range(1, len(b) + 1),
                  i -> CASE WHEN b[i] = qb[i] THEN 1 ELSE 0 END))
               AS BIGINT) AS n_match
-  FROM v CROSS JOIN probes WHERE v.vec_id <> probes.src
-), exact AS (
-  SELECT src, vec_id FROM (
-    SELECT src, vec_id, row_number() OVER (PARTITION BY src
-             ORDER BY cos_f DESC, vec_id) AS rk
-    FROM scored) x WHERE rk <= {SQ_K}
-), binq AS (
-  SELECT src, vec_id FROM (
-    SELECT src, vec_id, row_number() OVER (PARTITION BY src
-             ORDER BY n_match DESC, vec_id) AS rk
-    FROM scored) x WHERE rk <= {SQ_K}
-), hits AS (
-  SELECT exact.src, CAST(COUNT(*) AS BIGINT) AS n_hit
-  FROM exact JOIN binq USING (src, vec_id) GROUP BY exact.src
+  FROM bq CROSS JOIN probes WHERE bq.vec_id <> probes.src
+), {_topk_sql("exact", "scored", "cos_f", SQ_K)},
+{_topk_sql("binq", "scored", "n_match", SQ_K)}""" + _recall_sql(
+    [("n_hit", "recall", "binq")]
 )
-SELECT e.src, CAST(COUNT(*) AS BIGINT) AS n_exact,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS BIGINT) AS n_hit,
-       CAST(COALESCE(MAX(h.n_hit), 0) AS DOUBLE)
-         / CAST(COUNT(*) AS DOUBLE) AS recall
-FROM exact e LEFT JOIN hits h ON h.src = e.src
-GROUP BY e.src ORDER BY e.src
-"""
 
 
 EMB_DIM_ROUND = 6
@@ -1713,29 +1280,16 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_ann_batch() -> str:
-    from .dedup import PLANES
-
     qids = ", ".join(str(q) for q in BATCH_QUERY_IDS)
     return f"""
-WITH {VECTORS}, {lsh_buckets(PLANES, len(PLANES[0]))}, qb AS (
-  SELECT vec_id AS qid, bucket FROM buckets WHERE vec_id IN ({qids})
-), cand AS (
-  SELECT DISTINCT qb.qid, b.vec_id
-  FROM buckets b JOIN qb ON b.bucket = qb.bucket
-  WHERE b.vec_id <> qb.qid
-), scored AS (
-  SELECT cand.qid, cand.vec_id, {cosine("cv.e", "qv.e", 3)} AS cos_sim
-  FROM cand
-  JOIN v cv ON cv.vec_id = cand.vec_id
-  JOIN v qv ON qv.vec_id = cand.qid
-), r AS (
-  SELECT qid, vec_id, cos_sim,
-         row_number() OVER (PARTITION BY qid
-                            ORDER BY cos_sim DESC, vec_id) AS rnk
+WITH {_lsh_batch_ctes(f"vec_id IN ({qids})")}, r AS (
+  SELECT src, dst, cos_sim,
+         row_number() OVER (PARTITION BY src
+                            ORDER BY cos_sim DESC, dst) AS rnk
   FROM scored
 )
-SELECT CAST(qid AS BIGINT) AS query_id,
-       CAST(vec_id AS BIGINT) AS neighbor_id,
+SELECT CAST(src AS BIGINT) AS query_id,
+       CAST(dst AS BIGINT) AS neighbor_id,
        cos_sim, CAST(rnk AS INT) AS rnk
 FROM r WHERE rnk <= {BATCH_K}
 """
@@ -1776,16 +1330,11 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _oracle_random_projection() -> str:
     comps = ",\n       ".join(
-        "round(list_sum(list_transform(range(1, len(e) + 1), "
-        f"i -> e[i] * ({plane_sql(p)})[i])) * 1000000.0) / 1000000.0 + 0.0"
-        f" AS p{j}"
+        f"{sround_sql(dot('e', f'({plane_sql(p)})'), 6)} AS p{j}"
         for j, p in enumerate(_rp_planes())
     )
     return f"""
-WITH v AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
-  FROM embeddings
-)
+WITH {VECTORS}
 SELECT vec_id,
        {comps}
 FROM v
@@ -1920,23 +1469,15 @@ def _oracle_ann_pq() -> str:
         "qv AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE))"
         f" AS e FROM embeddings WHERE vec_id = {QUERY_ID})"
     )
-    ctes.append(
-        "qn AS (SELECT list_sum(list_transform(e, x -> x * x)) AS qn2"
-        " FROM qv)"
-    )
+    ctes.append(f"qn AS (SELECT {dot('e', 'e')} AS qn2 FROM qv)")
     for s in range(PQ_M):
         lo, hi = s * PQ_SUBDIM + 1, (s + 1) * PQ_SUBDIM
         ctes.append(
             f"qs{s} AS (SELECT e[{lo}:{hi}] AS qe FROM qv)"
         )
-        dot_qc = (
-            "list_sum(list_transform(range(1, len(ce) + 1),"
-            " i -> qe[i] * ce[i]))"
-        )
         ctes.append(
-            f"lut{s} AS (SELECT cid, {dot_qc} AS w,"
-            " list_sum(list_transform(ce, x -> x * x))"
-            f" AS n FROM {cfins[s]}, qs{s})"
+            f"lut{s} AS (SELECT cid, {dot('qe', 'ce')} AS w,"
+            f" {dot('ce', 'ce')} AS n FROM {cfins[s]}, qs{s})"
         )
     parts = " UNION ALL ".join(
         f"SELECT code{s}.vec_id, lut{s}.w, lut{s}.n"
@@ -1998,13 +1539,7 @@ def _oracle_pq_distortion() -> str:
     """PQ replay + per-subspace member-cosine re-score (the identical
     rounded cosine the assignment used), decimal-mean per (s, cid)."""
     ctes, cfins = _pq_ctes()
-    dot = (
-        "list_sum(list_transform(range(1, len(v.e) + 1),"
-        " i -> v.e[i] * c.ce[i]))"
-    )
-    nv = "sqrt(list_sum(list_transform(v.e, x -> x * x)))"
-    nc = "sqrt(list_sum(list_transform(c.ce, x -> x * x)))"
-    c6 = f"(round(({dot} / ({nv} * {nc})) * 1000000.0) / 1000000.0) + 0.0"
+    c6 = cosine("v.e", "c.ce", 6)
     parts = " UNION ALL ".join(
         f"SELECT {s} AS s, a.cid, {c6} AS c6"
         f" FROM code{s} a JOIN v{s} v USING (vec_id)"
@@ -2085,27 +1620,14 @@ def q_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _oracle_semdedup_keep() -> str:
     from .dedup import EMB_THRESHOLD
 
-    ctes, cfin = _kmeans_ctes(KMEANS_K, KMEANS_ITERS)
-    final = f"a{KMEANS_ITERS + 1}"
-    ctes.append(_kmeans_assign_cte(final, cfin))
-    joined = ",\n".join(ctes)
-    cos = cosine("a.e", "b.e", 4)
-    return f"""WITH {joined},
-pairs AS (
-  SELECT x.vec_id AS id_a, y.vec_id AS id_b
-  FROM {final} x JOIN {final} y
-    ON x.cid = y.cid AND x.vec_id < y.vec_id
-), scored AS (
-  SELECT id_a, id_b, {cos} AS cos_sim
-  FROM pairs JOIN v a ON a.vec_id = id_a JOIN v b ON b.vec_id = id_b
-), drops AS (
+    return f"""WITH {_cluster_pairs_ctes()}, drops AS (
   SELECT id_b, MAX(cos_sim) AS max_lower_cos FROM scored
   WHERE cos_sim >= {EMB_THRESHOLD} GROUP BY id_b
 )
 SELECT af.vec_id, af.cid,
        COALESCE(d.max_lower_cos, -1.0) AS max_lower_cos,
        CASE WHEN d.id_b IS NULL THEN 1 ELSE 0 END AS keep
-FROM {final} af LEFT JOIN drops d ON d.id_b = af.vec_id
+FROM km af LEFT JOIN drops d ON d.id_b = af.vec_id
 """
 
 
@@ -2152,14 +1674,9 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_cluster_purity() -> str:
-    ctes, cfin = _kmeans_ctes(KMEANS_K, KMEANS_ITERS)
-    final = f"a{KMEANS_ITERS + 1}"
-    ctes.append(_kmeans_assign_cte(final, cfin))
-    joined = ",\n".join(ctes)
-    return f"""WITH {joined},
-cl AS (
+    return f"""WITH {_kmeans_assigned()}, cl AS (
   SELECT cid, label, CAST(COUNT(*) AS BIGINT) AS n
-  FROM {final} JOIN embeddings USING (vec_id)
+  FROM km JOIN embeddings USING (vec_id)
   GROUP BY cid, label
 ), top AS (
   SELECT cid, label AS top_label, n AS n_top FROM (
@@ -2204,7 +1721,7 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import EMB_THRESHOLD, dbscan_planes
 
     em = load(spark, sf_dir, "embeddings")
-    planes = dbscan_planes(_corpus_count(em))
+    planes = dbscan_planes(em.count())
     return dbscan_clusters(
         em, planes, threshold=EMB_THRESHOLD, min_pts=DBSCAN_MIN_PTS
     ).select(F.col("id").alias("vec_id"), "cluster_id", "role")
@@ -2362,7 +1879,7 @@ ORACLES = {
     "q_embed_norm_stats": ORACLE_EMBED_NORM_STATS,
     "q_cosine_scores": ORACLE_COSINE_SCORES,
     "q_ann_topk": ORACLE_ANN_TOPK,
-    "q_ann_ivf": ORACLE_ANN_IVF,
+    "q_ann_ivf": _oracle_ivf(N_CENTROIDS, 0, NPROBE),
     "q_ann_lsh": _oracle_ann_lsh(),
     "q_ann_multiprobe": _oracle_ann_multiprobe(),
     "q_knn_graph": _oracle_knn_graph(),
@@ -2374,7 +1891,7 @@ ORACLES = {
     "q_label_noise": _oracle_label_noise(),
     "q_hard_negatives": _oracle_hard_negatives(),
     "q_coreset": _oracle_coreset(),
-    "q_ann_ivf_kmeans": _oracle_ann_ivf_kmeans(),
+    "q_ann_ivf_kmeans": _oracle_ivf(KMEANS_K, KMEANS_ITERS, NPROBE_KM),
     "q_dedup_semantic": _oracle_dedup_semantic(),
     "q_ann_lsh_recall": _oracle_ann_lsh_recall(),
     "q_hybrid_search": _oracle_hybrid_search(),

@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ._util import sround, sround_sql
+from .nonparam import COHORT_MOMENTS, cohort_moments
 
 TOTAL = "~~total~~"  # total-row label; sorts after all data values
 D38 = "decimal(38,6)"
@@ -199,39 +200,11 @@ def q_cohens_d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's d and Hedges' g effect sizes between the c_custkey-parity
     order-value cohorts — the magnitude readout that complements
     q_welch_t's significance test (same cohorts, pooled-variance
-    model). Moment sums are DECIMAL-exact (the q_welch_t convention);
+    model). The moments are nonparam.cohort_moments, as in q_welch_t;
     d = (m1−m0)/s_p with s_p² the pooled sample variance, and
     g = d·(1 − 3/(4N−9)) (small-sample bias correction). One row out.
     """
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull()
-    ).select(
-        (F.col("o_custkey") % 2).cast("int").alias("grp"),
-        F.col("o_totalprice").alias("x"),
-    )
-    stats = o.groupBy("grp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("x").cast(D38)).cast("double").alias("s"),
-        F.sum((F.col("x") * F.col("x")).cast(D38)).cast("double")
-        .alias("ss"),
-    )
-    piv = stats.agg(
-        F.max(F.when(F.col("grp") == 0, F.col("n"))).alias("n0"),
-        F.max(F.when(F.col("grp") == 0, F.col("s"))).alias("s0"),
-        F.max(F.when(F.col("grp") == 0, F.col("ss"))).alias("ss0"),
-        F.max(F.when(F.col("grp") == 1, F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("grp") == 1, F.col("s"))).alias("s1"),
-        F.max(F.when(F.col("grp") == 1, F.col("ss"))).alias("ss1"),
-    )
-    n0d, n1d = F.col("n0").cast("double"), F.col("n1").cast("double")
-    m0, m1 = F.col("s0") / n0d, F.col("s1") / n1d
-    v0 = (F.col("ss0") - (F.col("s0") * F.col("s0")) / n0d) / (n0d - 1.0)
-    v1 = (F.col("ss1") - (F.col("s1") * F.col("s1")) / n1d) / (n1d - 1.0)
-    mid = piv.select(
-        "n0", "n1", m0.alias("m0"), m1.alias("m1"),
-        F.when(F.col("n0") > 1, v0).alias("v0"),
-        F.when(F.col("n1") > 1, v1).alias("v1"),
-    )
+    mid = cohort_moments(spark, sf_dir)
     n0d2 = F.col("n0").cast("double")
     n1d2 = F.col("n1").cast("double")
     sp2 = (
@@ -263,32 +236,7 @@ _SP2_SQL = (
 _D_SQL = f"((m1 - m0) / sqrt{_SP2_SQL})"
 
 ORACLE_COHENS_D = f"""
-WITH o AS (
-  SELECT CAST(o_custkey % 2 AS INTEGER) AS grp, o_totalprice AS x
-  FROM orders
-  WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
-), stats AS (
-  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(x AS {D38_SQL})) AS DOUBLE) AS s,
-         CAST(SUM(CAST(x * x AS {D38_SQL})) AS DOUBLE) AS ss
-  FROM o GROUP BY 1
-), piv AS (
-  SELECT MAX(CASE WHEN grp = 0 THEN n END) AS n0,
-         MAX(CASE WHEN grp = 0 THEN s END) AS s0,
-         MAX(CASE WHEN grp = 0 THEN ss END) AS ss0,
-         MAX(CASE WHEN grp = 1 THEN n END) AS n1,
-         MAX(CASE WHEN grp = 1 THEN s END) AS s1,
-         MAX(CASE WHEN grp = 1 THEN ss END) AS ss1
-  FROM stats
-), mid AS (
-  SELECT n0, n1,
-    s0 / CAST(n0 AS DOUBLE) AS m0, s1 / CAST(n1 AS DOUBLE) AS m1,
-    CASE WHEN n0 > 1 THEN (ss0 - (s0 * s0) / CAST(n0 AS DOUBLE))
-                          / (CAST(n0 AS DOUBLE) - 1.0) END AS v0,
-    CASE WHEN n1 > 1 THEN (ss1 - (s1 * s1) / CAST(n1 AS DOUBLE))
-                          / (CAST(n1 AS DOUBLE) - 1.0) END AS v1
-  FROM piv
-)
+WITH {COHORT_MOMENTS}
 SELECT n0 AS n_ctrl, n1 AS n_treat,
   {sround_sql("m1 - m0", 9)} AS mean_diff,
   CASE WHEN v0 IS NOT NULL AND v1 IS NOT NULL AND n0 + n1 > 2
@@ -1025,40 +973,9 @@ def q_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_CLASSES per-class terms are quantized (sround 9) and
     DECIMAL-summed.
     """
-    from .evalmetrics import N_CLASSES
+    from .evalmetrics import confusion_cells
 
-    em = load(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id").isNotNull() & F.col("label").isNotNull()
-    )
-    t = F.col("label").cast("bigint")
-    pred = F.when(
-        F.col("vec_id") % 3 == 0, (t + 1) % N_CLASSES
-    ).otherwise(t)
-    cells = em.select(
-        t.alias("true_label"), pred.alias("pred_label")
-    ).groupBy("true_label", "pred_label").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n")
-    )
-    tp = (
-        cells.filter(F.col("true_label") == F.col("pred_label"))
-        .select(F.col("true_label").alias("cls"), F.col("n").alias("tp"))
-    )
-    true_tot = cells.groupBy(F.col("true_label").alias("cls")).agg(
-        F.sum("n").cast("bigint").alias("n_true")
-    )
-    pred_tot = cells.groupBy(F.col("pred_label").alias("cls")).agg(
-        F.sum("n").cast("bigint").alias("n_pred")
-    )
-    j = (
-        true_tot.join(pred_tot, "cls", "full")
-        .join(tp, "cls", "left")
-        .select(
-            "cls",
-            F.coalesce("n_true", F.lit(0)).cast("bigint").alias("n_true"),
-            F.coalesce("n_pred", F.lit(0)).cast("bigint").alias("n_pred"),
-            F.coalesce("tp", F.lit(0)).cast("bigint").alias("tp"),
-        )
-    )
+    j = confusion_cells(spark, sf_dir)
     p = F.when(
         F.col("n_pred") > 0,
         F.col("tp").cast("double") / F.col("n_pred").cast("double"),
@@ -1107,7 +1024,7 @@ def q_macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _oracle_macro_f1() -> str:
-    from .evalmetrics import N_CLASSES
+    from .evalmetrics import CONFUSION_CELLS
 
     p = ("CASE WHEN n_pred > 0"
          " THEN CAST(tp AS DOUBLE) / CAST(n_pred AS DOUBLE)"
@@ -1118,33 +1035,7 @@ def _oracle_macro_f1() -> str:
     f1 = (f"CASE WHEN ({p}) + ({r}) > 0.0"
           f" THEN 2.0 * ({p}) * ({r}) / (({p}) + ({r})) ELSE 0.0 END")
     return f"""
-WITH cells AS (
-  SELECT CAST(label AS BIGINT) AS true_label,
-         CASE WHEN vec_id % 3 = 0
-              THEN (CAST(label AS BIGINT) + 1) % {N_CLASSES}
-              ELSE CAST(label AS BIGINT) END AS pred_label,
-         CAST(COUNT(*) AS BIGINT) AS n
-  FROM embeddings
-  WHERE vec_id IS NOT NULL AND label IS NOT NULL
-  GROUP BY 1, 2
-), tp AS (
-  SELECT true_label AS cls, n AS tp FROM cells
-  WHERE true_label = pred_label
-), true_tot AS (
-  SELECT true_label AS cls, CAST(SUM(n) AS BIGINT) AS n_true
-  FROM cells GROUP BY 1
-), pred_tot AS (
-  SELECT pred_label AS cls, CAST(SUM(n) AS BIGINT) AS n_pred
-  FROM cells GROUP BY 1
-), j AS (
-  SELECT COALESCE(true_tot.cls, pred_tot.cls) AS cls,
-         CAST(COALESCE(n_true, 0) AS BIGINT) AS n_true,
-         CAST(COALESCE(n_pred, 0) AS BIGINT) AS n_pred,
-         CAST(COALESCE(tp, 0) AS BIGINT) AS tp
-  FROM true_tot
-  FULL JOIN pred_tot ON true_tot.cls = pred_tot.cls
-  LEFT JOIN tp ON COALESCE(true_tot.cls, pred_tot.cls) = tp.cls
-), per AS (
+WITH {CONFUSION_CELLS}, per AS (
   SELECT n_true, tp,
     CAST({sround_sql(p, 9)} AS {D28_9_SQL}) AS p_t,
     CAST({sround_sql(r, 9)} AS {D28_9_SQL}) AS r_t,

@@ -6,9 +6,10 @@ Two families are listed. The multimodal fixture queries build their
 bytes through ``with_fixture``; without this gate their refactors were
 checked by plan shape only (test_udf_dup_gate). The fragment queries'
 oracles are composed from the shared fragments in
-``plans/_oracle_sql.py`` (shingles, MinHash, LSH buckets, rounded
-cosine, connected-component closure, oriented triangles), so an edit to
-one fragment is checked against every Spark operator it mirrors.
+``plans/_oracle_sql.py`` (shingles, MinHash, LSH buckets, the list dot
+product and the rounded cosine, connected-component closure, oriented
+triangles), so an edit to one fragment is checked against every Spark
+operator it mirrors.
 """
 
 from __future__ import annotations
@@ -73,6 +74,11 @@ FRAGMENT_QUERIES = [
     "q_ann_recall", "q_hard_negatives", "q_label_noise", "q_link_predict",
     "q_kcore", "q_cosine_scores", "q_ann_topk", "q_ann_pq_recall",
     "q_dedup_semantic", "q_semdedup_keep",
+    # the list dot product: k-means, IVF, PQ, the recall gates, coreset
+    "q_kmeans", "q_cluster_purity", "q_ann_ivf", "q_ann_ivf_kmeans",
+    "q_pq_codes", "q_ann_pq", "q_pq_distortion", "q_matryoshka_recall",
+    "q_hybrid_search", "q_sq_recall", "q_bq_recall", "q_coreset",
+    "q_random_projection",
     # degree-oriented triangles
     "q_triangle_count", "q_clustering_coeff",
 ]
@@ -94,8 +100,9 @@ def test_fixture_query_list_is_complete():
     assert set(FIXTURE_QUERIES) <= set(multimodal.QUERIES)
     assert set(FIXTURE_QUERIES) <= set(multimodal.ORACLES)
     # every oracle holding the text of a shingle, MinHash, LSH-bucket,
-    # closure or triangle fragment is gated here
+    # dot-product, closure or triangle fragment is gated here
     marks = ("greatest(len(t) -", " AS mh0", ".mh0 = ", "FROM v, planes",
+             "list_sum(list_transform(range(1, len(",
              "FROM reach JOIN edges", "oriented AS (")
     composed = {n for n, sql in all_oracles().items()
                 if any(m in sql for m in marks)}

@@ -73,6 +73,39 @@ def test_lsh_neardup_recall(spark, vectors):
     assert len(approx) / len(exact) > 0.9
 
 
+def test_lsh_consumers_share_one_candidate_set(spark, vectors):
+    """The near-dup pairs, the k-NN graph and hard-negative mining score
+    the one candidate set of ``_lsh_candidates``: it is symmetric, the
+    near-dup pairs are its src < dst half, and with k above the
+    candidate count the k-NN graph ranks every candidate and the hard
+    negatives every different-label one."""
+    rng = random.Random(13)
+    tables = [
+        [[rng.gauss(0, 1) for _ in range(8)] for _ in range(4)]
+        for _ in range(3)
+    ]
+    _, cand = S._lsh_candidates(vectors, tables, "vec_id", "embedding")
+    pairs = {(r.src, r.dst) for r in cand.collect()}
+    assert pairs and pairs == {(d, s) for s, d in pairs}
+    half = {
+        (r.id_a, r.id_b)
+        for r in S.lsh_bucketed_neardup_pairs(
+            vectors, tables, threshold=-1.0
+        ).collect()
+    }
+    assert half == {(s, d) for s, d in pairs if s < d}
+    k = len(pairs)
+    knn = S.knn_graph(vectors, tables, k=k).collect()
+    assert {(r.src, r.dst) for r in knn} == pairs
+    labels = vectors.select(
+        F.col("vec_id").alias("id"), (F.col("vec_id") % 2).alias("label")
+    )
+    neg = S.hard_negatives(vectors, tables, labels, k=k).collect()
+    assert {(r.src, r.dst) for r in neg} == {
+        (s, d) for s, d in pairs if (s - d) % 2
+    }
+
+
 def test_ivf_topk_recall(spark, vectors):
     exact = [r.vec_id for r in S.topk_vs_query(vectors, k=10, query_id=0).collect()]
     approx = [
@@ -348,34 +381,6 @@ def test_coreset_covers_separated_clumps(spark, tmp_path):
     assert clumps == {0, 1, 2}
     radii = [r["radius"] for r in out[1:]]
     assert all(a >= b for a, b in zip(radii, radii[1:]))
-
-
-def test_knn_count_memo_distinguishes_filtered_frames(spark, sf_dir):
-    """ADVICE r8: the plane-count memo must never serve a bare-table
-    count to a FILTERED frame over the same parquet files (the key now
-    includes the normalized analyzed plan), and two bare loads of the
-    same table must share one memo entry."""
-    from pyspark.sql import functions as F
-
-    from audios_to_dataset_spark.catalog import load
-    from audios_to_dataset_spark.plans.similarity import (
-        _KNN_COUNT_MEMO,
-        _corpus_count,
-        clear_knn_count_memo,
-    )
-
-    clear_knn_count_memo()
-    em = load(spark, sf_dir, "embeddings")
-    n_all = _corpus_count(em)
-    assert len(_KNN_COUNT_MEMO) == 1
-    n_even = _corpus_count(em.filter(F.col("vec_id") % 2 == 0))
-    assert 0 < n_even < n_all
-    assert len(_KNN_COUNT_MEMO) == 2  # distinct key, no stale reuse
-    # a fresh bare load hits the existing entry (expr-id normalization)
-    assert _corpus_count(load(spark, sf_dir, "embeddings")) == n_all
-    assert len(_KNN_COUNT_MEMO) == 2
-    clear_knn_count_memo()
-    assert not _KNN_COUNT_MEMO
 
 
 def test_silhouette_singleton_cluster_scores_zero(spark, tmp_path):
