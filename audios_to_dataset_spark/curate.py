@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 
 from .operators import dedup as D
 
-NGRAM_N = 3
 
 
 def _tokens():
@@ -61,7 +60,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def near_dedup(docs: DataFrame, est_threshold: float) -> DataFrame:
-    sigs = D.minhash_signatures(docs, n=NGRAM_N)
+    sigs = D.minhash_signatures(docs)
     pairs = D.lsh_candidate_pairs(sigs)
     est = F.col("agree").cast("double") / float(D.NUM_HASHES)
     # doc_a < doc_b by construction: doc_b is the younger duplicate

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+PREFIX = "asof_"  # prefix of the matched right columns
+
 
 def as_of_join(
     left: DataFrame,
@@ -29,9 +31,8 @@ def as_of_join(
     left_time: str,
     right_time: str,
     right_value_cols: list[str],
-    prefix: str = "asof_",
 ) -> DataFrame:
-    """Left as-of join: every left row, plus ``prefix``-named columns from
+    """Left as-of join: every left row, plus ``PREFIX``-named columns from
     the latest right row with ``right_time <= left_time`` on the same key
     (NULLs when no right row precedes)."""
     rv = F.struct(
@@ -63,6 +64,6 @@ def as_of_join(
     )
     filled = u.withColumn("_match", F.last("_rv", ignorenulls=True).over(w))
     out_cols = [F.col(c) for c in left.columns] + [
-        F.col(f"_match.{c}").alias(f"{prefix}{c}") for c in right_value_cols
+        F.col(f"_match.{c}").alias(f"{PREFIX}{c}") for c in right_value_cols
     ]
     return filled.filter(F.col("_is_right") == 0).select(*out_cols)

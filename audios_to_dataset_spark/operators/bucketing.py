@@ -18,20 +18,18 @@ def write_bucketed(
     table: str,
     bucket_col: str,
     n_buckets: int = 32,
-    sort: bool = True,
 ) -> None:
-    """Persist ``df`` as a bucketed (and optionally sorted) table.
+    """Persist ``df`` as a bucketed table, sorted within each bucket.
 
     Sorted buckets additionally let SortMergeJoin skip its per-task sort.
     """
-    writer = (
+    (
         df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, bucket_col)
+        .sortBy(bucket_col)
+        .saveAsTable(table)
     )
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
 
 
 def bucketed_join(

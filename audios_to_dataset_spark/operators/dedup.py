@@ -24,6 +24,10 @@ least 4 times: once per band, again per agreement side), and every
 consumer builds on the three pieces below it: ``lsh_bands`` (the one band
 table), ``cross_lsh_candidates`` / ``lsh_candidate_pairs`` (the band
 equi-join) and ``minhash_agreement`` (the one equal-component count).
+
+Every operator reads the ``DOC_ID``/``TEXT`` columns of its document
+frame; the n-gram, MinHash and sparse-cosine dedups shingle ``NGRAM_N``
+words.
 """
 
 from __future__ import annotations
@@ -35,16 +39,18 @@ from ..plans._util import sround
 
 NUM_HASHES = 16  # MinHash components per signature
 BAND_SIZE = 4  # signature components per LSH band
+NGRAM_N = 3  # words per shingle of the n-gram, MinHash and cosine dedups
+MAX_HAMMING = 3  # SimHash bits two near-duplicates may differ in
+DOC_ID = "doc_id"  # id column of every document frame
+TEXT = "text"  # its text column
 
-def normalized_text(col: str | Column = "text") -> Column:
-    """Lowercased, alnum-only content normalization for exact dedup."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.lower(c), "[^a-z0-9]", "")
+
+def normalized_text() -> Column:
+    """Lowercased, alnum-only ``TEXT`` normalization for exact dedup."""
+    return F.regexp_replace(F.lower(F.col(TEXT)), "[^a-z0-9]", "")
 
 
-def exact_dedup_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_dedup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: sha256 content hash → (hash, keep_id, n_copies).
 
     One shuffle on the content hash; min(id) picks the canonical survivor
@@ -52,9 +58,9 @@ def exact_dedup_groups(
     /root/reference/src/main.rs:178-193, with min-id instead of scan order
     because scan order is not stable on a cluster).
     """
-    h = F.sha2(F.col(text_col).cast("binary"), 256)
+    h = F.sha2(F.col(TEXT).cast("binary"), 256)
     return (
-        df.select(F.col(id_col).alias("id"), h.alias("content_hash"))
+        df.select(F.col(DOC_ID).alias("id"), h.alias("content_hash"))
         .groupBy("content_hash")
         .agg(
             F.min("id").alias("keep_id"),
@@ -64,11 +70,7 @@ def exact_dedup_groups(
 
 
 def shingles(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    distinct: bool = True,
+    df: DataFrame, n: int = NGRAM_N, distinct: bool = True
 ) -> DataFrame:
     """Distinct word n-gram shingles: (id, shingle) exploded rows.
 
@@ -80,7 +82,7 @@ def shingles(
     formulation re-evaluates the split per access and goes quadratic; the
     zip_with form measured 15× faster at sf0.1.)
     """
-    out = shingle_arrays(df, id_col, text_col, n).select(
+    out = shingle_arrays(df, n).select(
         "id", F.explode("grams").alias("shingle")
     )
     # Callers whose downstream agg is duplicate-insensitive (min-hash) pass
@@ -88,12 +90,7 @@ def shingles(
     return out.distinct() if distinct else out
 
 
-def shingle_arrays(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def shingle_arrays(df: DataFrame, n: int = NGRAM_N) -> DataFrame:
     """Per-doc word n-gram shingle ARRAY: (id, grams) — the un-exploded
     form, for consumers whose aggregate is per-document (min-hash) and can
     therefore stay map-side.
@@ -106,7 +103,7 @@ def shingle_arrays(
     formulation re-evaluates the split per access and goes quadratic; the
     zip_with form measured 15× faster at sf0.1.)
     """
-    slim = df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_t"))
+    slim = df.select(F.col(DOC_ID).alias("id"), F.col(TEXT).alias("_t"))
     # A small parquet file scans as ONE task, serializing the entire
     # shingle+hash projection on one core. Fan the slim (id, text) rows
     # out to the cluster's parallelism first — measured 3.4× on the
@@ -136,12 +133,9 @@ def shingle_arrays(
 def ngram_jaccard_pairs(
     df: DataFrame,
     threshold: float = 0.2,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_shingle_freq: int | None = None,
 ) -> DataFrame:
-    """All-pairs n-gram Jaccard similarity above ``threshold``.
+    """All-pairs ``NGRAM_N``-gram Jaccard similarity above ``threshold``.
 
     Inverted-index self-join: pairs sharing ≥1 shingle get their common
     count; |union| = |A| + |B| - common. Exact integer arithmetic until the
@@ -168,7 +162,7 @@ def ngram_jaccard_pairs(
     # COUNT(*) — NOT size(ids) — because collect_list drops NULL ids
     # while the cap (and its oracle twin's HAVING COUNT(*)) must count
     # them (--nulls sweep).
-    sh = shingles(df, id_col, text_col, n)
+    sh = shingles(df)
     buckets = sh.groupBy("shingle").agg(
         F.sort_array(F.collect_list("id")).alias("ids"),
         F.count(F.lit(1)).alias("f"),
@@ -211,26 +205,18 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, mh0 .. mh15) MinHash signatures, cut once with an eager
+def minhash_signatures(df: DataFrame) -> DataFrame:
+    """(id, mh0 .. mh15) MinHash signatures of the ``NGRAM_N``-word
+    shingles, cut once with an eager
     ``localCheckpoint``: the signature fold is a long HOF pipeline and
     every consumer reads the frame once per band and once per agreement
     side, so uncut it would recompute 4-10 times (sf0.1, 4 cores,
     build+exec median of q_dedup_minhash_lsh: cache 2.9 s, no cut
     9.4 s, checkpoint 2.8 s). No cache outlives the call."""
-    return _signature_fold(df, n, id_col, text_col).localCheckpoint(
-        eager=True
-    )
+    return _signature_fold(df).localCheckpoint(eager=True)
 
 
-def _signature_fold(
-    df: DataFrame, n: int, id_col: str, text_col: str
-) -> DataFrame:
+def _signature_fold(df: DataFrame) -> DataFrame:
     """The uncut signatures of ``minhash_signatures``: hash family i is
     the 8-hex-char chunk ``substr(md5((i//4) || ':' || shingle),
     (i%4)*8+1, 8)`` — 4 independent 32-bit hashes per md5 call — and
@@ -252,8 +238,8 @@ def _signature_fold(
     duplicate-insensitive, so duplicate shingles need no dedup. md5
     cost is k/4 digests per shingle, identical to before.
     """
-    arr = shingle_arrays(df, id_col, text_col, n).filter(
-        F.size("grams") > 0  # docs shorter than n tokens have no signature
+    arr = shingle_arrays(df).filter(
+        F.size("grams") > 0  # docs shorter than NGRAM_N tokens: no signature
     )
     n_digests = (NUM_HASHES + 3) // 4
 
@@ -371,14 +357,10 @@ def minhash_agreement(
     )
 
 
-def simhash_neardup_pairs(
-    fp: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "id",
-    hash_col: str = "simhash",
-) -> DataFrame:
-    """Bucketed SimHash pair search: pairs with Hamming distance ≤
-    ``max_hamming`` on a 16-bit fingerprint, without an all-pairs scan.
+def simhash_neardup_pairs(fp: DataFrame) -> DataFrame:
+    """Bucketed SimHash pair search over :func:`simhash16`'s (id,
+    simhash) frame: pairs with Hamming distance ≤ ``MAX_HAMMING`` on the
+    16-bit fingerprint, without an all-pairs scan.
 
     Pigeonhole: split the 16 bits into 4 nibbles; ≤3 differing bits can
     touch at most 3 nibbles, so every qualifying pair shares at least one
@@ -391,9 +373,7 @@ def simhash_neardup_pairs(
     and the (band, nib) shuffle are linear, and candidate dedup moves
     only (id_a, id_b, ha, hb) integer tuples.
     """
-    if max_hamming > 3:
-        raise ValueError("nibble pigeonhole supports max_hamming <= 3")
-    slim = fp.select(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
+    slim = fp.select("id", F.col("simhash").alias("h"))
     bands = []
     for p in range(4):
         nib = F.shiftright(F.col("h"), p * 4).bitwiseAND(F.lit(15))
@@ -418,7 +398,7 @@ def simhash_neardup_pairs(
         .select("doc_a", "doc_b", "ha", "hb")
         .distinct()
         .withColumn("hamming", ham.cast("long"))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= MAX_HAMMING)
         .select("doc_a", "doc_b", "hamming")
     )
 
@@ -426,16 +406,14 @@ def simhash_neardup_pairs(
 HEX_DIGITS = "0123456789abcdef"
 
 
-def simhash16(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash16(df: DataFrame) -> DataFrame:
     """16-bit SimHash over whitespace tokens.
 
     Each token votes with the first 4 hex digits of its md5; bit i of the
     fingerprint is the majority vote of bit i across tokens. Pure integer
     arithmetic (strpos/floor/%), identically expressible in SQL engines.
     """
-    slim = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+    slim = df.select(F.col(DOC_ID).alias("_id"), F.col(TEXT).alias("_t"))
     target = df.sparkSession.sparkContext.defaultParallelism
     if slim.rdd.getNumPartitions() < target:
         slim = slim.repartition(target)
@@ -484,14 +462,10 @@ def simhash16(
 
 
 def sparse_cosine_pairs(
-    df: DataFrame,
-    threshold: float = 0.3,
-    n: int = 3,
-    max_df: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+    df: DataFrame, threshold: float = 0.3, max_df: int = 5
 ) -> DataFrame:
-    """Weighted all-pairs cosine over n-gram term-FREQUENCY vectors.
+    """Weighted all-pairs cosine over ``NGRAM_N``-gram term-FREQUENCY
+    vectors.
 
     The sparse-vector twin of :func:`ngram_jaccard_pairs`: Jaccard sees
     shingle SETS, this scores the multiset — repeated phrases weigh in,
@@ -516,7 +490,7 @@ def sparse_cosine_pairs(
     """
     from ..plans._util import sround
 
-    sh = shingle_arrays(df, id_col, text_col, n)
+    sh = shingle_arrays(df)
     # localCheckpoint, not cache(): tf feeds five consumers but a plain
     # cache() here would pin block-manager memory for the session
     # lifetime (nobody can unpersist a lazily-returned plan); the

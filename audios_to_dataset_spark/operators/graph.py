@@ -166,8 +166,6 @@ def connected_components(
 def label_propagation(
     nodes: DataFrame,
     edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
     iters: int = 2,
     checkpoint: bool = True,
 ) -> DataFrame:
@@ -194,7 +192,7 @@ def label_propagation(
     """
     from pyspark.sql import Window
 
-    und = undirected(edges, src, dst)
+    und = undirected(edges)
     if checkpoint:
         und = und.localCheckpoint(eager=True)
     labels = nodes.select("id", F.col("id").alias("label"))
@@ -225,15 +223,13 @@ def label_propagation(
 # agreement zone (scale 18 was measured to diverge in the 17th digit).
 PR_DEC = "decimal(38,12)"
 
+PR_DAMPING = 0.85  # PageRank's probability of following an edge
+HITS_ITERS = 2  # synchronous HITS rounds
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 3,
-    damping: float = 0.85,
-) -> DataFrame:
-    """(id, rank) after ``iters`` synchronous PageRank iterations.
+
+def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
+    """(id, rank) after ``iters`` synchronous PageRank iterations with
+    damping ``PR_DAMPING`` over the (src, dst) ``edges``.
 
     The canonical distributed iteration the reference has no analog for
     (its only loop is the per-shard rayon fan-out,
@@ -261,9 +257,9 @@ def pagerank(
     # task overhead (every iteration is several tiny jobs; measured ~20%
     # at sf0.1 on local[32] over a fixed 8). Values are unaffected: the
     # decimal sums are order-independent.
-    e = edges.select(
-        F.col(src).alias("src"), F.col(dst).alias("dst")
-    ).repartition(edges.sparkSession.sparkContext.defaultParallelism, "src")
+    e = edges.select("src", "dst").repartition(
+        edges.sparkSession.sparkContext.defaultParallelism, "src"
+    )
     # NOTE (r12, measured): these loop-invariant frames must stay
     # EAGER. A lazy checkpoint here is materialized concurrently by the
     # broadcast-build threads and the main stages (each computes the
@@ -334,9 +330,9 @@ def pagerank(
                 "id",
                 "dang",
                 (
-                    F.lit((1.0 - damping))
+                    F.lit((1.0 - PR_DAMPING))
                     / F.col("n").cast("double")
-                    + F.lit(damping)
+                    + F.lit(PR_DAMPING)
                     * (
                         F.coalesce(F.col("inflow"), F.lit(0.0))
                         + F.col("dmass") / F.col("n").cast("double")
@@ -349,13 +345,9 @@ def pagerank(
     return ranks.select("id", "rank")
 
 
-def hits(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    iters: int = 2,
-) -> tuple[DataFrame, DataFrame]:
-    """(hubs, auths) after ``iters`` synchronous HITS rounds (Kleinberg
+def hits(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(hubs, auths) of the (src, dst) ``edges`` after ``HITS_ITERS``
+    synchronous HITS rounds (Kleinberg
     1999, public literature) with max-normalization: auth(v) = Σ hub of
     in-neighbors, hub(u) = Σ auth of out-neighbors, each score vector
     divided by its max after every update. Max-normalization (a standard
@@ -369,16 +361,12 @@ def hits(
     1-row MAX aggregate broadcast back — the same distributed shape as
     :func:`pagerank`, no driver-side state.
     """
-    e = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    e = edges.select("src", "dst").distinct().localCheckpoint(eager=True)
     hubs = e.select(F.col("src").alias("id")).distinct().select(
         "id", F.lit(1.0).alias("hub")
     )
     auths = None
-    for _ in range(iters):
+    for _ in range(HITS_ITERS):
         araw = (
             e.join(hubs, e.src == hubs.id)
             .groupBy("dst")
@@ -402,15 +390,10 @@ def hits(
     return hubs, auths
 
 
-def k_core_peel(
-    edges: DataFrame,
-    k: int,
-    rounds: int,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """(id, core_deg) of nodes surviving ``rounds`` synchronous k-core
-    peeling rounds (Seidman 1983, public literature): each round drops
+def k_core_peel(edges: DataFrame, k: int, rounds: int) -> DataFrame:
+    """(id, core_deg) of the nodes of the (src, dst) ``edges`` that
+    survive ``rounds`` synchronous k-core peeling rounds (Seidman 1983,
+    public literature): each round drops
     every node whose current degree is below ``k``, together with its
     incident edges, simultaneously. The fixpoint is the classic k-core;
     the bounded-round variant keeps the iteration count (and the SQL
@@ -430,7 +413,7 @@ def k_core_peel(
     # and the survivor join — concurrent stages would race to
     # materialize a lazy checkpoint and duplicate the round's work (see
     # the pagerank note above).
-    und = undirected(edges, src, dst).localCheckpoint(eager=True)
+    und = undirected(edges).localCheckpoint(eager=True)
     keep = None
     for it in range(rounds):
         deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
@@ -451,14 +434,12 @@ def k_core_peel(
     )
 
 
-def oriented_triangles(
-    edges: DataFrame, u: str = "u", v: str = "v"
-) -> tuple[DataFrame, DataFrame]:
+def oriented_triangles(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(deg, tri) of an undirected graph via degree orientation: ``deg``
     holds (node, d) for every endpoint, ``tri`` one (s, wu, wv) row per
     triangle, its three corners.
 
-    ``edges`` must hold each undirected edge once with ``u < v``. The
+    ``edges`` must hold each undirected edge once as (u, v), ``u < v``. The
     classic distributed algorithm (Cohen's MapReduce triangle counting /
     node-iterator++): orient every edge from the endpoint of lower
     (degree, id) to the higher, enumerate wedges only from each node's
@@ -480,9 +461,7 @@ def oriented_triangles(
     re-optimizes all of them after every stage, so planning, not data,
     dominated the run time at small scale (q_clustering_coeff, sf0.001).
     """
-    e0 = edges.select(
-        F.col(u).alias("u"), F.col(v).alias("v")
-    ).localCheckpoint(eager=True)
+    e0 = edges.select("u", "v").localCheckpoint(eager=True)
     deg = (
         e0.select(F.explode(F.array("u", "v")).alias("node"))
         .groupBy("node")
@@ -513,12 +492,10 @@ def oriented_triangles(
     return deg, tri
 
 
-def triangle_count(
-    edges: DataFrame, u: str = "u", v: str = "v"
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """(n_edges, n_nodes, n_triangles) of an undirected graph stored as
     in :func:`oriented_triangles`."""
-    deg, tri = oriented_triangles(edges, u, v)
+    deg, tri = oriented_triangles(edges)
     edge_ct = edges.agg(F.count(F.lit(1)).alias("n_edges"))
     node_ct = deg.agg(F.count(F.lit(1)).alias("n_nodes"))
     return (

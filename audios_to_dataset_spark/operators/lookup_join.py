@@ -26,14 +26,13 @@ from ..sources.metadata import first_wins
 def lookup_join(
     files: DataFrame,
     metadata: DataFrame,
-    rel_col: str = "relative_path",
-    name_col: str = "file_name",
     broadcast: bool = True,
 ) -> DataFrame:
     """Enrich ``files`` with metadata columns via the 3-level fallback.
 
-    ``metadata`` must carry ``relative_path``/``file_name`` key columns and
-    a ``_line`` ordering column (as produced by sources.metadata loaders).
+    ``files`` and ``metadata`` must carry ``relative_path``/``file_name``
+    key columns, and ``metadata`` a ``_line`` ordering column (as
+    produced by sources.metadata loaders).
 
     ``broadcast=True`` matches the reference's Arc-shared in-RAM index
     (metadata fits on every worker). For metadata too big to broadcast,
@@ -65,11 +64,13 @@ def lookup_join(
 
     hint = F.broadcast if broadcast else (lambda df: df)
     joined = (
-        files.join(hint(by_rel), files[rel_col] == by_rel["_k1"], "left")
-        .join(hint(by_name), files[name_col] == by_name["_k2"], "left")
+        files.join(
+            hint(by_rel), files["relative_path"] == by_rel["_k1"], "left"
+        )
+        .join(hint(by_name), files["file_name"] == by_name["_k2"], "left")
         .join(
             hint(by_name_as_rel),
-            files[rel_col] == by_name_as_rel["_k3"],
+            files["relative_path"] == by_name_as_rel["_k3"],
             "left",
         )
     )

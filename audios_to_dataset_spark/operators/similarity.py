@@ -14,6 +14,12 @@ and hard-negative mining. ``_rank_unit`` is the one unit-vector ranker
 that the last two share. ``_nearest`` and ``_seeded_kmeans`` are the one
 nearest-centroid argmax and training loop behind k-means, PQ and IVF.
 
+What every caller shares is a module constant, not a parameter: the
+vector frame's ``VEC_ID``/``EMBEDDING`` columns, ``PAIR_DECIMALS`` for
+pair and cluster scores, ``RANK_DECIMALS`` for ranked neighbour lists,
+the single-query searches' ``QUERY_ID`` and the k-means, PQ and
+semantic-dedup settings. The plans import them from here.
+
 All double math accumulates left-to-right in float64 so the DuckDB oracle
 (``plans/_oracle_sql.dot``/``cosine``) reproduces it bit-for-bit;
 results are rounded before any threshold/ordering so cross-engine float
@@ -26,6 +32,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans._util import sround
+
+VEC_ID = "vec_id"  # id column of every vector frame
+EMBEDDING = "embedding"  # its array<float> vector column
+PAIR_DECIMALS = 4  # rounding of pair and cluster cosines
+RANK_DECIMALS = 3  # rounding of ranked-neighbour cosines
+QUERY_ID = 0  # the vector the single-query searches score against
+EMB_THRESHOLD = 0.35  # near-dup cosine; sf0.01 max pair is 0.513: non-vacuous
+KMEANS_K = 8  # k-means clusters behind the cluster-bucketed near-dups
+KMEANS_ITERS = 2  # training rounds of every k-means
+PQ_K = 4  # centroids per product-quantization subspace
+PQ_ITERS = 2  # training rounds of a PQ codebook
 
 
 def _spread_small_scan(df: DataFrame) -> DataFrame:
@@ -91,95 +108,69 @@ def _cosine(a: Column, b: Column) -> Column:
     return _dot(a, b) / (_norm(a) * _norm(b))
 
 
-def _indexable(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _indexable(df: DataFrame) -> DataFrame:
     """Drop rows that cannot be indexed: a NULL id or a NULL vector.
 
     Seeds are the lowest ids and Spark sorts NULL ids FIRST, so one
     NULL-id row would become a seed, and a NULL-vector seed NULLs every
     cosine against it: one dirty row would empty a whole clustering
     (found by the --nulls sweep)."""
-    return df.filter(F.col(id_col).isNotNull() & F.col(vec_col).isNotNull())
+    return df.filter(F.col(VEC_ID).isNotNull() & F.col(EMBEDDING).isNotNull())
 
 
-def cosine_vs_query(
-    df: DataFrame,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
-) -> DataFrame:
-    """Cosine similarity of every vector against one query vector."""
-    return _vs_query(df, df, query_id, id_col, vec_col, decimals)
+def cosine_vs_query(df: DataFrame, decimals: int = RANK_DECIMALS) -> DataFrame:
+    """Cosine similarity of every vector against the ``QUERY_ID`` vector."""
+    return _vs_query(df, df, decimals)
 
 
 def _vs_query(
-    cand: DataFrame,
-    df: DataFrame,
-    query_id: int,
-    id_col: str,
-    vec_col: str,
-    decimals: int,
+    cand: DataFrame, df: DataFrame, decimals: int = RANK_DECIMALS
 ) -> DataFrame:
     """(id, cos_sim): every ``cand`` vector's cosine, rounded to
-    ``decimals`` places, against the vector of ``query_id`` in ``df``.
+    ``decimals`` places, against the vector of ``QUERY_ID`` in ``df``.
 
     The 1-row query side is cross-joined broadcast — no shuffle of the big
     side at all; the scan streams through a codegen'd projection.
     """
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("query_vec")
+    q = df.filter(F.col(VEC_ID) == QUERY_ID).select(
+        F.col(EMBEDDING).alias("query_vec")
     )
-    cos = _cosine(F.col(vec_col), F.col("query_vec"))
+    cos = _cosine(F.col(EMBEDDING), F.col("query_vec"))
     return cand.crossJoin(F.broadcast(q)).select(
-        id_col, sround(cos, decimals).alias("cos_sim")
+        VEC_ID, sround(cos, decimals).alias("cos_sim")
     )
 
 
-def _top(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+def _top(scored: DataFrame, k: int) -> DataFrame:
     """The ``k`` best ``cos_sim`` rows, ordered on the *rounded* score
     with an id tie-break so the cutoff is engine-independent. Spark plans
     the orderBy+limit as TakeOrderedAndProject (per-partition top-k, no
     global sort shuffle)."""
-    return scored.orderBy(F.col("cos_sim").desc(), F.col(id_col)).limit(k)
+    return scored.orderBy(F.col("cos_sim").desc(), F.col(VEC_ID)).limit(k)
 
 
-def topk_vs_query(
-    df: DataFrame,
-    k: int = 20,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
-) -> DataFrame:
-    """Top-k nearest by cosine (:func:`_top`)."""
-    return _top(
-        cosine_vs_query(df, query_id, id_col, vec_col, decimals), k, id_col
-    )
+def topk_vs_query(df: DataFrame, k: int = 20) -> DataFrame:
+    """Top-k nearest to the ``QUERY_ID`` vector by cosine (:func:`_top`)."""
+    return _top(cosine_vs_query(df), k)
 
 
-def cosine_neardup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
-) -> DataFrame:
+def cosine_neardup_pairs(df: DataFrame, threshold: float = 0.95) -> DataFrame:
     """Embedding near-duplicate pairs: all pairs with rounded cosine ≥
     threshold. Brute-force O(N²) — correct baseline; use
     :func:`lsh_bucketed_neardup_pairs` at scale."""
-    a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    a = df.select(F.col(VEC_ID).alias("id_a"), F.col(EMBEDDING).alias("va"))
+    b = df.select(F.col(VEC_ID).alias("id_b"), F.col(EMBEDDING).alias("vb"))
     cos = _cosine(F.col("va"), F.col("vb"))
     return (
         a.crossJoin(b)
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_sim", sround(cos, decimals))
+        .withColumn("cos_sim", sround(cos, PAIR_DECIMALS))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
 
 
-def _bucket_bits(planes: list[list[float]], vec_col: str) -> Column:
+def _bucket_bits(planes: list[list[float]]) -> Column:
     """Sign-bit string of the vector's dot products with the planes.
 
     The plane family is ONE ``array<array<double>>`` literal and the
@@ -224,17 +215,14 @@ def _bucket_bits(planes: list[list[float]], vec_col: str) -> Column:
     )
     return F.expr(
         f"array_join(transform({mat}, p -> CASE WHEN "
-        f"aggregate(zip_with(`{vec_col}`, p, (x, y) -> "
+        f"aggregate(zip_with(`{EMBEDDING}`, p, (x, y) -> "
         "CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, "
         "(acc, v) -> acc + v) >= 0 THEN '1' ELSE '0' END), '')"
     )
 
 
 def multitable_buckets(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, tables: list[list[list[float]]]
 ) -> DataFrame:
     """('id', 'bucket') rows for EVERY hash table in ONE scan: each input
     row computes its |tables| bucket keys ('<table>:<sign bits>') and
@@ -244,11 +232,11 @@ def multitable_buckets(
     is a single Generate inside codegen instead of a |tables|-way Union
     of scans."""
     entries = [
-        F.concat(F.lit(f"{t}:"), _bucket_bits(planes, vec_col))
+        F.concat(F.lit(f"{t}:"), _bucket_bits(planes))
         for t, planes in enumerate(tables)
     ]
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col(VEC_ID).alias("id"),
         F.explode(F.array(*entries)).alias("bucket"),
     )
 
@@ -256,8 +244,6 @@ def multitable_buckets(
 def ivf_assignments(
     df: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: (centroids, assignments).
@@ -273,23 +259,22 @@ def ivf_assignments(
     are dropped.
     """
     if centroids is None:
-        cents, a = _seeded_kmeans(df, n_centroids, 0, id_col, vec_col)
+        cents, a = _seeded_kmeans(df, n_centroids, 0)
     else:
         cents = centroids.select(
             F.lit(0).alias("s"),
             F.col("centroid_id").alias("cid"),
             F.col("centroid_vec").alias("cvec"),
         )
-        df = _indexable(df, id_col, vec_col)
-        a = _nearest(_whole(df, id_col, vec_col), cents, id_col)
+        a = _nearest(_whole(_indexable(df)), cents)
     return (
         cents.select(
             F.col("cid").alias("centroid_id"),
             F.col("cvec").alias("centroid_vec"),
         ),
         a.select(
-            id_col,
-            F.col("sub").alias(vec_col),
+            VEC_ID,
+            F.col("sub").alias(EMBEDDING),
             F.col("cid").alias("centroid_id"),
         ),
     )
@@ -298,24 +283,18 @@ def ivf_assignments(
 def ivf_topk_vs_query(
     df: DataFrame,
     k: int = 20,
-    query_id: int = 0,
     n_centroids: int = 16,
     nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Approximate top-k: probe only the ``nprobe`` centroid lists nearest
-    the query, score within them. At scale the assignment table is
-    partitioned by centroid_id, so a query touches nprobe/n_centroids of
-    the data instead of all of it. ``centroids`` swaps in a trained
-    coarse quantizer (e.g. :func:`kmeans_centroids`)."""
-    centroids, assignments = ivf_assignments(
-        df, n_centroids, id_col, vec_col, centroids=centroids
-    )
-    q = df.filter(F.col(id_col) == query_id).select(
-        F.col(vec_col).alias("query_vec")
+    the ``QUERY_ID`` vector, score within them. At scale the assignment
+    table is partitioned by centroid_id, so a query touches
+    nprobe/n_centroids of the data instead of all of it. ``centroids``
+    swaps in a trained coarse quantizer (e.g. :func:`kmeans_centroids`)."""
+    centroids, assignments = ivf_assignments(df, n_centroids, centroids)
+    q = df.filter(F.col(VEC_ID) == QUERY_ID).select(
+        F.col(EMBEDDING).alias("query_vec")
     )
     ccos = _cosine(F.col("centroid_vec"), F.col("query_vec"))
     probe = (
@@ -326,23 +305,14 @@ def ivf_topk_vs_query(
         .select("centroid_id")
     )
     candidates = assignments.join(F.broadcast(probe), "centroid_id")
-    return _top(
-        _vs_query(candidates, df, query_id, id_col, vec_col, decimals),
-        k,
-        id_col,
-    )
+    return _top(_vs_query(candidates, df), k)
 
 
 def lsh_topk_vs_query(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    k: int = 20,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
+    df: DataFrame, tables: list[list[list[float]]], k: int = 20
 ) -> DataFrame:
-    """Approximate top-k vs one query via hyperplane-LSH buckets.
+    """Approximate top-k vs the ``QUERY_ID`` vector via hyperplane-LSH
+    buckets.
 
     Candidates = vectors colliding with the query in ANY hash table;
     they alone are scored exactly, then top-k on the rounded score with
@@ -351,27 +321,19 @@ def lsh_topk_vs_query(
     key against a handful of broadcast query buckets, and only the
     candidate rows' vectors ever move.
     """
-    bucketed = multitable_buckets(df, tables, id_col, vec_col)
-    qb = bucketed.filter(F.col("id") == query_id).select("bucket")
+    bucketed = multitable_buckets(df, tables)
+    qb = bucketed.filter(F.col("id") == QUERY_ID).select("bucket")
     cand_ids = (
         bucketed.join(F.broadcast(qb), "bucket")
         .select("id")
         .distinct()
     )
-    cand = df.join(cand_ids.withColumnRenamed("id", id_col), id_col)
-    return _top(
-        _vs_query(cand, df, query_id, id_col, vec_col, decimals), k, id_col
-    )
+    cand = df.join(cand_ids.withColumnRenamed("id", VEC_ID), VEC_ID)
+    return _top(_vs_query(cand, df), k)
 
 
 def multiprobe_topk_vs_query(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    k: int = 20,
-    query_id: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
+    df: DataFrame, tables: list[list[list[float]]], k: int = 20
 ) -> DataFrame:
     """Multi-probe LSH ANN (the method of Lv et al. 2007, public
     literature): in each hash table, probe the query's own bucket PLUS
@@ -388,8 +350,8 @@ def multiprobe_topk_vs_query(
     pure string ops inside codegen on a tables-sized frame.
     """
     n_planes = len(tables[0])
-    bucketed = multitable_buckets(df, tables, id_col, vec_col)
-    qb = bucketed.filter(F.col("id") == query_id).select("bucket")
+    bucketed = multitable_buckets(df, tables)
+    qb = bucketed.filter(F.col("id") == QUERY_ID).select("bucket")
     # j = 0 keeps the exact bucket; j >= 1 flips sign bit j. The bucket
     # string is "<table>:<bits>", so flips splice the bits part only.
     probes = (
@@ -413,18 +375,18 @@ def multiprobe_topk_vs_query(
     cand_ids = (
         bucketed.join(F.broadcast(probes), "bucket").select("id").distinct()
     )
-    cand = df.join(cand_ids.withColumnRenamed("id", id_col), id_col)
-    return _top(
-        _vs_query(cand, df, query_id, id_col, vec_col, decimals), k, id_col
+    cand = df.join(cand_ids.withColumnRenamed("id", VEC_ID), VEC_ID)
+    return _top(_vs_query(cand, df), k)
+
+
+def _whole(df: DataFrame) -> DataFrame:
+    """(id, s, sub): each whole vector as the single subspace ``s = 0``."""
+    return df.select(
+        VEC_ID, F.lit(0).alias("s"), F.col(EMBEDDING).alias("sub")
     )
 
 
-def _whole(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, s, sub): each whole vector as the single subspace ``s = 0``."""
-    return df.select(id_col, F.lit(0).alias("s"), F.col(vec_col).alias("sub"))
-
-
-def _nearest(sub: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+def _nearest(sub: DataFrame, cents: DataFrame) -> DataFrame:
     """(id, s, sub, cid, cos): every subvector's nearest centroid in its
     subspace, the one argmax behind k-means, PQ and IVF.
 
@@ -441,13 +403,13 @@ def _nearest(sub: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
         F.col("s") == F.col("_s"),
         "cross",
     ).select(
-        id_col,
+        VEC_ID,
         "s",
         "sub",
         "cid",
         sround(_cosine(F.col("sub"), F.col("cvec")), 6).alias("cos"),
     )
-    pick = Window.partitionBy(id_col, "s").orderBy(
+    pick = Window.partitionBy(VEC_ID, "s").orderBy(
         F.col("cos").desc(), "cid"
     )
     return (
@@ -461,8 +423,6 @@ def _seeded_kmeans(
     df: DataFrame,
     k: int,
     iters: int,
-    id_col: str,
-    vec_col: str,
     m: int = 1,
     subdim: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
@@ -492,16 +452,16 @@ def _seeded_kmeans(
 
     def split(d: DataFrame) -> DataFrame:
         if subdim is None:
-            return _whole(d, id_col, vec_col)
-        return pq_subvectors(d, m, subdim, id_col, vec_col)
+            return _whole(d)
+        return pq_subvectors(d, m, subdim)
 
-    df = _indexable(df, id_col, vec_col)
+    df = _indexable(df)
     sub = split(df)
     cents = split(
-        df.select(id_col, vec_col).orderBy(id_col).limit(k)
-    ).select("s", F.col(id_col).alias("cid"), F.col("sub").alias("cvec"))
+        df.select(VEC_ID, EMBEDDING).orderBy(VEC_ID).limit(k)
+    ).select("s", F.col(VEC_ID).alias("cid"), F.col("sub").alias("cvec"))
     for _ in range(iters):
-        flat = _nearest(sub, cents, id_col).select(
+        flat = _nearest(sub, cents).select(
             "s", "cid", F.posexplode(F.col("sub")).alias("pos", "val")
         )
         means = flat.groupBy("s", "cid", "pos").agg(
@@ -524,45 +484,27 @@ def _seeded_kmeans(
             )
             .localCheckpoint(eager=True)
         )
-    return cents, _nearest(sub, cents, id_col)
+    return cents, _nearest(sub, cents)
 
 
-def kmeans_centroids(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_centroids(df: DataFrame, k: int = KMEANS_K) -> DataFrame:
     """Deterministic seeded KMeans → the final k centroids (cid, cvec):
-    :func:`_seeded_kmeans` over whole vectors."""
-    cents, _ = _seeded_kmeans(df, k, iters, id_col, vec_col)
+    :func:`_seeded_kmeans` over whole vectors, ``KMEANS_ITERS`` rounds."""
+    cents, _ = _seeded_kmeans(df, k, KMEANS_ITERS)
     return cents.drop("s")
 
 
-def kmeans_assignments(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assignments(df: DataFrame) -> DataFrame:
     """Deterministic seeded KMeans on cosine similarity → (id, cid): the
     assignment of every vector against :func:`kmeans_centroids`'s final
-    centroids. At 100 TB: per-iteration cost is one broadcast + one
-    (cid, pos) shuffle; centroids (k×dim doubles) stay driver-small.
-    NULL-id / NULL-vector rows are dropped."""
-    _, a = _seeded_kmeans(df, k, iters, id_col, vec_col)
-    return a.select(id_col, "cid")
+    ``KMEANS_K`` centroids. At 100 TB: per-iteration cost is one
+    broadcast + one (cid, pos) shuffle; centroids (k×dim doubles) stay
+    tiny. NULL-id / NULL-vector rows are dropped."""
+    _, a = _seeded_kmeans(df, KMEANS_K, KMEANS_ITERS)
+    return a.select(VEC_ID, "cid")
 
 
-def pq_subvectors(
-    df: DataFrame,
-    m: int,
-    subdim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_subvectors(df: DataFrame, m: int, subdim: int) -> DataFrame:
     """(id, s, sub): every vector exploded into its ``m`` contiguous
     ``subdim``-wide subvectors — ONE scan of the vector table feeds all
     subspaces (the per-subspace-loop alternative rescans the 100 TB side
@@ -570,30 +512,22 @@ def pq_subvectors(
     parts = [
         F.struct(
             F.lit(s).cast("int").alias("s"),
-            F.slice(F.col(vec_col), s * subdim + 1, subdim).alias("sub"),
+            F.slice(F.col(EMBEDDING), s * subdim + 1, subdim).alias("sub"),
         )
         for s in range(m)
     ]
     return df.select(
-        F.col(id_col), F.explode(F.array(*parts)).alias("_p")
-    ).select(id_col, F.col("_p.s").alias("s"), F.col("_p.sub").alias("sub"))
+        F.col(VEC_ID), F.explode(F.array(*parts)).alias("_p")
+    ).select(VEC_ID, F.col("_p.s").alias("s"), F.col("_p.sub").alias("sub"))
 
 
-def pq_codebooks(
-    df: DataFrame,
-    m: int,
-    subdim: int,
-    k: int = 4,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(s, cid, cvec) codebooks for all ``m`` PQ subspaces, trained as
-    ONE grouped seeded kmeans (:func:`_seeded_kmeans`): each iteration
-    is a single broadcast assignment plus a single (s, cid, pos)
-    decimal-mean shuffle — m codebooks for the per-iteration cost of
-    one."""
-    cents, _ = _seeded_kmeans(df, k, iters, id_col, vec_col, m, subdim)
+def pq_codebooks(df: DataFrame, m: int, subdim: int) -> DataFrame:
+    """(s, cid, cvec) ``PQ_K``-centroid codebooks for all ``m`` PQ
+    subspaces, trained ``PQ_ITERS`` rounds as ONE grouped seeded kmeans
+    (:func:`_seeded_kmeans`): each iteration is a single broadcast
+    assignment plus a single (s, cid, pos) decimal-mean shuffle — m
+    codebooks for the per-iteration cost of one."""
+    cents, _ = _seeded_kmeans(df, PQ_K, PQ_ITERS, m, subdim)
     return cents
 
 
@@ -601,10 +535,8 @@ def pq_codes(
     df: DataFrame,
     m: int,
     subdim: int,
-    k: int = 4,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    k: int = PQ_K,
+    iters: int = PQ_ITERS,
 ) -> DataFrame:
     """Product quantization (Jégou, Douze & Schmid 2011, public
     literature): split each vector into ``m`` contiguous ``subdim``-wide
@@ -621,8 +553,8 @@ def pq_codes(
     (s, cid, pos) shuffle per recompute, regardless of m; the final
     per-vector code row is a pivot-free max(CASE) aggregate keyed on the
     id. NULL-id / NULL-vector rows cannot be coded and are dropped."""
-    _, a = _seeded_kmeans(df, k, iters, id_col, vec_col, m, subdim)
-    return a.groupBy(id_col).agg(
+    _, a = _seeded_kmeans(df, k, iters, m, subdim)
+    return a.groupBy(VEC_ID).agg(
         *[
             F.max(F.when(F.col("s") == s, F.col("cid"))).alias(f"code_{s}")
             for s in range(m)
@@ -631,10 +563,7 @@ def pq_codes(
 
 
 def _lsh_candidates(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
+    df: DataFrame, tables: list[list[list[float]]]
 ) -> tuple[DataFrame, DataFrame]:
     """(base, cand): the slim (id, vector) scan and every directed
     (src, dst) pair of distinct ids that share a bucket in ANY table —
@@ -651,8 +580,8 @@ def _lsh_candidates(
     per-pair scoring stage, whose rows are small but whose interpreted
     dot products are not. Only ids move through that exchange; the
     vectors join back from ``base`` after the distinct."""
-    base = _spread_small_scan(df.select(id_col, vec_col))
-    bucketed = multitable_buckets(base, tables, id_col, vec_col)
+    base = _spread_small_scan(df.select(VEC_ID, EMBEDDING))
+    bucketed = multitable_buckets(base, tables)
     a = bucketed.select(F.col("id").alias("src"), "bucket")
     b = bucketed.select(F.col("id").alias("dst"), "bucket")
     cand = (
@@ -665,45 +594,38 @@ def _lsh_candidates(
     return base, cand
 
 
-def _unit_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+def _unit_vectors(df: DataFrame) -> DataFrame:
     """(id, u): each vector divided by its norm, once per vector, so a
     pair's cosine is one dot product instead of a dot and two norms. The
     DuckDB oracles normalize with the identical per-element division.
     Zero-norm (and NULL) vectors have no defined cosine and are dropped
     rather than failing the job with DIVIDE_BY_ZERO under ANSI mode."""
     return (
-        df.select(id_col, F.col(vec_col).alias("_v"))
+        df.select(VEC_ID, F.col(EMBEDDING).alias("_v"))
         .withColumn("_n", _norm(F.col("_v")))
         .filter(F.col("_n") > 0)
         .select(
-            id_col,
+            VEC_ID,
             F.transform("_v", lambda x: x.cast("double") / F.col("_n"))
             .alias("u"),
         )
     )
 
 
-def _rank_unit(
-    base: DataFrame,
-    cand: DataFrame,
-    k: int,
-    id_col: str,
-    vec_col: str,
-    decimals: int,
-) -> DataFrame:
+def _rank_unit(base: DataFrame, cand: DataFrame, k: int) -> DataFrame:
     """``cand`` (src, dst, ...) plus ``cos_sim``, the unit-vector cosine
-    rounded to ``decimals`` places, and ``rank``, its row_number per src
-    (cos_sim desc, dst), kept to rank <= k. The window is PARTITIONED BY
-    src: no global sort."""
-    un = _unit_vectors(base, id_col, vec_col)
-    va = un.select(F.col(id_col).alias("src"), F.col("u").alias("ua"))
-    vb = un.select(F.col(id_col).alias("dst"), F.col("u").alias("ub"))
+    rounded to ``RANK_DECIMALS`` places, and ``rank``, its row_number per
+    src (cos_sim desc, dst), kept to rank <= k. The window is PARTITIONED
+    BY src: no global sort."""
+    un = _unit_vectors(base)
+    va = un.select(F.col(VEC_ID).alias("src"), F.col("u").alias("ua"))
+    vb = un.select(F.col(VEC_ID).alias("dst"), F.col("u").alias("ub"))
     w = Window.partitionBy("src").orderBy(F.col("cos_sim").desc(), "dst")
     return (
         cand.join(va, "src")
         .join(vb, "dst")
         .withColumn(
-            "cos_sim", sround(_dot(F.col("ua"), F.col("ub")), decimals)
+            "cos_sim", sround(_dot(F.col("ua"), F.col("ub")), RANK_DECIMALS)
         )
         .withColumn("rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rank") <= k)
@@ -711,12 +633,7 @@ def _rank_unit(
 
 
 def lsh_bucketed_neardup_pairs(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
+    df: DataFrame, tables: list[list[list[float]]], threshold: float = 0.95
 ) -> DataFrame:
     """Approximate near-dup pairs: score only within LSH buckets.
 
@@ -728,14 +645,14 @@ def lsh_bucketed_neardup_pairs(
     — only recall is approximate. Tune: more planes/table → smaller
     buckets (cheaper, lower recall); more tables → higher recall
     (linearly more hashing)."""
-    base, cand = _lsh_candidates(df, tables, id_col, vec_col)
+    base, cand = _lsh_candidates(df, tables)
     # Norms are per-VECTOR, computed on the N-row join side rather than
     # inside the C >> N candidate projection. The score is
     # dot / (na * nb), not a unit-vector dot: its oracle
     # (_oracle_sql.emb_pairs) computes the norms in place, and
     # unit-vector scoring can round differently.
     vn = base.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("v")
+        F.col(VEC_ID).alias("id"), F.col(EMBEDDING).alias("v")
     ).withColumn("nrm", _norm(F.col("v")))
     va = vn.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"),
@@ -751,19 +668,14 @@ def lsh_bucketed_neardup_pairs(
         .select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
         .join(va, "id_a")
         .join(vb, "id_b")
-        .withColumn("cos_sim", sround(cos, decimals))
+        .withColumn("cos_sim", sround(cos, PAIR_DECIMALS))
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
 
 
 def knn_graph(
-    df: DataFrame,
-    tables: list[list[list[float]]],
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
+    df: DataFrame, tables: list[list[list[float]]], k: int = 3
 ) -> DataFrame:
     """Approximate k-NN graph — the index-construction primitive under
     HNSW/IVF-graph ANN serving: for EVERY vector, its top-k neighbors
@@ -772,8 +684,8 @@ def knn_graph(
 
     Scale shape: :func:`_lsh_candidates` then :func:`_rank_unit`. No
     global sort, no all-pairs anywhere."""
-    base, cand = _lsh_candidates(df, tables, id_col, vec_col)
-    return _rank_unit(base, cand, k, id_col, vec_col, decimals).select(
+    base, cand = _lsh_candidates(df, tables)
+    return _rank_unit(base, cand, k).select(
         "src", "dst", "cos_sim", "rank"
     )
 
@@ -783,9 +695,6 @@ def hard_negatives(
     tables: list[list[list[float]]],
     labels: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for every
     labelled anchor, the top-k HIGHEST-cosine bucket-mates with a
@@ -799,7 +708,7 @@ def hard_negatives(
     both anchors and candidates. Scale shape: knn_graph's plus two
     label hash joins on the candidate frame.
     """
-    base, cand = _lsh_candidates(df, tables, id_col, vec_col)
+    base, cand = _lsh_candidates(df, tables)
     la = labels.select(
         F.col("id").alias("src"), F.col("label").alias("src_label")
     )
@@ -811,7 +720,7 @@ def hard_negatives(
         .join(lb, "dst")
         .filter(F.col("src_label") != F.col("dst_label"))
     )
-    return _rank_unit(base, neg, k, id_col, vec_col, decimals).select(
+    return _rank_unit(base, neg, k).select(
         "src", "src_label", "dst", "dst_label", "cos_sim", "rank"
     )
 
@@ -821,9 +730,6 @@ def lsh_topk_batch(
     tables: list[list[list[float]]],
     query_ids: list[int],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 3,
 ) -> DataFrame:
     """Batch ANN: approximate top-k for MANY query vectors at once.
 
@@ -835,7 +741,7 @@ def lsh_topk_batch(
     of candidate rows — independent of the number of queries until the
     query side outgrows the broadcast threshold.
     """
-    bucketed = multitable_buckets(df, tables, id_col, vec_col)
+    bucketed = multitable_buckets(df, tables)
     ids = [F.lit(q) for q in query_ids]
     qb = (
         bucketed.filter(F.col("id").isin(*ids))
@@ -847,9 +753,9 @@ def lsh_topk_batch(
         .select("qid", "id")
         .distinct()
     )
-    v = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    qv = df.filter(F.col(id_col).isin(*ids)).select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
+    v = df.select(F.col(VEC_ID).alias("id"), F.col(EMBEDDING).alias("vec"))
+    qv = df.filter(F.col(VEC_ID).isin(*ids)).select(
+        F.col(VEC_ID).alias("qid"), F.col(EMBEDDING).alias("qvec")
     )
     cos = _cosine(F.col("vec"), F.col("qvec"))
     w = Window.partitionBy("qid").orderBy(
@@ -858,7 +764,7 @@ def lsh_topk_batch(
     return (
         cand.join(v, "id")
         .join(F.broadcast(qv), "qid")
-        .select("qid", "id", sround(cos, decimals).alias("cos_sim"))
+        .select("qid", "id", sround(cos, RANK_DECIMALS).alias("cos_sim"))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
@@ -870,87 +776,66 @@ def lsh_topk_batch(
     )
 
 
-def cluster_bucketed_neardup_pairs(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
-) -> DataFrame:
+def cluster_bucketed_neardup_pairs(df: DataFrame) -> DataFrame:
     """SemDeDup-style semantic near-dup (cluster-bucketed; the method of
     Abbas et al. 2023, "SemDeDup", public literature): bucket every
-    vector by its seeded-KMeans cluster, then score cosine pairs only
-    WITHIN clusters. The complement of LSH bucketing: clusters follow
+    vector by its seeded-KMeans cluster (:func:`kmeans_assignments`),
+    then keep the pairs WITHIN clusters whose cosine reaches
+    ``EMB_THRESHOLD``. The complement of LSH bucketing: clusters follow
     the data's own density (near-dups co-cluster by construction), and
     per-cluster candidate count is (N/k)² — at scale you raise k with N
     (k ~ N/target_cluster_size) and the train step stays one broadcast
     + one (cid, pos) shuffle per iteration. Exact re-score inside
     buckets, so precision is 1; recall misses only pairs split across
     cluster boundaries."""
-    assign = kmeans_assignments(df, k, iters, id_col, vec_col)
-    return _cluster_pairs(df, assign, threshold, id_col, vec_col, decimals)
+    return _cluster_pairs(df, kmeans_assignments(df))
 
 
-def _cluster_pairs(
-    df: DataFrame,
-    assign: DataFrame,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    decimals: int,
-) -> DataFrame:
+def _cluster_pairs(df: DataFrame, assign: DataFrame) -> DataFrame:
     """(id_a, id_b, cos_sim): pairs of cluster-mates (same ``cid`` in the
     (id, cid) frame ``assign``), id_a < id_b, whose cosine rounded to
-    ``decimals`` places is >= threshold."""
-    mates = df.join(assign, id_col)
+    ``PAIR_DECIMALS`` places is >= ``EMB_THRESHOLD``."""
+    mates = df.join(assign, VEC_ID)
     left = mates.select(
-        "cid", F.col(id_col).alias("id_a"), F.col(vec_col).alias("va")
+        "cid", F.col(VEC_ID).alias("id_a"), F.col(EMBEDDING).alias("va")
     )
     right = mates.select(
-        "cid", F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb")
+        "cid", F.col(VEC_ID).alias("id_b"), F.col(EMBEDDING).alias("vb")
     )
     return (
         left.join(right, "cid")
         .filter(F.col("id_a") < F.col("id_b"))
         .withColumn(
-            "cos_sim", sround(_cosine(F.col("va"), F.col("vb")), decimals)
+            "cos_sim",
+            sround(_cosine(F.col("va"), F.col("vb")), PAIR_DECIMALS),
         )
-        .filter(F.col("cos_sim") >= threshold)
+        .filter(F.col("cos_sim") >= EMB_THRESHOLD)
         .select("id_a", "id_b", "cos_sim")
     )
 
 
-def semantic_dedup_decisions(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
-) -> DataFrame:
+def semantic_dedup_decisions(df: DataFrame) -> DataFrame:
     """The SemDeDup ENDGAME on top of :func:`cluster_bucketed_neardup_pairs`:
     one row per vector with the keep/drop decision. A vector is dropped
-    when some LOWER-id cluster-mate scores >= threshold (min-id survivor,
-    the same deterministic rule as exact_dedup_groups); ``max_lower_cos``
-    reports the strongest such mate (-1.0 when none qualifies).
+    when some LOWER-id cluster-mate scores >= ``EMB_THRESHOLD`` (min-id
+    survivor, the same deterministic rule as exact_dedup_groups);
+    ``max_lower_cos`` reports the strongest such mate (-1.0 when none
+    qualifies).
 
     The KMeans assignments feed both sides of the pair join and the
     final decision frame. Scale shape is unchanged from the pair search:
     per-cluster (N/k)^2 candidates with k raised alongside N, then an
     (id) groupBy and a left join."""
-    assign = kmeans_assignments(df, k, iters, id_col, vec_col)
+    assign = kmeans_assignments(df)
     drops = (
-        _cluster_pairs(df, assign, threshold, id_col, vec_col, decimals)
+        _cluster_pairs(df, assign)
         .groupBy("id_b")
         .agg(F.max("cos_sim").alias("max_lower_cos"))
     )
     return assign.join(
-        drops, assign[id_col] == drops["id_b"], "left"
+        drops, assign[VEC_ID] == drops["id_b"], "left"
     ).select(
-        id_col,
+        VEC_ID,
         "cid",
         F.coalesce("max_lower_cos", F.lit(-1.0)).alias("max_lower_cos"),
         F.when(F.col("id_b").isNull(), 1).otherwise(0).alias("keep"),
@@ -962,9 +847,6 @@ def dbscan_clusters(
     tables: list[list[list[float]]],
     threshold: float,
     min_pts: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    decimals: int = 4,
 ) -> DataFrame:
     """Density-based clustering (DBSCAN, Ester et al. KDD'96) over an
     embedding column, with the eps-neighborhood realized as the
@@ -1003,9 +885,7 @@ def dbscan_clusters(
     # cached, or the 20-iteration plan growth dominates; see
     # operators/dedup.py:473 for the ContextCleaner rationale)
     pairs = (
-        lsh_bucketed_neardup_pairs(
-            df, tables, threshold, id_col, vec_col, decimals
-        )
+        lsh_bucketed_neardup_pairs(df, tables, threshold)
         .select("id_a", "id_b")
         .localCheckpoint(eager=True)
     )
@@ -1045,9 +925,7 @@ def dbscan_clusters(
     # the pair graph can never label NULL-id / NULL-vector rows (NULL
     # comparisons drop them before any candidate forms), so the noise
     # leg must exclude them too or the --nulls sweep diverges
-    all_ids = _indexable(df, id_col, vec_col).select(
-        F.col(id_col).alias("id")
-    )
+    all_ids = _indexable(df).select(F.col(VEC_ID).alias("id"))
     noise = all_ids.join(labeled, "id", "left_anti").select(
         "id",
         F.lit(None).cast("bigint").alias("cluster_id"),

@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HASH_BITS = 60  # 15 hex chars of md5 — fits a signed 64-bit int
+HLL_M = 64  # registers per sketch
 
 
 def hll_alpha(m: int) -> float:
@@ -62,7 +63,9 @@ def _bit_length(col: Column) -> Column:
     return F.bit_count(x).cast("int")
 
 
-def hll_reg_rho_cols(value_col: str, m: int = 64) -> tuple[Column, Column]:
+def hll_reg_rho_cols(
+    value_col: str, m: int = HLL_M
+) -> tuple[Column, Column]:
     """The (reg, rho) projection columns for one value — exposed so
     streaming plans can apply a watermark between the projection and the
     register groupBy."""
@@ -85,7 +88,7 @@ def hll_registers(
     df: DataFrame,
     value_col: str,
     group_cols: list[str],
-    m: int = 64,
+    m: int = HLL_M,
 ) -> DataFrame:
     """Per-group register table: (group_cols..., reg int, m_j int).
 
@@ -103,7 +106,7 @@ def hll_registers(
 def hll_estimate_from_registers(
     regs: DataFrame,
     group_cols: list[str],
-    m: int = 64,
+    m: int = HLL_M,
 ) -> DataFrame:
     """Estimate from an existing (group_cols..., reg, m_j) register table
     — the second half of :func:`hll_estimate`, split out so MERGED
@@ -127,7 +130,7 @@ def hll_estimate(
     df: DataFrame,
     value_col: str,
     group_cols: list[str],
-    m: int = 64,
+    m: int = HLL_M,
 ) -> DataFrame:
     """(group_cols..., registers_hit long, hll_estimate double).
 
@@ -143,7 +146,7 @@ def hll_regs_sql(
     table_expr: str,
     value_sql: str,
     group_sql: list[str],
-    m: int = 64,
+    m: int = HLL_M,
 ) -> str:
     """DuckDB twin of hll_registers: the (group..., reg, m_j) SELECT."""
     w = HASH_BITS - int(math.log2(m))
@@ -159,7 +162,7 @@ def hll_regs_sql(
   GROUP BY {g}, reg"""
 
 
-def hll_final_sql(group_sql: list[str], m: int = 64) -> str:
+def hll_final_sql(group_sql: list[str], m: int = HLL_M) -> str:
     """DuckDB twin of hll_estimate_from_registers: the estimate SELECT
     over a relation named ``regs`` with (group..., reg, m_j)."""
     w = HASH_BITS - int(math.log2(m))
@@ -175,18 +178,14 @@ FROM regs
 GROUP BY {g}"""
 
 
-def hll_sql(
-    table_expr: str,
-    value_sql: str,
-    group_sql: list[str],
-    m: int = 64,
-) -> str:
-    """DuckDB twin of hll_estimate — the exact same integer pipeline."""
+def hll_sql(table_expr: str, value_sql: str, group_sql: list[str]) -> str:
+    """DuckDB twin of hll_estimate at ``HLL_M`` registers — the exact
+    same integer pipeline."""
     return f"""
 WITH regs AS (
-  {hll_regs_sql(table_expr, value_sql, group_sql, m)}
+  {hll_regs_sql(table_expr, value_sql, group_sql, HLL_M)}
 )
-{hll_final_sql(group_sql, m)}
+{hll_final_sql(group_sql, HLL_M)}
 """
 
 

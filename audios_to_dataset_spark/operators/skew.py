@@ -20,13 +20,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+SALT_BUCKETS = 8  # R: sub-keys one hot key is spread over
+
 
 def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-    how: str = "inner",
+    big: DataFrame, small: DataFrame, key: str, how: str = "inner"
 ) -> DataFrame:
     """Equi-join resilient to hot keys in ``big``.
 
@@ -37,21 +35,18 @@ def salted_join(
     small side is broadcast-sized by assumption.
     """
     salt = (F.spark_partition_id() + F.monotonically_increasing_id()) % \
-        salt_buckets
+        SALT_BUCKETS
     big_salted = big.withColumn("_salt", salt.cast("int"))
     small_exploded = small.withColumn(
         "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))),
+        F.explode(F.sequence(F.lit(0), F.lit(SALT_BUCKETS - 1))),
     ).withColumn("_salt", F.col("_salt").cast("int"))
     out = big_salted.join(small_exploded, [key, "_salt"], how)
     return out.drop("_salt")
 
 
 def two_phase_agg(
-    df: DataFrame,
-    key: str,
-    aggs: dict[str, tuple[str, str]],
-    salt_buckets: int = 16,
+    df: DataFrame, key: str, aggs: dict[str, tuple[str, str]]
 ) -> DataFrame:
     """Skew-proof aggregation: ``aggs`` maps output column → (input
     column, fn) for fn ∈ {sum, count, min, max} (the re-aggregable
@@ -65,7 +60,7 @@ def two_phase_agg(
         if fn not in first_fn:
             raise ValueError(f"non-re-aggregable fn {fn!r}")
     salt = (
-        F.abs(F.hash(F.col(key), F.spark_partition_id())) % salt_buckets
+        F.abs(F.hash(F.col(key), F.spark_partition_id())) % SALT_BUCKETS
     )
     phase1 = (
         df.withColumn("_salt", salt)

@@ -413,7 +413,7 @@ def q_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").alias("suppkey"), "s_name"
     )
-    j = salted_join(li, s, "suppkey", salt_buckets=8)
+    j = salted_join(li, s, "suppkey")
     return j.groupBy("s_name").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_items"),
         dsum("l_extendedprice").alias("total_price"),

@@ -13,7 +13,12 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import dedup as D
-from ..operators.dedup import BAND_SIZE, NUM_HASHES  # noqa: F401 (re-exported)
+from ..operators.dedup import (  # noqa: F401 (re-exported)
+    BAND_SIZE,
+    NGRAM_N,
+    NUM_HASHES,
+)
+from ..operators.similarity import EMB_THRESHOLD
 from ._oracle_sql import (
     VECTORS,
     bands,
@@ -30,7 +35,6 @@ from ._oracle_sql import (
 )
 from ._util import sround, sround_sql
 
-NGRAM_N = 3
 NGRAM_THRESHOLD = 0.2
 # Stop-shingle cap: shingles appearing in more docs than this carry no
 # dedup signal but dominate the inverted-index join (quadratic in the
@@ -145,7 +149,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.ngram_jaccard_pairs(
         d,
         threshold=NGRAM_THRESHOLD,
-        n=NGRAM_N,
         max_shingle_freq=MAX_SHINGLE_FREQ,
     )
 
@@ -168,7 +171,7 @@ def q_sim_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate pairs; the stop-shingle cap still bounds the join)."""
     d = load(spark, sf_dir, "documents")
     pairs = D.ngram_jaccard_pairs(
-        d, threshold=0.0, n=NGRAM_N, max_shingle_freq=MAX_SHINGLE_FREQ
+        d, threshold=0.0, max_shingle_freq=MAX_SHINGLE_FREQ
     )
     band = F.floor(F.col("jaccard") * 10).cast("bigint")
     return (
@@ -191,7 +194,7 @@ GROUP BY band ORDER BY band
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4 bands × 4 rows) candidate pairs."""
     d = load(spark, sf_dir, "documents")
-    return D.lsh_candidate_pairs(D.minhash_signatures(d, n=NGRAM_N))
+    return D.lsh_candidate_pairs(D.minhash_signatures(d))
 
 
 # CTEs toks .. cand(doc_a, doc_b): the MinHash-LSH candidate pairs of
@@ -262,7 +265,6 @@ SELECT doc_id AS id, CAST({fp} AS BIGINT) AS simhash FROM votes
 # DuckDB oracle reproduces the identical bucketing — a full differential
 # test of the approximate algorithm, not just of the scorer.
 EMB_DIM = 64
-EMB_THRESHOLD = 0.35  # sf0.01 max pairwise cosine is 0.513 — non-vacuous
 LSH_TABLES = 4
 LSH_PLANES = 4
 
@@ -458,19 +460,19 @@ def q_dedup_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall gate for the DECLARED embedding-dedup path (VERDICT r4
     item 7): q_dedup_embedding's LSH-bucketed pair set against
     q_dedup_embedding_exact's brute-force pair set at the same rounded
-    threshold, with a pass flag at recall ≥ {gate}. The LSH path
-    re-scores candidates exactly, so found ⊆ exact and recall is a
-    pure candidate-coverage measure — the number this gate exists to
-    watch when someone retunes PLANES.
+    threshold, with a pass flag at recall ≥ ``EMB_RECALL_GATE`` (0.8).
+    The LSH path re-scores candidates exactly, so found ⊆ exact and
+    recall is a pure candidate-coverage measure — the number this gate
+    exists to watch when someone retunes PLANES.
 
     Scale shape: the exact side is O(N²) and stays gate-only — the
     query ENFORCES that with a deterministic stride sample capping the
-    gate's input at ~{max_n} vectors (``vec_id % ceil(N / {max_n}) = 0``,
-    identical on the oracle side), so running it against a large sf dir
-    costs O(cap²), not O(N²); the recall estimate is a ratio of counts,
-    unbiased under the uniform stride. The production pair set is the
-    LSH side alone.
-    """.format(gate=EMB_RECALL_GATE, max_n=EMB_RECALL_MAX_N)
+    gate's input at ~``EMB_RECALL_MAX_N`` (5000) vectors
+    (``vec_id % ceil(N / EMB_RECALL_MAX_N) = 0``, identical on the
+    oracle side), so running it against a large sf dir costs O(cap²),
+    not O(N²); the recall estimate is a ratio of counts, unbiased under
+    the uniform stride. The production pair set is the LSH side alone.
+    """
     from ..operators import similarity as S
 
     em = load(spark, sf_dir, "embeddings")
@@ -558,7 +560,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays the all-pairs formulation: the pigeonhole guarantees recall 1,
     so agreeing with the exhaustive scan *proves* the bucketing correct."""
     fp = D.simhash16(load(spark, sf_dir, "documents"))
-    return D.simhash_neardup_pairs(fp, max_hamming=3)
+    return D.simhash_neardup_pairs(fp)
 
 
 def _oracle_simhash_pairs() -> str:
@@ -598,8 +600,8 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     pairs = D.cross_lsh_candidates(
-        D.minhash_signatures(d, n=NGRAM_N),
-        D.minhash_signatures(evalset, n=NGRAM_N),
+        D.minhash_signatures(d),
+        D.minhash_signatures(evalset),
     )
     return pairs.select(
         F.col("doc_a").alias("train_id"), F.col("doc_b").alias("eval_id")
@@ -614,9 +616,10 @@ DECON_MOD = 41     # doc_id % 41 == 0 -> the stand-in benchmark/eval set
 def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT n-gram decontamination — the GPT-3/Llama-style counterpart
     to q_contamination's probabilistic MinHash pass: a training doc is
-    flagged when it shares ANY exact token {n}-gram with any benchmark
-    doc, reporting the distinct-overlapping-gram count. The benchmark
-    side is docs with doc_id % {m} == 0 (a stand-in eval suite).
+    flagged when it shares ANY exact token ``DECON_N``-gram (3) with any
+    benchmark doc, reporting the distinct-overlapping-gram count. The
+    benchmark side is docs with doc_id % ``DECON_MOD`` (41) == 0 (a
+    stand-in eval suite).
 
     Scale shape: the benchmark side of the join is the distinct shingle
     set of the EVAL suite — small by nature (benchmarks are MBs while
@@ -624,7 +627,7 @@ def q_decontaminate_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one shingle projection + map-side hash join + per-doc groupBy:
     no shuffle of the corpus at all. Same zip_with shingle kernel as
     the dedup family (operators/dedup.shingles).
-    """.format(n=DECON_N, m=DECON_MOD)
+    """
     d = load(spark, sf_dir, "documents")
     sh = D.shingles(d, n=DECON_N)
     bench = (
@@ -691,7 +694,7 @@ def q_minhash_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cheap O(k) scorer a dedup pipeline uses before (or instead of)
     exact shingle intersection. Joins the two signature rows per
     candidate pair; no shingle data moves."""
-    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"), n=NGRAM_N)
+    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"))
     est = F.col("agree").cast("double") / float(NUM_HASHES)
     return D.minhash_agreement(
         D.lsh_candidate_pairs(sigs), sigs, sigs
@@ -779,7 +782,7 @@ def q_minhash_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     restricted by an equi-join onto the candidate set first), so the
     expensive part stays proportional to candidates, not all pairs."""
     d = load(spark, sf_dir, "documents")
-    sigs = D.minhash_signatures(d, n=NGRAM_N)
+    sigs = D.minhash_signatures(d)
     pairs = D.lsh_candidate_pairs(sigs)
     sh = D.shingles(d, n=NGRAM_N)
     a = sh.select(F.col("id").alias("doc_a"), "shingle")
@@ -946,7 +949,7 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding of q_dedup_minhash_lsh (map-side signatures, band
     equi-join), then two slim doc_id→source joins and a small agg."""
     d = load(spark, sf_dir, "documents")
-    pairs = D.lsh_candidate_pairs(D.minhash_signatures(d, n=NGRAM_N))
+    pairs = D.lsh_candidate_pairs(D.minhash_signatures(d))
     src = d.select("doc_id", "source")
     sa = src.select(
         F.col("doc_id").alias("doc_a"), F.col("source").alias("src_a")
@@ -1287,7 +1290,6 @@ def q_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.sparse_cosine_pairs(
         d,
         threshold=SPARSE_THRESHOLD,
-        n=NGRAM_N,
         max_df=SPARSE_MAX_DF,
     )
 
@@ -1335,10 +1337,10 @@ def q_lsh_recall_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     share the stop-shingle cap caveat."""
     d = load(spark, sf_dir, "documents")
     ex = D.ngram_jaccard_pairs(
-        d, threshold=0.0, n=NGRAM_N, max_shingle_freq=MAX_SHINGLE_FREQ
+        d, threshold=0.0, max_shingle_freq=MAX_SHINGLE_FREQ
     )
     cand = D.lsh_candidate_pairs(
-        D.minhash_signatures(d, n=NGRAM_N)
+        D.minhash_signatures(d)
     ).withColumn("_hit", F.lit(1))
     return (
         ex.join(cand, ["doc_a", "doc_b"], "left")
@@ -1548,7 +1550,7 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a bounded explode (<= 9 rows per pair — linear, no inequality
     join, no window), then a groupBy on the 9-value threshold key.
     est_jaccard = t/16 is the single correctly-rounded division."""
-    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"), n=NGRAM_N)
+    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"))
     ag = (
         D.minhash_agreement(D.lsh_candidate_pairs(sigs), sigs, sigs)
         .select("doc_b", "agree")

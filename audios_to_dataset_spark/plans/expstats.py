@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from ..catalog import load
 from ._util import sround, sround_sql
 from .evalmetrics import _SCORED_SQL, _scored
+from .nonparam import two_group_moments, two_group_moments_sql
 
 W_BINS = 100  # fixed Wasserstein CDF resolution (score in [0, 1])
 XCORR_K = 6  # max lag in hours, both directions
@@ -292,7 +293,8 @@ def q_smd_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ 2 decimal places with bounded squares, so x and x² sum EXACTLY
     in DECIMAL(38,6) (squares stay < 2^53, bit-identical doubles).
     SMD = (m₁−m₀)/√((v₁+v₀)/2) from the moment sums; one combinable
-    groupBy over the unpivoted covariate rows, no window.
+    groupBy over the unpivoted covariate rows
+    (nonparam.two_group_moments), no window.
     """
     c = load(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isNotNull()
@@ -328,33 +330,7 @@ def q_smd_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
             base.select(F.lit("max_price").alias("covariate"), "grp",
                         F.col("max_price").alias("x")))
     )
-    d38 = "decimal(38,6)"
-    stats = rows.groupBy("covariate", "grp").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum(F.col("x").cast(d38)).cast("double").alias("s"),
-        F.sum((F.col("x") * F.col("x")).cast(d38)).cast("double")
-        .alias("ss"),
-    )
-    piv = stats.groupBy("covariate").agg(
-        F.max(F.when(F.col("grp") == 0, F.col("n"))).alias("n0"),
-        F.max(F.when(F.col("grp") == 0, F.col("s"))).alias("s0"),
-        F.max(F.when(F.col("grp") == 0, F.col("ss"))).alias("ss0"),
-        F.max(F.when(F.col("grp") == 1, F.col("n"))).alias("n1"),
-        F.max(F.when(F.col("grp") == 1, F.col("s"))).alias("s1"),
-        F.max(F.when(F.col("grp") == 1, F.col("ss"))).alias("ss1"),
-    )
-    n0d, n1d = F.col("n0").cast("double"), F.col("n1").cast("double")
-    m0 = F.col("s0") / n0d
-    m1 = F.col("s1") / n1d
-    v0 = (F.col("ss0") - (F.col("s0") * F.col("s0")) / n0d) / (n0d - 1.0)
-    v1 = (F.col("ss1") - (F.col("s1") * F.col("s1")) / n1d) / (n1d - 1.0)
-    mid = piv.select(
-        "covariate", "n0", "n1",
-        m0.alias("m0"), m1.alias("m1"),
-        F.when(F.col("n0") > 1, v0).alias("v0"),
-        F.when(F.col("n1") > 1, v1).alias("v1"),
-    )
-    return mid.select(
+    return two_group_moments(rows, "covariate").select(
         "covariate",
         F.col("n1").alias("n_treat"),
         F.col("n0").alias("n_ctrl"),
@@ -388,30 +364,7 @@ WITH o AS (
   SELECT 'n_orders', grp, n_orders FROM base
   UNION ALL
   SELECT 'max_price', grp, max_price FROM base
-), stats AS (
-  SELECT covariate, grp, CAST(COUNT(*) AS BIGINT) AS n,
-         CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS s,
-         CAST(SUM(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS ss
-  FROM rows_u GROUP BY 1, 2
-), piv AS (
-  SELECT covariate,
-         MAX(CASE WHEN grp = 0 THEN n END) AS n0,
-         MAX(CASE WHEN grp = 0 THEN s END) AS s0,
-         MAX(CASE WHEN grp = 0 THEN ss END) AS ss0,
-         MAX(CASE WHEN grp = 1 THEN n END) AS n1,
-         MAX(CASE WHEN grp = 1 THEN s END) AS s1,
-         MAX(CASE WHEN grp = 1 THEN ss END) AS ss1
-  FROM stats GROUP BY 1
-), mid AS (
-  SELECT covariate, n0, n1,
-    s0 / CAST(n0 AS DOUBLE) AS m0,
-    s1 / CAST(n1 AS DOUBLE) AS m1,
-    CASE WHEN n0 > 1 THEN (ss0 - (s0 * s0) / CAST(n0 AS DOUBLE))
-                          / (CAST(n0 AS DOUBLE) - 1.0) END AS v0,
-    CASE WHEN n1 > 1 THEN (ss1 - (s1 * s1) / CAST(n1 AS DOUBLE))
-                          / (CAST(n1 AS DOUBLE) - 1.0) END AS v1
-  FROM piv
-)
+), {two_group_moments_sql("rows_u", "covariate")}
 SELECT covariate, n1 AS n_treat, n0 AS n_ctrl,
        {sround_sql("m1", 9)} AS mean_treat,
        {sround_sql("m0", 9)} AS mean_ctrl,

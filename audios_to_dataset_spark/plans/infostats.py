@@ -817,7 +817,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
-    sh = D.shingles(docs, id_col="doc_id", text_col="text", n=DECON_N)
+    sh = D.shingles(docs, n=DECON_N)
     train_sh = sh.filter(F.col("id") % 10 != 7)
     eval_set = sh.filter(F.col("id") % 10 == 7).select("shingle").distinct()
     # r13 (guide §2.3/§2.4 — one pass instead of three): the old shape
@@ -893,7 +893,7 @@ def q_boilerplate_prefixes(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
-    prefix = F.substring(D.normalized_text("text"), 1, PREFIX_K)
+    prefix = F.substring(D.normalized_text(), 1, PREFIX_K)
     return (
         d.select(
             prefix.alias("prefix"), "doc_id", "source", "lang"

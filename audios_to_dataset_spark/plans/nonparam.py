@@ -277,27 +277,21 @@ FROM mid
 """
 
 
-def cohort_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One row (n0, n1, m0, m1, v0, v1): the count, mean and sample
-    variance of o_totalprice in the c_custkey-parity cohorts (0 =
-    control, 1 = treatment), the shared input of q_welch_t and
-    q_cohens_d (plans/stats2). o_totalprice has 2 decimal places with
-    bounded squares, so both moment sums are DECIMAL-exact; a variance
-    is NULL below two rows. ``COHORT_MOMENTS`` is the oracle twin."""
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull()
-    ).select(
-        (F.col("o_custkey") % 2).cast("int").alias("grp"),
-        F.col("o_totalprice").alias("x"),
-    )
+def two_group_moments(rows: DataFrame, *keys: str) -> DataFrame:
+    """Per ``keys`` group of ``rows`` (keys..., grp, x), one row (keys...,
+    n0, n1, m0, m1, v0, v1): the count, mean and sample variance of x in
+    cohorts grp = 0 (control) and grp = 1 (treatment). x and x² are
+    summed in DECIMAL(38,6), exact for values of at most 2 decimal
+    places with bounded squares; a variance is NULL below two rows.
+    :func:`two_group_moments_sql` is the oracle twin."""
     d38 = "decimal(38,6)"
-    stats = o.groupBy("grp").agg(
+    stats = rows.groupBy(*keys, "grp").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(F.col("x").cast(d38)).cast("double").alias("s"),
         F.sum((F.col("x") * F.col("x")).cast(d38)).cast("double")
         .alias("ss"),
     )
-    piv = stats.agg(
+    piv = stats.groupBy(*keys).agg(
         F.max(F.when(F.col("grp") == 0, F.col("n"))).alias("n0"),
         F.max(F.when(F.col("grp") == 0, F.col("s"))).alias("s0"),
         F.max(F.when(F.col("grp") == 0, F.col("ss"))).alias("ss0"),
@@ -310,32 +304,32 @@ def cohort_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     v0 = (F.col("ss0") - (F.col("s0") * F.col("s0")) / n0d) / (n0d - 1.0)
     v1 = (F.col("ss1") - (F.col("s1") * F.col("s1")) / n1d) / (n1d - 1.0)
     return piv.select(
-        "n0", "n1", m0.alias("m0"), m1.alias("m1"),
+        *keys, "n0", "n1", m0.alias("m0"), m1.alias("m1"),
         F.when(F.col("n0") > 1, v0).alias("v0"),
         F.when(F.col("n1") > 1, v1).alias("v1"),
     )
 
 
-# CTEs o .. mid(n0, n1, m0, m1, v0, v1): the twin of cohort_moments
-COHORT_MOMENTS = """o AS (
-  SELECT CAST(o_custkey % 2 AS INTEGER) AS grp, o_totalprice AS x
-  FROM orders
-  WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
-), stats AS (
-  SELECT grp, CAST(COUNT(*) AS BIGINT) AS n,
+def two_group_moments_sql(src: str, *keys: str) -> str:
+    """CTEs stats, piv and mid(keys..., n0, n1, m0, m1, v0, v1) over the
+    relation ``src`` (keys..., grp, x): the twin of two_group_moments."""
+    k = "".join(f"{c}, " for c in keys)
+    by = f" GROUP BY {', '.join(keys)}" if keys else ""
+    return f"""stats AS (
+  SELECT {k}grp, CAST(COUNT(*) AS BIGINT) AS n,
          CAST(SUM(CAST(x AS DECIMAL(38,6))) AS DOUBLE) AS s,
          CAST(SUM(CAST(x * x AS DECIMAL(38,6))) AS DOUBLE) AS ss
-  FROM o GROUP BY 1
+  FROM {src} GROUP BY {k}grp
 ), piv AS (
-  SELECT MAX(CASE WHEN grp = 0 THEN n END) AS n0,
+  SELECT {k}MAX(CASE WHEN grp = 0 THEN n END) AS n0,
          MAX(CASE WHEN grp = 0 THEN s END) AS s0,
          MAX(CASE WHEN grp = 0 THEN ss END) AS ss0,
          MAX(CASE WHEN grp = 1 THEN n END) AS n1,
          MAX(CASE WHEN grp = 1 THEN s END) AS s1,
          MAX(CASE WHEN grp = 1 THEN ss END) AS ss1
-  FROM stats
+  FROM stats{by}
 ), mid AS (
-  SELECT n0, n1,
+  SELECT {k}n0, n1,
     s0 / CAST(n0 AS DOUBLE) AS m0, s1 / CAST(n1 AS DOUBLE) AS m1,
     CASE WHEN n0 > 1 THEN (ss0 - (s0 * s0) / CAST(n0 AS DOUBLE))
                           / (CAST(n0 AS DOUBLE) - 1.0) END AS v0,
@@ -343,6 +337,28 @@ COHORT_MOMENTS = """o AS (
                           / (CAST(n1 AS DOUBLE) - 1.0) END AS v1
   FROM piv
 )"""
+
+
+def cohort_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row (n0, n1, m0, m1, v0, v1): :func:`two_group_moments` of
+    o_totalprice in the c_custkey-parity cohorts, the shared input of
+    q_welch_t and q_cohens_d (plans/stats2). ``COHORT_MOMENTS`` is the
+    oracle twin."""
+    o = load(spark, sf_dir, "orders").filter(
+        F.col("o_custkey").isNotNull() & F.col("o_totalprice").isNotNull()
+    ).select(
+        (F.col("o_custkey") % 2).cast("int").alias("grp"),
+        F.col("o_totalprice").alias("x"),
+    )
+    return two_group_moments(o)
+
+
+# CTEs o .. mid(n0, n1, m0, m1, v0, v1): the twin of cohort_moments
+COHORT_MOMENTS = """o AS (
+  SELECT CAST(o_custkey % 2 AS INTEGER) AS grp, o_totalprice AS x
+  FROM orders
+  WHERE o_custkey IS NOT NULL AND o_totalprice IS NOT NULL
+), """ + two_group_moments_sql("o")
 
 
 def q_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,6 +7,14 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators import similarity as S
+from ..operators.similarity import (
+    EMB_THRESHOLD,
+    KMEANS_ITERS,
+    KMEANS_K,
+    PQ_ITERS,
+    PQ_K,
+    QUERY_ID,
+)
 from ._oracle_sql import (
     AUTO_PLANES,
     INDEXED_VECTORS,
@@ -21,7 +29,6 @@ from ._oracle_sql import (
 )
 from ._util import DEC, dsum, dsum_sql, sround, sround_sql
 
-QUERY_ID = 0
 TOP_K = 20
 
 # the rounded query cosine every exact query-vector oracle ranks on
@@ -169,7 +176,7 @@ def q_cosine_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cosine of every embedding vs the query vector (vec_id=0) — the exact
     brute-force baseline, all rows returned."""
     em = load(spark, sf_dir, "embeddings")
-    return S.cosine_vs_query(em, query_id=QUERY_ID)
+    return S.cosine_vs_query(em)
 
 
 ORACLE_COSINE_SCORES = _COS_CTE.format(qid=QUERY_ID) + """
@@ -181,7 +188,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k nearest neighbors of the query vector, ordered on the rounded
     score with vec_id tie-break (engine-independent cutoff)."""
     em = load(spark, sf_dir, "embeddings")
-    return S.topk_vs_query(em, k=TOP_K, query_id=QUERY_ID)
+    return S.topk_vs_query(em, k=TOP_K)
 
 
 ORACLE_ANN_TOPK = _COS_CTE.format(qid=QUERY_ID) + f"""
@@ -241,8 +248,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=4 of 16 lists probed, exact re-score within candidates."""
     em = load(spark, sf_dir, "embeddings")
     return S.ivf_topk_vs_query(
-        em, k=TOP_K, query_id=QUERY_ID,
-        n_centroids=N_CENTROIDS, nprobe=NPROBE,
+        em, k=TOP_K, n_centroids=N_CENTROIDS, nprobe=NPROBE
     )
 
 
@@ -254,7 +260,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import PLANES
 
     em = load(spark, sf_dir, "embeddings")
-    return lsh_topk_vs_query(em, PLANES, k=TOP_K, query_id=QUERY_ID)
+    return lsh_topk_vs_query(em, PLANES, k=TOP_K)
 
 
 def _oracle_ann_lsh() -> str:
@@ -284,7 +290,7 @@ def q_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import PLANES
 
     em = load(spark, sf_dir, "embeddings")
-    return multiprobe_topk_vs_query(em, PLANES, k=TOP_K, query_id=QUERY_ID)
+    return multiprobe_topk_vs_query(em, PLANES, k=TOP_K)
 
 
 def _oracle_ann_multiprobe() -> str:
@@ -559,9 +565,7 @@ def q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").isNotNull() & F.col("embedding").isNotNull()
     )
     # the seed is the minimum vec_id, and Spark sorts a NULL id first
-    un = S._unit_vectors(em, "vec_id", "embedding").localCheckpoint(
-        eager=True
-    )
+    un = S._unit_vectors(em).localCheckpoint(eager=True)
     udot = S._dot(F.col("u"), F.col("cu"))
     seed = un.orderBy("vec_id").limit(1)
     picked = [
@@ -712,9 +716,6 @@ ORDER BY cos_sim DESC, doc_id LIMIT 10
 """
 
 
-KMEANS_K = 8
-KMEANS_ITERS = 2
-
 
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded KMeans cluster assignment after 2 iterations — the
@@ -724,7 +725,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import kmeans_assignments
 
     em = load(spark, sf_dir, "embeddings")
-    return kmeans_assignments(em, k=KMEANS_K, iters=KMEANS_ITERS)
+    return kmeans_assignments(em)
 
 
 def _kmeans_assign_cte(name: str, cents: str, src: str = "v") -> str:
@@ -823,12 +824,12 @@ def q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import kmeans_centroids
 
     em = load(spark, sf_dir, "embeddings")
-    cents = kmeans_centroids(em, k=KMEANS_K, iters=KMEANS_ITERS).select(
+    cents = kmeans_centroids(em).select(
         F.col("cid").alias("centroid_id"),
         F.col("cvec").alias("centroid_vec"),
     )
     return S.ivf_topk_vs_query(
-        em, k=TOP_K, query_id=QUERY_ID, nprobe=NPROBE_KM, centroids=cents
+        em, k=TOP_K, nprobe=NPROBE_KM, centroids=cents
     )
 
 
@@ -911,17 +912,12 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     (raise k with N at scale). Exact rounded re-score inside clusters,
     threshold shared with the LSH path (q_dedup_embedding)."""
     from ..operators.similarity import cluster_bucketed_neardup_pairs
-    from .dedup import EMB_THRESHOLD
 
     em = load(spark, sf_dir, "embeddings")
-    return cluster_bucketed_neardup_pairs(
-        em, k=KMEANS_K, iters=KMEANS_ITERS, threshold=EMB_THRESHOLD
-    )
+    return cluster_bucketed_neardup_pairs(em)
 
 
 def _oracle_dedup_semantic() -> str:
-    from .dedup import EMB_THRESHOLD
-
     return f"""WITH {_cluster_pairs_ctes()}
 SELECT id_a, id_b, cos_sim FROM scored WHERE cos_sim >= {EMB_THRESHOLD}
 """
@@ -1343,8 +1339,6 @@ FROM v
 
 PQ_M = 4
 PQ_SUBDIM = 16
-PQ_K = 4
-PQ_ITERS = 2
 
 
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1359,7 +1353,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load(spark, sf_dir, "embeddings")
     out = pq_codes(
-        em, m=PQ_M, subdim=PQ_SUBDIM, k=PQ_K, iters=PQ_ITERS
+        em, m=PQ_M, subdim=PQ_SUBDIM
     )
     return out.select(
         "vec_id",
@@ -1427,7 +1421,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load(spark, sf_dir, "embeddings")
     cents, codes = _seeded_kmeans(
-        em, PQ_K, PQ_ITERS, "vec_id", "embedding", PQ_M, PQ_SUBDIM
+        em, PQ_K, PQ_ITERS, PQ_M, PQ_SUBDIM
     )
     qdf = em.filter(F.col("vec_id") == QUERY_ID)
     qsubs = pq_subvectors(qdf, PQ_M, PQ_SUBDIM).select(
@@ -1518,7 +1512,7 @@ def q_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     em = load(spark, sf_dir, "embeddings")
     _, a = _seeded_kmeans(
-        em, PQ_K, PQ_ITERS, "vec_id", "embedding", PQ_M, PQ_SUBDIM
+        em, PQ_K, PQ_ITERS, PQ_M, PQ_SUBDIM
     )
     return (
         a.groupBy("s", "cid")
@@ -1569,7 +1563,7 @@ def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import cosine_vs_query
 
     exact = (
-        cosine_vs_query(em, query_id=QUERY_ID)
+        cosine_vs_query(em)
         .filter(F.col("vec_id") != QUERY_ID)
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(PQ_TOPK)
@@ -1609,17 +1603,12 @@ def q_semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     such mate's cosine (-1.0 when kept). Same oracle-replayed KMeans
     bucketing; the assignment is computed once and cached."""
     from ..operators.similarity import semantic_dedup_decisions
-    from .dedup import EMB_THRESHOLD
 
     em = load(spark, sf_dir, "embeddings")
-    return semantic_dedup_decisions(
-        em, k=KMEANS_K, iters=KMEANS_ITERS, threshold=EMB_THRESHOLD
-    )
+    return semantic_dedup_decisions(em)
 
 
 def _oracle_semdedup_keep() -> str:
-    from .dedup import EMB_THRESHOLD
-
     return f"""WITH {_cluster_pairs_ctes()}, drops AS (
   SELECT id_b, MAX(cos_sim) AS max_lower_cos FROM scored
   WHERE cos_sim >= {EMB_THRESHOLD} GROUP BY id_b
@@ -1645,7 +1634,7 @@ def q_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import kmeans_assignments
 
     em = load(spark, sf_dir, "embeddings")
-    a = kmeans_assignments(em, k=KMEANS_K, iters=KMEANS_ITERS)
+    a = kmeans_assignments(em)
     cl = (
         a.join(em.select("vec_id", "label"), "vec_id")
         .groupBy("cid", "label")
@@ -1718,7 +1707,7 @@ def q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recursive CTE), so the full core/border/noise assignment is
     value-hashed."""
     from ..operators.similarity import dbscan_clusters
-    from .dedup import EMB_THRESHOLD, dbscan_planes
+    from .dedup import dbscan_planes
 
     em = load(spark, sf_dir, "embeddings")
     planes = dbscan_planes(em.count())

@@ -33,8 +33,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load
 from ..operators.bloom import bloom_positions_sql, bloom_semi_join
-from ..operators.graph import pagerank
+from ..operators.graph import HITS_ITERS, PR_DAMPING, pagerank
 from ..operators.sketch import (
+    HLL_M,
     histogram_quantiles,
     histogram_quantiles_sql,
     hll_estimate,
@@ -43,10 +44,7 @@ from ..operators.sketch import (
 from ._edges import PR_SUPP_OFFSET, copurchase_edges, trade_edges
 from ._util import DEC, DEC_SQL, davg, davg_sql, sround, sround_sql
 
-HLL_M = 64
-
 PR_ITERS = 3
-PR_DAMPING = 0.85
 
 BLOOM_M_BITS = 4096  # small on purpose: forces real false positives
 BLOOM_K = 3
@@ -73,7 +71,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLE_APPROX_DISTINCT = f"""
 SELECT event_type, registers_hit,
        {sround_sql('hll_estimate', 4)} AS hll_estimate
-FROM ({hll_sql('events', 'user_id', ['event_type'], HLL_M)})
+FROM ({hll_sql('events', 'user_id', ['event_type'])})
 """
 
 
@@ -279,7 +277,7 @@ SELECT win_start, registers_hit,
        {sround_sql('hll_estimate', 4)} AS hll_estimate
 FROM ({hll_sql(
     "(SELECT date_trunc('hour', ts) AS win_start, user_id FROM events) t",
-    'user_id', ['win_start'], HLL_M)})
+    'user_id', ['win_start'])})
 ORDER BY win_start
 """
 
@@ -402,7 +400,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").filter(F.col("o_custkey").isNotNull())
     li = load(spark, sf_dir, "lineitem")
     edges = trade_edges(o, li)
-    r = pagerank(edges, iters=PR_ITERS, damping=PR_DAMPING)
+    r = pagerank(edges, iters=PR_ITERS)
     return r.select(
         F.col("id").cast("bigint").alias("node_id"),
         sround(F.col("rank"), 9).alias("rank"),
@@ -469,17 +467,18 @@ def _order_graph_undirected(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded multi-source BFS: hop distance from a seed set (customer
-    nodes with custkey % {m} == 1) over the undirected customer-supplier
-    order graph, {r} synchronous rounds — the reachability /
-    neighborhood-expansion primitive under influence propagation and
-    provenance tracing.
+    nodes with custkey % ``BFS_SEED_MOD`` (97) == 1) over the undirected
+    customer-supplier order graph, ``BFS_ROUNDS`` (3) synchronous rounds
+    — the reachability / neighborhood-expansion primitive under
+    influence propagation and provenance tracing.
 
     Scale shape: each round is one frontier equi-join on src plus one
     left-anti join against the visited set — node-id shuffles only, the
-    frontier localCheckpoint'ed per round so lineage stays {r}-deep, the
-    same iterative-join discipline as pagerank/k-core. No windows, no
-    collects; the visited accumulator is a union of bounded frontiers.
-    """.format(m=BFS_SEED_MOD, r=BFS_ROUNDS)
+    frontier localCheckpoint'ed per round so lineage stays
+    ``BFS_ROUNDS``-deep, the same iterative-join discipline as
+    pagerank/k-core. No windows, no collects; the visited accumulator is
+    a union of bounded frontiers.
+    """
     ud = _order_graph_undirected(spark, sf_dir).localCheckpoint(eager=True)
     seeds = (
         ud.select("src")
@@ -717,9 +716,6 @@ FROM stats s LEFT JOIN ein USING (community) CROSS JOIN m1
 """
 
 
-HITS_ITERS = 2
-
-
 def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities on the customer→supplier order graph
     (Kleinberg 1999): 2 synchronous max-normalized rounds — customers
@@ -733,7 +729,7 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     edges = trade_edges(o, li)
-    hubs, auths = hits(edges, iters=HITS_ITERS)
+    hubs, auths = hits(edges)
     return hubs.select(
         F.col("id").cast("bigint").alias("node_id"),
         F.lit("hub").alias("kind"),
@@ -791,6 +787,21 @@ KCORE_K = 2
 KCORE_ROUNDS = 3
 
 
+def _knn_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst): the directed edges of q_knn_graph's k-NN graph over
+    the embeddings, localCheckpoint'ed once so the LSH scoring is not
+    recomputed by each branch that reads them."""
+    from ..operators.similarity import knn_graph
+    from .similarity import KNN_K, _knn_planes_for
+
+    em = load(spark, sf_dir, "embeddings")
+    return (
+        knn_graph(em, _knn_planes_for(em), k=KNN_K)
+        .select("src", "dst")
+        .localCheckpoint(eager=True)
+    )
+
+
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded k-core peeling of the MUTUAL k-NN similarity graph —
     the standard semantic-cluster denoising step: an edge survives only
@@ -805,18 +816,10 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     list on (src,dst)=(dst,src); each peel round is one degree groupBy +
     one survivor semi-join (operators/graph.k_core_peel) — node-id
     shuffles only, no windows, no collects. The k-NN base is
-    localCheckpoint'ed once so the LSH scoring isn't recomputed by the
-    self-join's two branches."""
+    :func:`_knn_edges`."""
     from ..operators.graph import k_core_peel
-    from ..operators.similarity import knn_graph
-    from .similarity import KNN_K, _knn_planes_for
 
-    em = load(spark, sf_dir, "embeddings")
-    g = (
-        knn_graph(em, _knn_planes_for(em), k=KNN_K)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
+    g = _knn_edges(spark, sf_dir)
     rev = g.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     mutual = g.join(rev, ["src", "dst"])
     core = k_core_peel(mutual, k=KCORE_K, rounds=KCORE_ROUNDS)
@@ -866,8 +869,9 @@ LINK_MIN_COMMON = 2
 def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Common-neighbor link prediction (Jaccard coefficient, the
     classic Liben-Nowell/Kleinberg baseline) over the undirected k-NN
-    similarity graph: for every NON-edge pair (a, b) sharing >=
-    {mc} neighbors, score = |N(a) ∩ N(b)| / |N(a) ∪ N(b)| — the
+    similarity graph (:func:`_knn_edges`): for every NON-edge pair
+    (a, b) sharing >= ``LINK_MIN_COMMON`` (2) neighbors, score =
+    |N(a) ∩ N(b)| / |N(a) ∪ N(b)| — the
     "these two documents should probably be linked/merged" signal a
     curation pipeline uses to densify its similarity graph.
 
@@ -876,16 +880,8 @@ def q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs), one degree groupBy, and a left-anti join to keep
     only NON-edges — node-id shuffles only, same discipline as
     q_triangle_count's wedge walk.
-    """.format(mc=LINK_MIN_COMMON)
-    from ..operators.similarity import knn_graph
-    from .similarity import KNN_K, _knn_planes_for
-
-    em = load(spark, sf_dir, "embeddings")
-    g = (
-        knn_graph(em, _knn_planes_for(em), k=KNN_K)
-        .select("src", "dst")
-        .localCheckpoint(eager=True)
-    )
+    """
+    g = _knn_edges(spark, sf_dir)
     und = g.unionByName(
         g.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
@@ -1622,7 +1618,6 @@ def _oracle_profile() -> str:
         f"(SELECT * FROM melted WHERE value IS NOT NULL) nn",
         "value",
         ["col_name"],
-        HLL_M,
     )
     return f"""
 WITH melted AS ({melt}),

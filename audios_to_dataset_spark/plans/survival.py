@@ -767,7 +767,7 @@ def q_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b = d.select(
         "doc_id", "lang",
-        F.substring(D.normalized_text("text"), 1, SN_CMP_LEN).alias("norm"),
+        F.substring(D.normalized_text(), 1, SN_CMP_LEN).alias("norm"),
     ).withColumn("blk", F.substring("norm", 1, SN_BLOCK_K))
     wb = Window.partitionBy("lang", "blk").orderBy("norm", "doc_id")
     r = b.withColumn("rn", F.row_number().over(wb))

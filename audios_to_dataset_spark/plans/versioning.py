@@ -237,14 +237,14 @@ def q_ingest_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     the nightly dedup gate of a continuously-crawled corpus: the prior
     side's signatures are precomputed once per release; each new batch
     pays only its own signature pass plus the band equi-join."""
-    from .dedup import NGRAM_N, NUM_HASHES
+    from .dedup import NUM_HASHES
     from ..operators import dedup as D
 
     d = load(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") < NOVELTY_SPLIT)
     batch = d.filter(F.col("doc_id") >= NOVELTY_SPLIT)
-    sa = D.minhash_signatures(corpus, n=NGRAM_N)
-    sb = D.minhash_signatures(batch, n=NGRAM_N)
+    sa = D.minhash_signatures(corpus)
+    sb = D.minhash_signatures(batch)
     est = F.col("agree").cast("double") / float(NUM_HASHES)
     best = (
         D.minhash_agreement(D.cross_lsh_candidates(sa, sb), sa, sb)

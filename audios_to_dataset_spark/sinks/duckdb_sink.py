@@ -60,7 +60,12 @@ def build_create_table_sql(
 
 def write_duckdb_shards(df: DataFrame, output_dir: str) -> DataFrame:
     """Write one ``<shard>.duckdb`` per shard through
-    :func:`..sinks.write_shards`; returns its write receipts."""
+    :func:`..sinks.write_shards`; returns its write receipts.
+
+    The INSERT has no ORDER BY: ``write_shards`` hands each shard over
+    in ``row_in_shard`` order, and DuckDB keeps insertion order
+    (``preserve_insertion_order``, on by default), so no sort has to
+    hold the whole shard."""
     meta_fields = sink_metadata_fields(df)
     ddl = build_create_table_sql(meta_fields)
     meta_cols = "".join(
@@ -72,7 +77,7 @@ def write_duckdb_shards(df: DataFrame, output_dir: str) -> DataFrame:
         f"struct_pack(path := relative_path, "
         f"sampling_rate := CAST(sampling_rate AS INTEGER), "
         f"bytes := CAST(content AS BLOB)){meta_cols} "
-        f"FROM payload ORDER BY row_in_shard"
+        f"FROM payload"
     )
 
     def write_file(table, path: str) -> None:

@@ -22,6 +22,16 @@ def test_query_callables_take_spark_and_sfdir():
         assert len(params) == 2, f"{name} must take (spark, sf_dir)"
 
 
+def test_every_query_has_a_docstring():
+    """A docstring that opens with a ``.format(...)`` call or an f-string
+    is an expression Python discards, leaving ``__doc__`` None."""
+    missing = [
+        name for name, fn in entry_mod.queries().items()
+        if not (fn.__doc__ or "").strip()
+    ]
+    assert missing == []
+
+
 def test_no_duplicate_registration():
     # all_queries raises on duplicates; reaching here means none
     assert len(entry_mod.queries()) >= 70

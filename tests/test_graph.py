@@ -280,7 +280,7 @@ def test_hits_two_hubs(spark):
     e = spark.createDataFrame(
         [(0, 2), (0, 3), (1, 2)], "src long, dst long"
     )
-    hubs, auths = hits(e, iters=2)
+    hubs, auths = hits(e)
     h = {r.id: r.hub for r in hubs.collect()}
     a = {r.id: r.auth for r in auths.collect()}
     assert h[0] == 1.0 and a[2] == 1.0

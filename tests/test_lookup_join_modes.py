@@ -26,10 +26,9 @@ def test_shuffle_mode_matches_broadcast(spark, tmp_path):
         ],
         "relative_path string, file_name string",
     )
-    kwargs = dict(rel_col="relative_path", name_col="file_name")
-    bc = sorted(map(tuple, lookup_join(files, meta, **kwargs).collect()))
+    bc = sorted(map(tuple, lookup_join(files, meta).collect()))
     sh = sorted(
-        map(tuple, lookup_join(files, meta, broadcast=False, **kwargs).collect())
+        map(tuple, lookup_join(files, meta, broadcast=False).collect())
     )
     assert bc == sh
     by_rel = {r[0]: r for r in bc}
@@ -68,10 +67,7 @@ def test_shuffle_mode_has_no_single_partition_upstream(spark, tmp_path):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = lookup_join(
-            files, meta, rel_col="relative_path", name_col="file_name",
-            broadcast=False,
-        )
+        joined = lookup_join(files, meta, broadcast=False)
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             joined.explain("formatted")

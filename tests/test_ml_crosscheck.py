@@ -24,7 +24,7 @@ def test_ml_minhash_agrees_with_exact_jaccard(spark):
     # ours: exact word-3-gram Jaccard >= 0.5
     exact = {
         (r.doc_a, r.doc_b)
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, n=3).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=0.5).collect()
     }
     assert exact, "fixture should contain planted near-dups"
 

@@ -671,8 +671,11 @@ def test_shard_arriving_in_many_batches(spark, tmp_path):
 
     con = duckdb.connect(str(duck / "0.duckdb"), read_only=True)
     rows = con.execute("SELECT id, audio.path FROM files ORDER BY id").fetchall()
+    # the sink inserts without ORDER BY: storage order is the arrival order
+    stored = con.execute("SELECT id FROM files").fetchall()
     con.close()
     assert rows == [(i, f"clip_{i:03d}.wav") for i in range(300)]
+    assert stored == [(i,) for i in range(300)]
 
 
 @pytest.mark.parametrize("output_format", ["parquet", "orc"])

@@ -377,7 +377,7 @@ def test_minhash_signatures_mapside_no_aggregate(spark, sf_dir):
     d = load(spark, sf_dir, "documents")
     import re
 
-    e = _explain(_signature_fold(d, 3, "doc_id", "text"))
+    e = _explain(_signature_fold(d))
     assert "Scan parquet" in e
     assert "HashAggregate" not in e and "SortAggregate" not in e
     # formatted explain lists each node in the tree AND the detail

@@ -40,7 +40,7 @@ def test_bruteforce_matches_python(spark, vectors):
     rows = {r.vec_id: r.embedding for r in vectors.collect()}
     got = {
         r.vec_id: r.cos_sim
-        for r in S.cosine_vs_query(vectors, query_id=0, decimals=6).collect()
+        for r in S.cosine_vs_query(vectors, decimals=6).collect()
     }
     q = rows[0]
     for vid, v in rows.items():
@@ -84,7 +84,7 @@ def test_lsh_consumers_share_one_candidate_set(spark, vectors):
         [[rng.gauss(0, 1) for _ in range(8)] for _ in range(4)]
         for _ in range(3)
     ]
-    _, cand = S._lsh_candidates(vectors, tables, "vec_id", "embedding")
+    _, cand = S._lsh_candidates(vectors, tables)
     pairs = {(r.src, r.dst) for r in cand.collect()}
     assert pairs and pairs == {(d, s) for s, d in pairs}
     half = {
@@ -107,11 +107,11 @@ def test_lsh_consumers_share_one_candidate_set(spark, vectors):
 
 
 def test_ivf_topk_recall(spark, vectors):
-    exact = [r.vec_id for r in S.topk_vs_query(vectors, k=10, query_id=0).collect()]
+    exact = [r.vec_id for r in S.topk_vs_query(vectors, k=10).collect()]
     approx = [
         r.vec_id
         for r in S.ivf_topk_vs_query(
-            vectors, k=10, query_id=0, n_centroids=8, nprobe=3
+            vectors, k=10, n_centroids=8, nprobe=3
         ).collect()
     ]
     overlap = len(set(exact) & set(approx)) / 10
@@ -189,7 +189,7 @@ def test_multiprobe_candidates_superset_of_single_probe(spark, sf_dir):
     )
 
     em = load(spark, sf_dir, "embeddings")
-    single = S.lsh_topk_vs_query(em, PLANES, k=TOP_K, query_id=0).collect()
+    single = S.lsh_topk_vs_query(em, PLANES, k=TOP_K).collect()
     multi = q_ann_multiprobe(spark, sf_dir).collect()
     assert len(multi) == TOP_K
     # query itself collides with its own bucket: rank-1 self hit
@@ -218,8 +218,8 @@ def test_multiprobe_probe_generation_flips_each_bit_once(spark):
         [[rng.gauss(0, 1) for _ in range(8)] for _ in range(4)]
         for _ in range(2)
     ]
-    got = S.multiprobe_topk_vs_query(df, tables, k=40, query_id=0).collect()
-    single = S.lsh_topk_vs_query(df, tables, k=40, query_id=0).collect()
+    got = S.multiprobe_topk_vs_query(df, tables, k=40).collect()
+    single = S.lsh_topk_vs_query(df, tables, k=40).collect()
     # multiprobe candidates strictly contain the single-probe candidates
     assert {r.vec_id for r in single} <= {r.vec_id for r in got}
 
@@ -249,13 +249,14 @@ def test_kmeans_is_one_subspace_pq(spark, vectors):
     """Seeded k-means equals PQ with one subspace spanning the whole
     vector: the same seeds, the same assignments and the same decimal
     means, so identical centroids once the subspace column is dropped."""
+    assert S.KMEANS_ITERS == S.PQ_ITERS
     km = {
         r.cid: r.cvec
-        for r in S.kmeans_centroids(vectors, k=4, iters=2).collect()
+        for r in S.kmeans_centroids(vectors, k=S.PQ_K).collect()
     }
     pq = {
         r.cid: r.cvec
-        for r in S.pq_codebooks(vectors, m=1, subdim=8, k=4, iters=2)
+        for r in S.pq_codebooks(vectors, m=1, subdim=8)
         .drop("s")
         .collect()
     }

@@ -195,11 +195,11 @@ def test_shingle_freq_cap_bounds_candidates(spark):
     # threshold 0 keeps every candidate pair that shares >= 1 retained
     # shingle, so the row count IS the candidate count
     capped = ngram_jaccard_pairs(
-        df, threshold=0.0, n=3, max_shingle_freq=cap
+        df, threshold=0.0, max_shingle_freq=cap
     ).count()
     assert capped <= cap * n_docs
 
-    uncapped = ngram_jaccard_pairs(df, threshold=0.0, n=3).count()
+    uncapped = ngram_jaccard_pairs(df, threshold=0.0).count()
     assert uncapped >= n_docs * (n_docs - 1) // 2  # quadratic blowup
     assert capped < uncapped
 

@@ -170,7 +170,7 @@ def decon_join_rows(spark, sf_dir: str) -> int:
     docs = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )
-    sh = D.shingles(docs, id_col="doc_id", text_col="text", n=DECON_N)
+    sh = D.shingles(docs, n=DECON_N)
     train_sh = sh.filter(F.col("id") % 10 != 7)
     eval_set = sh.filter(F.col("id") % 10 == 7).select("shingle").distinct()
     return train_sh.join(eval_set, "shingle").count()
@@ -188,9 +188,8 @@ def _pairs(counts_df) -> int:
 def minhash_candidates(spark, sf_dir: str) -> int:
     from audios_to_dataset_spark.catalog import load
     from audios_to_dataset_spark.operators import dedup as D
-    from audios_to_dataset_spark.plans.dedup import NGRAM_N
 
-    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"), n=NGRAM_N)
+    sigs = D.minhash_signatures(load(spark, sf_dir, "documents"))
     return _pairs(D.lsh_bands(sigs, "id").groupBy("band", "band_key").count())
 
 
@@ -219,7 +218,7 @@ def cc_shingle_candidates(spark, sf_dir: str) -> int:
     d = load(spark, sf_dir, "documents").filter(
         F.col("doc_id").isNotNull()
     )
-    sh = shingles(d, "doc_id", "text", 3)
+    sh = shingles(d)
     freq = sh.groupBy("shingle").count()
     return _pairs(freq.filter(F.col("count") <= MAX_SHINGLE_FREQ))
 
